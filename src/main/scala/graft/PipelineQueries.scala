@@ -2420,7 +2420,7 @@ object PipelineQueries {
       // SQL-callable MERGE (round 19): a reprice+insert CDC batch lands
       // through the REAL parsed statement — MERGE INTO … USING … ON key
       // WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT * —
-      // routed by TxSql.exec to TxTable.mergeInto (unconditional SQL
+      // routed by TxSql.exec to TxTable.mergeClauses (unconditional SQL
       // semantics: the batch wins every matched row, no version column),
       // then a SQL DELETE composes on the same log. The CASE/UNION
       // oracle reconstructs both statements.

@@ -25,9 +25,12 @@ import org.apache.spark.sql.SparkSession
  *    fixtures; keeps ns-encoded parquet timestamps loadable (the events
  *    fixture changed encoding across regenerations — round 10).
  *
- * Session-builder use: `SessionDefaults(builder)` folds the map in
- * BEFORE caller-specific confs, so an application can still override
- * any key explicitly.
+ * Session-builder use: `SessionDefaults(builder)` sets each key with
+ * `builder.config`, and the LAST `config` call for a key wins. Every
+ * call site wraps a builder that already carries its own confs, so
+ * these defaults are folded in AFTER them and win for any key both
+ * set. To override one of these keys, call `config` for it on the
+ * builder `SessionDefaults` returns, not on the one it wraps.
  */
 object SessionDefaults {
 

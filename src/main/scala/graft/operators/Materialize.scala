@@ -86,9 +86,14 @@ object Materialize {
     * CC loop's convergence test consumed one job per spill cycle just
     * to ask this (round 22, guide §1.2: the answer was already in the
     * bytes the spill wrote). Conservative: a footer without usable
-    * stats for the column answers "maybe true". */
+    * stats for the column answers "maybe true". A `boolCol` that is not
+    * a top-level column of `df` fails fast — it matches no footer
+    * column, so it would otherwise read as "maybe true" forever. */
   def viaParquetAnyTrue(df: DataFrame, tag: String,
       boolCol: String): (DataFrame, Boolean) = {
+    require(df.schema.fieldNames.contains(boolCol),
+      s"Materialize.viaParquetAnyTrue: no column '$boolCol' in " +
+        s"(${df.schema.fieldNames.mkString(", ")})")
     val dir = s"${root(df.sparkSession)}/${tag}_${counter.incrementAndGet()}"
     df.write.mode("overwrite").parquet(dir)
     val nullable = org.apache.spark.sql.types.StructType(

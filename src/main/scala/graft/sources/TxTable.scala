@@ -432,14 +432,13 @@ object TxTable {
     * first-batch pattern. */
   def create(spark: SparkSession, root: String, df: DataFrame,
       bloomCols: Seq[String] = Seq.empty,
-      partitionCols: Seq[String] = Seq.empty): Long = {
-    require(committedIds(root).isEmpty,
-      s"txtable: $root already has commits — use append/upsert")
-    val k = claimId(root)
-    writeData(df, dataDir(root, k), bloomCols, partitionCols)
-    commit(root, k)
-    k
-  }
+      partitionCols: Seq[String] = Seq.empty): Long =
+    commitWith(spark, root) { s =>
+      require(s.ids.isEmpty,
+        s"txtable: $root already has commits — use append/upsert")
+      Some(_ => Legs(adds = Some(df), bloomCols = bloomCols,
+        partitionCols = partitionCols, prune = false))
+    }.get
 
   /** Blind append (no keys touched): one data dir, one marker. An
     * append can never lose an update itself (it kills nothing), so it
@@ -455,17 +454,15 @@ object TxTable {
       bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty,
       conflictKeys: Seq[String] = Seq.empty): Long = {
-    val k = claimId(root)
-    writeData(df, dataDir(root, k), bloomCols, partitionCols)
-    if (conflictKeys.nonEmpty) {
-      require(conflictKeys.forall(df.columns.contains),
-        s"txtable.append: conflictKeys ${conflictKeys.mkString(",")} " +
-          s"missing from batch (${df.columns.mkString(",")})")
-      df.select(conflictKeys.map(col): _*).distinct()
-        .write.mode("overwrite").parquet(keysDir(root, k))
-    }
-    commit(root, k)
-    k
+    require(conflictKeys.forall(df.columns.contains),
+      s"txtable.append: conflictKeys ${conflictKeys.mkString(",")} " +
+        s"missing from batch (${df.columns.mkString(",")})")
+    commitWith(spark, root) { _ =>
+      Some(_ => Legs(adds = Some(df), bloomCols = bloomCols,
+        partitionCols = partitionCols, prune = false,
+        keys = Some(conflictKeys).filter(_.nonEmpty)
+          .map(ks => df.select(ks.map(col): _*).distinct())))
+    }.get
   }
 
   /** The live snapshot at the latest commit. */
@@ -486,6 +483,16 @@ object TxTable {
     DeleteVectors.applyVectors(
       scanResolved(spark, data),
       DeleteVectors.foldDvDirs(spark, existingDvDirs(root, ks)))
+  }
+
+  /** The live rows of the snapshot `snap` WITH row identity
+    * (`__dv_file`, `__dv_row`) — what every kill leg marks dead. */
+  private def liveWithId(spark: SparkSession, root: String,
+      snap: Seq[Long]): DataFrame = {
+    val rks = resolvedOf(root, snap)
+    DeleteVectors.applyVectorsKeepId(
+      scanResolved(spark, existingDataDirs(root, rks)),
+      DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
   }
 
   private def keysDir(root: String, k: Long) = s"$root/_txn/keys/$k"
@@ -512,18 +519,13 @@ object TxTable {
     // PARALLEL footer reads (round 19, r18 verdict's wrong #2): a
     // hive-partitioned commit writes ~tasks x values files, and each
     // footer is an independent open+read round-trip — serially at
-    // object-store latency that is hundreds of HEADs per upsert. A
-    // bounded private pool keeps the one-job-not-per-file contract
-    // (still no Spark job) while overlapping the I/O.
+    // object-store latency that is hundreds of HEADs per upsert. The
+    // shared leg pool overlaps the I/O (still no Spark job); the caller
+    // is never a pool thread, so waiting on it cannot deadlock.
     if (files.size <= 2) files.map(footerRows).sum
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, files.size))
-      try files.map(p => pool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long = footerRows(p)
-      })).map(_.get()).sum
-      finally { pool.shutdown(); () }
-    }
+    else files.map(p => legPool.submit(new java.util.concurrent.Callable[Long] {
+      override def call(): Long = footerRows(p)
+    })).map(_.get()).sum
   }
 
   /** Driver-side CDC-batch size shortcut for the broadcast gates
@@ -557,52 +559,77 @@ object TxTable {
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
 
-  /** Run a commit's two INDEPENDENT write legs concurrently (round 22,
-    * guide §2.6 — overlap independent driver actions): the protocol
-    * orders every leg BEFORE the marker but never legs among
-    * themselves, so the DV-vector write and the adds write overlap
-    * instead of serializing their per-action fixed costs (job
-    * scheduling, AQE stage materialization, output commit — the r21
-    * profile's dominant cost on the tx family). Shared persisted
-    * inputs (the winners/candidate caches) are safe under concurrent
-    * first materialization: the block manager serializes per-partition
-    * cache writes. BOTH futures are awaited before anything is thrown —
-    * a failure's cleanup (dir deletes in the conflict handlers) must
-    * never race a still-in-flight leg's write. */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fra = pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = fa
-      })
-      val frb = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = fb
-      })
-      def unwrap[T](f: java.util.concurrent.Future[T]): Either[Throwable, T] =
-        try Right(f.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Left(Option(e.getCause).getOrElse(e))
-        }
-      (unwrap(fra), unwrap(frb)) match {
-        case (Right(a), Right(b)) => (a, b)
-        case (Left(e), _) => throw e
-        case (_, Left(e)) => throw e
-      }
-    } finally { pool.shutdown(); () }
+  /** What one commit writes under its claimed id, for [[commitWith]]:
+    *
+    *  - `kills`: live rows (carrying `__dv_file`/`__dv_row`) this commit
+    *    marks dead — the DV leg, `_txn/dv/<k>`;
+    *  - `adds`: rows this commit adds — the data leg, `data/c<k>`, laid
+    *    out by [[writeData]] with `bloomCols`/`partitionCols`/`precluster`;
+    *  - `check`: a result-free leg beside the writes (MERGE's
+    *    duplicate-key test);
+    *  - `keys`: the OCC key sidecar, `_txn/keys/<k>`;
+    *  - `validate`: the operation's own test — key sidecars, file
+    *    identity, or a maintenance fence — after the legs and the
+    *    pruning, before the marker;
+    *  - `prune`: remove a leg dir that holds no rows (off where the dir
+    *    itself matters: create's schema-bearing empty file, a checkpoint);
+    *  - `checkpoint`: place the checkpoint marker before the commit
+    *    marker. */
+  private final case class Legs(
+      kills: Option[DataFrame] = None,
+      adds: Option[DataFrame] = None,
+      bloomCols: Seq[String] = Seq.empty,
+      partitionCols: Seq[String] = Seq.empty,
+      precluster: Boolean = true,
+      check: Option[() => Unit] = None,
+      keys: Option[DataFrame] = None,
+      validate: () => Unit = () => (),
+      prune: Boolean = true,
+      checkpoint: Boolean = false)
+
+  /** A commit's read snapshot — the committed ids at its one listing —
+    * and the frames the operation persisted for it, which [[commitWith]]
+    * unpersists once the commit resolves either way. */
+  private final class Snapshot(val ids: Seq[Long],
+      held: scala.collection.mutable.Buffer[DataFrame]) {
+    def cache(df: DataFrame): DataFrame = {
+      held += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
   }
 
-  /** [[inParallel]] for N result-free legs — the MERGE shape, where the
-    * SQL cardinality check (one aggregate job over the persisted source)
-    * overlaps the kill and add writes instead of gating them serially;
-    * all legs complete before the first failure propagates. */
-  private def inParallelAll(legs: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
-    try {
-      val fs = legs.map(l => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = l()
-      }))
-      val errs = fs.flatMap { f =>
+  /** One daemon pool for every commit's legs, reused across commits.
+    * Legs never wait on each other, so the fixed bound can only queue
+    * them, never deadlock; idle threads time out. */
+  private lazy val legPool: java.util.concurrent.ExecutorService = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(16, 16,
+      60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "txtable-leg")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Run a commit's independent legs together (round 22, guide §2.6):
+    * the protocol orders every leg before the marker but never legs
+    * among themselves, so their per-action fixed costs (job scheduling,
+    * AQE stage materialization, output commit) overlap. Frames the legs
+    * share are safe under concurrent first materialization: the block
+    * manager serializes per-partition cache writes. Each leg runs with
+    * the caller's Spark thread-locals (job group, description, active
+    * session). EVERY leg completes before the first failure propagates —
+    * the abandon path must never race a leg still writing. */
+  private def runLegs(spark: SparkSession, legs: Seq[() => Unit]): Unit =
+    if (legs.size <= 1) legs.foreach(_())
+    else {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val futures = legs.map(leg => org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(session, legPool)(leg()))
+      val errs = futures.flatMap { f =>
         try { f.get(); None }
         catch {
           case e: java.util.concurrent.ExecutionException =>
@@ -610,7 +637,78 @@ object TxTable {
         }
       }
       errs.headOption.foreach(e => throw e)
-    } finally { pool.shutdown(); () }
+    }
+
+  /**
+   * The ONE commit sequence every writer runs — data first, marker last,
+   * the order of the paper's row groups before the footer:
+   *
+   *  1. the snapshot listing and the claim. `plan` sees the snapshot and
+   *     returns the legs for the claimed id, or `None` to commit nothing.
+   *     The DML writers list, then claim (their pre-claim checks fail
+   *     with nothing claimed); [[checkpoint]] claims, then lists
+   *     (`claimFirst`), so its fold freezes at ids below its own claim;
+   *  2. the legs, together ([[runLegs]]): kills, adds, check, key sidecar;
+   *  3. pruning of legs that wrote no rows, then the operation's own
+   *     validation;
+   *  4. the checkpoint marker when asked, then the commit marker.
+   *
+   * ANY failure after the claim and before the marker — a misspelled
+   * column met while planning the legs, a failed leg, a conflict, a
+   * fence, a marker write that throws — ABANDONS the id: its data, DV
+   * and key dirs (and a checkpoint marker) go first and the claim last,
+   * so peers waiting on the claim unblock at once and nothing is left
+   * for [[vacuum]] to age out. A commit marker that already exists is
+   * [[commit]]'s loud out-of-band failure and deletes nothing.
+   */
+  private def commitWith(spark: SparkSession, root: String,
+      claimFirst: Boolean = false)(
+      plan: Snapshot => Option[Long => Legs]): Option[Long] = {
+    def abandon(k: Long): Unit =
+      if (!Fs.exists(marker(root, k))) {
+        Seq(dataDir(root, k), dvDir(root, k), keysDir(root, k))
+          .foreach(d => Fs.deleteRecursive(new org.apache.hadoop.fs.Path(d)))
+        Fs.deleteIfExists(s"${checkpointsDir(root)}/c$k")
+        Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
+      }
+    def pruneIfEmpty(dir: String): Unit =
+      if (writtenRows(dir) == 0L)
+        Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dir))
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var claimed = if (claimFirst) Some(claimId(root)) else None
+    try plan(new Snapshot(committedIds(root), held)) match {
+      case None =>
+        claimed.foreach(abandon)
+        None
+      case Some(legsFor) =>
+        val k = claimed.getOrElse(claimId(root))
+        claimed = Some(k)
+        val legs = legsFor(k)
+        runLegs(spark, Seq(
+          legs.kills.map(kdf => () => DeleteVectors.buildVectors(
+              kdf.select(col("__dv_file").as("file_path"), col("__dv_row").as("ri")))
+            .write.mode("overwrite").parquet(dvDir(root, k))),
+          legs.adds.map(adf => () => writeData(adf, dataDir(root, k),
+            legs.bloomCols, legs.partitionCols, legs.precluster)),
+          legs.check,
+          legs.keys.map(kdf => () =>
+            kdf.write.mode("overwrite").parquet(keysDir(root, k)))).flatten)
+        if (legs.prune) {
+          if (legs.kills.nonEmpty) pruneIfEmpty(dvDir(root, k))
+          if (legs.adds.nonEmpty) pruneIfEmpty(dataDir(root, k))
+        }
+        legs.validate()
+        if (legs.checkpoint)
+          require(Fs.createMarker(s"${checkpointsDir(root)}/c$k", dataDir(root, k)),
+            s"txtable: checkpoint marker c$k already exists under $root — " +
+              "lost a commit race")
+        commit(root, k)
+        Some(k)
+    } catch {
+      case e: Throwable =>
+        claimed.foreach(abandon)
+        throw e
+    } finally held.foreach(_.unpersist())
   }
 
   /**
@@ -651,11 +749,7 @@ object TxTable {
    * the store ([[Fs.createMarker]]'s scheme table). A writer stalled
    * longer than `conflictWaitMs` past its claim is presumed crashed by
    * waiting peers — and symmetrically validates UPWARD at its own
-   * commit (its claim age is a complete trigger: any peer that gave up
-   * saw the claim for a full window first), so the stalled writer loses
-   * to the younger winner and retries rather than committing a lost
-   * update; the residual race is two final listings inside the same few
-   * milliseconds, reachable only past a full stall. With the default
+   * commit ([[validateClaim]]'s zombie closure). With the default
    * `conflictDetect = false` the round-17 contract stands: one
    * upserting writer per key space.
    */
@@ -668,111 +762,50 @@ object TxTable {
       conflictDetect: Boolean = false,
       conflictWaitMs: Long = 60L * 1000): Long = {
     require(keys.nonEmpty, "txtable.upsert needs key columns")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try {
-        return upsertOnce(spark, root, batch, keys, versionCol, opCol,
-          bloomCols, broadcastKeyLimit, partitionCols, conflictDetect,
-          conflictWaitMs)
-      } catch {
-        case e: CommitConflictException =>
-          if (attempts >= 8) throw new IllegalStateException(
-            s"txtable: upsert under $root conflicted on every one of " +
-              s"$attempts attempts — concurrent writers are livelocking " +
-              "on the same keys; serialize them upstream", e)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def upsertOnce(spark: SparkSession, root: String, batch: DataFrame,
-      keys: Seq[String], versionCol: String, opCol: Option[String],
-      bloomCols: Seq[String], broadcastKeyLimit: Long,
-      partitionCols: Seq[String], conflictDetect: Boolean,
-      conflictWaitMs: Long): Long = {
-    // the read SNAPSHOT: one commits listing drives the live scan, the
-    // DV fold, and (under conflictDetect) the validation set
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before upserting")
-    if (conflictDetect) Fs.warnIfNonAtomic(root, "upsert(conflictDetect)")
-    val k = claimId(root)
-
-    // batch-internal winner per key: latest version, tombstones
-    // eligible. Persisted ONCE — the broadcast-gate count, the contested
-    // join's key side, the adds anti-join, and the key sidecar all
-    // consume it; unpersisted the window re-executed per consumer
-    // (round-17 finding #2).
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(versionCol).desc)
-    val winners = batch
-      .withColumn("__tx_rn", row_number().over(w))
-      .filter(col("__tx_rn") === 1).drop("__tx_rn")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // contested live rows: one snapshot scan joined against the
-      // batch's (key, winner-version) set — broadcast below the key
-      // limit, the shuffled plan above it.
-      val keyed = winners.select(
-        keys.map(col) :+ col(versionCol).as("__tx_wv"): _*)
-      val keySide =
-        if (smallByStats(batch) || winners.count() <= broadcastKeyLimit)
-          broadcast(keyed) else keyed
-      val rks = resolvedOf(root, snap)
-      val live = DeleteVectors.applyVectorsKeepId(
-        scanResolved(spark, existingDataDirs(root, rks)),
-        DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-      val cand = live.join(keySide, keys.toSeq)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // live rows the batch winner beats (ties to the batch) die
-        val hits = cand.filter(col("__tx_wv") >= col(versionCol))
-          .select(col("__dv_file").as("file_path"), col("__dv_row").as("ri"))
-        // winners that LOSE to a strictly newer live row are dropped —
-        // the live side's latest-wins leg; tombstones drop their key.
-        // Emptiness decided from the footers: an isEmpty probe here
-        // executed the anti-join a second time
-        val beaten = cand.filter(col(versionCol) > col("__tx_wv"))
-          .select(keys.map(col): _*).distinct()
-        val adds0 = winners.join(beaten, keys.toSeq, "left_anti")
-        val adds = opCol.map(c => adds0.filter(col(c) =!= "d").drop(c))
-          .getOrElse(adds0)
-        // the two legs are independent (both read the persisted
-        // winners/cand) and only the MARKER orders the commit — overlap
-        // them (round 22, guide §2.6)
-        inParallel(
-          DeleteVectors.buildVectors(hits)
-            .write.mode("overwrite").parquet(dvDir(root, k)),
-          writeData(adds, dataDir(root, k), bloomCols, partitionCols))
-        val dvEmpty = writtenRows(dvDir(root, k)) == 0L
-        if (dvEmpty) Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-        val anyAdds = writtenRows(dataDir(root, k)) > 0L
-        if (!anyAdds) Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-
-        if (conflictDetect) {
+    retryOnConflict("upsert", root, conflictDetect) {
+      commitWith(spark, root) { s =>
+        require(s.ids.nonEmpty, s"txtable: create $root before upserting")
+        if (conflictDetect) Fs.warnIfNonAtomic(root, "upsert(conflictDetect)")
+        Some { k =>
+          // batch-internal winner per key: latest version, tombstones
+          // eligible. Persisted ONCE — the broadcast-gate count, the
+          // contested join's key side, the adds anti-join, and the key
+          // sidecar all consume it (round-17 finding #2)
+          val w = Window.partitionBy(keys.map(col): _*)
+            .orderBy(col(versionCol).desc)
+          val winners = s.cache(batch
+            .withColumn("__tx_rn", row_number().over(w))
+            .filter(col("__tx_rn") === 1).drop("__tx_rn"))
+          // contested live rows: one snapshot scan joined against the
+          // batch's (key, winner-version) set — broadcast below the key
+          // limit, the shuffled plan above it
+          val keyed = winners.select(
+            keys.map(col) :+ col(versionCol).as("__tx_wv"): _*)
+          val keySide =
+            if (smallByStats(batch) || winners.count() <= broadcastKeyLimit)
+              broadcast(keyed) else keyed
+          val cand = s.cache(liveWithId(spark, root, s.ids).join(keySide, keys))
+          // winners that LOSE to a strictly newer live row are dropped —
+          // the live side's latest-wins leg; tombstones drop their key
+          val beaten = cand.filter(col(versionCol) > col("__tx_wv"))
+            .select(keys.map(col): _*).distinct()
+          val adds = winners.join(beaten, keys, "left_anti")
           // the key summary others validate against — ALL batch keys
-          // (tombstones included: a delete conflicts with an update),
-          // written data-first like everything else under the claim
-          winners.select(keys.map(col): _*).distinct()
-            .write.mode("overwrite").parquet(keysDir(root, k))
-          try validateNoKeyConflicts(spark, root, k, snap.toSet,
-            winners.select(keys.map(col): _*).distinct(), keys, conflictWaitMs)
-          catch {
-            case e: CommitConflictException =>
-              // abandon the claimed id completely (dirs first, claim
-              // last) so waiting higher-id writers unblock immediately
-              // and the id leaves no litter for vacuum
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(keysDir(root, k)))
-              Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-              throw e
-          }
+          // (tombstones included: a delete conflicts with an update)
+          val batchKeys = winners.select(keys.map(col): _*).distinct()
+          Legs(
+            // live rows the batch winner beats (ties to the batch) die
+            kills = Some(cand.filter(col("__tx_wv") >= col(versionCol))),
+            adds = Some(opCol.map(c => adds.filter(col(c) =!= "d").drop(c))
+              .getOrElse(adds)),
+            bloomCols = bloomCols, partitionCols = partitionCols,
+            keys = if (conflictDetect) Some(batchKeys) else None,
+            validate = () => if (conflictDetect)
+              validateNoKeyConflicts(spark, root, k, s.ids.toSet, batchKeys,
+                keys, conflictWaitMs))
         }
-        commit(root, k)
-        k
-      } finally { cand.unpersist(); () }
-    } finally { winners.unpersist(); () }
+      }.get
+    }
   }
 
   /**
@@ -788,53 +821,32 @@ object TxTable {
    */
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
       bloomCols: Seq[String] = Seq.empty,
-      partitionCols: Seq[String] = Seq.empty): Long = {
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before overwriting")
-    val k = claimId(root)
-    val rks = resolvedOf(root, snap)
-    val live = DeleteVectors.applyVectorsKeepId(
-      scanResolved(spark, existingDataDirs(root, rks)),
-      DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-    // kill-everything-live and write-the-replacement are independent
-    // legs — overlap them (round 22, guide §2.6)
-    inParallel(
-      DeleteVectors.buildVectors(live.select(
-          col("__dv_file").as("file_path"), col("__dv_row").as("ri")))
-        .write.mode("overwrite").parquet(dvDir(root, k)),
-      writeData(df, dataDir(root, k), bloomCols, partitionCols))
-    if (writtenRows(dvDir(root, k)) == 0L)
-      Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-    if (writtenRows(dataDir(root, k)) == 0L)
-      Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-    commit(root, k)
-    k
-  }
+      partitionCols: Seq[String] = Seq.empty): Long =
+    commitWith(spark, root) { s =>
+      require(s.ids.nonEmpty, s"txtable: create $root before overwriting")
+      Some(_ => Legs(kills = Some(liveWithId(spark, root, s.ids)),
+        adds = Some(df), bloomCols = bloomCols, partitionCols = partitionCols))
+    }.get
 
   /**
-   * SQL-semantics MERGE (round 19, the engine behind
-   * [[graft.sources.txtable.TxSql]]'s `MERGE INTO` routing): one
-   * committed kill+add pair driven by a source relation and a key
-   * equality, with the standard MERGE clauses —
+   * SQL-semantics MERGE (round 19) with the standard unconditional
+   * clauses, as a translation onto [[mergeClauses]]:
    *
-   *  - `matchedAction = "update"`: WHEN MATCHED THEN UPDATE SET * —
-   *    every matched live row dies, the matching source row lands;
-   *  - `matchedAction = "delete"`: WHEN MATCHED THEN DELETE;
-   *  - `insertNotMatched`: WHEN NOT MATCHED THEN INSERT *;
+   *  - `matchedAction = "update"`: WHEN MATCHED THEN UPDATE SET *
+   *    ([[MatchedUpdateAll]]);
+   *  - `matchedAction = "delete"`: WHEN MATCHED THEN DELETE
+   *    ([[MatchedDelete]]);
+   *  - `insertNotMatched`: WHEN NOT MATCHED THEN INSERT * ([[InsertAll]]);
    *  - `deleteNotMatchedBySource`: WHEN NOT MATCHED BY SOURCE THEN
-   *    DELETE — the full-sync replication shape.
+   *    DELETE ([[BySourceDelete]]) — the full-sync replication shape.
    *
    * Unlike [[upsert]] there is no version column: SQL MERGE is
    * UNCONDITIONAL (the batch wins every matched row), and the SQL
    * cardinality contract applies — a source with duplicate keys fails
-   * loudly when a matched action exists, exactly the "multiple source
-   * rows match a target row" error every SQL engine raises. Cost is the
-   * upsert shape: one snapshot scan, work ∝ source size, source-key set
-   * broadcast below `broadcastKeyLimit`. `conflictDetect` runs the same
-   * claim-ordered key validation as [[upsert]] (the source key set is
-   * the sidecar); under `deleteNotMatchedBySource` a concurrent
-   * disjoint-key writer serializes BEFORE the merge (its key survives —
-   * the merge-then-writer order), which is a valid serial history.
+   * loudly when a matched action exists. With no clause at all
+   * (`"none"`, no insert, no by-source delete) the call commits an
+   * EMPTY commit. Cost, sizing and `conflictDetect` are
+   * [[mergeClauses]]'s.
    */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String], matchedAction: String = "update",
@@ -844,129 +856,19 @@ object TxTable {
       partitionCols: Seq[String] = Seq.empty,
       broadcastKeyLimit: Long = 4L * 1000 * 1000,
       conflictDetect: Boolean = false,
-      conflictWaitMs: Long = 60L * 1000): Long =
-    retryOnConflict("mergeInto", root, conflictDetect) {
-      mergeOnce(spark, root, source, keys, matchedAction, insertNotMatched,
-        deleteNotMatchedBySource, bloomCols, partitionCols,
-        broadcastKeyLimit, conflictDetect, conflictWaitMs)
+      conflictWaitMs: Long = 60L * 1000): Long = {
+    val matched = matchedAction match {
+      case "update" => Seq(MatchedUpdateAll())
+      case "delete" => Seq(MatchedDelete())
+      case "none" => Seq.empty
+      case other => throw new IllegalArgumentException(
+        s"txtable.mergeInto: matchedAction must be update|delete|none, got $other")
     }
-
-  private def mergeOnce(spark: SparkSession, root: String, source: DataFrame,
-      keys: Seq[String], matchedAction: String, insertNotMatched: Boolean,
-      deleteNotMatchedBySource: Boolean, bloomCols: Seq[String],
-      partitionCols: Seq[String], broadcastKeyLimit: Long,
-      conflictDetect: Boolean, conflictWaitMs: Long): Long = {
-    require(keys.nonEmpty, "txtable.mergeInto needs key columns")
-    require(Set("update", "delete", "none").contains(matchedAction),
-      s"txtable.mergeInto: matchedAction must be update|delete|none, got $matchedAction")
-    require(keys.forall(source.columns.contains),
-      s"txtable.mergeInto: keys ${keys.mkString(",")} missing from source")
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before merging")
-    if (conflictDetect) Fs.warnIfNonAtomic(root, "mergeInto(conflictDetect)")
-    // persisted once: the cardinality check, the key side, and both add
-    // legs consume the source
-    val src = source.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the cardinality check runs as a PARALLEL leg below (round 22):
-      // it must hold before the marker, not before the writes
-      def requireCardinality(what: String): Unit = {
-        val dup = src.groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"txtable.$what: the source has duplicate keys — SQL MERGE " +
-            "forbids multiple source rows matching one target row " +
-            s"(first duplicate: ${dup.headOption.getOrElse("")})")
-      }
-      val k = claimId(root)
-      val srcKeys = src.select(keys.map(col): _*).distinct()
-      // one size gate feeds BOTH broadcast decisions (the source key
-      // side and the matched-key side below): a backfill-sized MERGE
-      // falls back to shuffled joins everywhere, never a driver-OOM
-      val srcSmall = smallByStats(source) || src.count() <= broadcastKeyLimit
-      val keySide = if (srcSmall) broadcast(srcKeys) else srcKeys
-      val rks = resolvedOf(root, snap)
-      val live = DeleteVectors.applyVectorsKeepId(
-        scanResolved(spark, existingDataDirs(root, rks)),
-        DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-      // ONE table scan for the matched side, persisted: it feeds the
-      // kills AND the matched-key set both add legs anti/semi against
-      val matchedLive =
-        if (matchedAction == "none" && !insertNotMatched) None
-        else Some(live.join(keySide, keys.toSeq, "left_semi")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      try {
-        val unmatchedKills =
-          if (!deleteNotMatchedBySource) None
-          else Some(live.join(keySide, keys.toSeq, "left_anti"))
-        val matchedKills =
-          if (matchedAction == "none") None else matchedLive
-        val kills = (matchedKills.toSeq ++ unmatchedKills.toSeq)
-          .reduceOption(_.unionByName(_))
-        // add legs: matched keys are a SMALL relation (≤ source), so the
-        // source-side semi/anti stay broadcastable batch-cost joins
-        val tableCols = live.columns
-          .filterNot(c => c == "__dv_file" || c == "__dv_row").toSeq
-        lazy val matchedKeys = {
-          val mk = matchedLive.get.select(keys.map(col): _*).distinct()
-          if (srcSmall) broadcast(mk) else mk
-        }
-        def aligned(df: DataFrame): DataFrame = {
-          val missing = tableCols.filterNot(df.columns.contains)
-          require(missing.isEmpty,
-            s"txtable.mergeInto: source is missing table columns " +
-              s"${missing.mkString(",")} (INSERT */UPDATE SET * need all of them)")
-          df.select(tableCols.map(col): _*)
-        }
-        val updateAdds =
-          if (matchedAction != "update") None
-          else Some(src.join(matchedKeys, keys.toSeq, "left_semi"))
-        val insertAdds =
-          if (!insertNotMatched) None
-          else Some(src.join(matchedKeys, keys.toSeq, "left_anti"))
-        val adds = (updateAdds.toSeq ++ insertAdds.toSeq)
-          .reduceOption(_.unionByName(_)).map(aligned)
-        // kill leg ∥ adds leg ∥ cardinality check — all read the
-        // persisted src/matchedLive; only the MARKER orders the commit
-        // (round 22, guide §2.6). A failed check (or leg) abandons the
-        // claimed id's litter so the error path leaves nothing a
-        // vacuum grace-window has to age out.
-        try inParallelAll(Seq(
-          () => kills.foreach { kdf =>
-            DeleteVectors.buildVectors(kdf.select(
-                col("__dv_file").as("file_path"), col("__dv_row").as("ri")))
-              .write.mode("overwrite").parquet(dvDir(root, k))
-          },
-          () => adds.foreach(writeData(_, dataDir(root, k), bloomCols, partitionCols)),
-          () => if (matchedAction != "none") requireCardinality("mergeInto")))
-        catch {
-          case e: Throwable =>
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-            Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-            throw e
-        }
-        if (writtenRows(dvDir(root, k)) == 0L)
-          Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-        if (writtenRows(dataDir(root, k)) == 0L)
-          Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-        if (conflictDetect) {
-          srcKeys.write.mode("overwrite").parquet(keysDir(root, k))
-          try validateNoKeyConflicts(spark, root, k, snap.toSet,
-            srcKeys, keys, conflictWaitMs)
-          catch {
-            case e: CommitConflictException =>
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(keysDir(root, k)))
-              Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-              throw e
-          }
-        }
-        commit(root, k)
-        k
-      } finally { matchedLive.foreach(_.unpersist()); () }
-    } finally { src.unpersist(); () }
+    merge("mergeInto", spark, root, source, keys, matched,
+      if (insertNotMatched) Seq(InsertAll()) else Seq.empty,
+      if (deleteNotMatchedBySource) Seq(BySourceDelete()) else Seq.empty,
+      bloomCols, partitionCols, broadcastKeyLimit, conflictDetect,
+      conflictWaitMs)
   }
 
   /** Clause ADT for [[mergeClauses]] — the FULL SQL MERGE surface
@@ -1034,19 +936,21 @@ object TxTable {
    * applies. Assignments cast to the target column's type — SQL
    * assignment semantics, and it keeps every commit's parquet schema
    * identical to the table's. The cardinality contract holds whenever a
-   * matched clause exists: duplicate source keys fail loudly.
+   * matched clause exists: duplicate source keys fail loudly. That check
+   * runs as a leg BESIDE the kill and add writes (round 22), not before
+   * them: a duplicate-key source costs one full batch write, which the
+   * failure then abandons.
    *
    * COST: the matched side is ONE inner join of the snapshot scan
    * against the source (broadcast below `broadcastKeyLimit` source
    * rows), evaluated once and reused for kills, every update leg, and
-   * the insert anti-join's key set — work ∝ source size, exactly
-   * [[mergeInto]]'s shape. BY SOURCE clauses add one anti-join pass
-   * over the snapshot — inherently table-wide, the full-sync shape, so
-   * pay it only when such clauses exist. `conflictDetect` records the
-   * source key set as the OCC sidecar like [[mergeInto]]; under BY
-   * SOURCE clauses a concurrent disjoint-key writer serializes BEFORE
-   * the merge (its key survives — the merge-then-writer order), a valid
-   * serial history.
+   * the insert anti-join's key set — work ∝ source size. BY SOURCE
+   * clauses add one anti-join pass over the snapshot — inherently
+   * table-wide, the full-sync shape, so pay it only when such clauses
+   * exist. `conflictDetect` records the source key set as the OCC
+   * sidecar like [[upsert]]; under BY SOURCE clauses a concurrent
+   * disjoint-key writer serializes BEFORE the merge (its key survives —
+   * the merge-then-writer order), a valid serial history.
    */
   def mergeClauses(spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String],
@@ -1057,108 +961,86 @@ object TxTable {
       partitionCols: Seq[String] = Seq.empty,
       broadcastKeyLimit: Long = 4L * 1000 * 1000,
       conflictDetect: Boolean = false,
-      conflictWaitMs: Long = 60L * 1000): Long =
-    retryOnConflict("mergeClauses", root, conflictDetect) {
-      mergeClausesOnce(spark, root, source, keys, matched, notMatched,
-        bySource, bloomCols, partitionCols, broadcastKeyLimit,
-        conflictDetect, conflictWaitMs)
-    }
+      conflictWaitMs: Long = 60L * 1000): Long = {
+    require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
+      "txtable.mergeClauses: no clauses — nothing to do")
+    merge("mergeClauses", spark, root, source, keys, matched, notMatched,
+      bySource, bloomCols, partitionCols, broadcastKeyLimit, conflictDetect,
+      conflictWaitMs)
+  }
 
-  private def mergeClausesOnce(spark: SparkSession, root: String,
+  /** The MERGE engine behind [[mergeClauses]] and [[mergeInto]]; `what`
+    * names the caller in errors. No clause at all commits an EMPTY
+    * commit. */
+  private def merge(what: String, spark: SparkSession, root: String,
       source: DataFrame, keys: Seq[String],
       matched: Seq[MergeMatchedClause], notMatched: Seq[MergeInsertClause],
       bySource: Seq[MergeBySourceClause], bloomCols: Seq[String],
       partitionCols: Seq[String], broadcastKeyLimit: Long,
       conflictDetect: Boolean, conflictWaitMs: Long): Long = {
-    require(keys.nonEmpty, "txtable.mergeClauses needs key columns")
-    require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
-      "txtable.mergeClauses: no clauses — nothing to do")
+    require(keys.nonEmpty, s"txtable.$what needs key columns")
     require(keys.forall(source.columns.contains),
-      s"txtable.mergeClauses: keys ${keys.mkString(",")} missing from source")
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before merging")
-    if (conflictDetect) Fs.warnIfNonAtomic(root, "mergeClauses(conflictDetect)")
-    val src = source.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // runs as a parallel leg below — before the MARKER, not before
-      // the writes (round 22)
-      def requireCardinality(): Unit = {
-        val dup = src.groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          "txtable.mergeClauses: the source has duplicate keys — SQL MERGE " +
-            "forbids multiple source rows matching one target row " +
-            s"(first duplicate: ${dup.headOption.getOrElse("")})")
-      }
-      val k = claimId(root)
-      val srcKeys = src.select(keys.map(col): _*).distinct()
-      val srcSmall = smallByStats(source) || src.count() <= broadcastKeyLimit
-      val rks = resolvedOf(root, snap)
-      val live = DeleteVectors.applyVectorsKeepId(
-        scanResolved(spark, existingDataDirs(root, rks)),
-        DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-      val tableCols = live.columns
-        .filterNot(c => c == "__dv_file" || c == "__dv_row").toSeq
-      val colType = live.schema.fields.map(f => f.name -> f.dataType).toMap
-      def requireAll(what: String, assigned: Iterable[String]): Unit = {
-        val unknown = assigned.filterNot(tableCols.contains)
-        require(unknown.isEmpty,
-          s"txtable.mergeClauses: $what names columns not in the table: " +
-            s"${unknown.mkString(",")} (table: ${tableCols.mkString(",")})")
-      }
-      def starSet: Map[String, Column] = {
-        val missing = tableCols.filterNot(source.columns.contains)
-        require(missing.isEmpty,
-          s"txtable.mergeClauses: source is missing table columns " +
-            s"${missing.mkString(",")} (INSERT */UPDATE SET * need all of them)")
-        tableCols.map(c => c -> col(s"s.$c")).toMap
-      }
-      // the first clause whose condition holds fires: 1-based index, 0 =
-      // no clause — ONE codegen'd CASE evaluated per row
-      def clauseIndex(conds: Seq[Option[Column]]): Column = {
-        val chain = conds.zipWithIndex.foldLeft(Option.empty[Column]) {
-          case (acc, (c, i)) =>
-            val cond = c.getOrElse(lit(true))
-            Some(acc.map(_.when(cond, lit(i + 1)))
-              .getOrElse(when(cond, lit(i + 1))))
-        }
-        chain.map(_.otherwise(lit(0))).getOrElse(lit(0))
-      }
-      locally {
-        // MATCHED side: one target×source inner join, persisted — it
-        // feeds the kills, every update leg, and the insert anti-join's
-        // matched-key set
-        val joinCond = keys.map(c => col(s"t.$c") === col(s"s.$c")).reduce(_ && _)
-        val matchedEval: Option[DataFrame] =
-          if (matched.isEmpty && notMatched.isEmpty) None
-          else Some(live.alias("t")
-            .join(if (srcSmall) broadcast(src.alias("s")) else src.alias("s"),
-              joinCond, "inner")
-            .withColumn("__mc", clauseIndex(matched.map(_.condition)))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        try {
-          val matchedKills =
-            if (matched.isEmpty) None
-            else matchedEval.map(_.filter(col("__mc") > 0)
-              .select(col("t.__dv_file").as("file_path"),
-                col("t.__dv_row").as("ri")))
+      s"txtable.$what: keys ${keys.mkString(",")} missing from source")
+    retryOnConflict(what, root, conflictDetect) {
+      commitWith(spark, root) { s =>
+        require(s.ids.nonEmpty, s"txtable: create $root before merging")
+        if (conflictDetect) Fs.warnIfNonAtomic(root, s"$what(conflictDetect)")
+        Some { k =>
+          val src = s.cache(source)
+          val srcKeys = src.select(keys.map(col): _*).distinct()
+          // one size gate feeds every broadcast decision: a backfill-sized
+          // MERGE falls back to shuffled joins everywhere
+          val srcSmall = smallByStats(source) || src.count() <= broadcastKeyLimit
+          def small(df: DataFrame): DataFrame = if (srcSmall) broadcast(df) else df
+          val live = liveWithId(spark, root, s.ids)
+          val tableCols = live.columns
+            .filterNot(c => c == "__dv_file" || c == "__dv_row").toSeq
+          val colType = live.schema.fields.map(f => f.name -> f.dataType).toMap
+          def requireAll(clause: String, assigned: Iterable[String]): Unit = {
+            val unknown = assigned.filterNot(tableCols.contains)
+            require(unknown.isEmpty,
+              s"txtable.$what: $clause names columns not in the table: " +
+                s"${unknown.mkString(",")} (table: ${tableCols.mkString(",")})")
+          }
+          def starSet: Map[String, Column] = {
+            val missing = tableCols.filterNot(source.columns.contains)
+            require(missing.isEmpty,
+              s"txtable.$what: source is missing table columns " +
+                s"${missing.mkString(",")} (INSERT */UPDATE SET * need all of them)")
+            tableCols.map(c => c -> col(s"s.$c")).toMap
+          }
+          // the first clause whose condition holds fires: 1-based index,
+          // 0 = no clause — ONE codegen'd CASE evaluated per row
+          def clauseIndex(conds: Seq[Option[Column]]): Column =
+            conds.zipWithIndex.foldLeft(Option.empty[Column]) {
+              case (acc, (c, i)) =>
+                val cond = c.getOrElse(lit(true))
+                Some(acc.map(_.when(cond, lit(i + 1)))
+                  .getOrElse(when(cond, lit(i + 1))))
+            }.map(_.otherwise(lit(0))).getOrElse(lit(0))
+          def on(l: String, r: String): Column =
+            keys.map(c => col(s"$l.$c") === col(s"$r.$c")).reduce(_ && _)
+          // MATCHED side: one target×source inner join, persisted — it
+          // feeds the kills, every update leg, and the insert anti-join's
+          // matched-key set
+          val matchedEval: Option[DataFrame] =
+            if (matched.isEmpty && notMatched.isEmpty) None
+            else Some(s.cache(live.alias("t")
+              .join(small(src.alias("s")), on("t", "s"), "inner")
+              .withColumn("__mc", clauseIndex(matched.map(_.condition)))))
           // BY SOURCE side: target rows with no source key — one
           // anti-join pass over the snapshot, only when such clauses exist
           val bySourceEval: Option[DataFrame] =
             if (bySource.isEmpty) None
-            else {
-              val keySide = if (srcSmall) broadcast(srcKeys) else srcKeys
-              Some(live.alias("t").join(keySide.alias("sk"),
-                  keys.map(c => col(s"t.$c") === col(s"sk.$c")).reduce(_ && _),
-                  "left_anti")
-                .withColumn("__bc", clauseIndex(bySource.map(_.condition))))
-            }
-          val bySourceKills = bySourceEval.map(_.filter(col("__bc") > 0)
-            .select(col("t.__dv_file").as("file_path"),
-              col("t.__dv_row").as("ri")))
-          val kills = (matchedKills.toSeq ++ bySourceKills.toSeq)
+            else Some(live.alias("t")
+              .join(small(srcKeys).alias("sk"), on("t", "sk"), "left_anti")
+              .withColumn("__bc", clauseIndex(bySource.map(_.condition))))
+          val kills = (matchedEval.filter(_ => matched.nonEmpty)
+              .map(_.filter(col("__mc") > 0)) ++
+            bySourceEval.map(_.filter(col("__bc") > 0)))
+            .map(_.select(col("t.__dv_file").as("__dv_file"),
+              col("t.__dv_row").as("__dv_row")))
             .reduceOption(_.unionByName(_))
-
           // add legs, every output cast to the table column's type (SQL
           // assignment semantics; keeps each commit's schema = the table's)
           def shaped(df: DataFrame, values: Map[String, Column],
@@ -1166,14 +1048,12 @@ object TxTable {
             df.select(tableCols.map(c =>
               values.getOrElse(c, fallback(c)).cast(colType(c)).as(c)): _*)
           val updateAdds = matched.zipWithIndex.flatMap { case (c, i) =>
-            val set = c match {
-              case MatchedUpdate(s0, _) => requireAll("UPDATE SET", s0.keys); Some(s0)
+            (c match {
+              case MatchedUpdate(set, _) => requireAll("UPDATE SET", set.keys); Some(set)
               case MatchedUpdateAll(_) => Some(starSet)
               case MatchedDelete(_) => None
-            }
-            set.map(s0 => shaped(
-              matchedEval.get.filter(col("__mc") === (i + 1)),
-              s0, tc => col(s"t.$tc")))
+            }).map(set => shaped(matchedEval.get.filter(col("__mc") === (i + 1)),
+              set, tc => col(s"t.$tc")))
           }
           val insertAdds = notMatched.zipWithIndex.map { case (c, i) =>
             val values = c match {
@@ -1181,154 +1061,130 @@ object TxTable {
               case InsertAll(_) => starSet
             }
             // unmatched source rows: anti-join against the matched keys
-            // (≤ source size, broadcastable) — evaluated lazily per
-            // clause but planned over the SAME persisted matchedEval
+            // (≤ source size, broadcastable), planned over the SAME
+            // persisted matchedEval
             val matchedKeys = matchedEval.get
               .select(keys.map(c0 => col(s"t.$c0").as(c0)): _*).distinct()
-            val mkSide = if (srcSmall) broadcast(matchedKeys) else matchedKeys
-            val nm = src.alias("s").join(mkSide.alias("mk"),
-                keys.map(c0 => col(s"s.$c0") === col(s"mk.$c0")).reduce(_ && _),
-                "left_anti")
+            val nm = src.alias("s")
+              .join(small(matchedKeys).alias("mk"), on("s", "mk"), "left_anti")
               .withColumn("__ic", clauseIndex(notMatched.map(_.condition)))
-            shaped(nm.filter(col("__ic") === (i + 1)), values,
-              tc => lit(null))
+            shaped(nm.filter(col("__ic") === (i + 1)), values, _ => lit(null))
           }
           val bySourceAdds = bySource.zipWithIndex.flatMap { case (c, i) =>
             (c match {
-              case BySourceUpdate(s0, _) => requireAll("BY SOURCE UPDATE SET", s0.keys); Some(s0)
+              case BySourceUpdate(set, _) =>
+                requireAll("BY SOURCE UPDATE SET", set.keys); Some(set)
               case BySourceDelete(_) => None
-            }).map(s0 => shaped(
-              bySourceEval.get.filter(col("__bc") === (i + 1)),
-              s0, tc => col(s"t.$tc")))
+            }).map(set => shaped(bySourceEval.get.filter(col("__bc") === (i + 1)),
+              set, tc => col(s"t.$tc")))
           }
-          val adds = (updateAdds ++ insertAdds ++ bySourceAdds)
-            .reduceOption(_.unionByName(_))
-          // kill leg ∥ adds leg ∥ cardinality check over the persisted
-          // matchedEval/src (round 22, guide §2.6); a failure abandons
-          // the claimed id's litter
-          try inParallelAll(Seq(
-            () => kills.foreach { kdf =>
-              DeleteVectors.buildVectors(kdf)
-                .write.mode("overwrite").parquet(dvDir(root, k))
-            },
-            () => adds.foreach(writeData(_, dataDir(root, k), bloomCols, partitionCols)),
-            () => if (matched.nonEmpty) requireCardinality()))
-          catch {
-            case e: Throwable =>
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-              Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-              Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-              throw e
-          }
-          if (writtenRows(dvDir(root, k)) == 0L)
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-          if (writtenRows(dataDir(root, k)) == 0L)
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-          if (conflictDetect) {
-            srcKeys.write.mode("overwrite").parquet(keysDir(root, k))
-            try validateNoKeyConflicts(spark, root, k, snap.toSet,
-              srcKeys, keys, conflictWaitMs)
-            catch {
-              case e: CommitConflictException =>
-                Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-                Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-                Fs.deleteRecursive(new org.apache.hadoop.fs.Path(keysDir(root, k)))
-                Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-                throw e
-            }
-          }
-          commit(root, k)
-          k
-        } finally { matchedEval.foreach(_.unpersist()); () }
-      }
-    } finally { src.unpersist(); () }
+          Legs(kills = kills,
+            adds = (updateAdds ++ insertAdds ++ bySourceAdds).reduceOption(_.unionByName(_)),
+            bloomCols = bloomCols, partitionCols = partitionCols,
+            check =
+              if (matched.nonEmpty) Some(() => requireUniqueKeys(what, src, keys))
+              else None,
+            keys = if (conflictDetect) Some(srcKeys) else None,
+            validate = () => if (conflictDetect)
+              validateNoKeyConflicts(spark, root, k, s.ids.toSet, srcKeys,
+                keys, conflictWaitMs))
+        }
+      }.get
+    }
   }
 
-  /** The optimistic-commit validation (round 18): serialization order is
-    * CLAIM-ID order. Every id below ours that our snapshot did not
-    * contain must resolve — a still-claimed lower id is an in-flight
-    * writer we wait on (it either commits, abandons its claim, or ages
-    * past `waitMs` and is presumed crashed); every such id that DID
-    * commit must carry a key sidecar disjoint from our batch keys.
-    * Writers above us get checked only when OUR claim has aged past
-    * `waitMs` (the zombie closure below); otherwise they run this same
-    * loop against US. Throws [[CommitConflictException]] on intersection
-    * (or on a sidecar-less commit in the window — a writer outside the
-    * optimistic protocol, one conservative retry). */
+  /** The SQL MERGE cardinality contract: no two source rows share a key. */
+  private def requireUniqueKeys(what: String, src: DataFrame,
+      keys: Seq[String]): Unit = {
+    val dup = src.groupBy(keys.map(col): _*).count()
+      .filter(col("count") > 1).limit(1).collect()
+    require(dup.isEmpty,
+      s"txtable.$what: the source has duplicate keys — SQL MERGE " +
+        "forbids multiple source rows matching one target row " +
+        s"(first duplicate: ${dup.headOption.getOrElse("")})")
+  }
+
+  /** Claim-id-ordered optimistic validation (rounds 18–19), the loop the
+    * key and file-identity tests share. Serialization order is CLAIM-ID
+    * order: first wait until every lower claim our snapshot `snap` did
+    * not contain resolves — it commits, abandons, or ages past `waitMs`
+    * and is presumed crashed (a claim already that stale is never waited
+    * on). Then `below` judges every lower commit the snapshot missed.
+    * `above` judges the commits over us only when OUR claim has aged
+    * past `waitMs` — the ZOMBIE CLOSURE: a higher-id peer gives up on a
+    * claim only after seeing it for its full window, so our claim's age
+    * is a complete trigger for "a younger writer may have committed
+    * believing us crashed", and we lose to it. Residual window: both
+    * sides passing their final listing inside the same few milliseconds
+    * — reachable only with a writer already stalled past `waitMs`. A
+    * verdict is the conflict's description; any verdict throws
+    * [[CommitConflictException]]. */
+  private def validateClaim(root: String, k: Long, snap: Set[Long],
+      waitMs: Long)(below: Seq[Long] => Option[String],
+      above: Seq[Long] => Option[String]): Unit = {
+    // ONE claims listing per poll: ids + mtimes together
+    def claims(): Map[Long, Long] = Fs.listFiles(claimsDir(root))
+      .filter(_.getPath.getName.matches("c\\d+"))
+      .map(st => st.getPath.getName.stripPrefix("c").toLong ->
+        st.getModificationTime).toMap
+    def unresolved(): Boolean = {
+      val committedNow = committedIds(root).toSet
+      val now = System.currentTimeMillis()
+      claims().exists { case (c, mtime) =>
+        c < k && !committedNow.contains(c) && !snap.contains(c) &&
+          now - mtime <= waitMs
+      }
+    }
+    val deadline = System.currentTimeMillis() + math.max(0L, waitMs)
+    while (unresolved() && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    val stalled = claims().get(k)
+      .exists(mtime => System.currentTimeMillis() - mtime > waitMs)
+    val committedNow = committedIds(root)
+    if (stalled) above(committedNow.filter(_ > k)).foreach(why =>
+      throw new CommitConflictException(
+        s"txtable: claim $k stalled past its wait window and $why — the " +
+          "younger writer won; retrying against the fresh snapshot"))
+    below(committedNow.filter(c => c < k && !snap.contains(c))).foreach(why =>
+      throw new CommitConflictException(
+        s"txtable: claim $k: $why — retrying against the fresh snapshot"))
+  }
+
+  /** The optimistic KEY test (round 18) over [[validateClaim]]: every
+    * lower commit our snapshot missed must carry a key sidecar disjoint
+    * from our batch keys (a sidecar-less commit in the window is a
+    * writer outside the protocol — one conservative retry); upward, only
+    * the sidecar-carrying commits count (blind appends stay out of key
+    * space by contract).
+    *
+    * NOTE a checkpoint in the window is NOT exempt even though it
+    * changes no key: our deletion vectors reference the files of OUR
+    * read snapshot, and a checkpoint that committed after it folds
+    * those files away — post-checkpoint readers would scan the folded
+    * copies and our kills would silently miss (lost update by file
+    * identity). The checkpoint has no keys sidecar, so it forces exactly
+    * the retry that re-kills against the folded layout — the Delta
+    * OPTIMIZE-vs-txn file-level conflict, resolved the same way. */
   private[graft] def validateNoKeyConflicts(spark: SparkSession, root: String,
       k: Long, snap: Set[Long], ourKeys: DataFrame, keys: Seq[String],
       waitMs: Long): Unit = {
-    val deadline = System.currentTimeMillis() + math.max(0L, waitMs)
-    var unresolved = Seq.empty[Long]
-    var first = true
-    do {
-      if (!first) Thread.sleep(50)
-      first = false
-      val committedNow = committedIds(root).toSet
-      // ONE claims listing per poll: ids + mtimes together
-      val claims = Fs.listFiles(claimsDir(root))
-        .filter(_.getPath.getName.matches("c\\d+"))
-        .map(st => st.getPath.getName.stripPrefix("c").toLong ->
-          st.getModificationTime).toMap
-      unresolved = claims.keys.toSeq
-        .filter(c => c < k && !committedNow.contains(c) && !snap.contains(c))
-        // a claim already stale by the full wait bound is a crashed
-        // writer from an earlier era — never spin a full window on it
-        .filter(c => System.currentTimeMillis() - claims(c) <= waitMs)
-    } while (unresolved.nonEmpty && System.currentTimeMillis() < deadline)
-
-    // ZOMBIE CLOSURE: if OUR claim is older than waitMs, a higher-id
-    // peer may have exhausted its wait on us, presumed us crashed, and
-    // committed — and we would never see it checking only downward. The
-    // age test is a COMPLETE trigger: a peer only gives up after seeing
-    // our claim for its full window, so at its commit time our claim is
-    // already past waitMs, and our validation runs at or after that. On
-    // trigger, validate UPWARD against sidecar-carrying commits (the
-    // protocol's participants; blind appends stay out of key space by
-    // contract) and lose to the younger winner. Residual window: both
-    // sides passing their final listing inside the same few milliseconds
-    // — reachable only with a writer already stalled past waitMs.
-    val myAge = Fs.listFiles(claimsDir(root))
-      .find(_.getPath.getName == s"c$k")
-      .map(st => System.currentTimeMillis() - st.getModificationTime)
-    if (myAge.exists(_ > waitMs)) {
-      val upIds = committedIds(root)
-        .filter(c => c > k && Fs.isDirectory(keysDir(root, c)))
-      if (upIds.nonEmpty) {
-        val theirs = spark.read.parquet(upIds.map(keysDir(root, _)): _*)
-        if (!ourKeys.join(theirs, keys.toSeq, "left_semi").isEmpty)
-          throw new CommitConflictException(
-            s"txtable: claim $k stalled past its wait window and commits " +
-              s"${upIds.mkString(",")} above it touch its keys — the " +
-              "younger writer won; retrying against the fresh snapshot")
-      }
-    }
-
-    // NOTE a checkpoint in the window is NOT exempt even though it
-    // changes no key: our deletion vectors reference the files of OUR
-    // read snapshot, and a checkpoint that committed after it folds
-    // those files away — post-checkpoint readers would scan the folded
-    // copies and our kills would silently miss (lost update by file
-    // identity, not key identity). The checkpoint has no keys sidecar,
-    // so it lands in `bare` and forces exactly the retry that re-kills
-    // against the folded layout — the Delta OPTIMIZE-vs-txn file-level
-    // conflict, resolved the same way.
-    val newIds = committedIds(root).filter(c => c < k && !snap.contains(c))
-    if (newIds.isEmpty) return
-    val (withKeys, bare) = newIds.partition(id => Fs.isDirectory(keysDir(root, id)))
-    if (bare.nonEmpty)
-      throw new CommitConflictException(
-        s"txtable: commits ${bare.mkString(",")} landed inside the " +
-          s"validation window of claim $k without key sidecars — " +
-          "retrying against the fresh snapshot")
-    if (withKeys.nonEmpty) {
-      val theirs = spark.read.parquet(withKeys.map(keysDir(root, _)): _*)
-      if (!ourKeys.join(theirs, keys.toSeq, "left_semi").isEmpty)
-        throw new CommitConflictException(
-          s"txtable: claim $k's batch keys intersect concurrent " +
-            s"commits ${withKeys.mkString(",")} — retrying against the " +
-            "fresh snapshot")
-    }
+    def touched(ids: Seq[Long]): Boolean = ids.nonEmpty &&
+      !ourKeys.join(spark.read.parquet(ids.map(keysDir(root, _)): _*),
+        keys, "left_semi").isEmpty
+    validateClaim(root, k, snap, waitMs)(
+      below = { ids =>
+        val (withKeys, bare) = ids.partition(id => Fs.isDirectory(keysDir(root, id)))
+        if (bare.nonEmpty) Some(s"commits ${bare.mkString(",")} landed inside " +
+          "its validation window without key sidecars")
+        else if (touched(withKeys)) Some(s"its batch keys intersect " +
+          s"concurrent commits ${withKeys.mkString(",")}")
+        else None
+      },
+      above = { ids =>
+        val up = ids.filter(id => Fs.isDirectory(keysDir(root, id)))
+        if (touched(up)) Some(s"commits ${up.mkString(",")} above it touch its keys")
+        else None
+      })
   }
 
   /**
@@ -1368,40 +1224,15 @@ object TxTable {
       conflictDetect: Boolean = false,
       conflictWaitMs: Long = 60L * 1000): Long =
     retryOnConflict("deleteWhere", root, conflictDetect) {
-      deleteWhereOnce(spark, root, predicate, conflictDetect, conflictWaitMs)
+      commitWith(spark, root) { s =>
+        require(s.ids.nonEmpty, s"txtable: create $root before deleting")
+        if (conflictDetect) Fs.warnIfNonAtomic(root, "deleteWhere(conflictDetect)")
+        Some(k => Legs(
+          kills = Some(liveWithId(spark, root, s.ids).filter(predicate)),
+          validate = () => if (conflictDetect) validateNoFileConflicts(spark,
+            root, k, s.ids.toSet, dvFileKeys(spark, root, Seq(k)), conflictWaitMs)))
+      }.get
     }
-
-  private def deleteWhereOnce(spark: SparkSession, root: String,
-      predicate: Column, conflictDetect: Boolean,
-      conflictWaitMs: Long): Long = {
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before deleting")
-    if (conflictDetect) Fs.warnIfNonAtomic(root, "deleteWhere(conflictDetect)")
-    val k = claimId(root)
-    val rks = resolvedOf(root, snap)
-    val live = DeleteVectors.applyVectorsKeepId(
-      scanResolved(spark, existingDataDirs(root, rks)),
-      DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-    val hits = live.filter(predicate)
-      .select(col("__dv_file").as("file_path"), col("__dv_row").as("ri"))
-    DeleteVectors.buildVectors(hits)
-      .write.mode("overwrite").parquet(dvDir(root, k))
-    val anyKills = writtenRows(dvDir(root, k)) > 0L
-    if (!anyKills)
-      Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-    if (conflictDetect && anyKills) {
-      try validateNoFileConflicts(spark, root, k, snap.toSet,
-        dvFileKeys(spark, root, k), conflictWaitMs)
-      catch {
-        case e: CommitConflictException =>
-          Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-          Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-          throw e
-      }
-    }
-    commit(root, k)
-    k
-  }
 
   /**
    * Predicate UPDATE (round 18) — `UPDATE t SET c = expr, … WHERE p`,
@@ -1424,159 +1255,84 @@ object TxTable {
       set: Map[String, Column], bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty,
       conflictDetect: Boolean = false,
-      conflictWaitMs: Long = 60L * 1000): Long =
-    retryOnConflict("updateWhere", root, conflictDetect) {
-      updateWhereOnce(spark, root, predicate, set, bloomCols,
-        partitionCols, conflictDetect, conflictWaitMs)
-    }
-
-  private def updateWhereOnce(spark: SparkSession, root: String,
-      predicate: Column, set: Map[String, Column], bloomCols: Seq[String],
-      partitionCols: Seq[String], conflictDetect: Boolean,
-      conflictWaitMs: Long): Long = {
+      conflictWaitMs: Long = 60L * 1000): Long = {
     require(set.nonEmpty, "txtable.updateWhere needs SET expressions")
-    val snap = committedIds(root)
-    require(snap.nonEmpty, s"txtable: create $root before updating")
-    if (conflictDetect) Fs.warnIfNonAtomic(root, "updateWhere(conflictDetect)")
-    val k = claimId(root)
-    val rks = resolvedOf(root, snap)
-    val live = DeleteVectors.applyVectorsKeepId(
-      scanResolved(spark, existingDataDirs(root, rks)),
-      DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks)))
-    val matched = live.filter(predicate)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val hits = matched
-        .select(col("__dv_file").as("file_path"), col("__dv_row").as("ri"))
-      val old = matched.drop("__dv_file", "__dv_row")
-      require(set.keySet.subsetOf(old.columns.toSet),
-        s"txtable.updateWhere: SET names ${set.keySet.mkString(",")} " +
-          s"must be existing columns (${old.columns.mkString(",")})")
-      // ONE select, so every SET expression evaluates against the OLD
-      // row (SQL UPDATE semantics — a fold of withColumn would let one
-      // SET read another's result in map order)
-      val mutated = old.select(old.columns.map(c =>
-        set.getOrElse(c, col(c)).as(c)): _*)
-      // kill leg ∥ mutated-copies leg, both over the persisted match
-      // (round 22, guide §2.6). A no-match predicate writes two empty
-      // dirs and the footer checks below remove both — the same EMPTY
-      // commit the serial form produced.
-      inParallel(
-        DeleteVectors.buildVectors(hits)
-          .write.mode("overwrite").parquet(dvDir(root, k)),
-        writeData(mutated, dataDir(root, k), bloomCols, partitionCols))
-      val anyKills = writtenRows(dvDir(root, k)) > 0L
-      if (!anyKills)
-        Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-      if (writtenRows(dataDir(root, k)) == 0L)
-        Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-      if (conflictDetect && anyKills) {
-        try validateNoFileConflicts(spark, root, k, snap.toSet,
-          dvFileKeys(spark, root, k), conflictWaitMs)
-        catch {
-          case e: CommitConflictException =>
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-            Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-            Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-            throw e
+    retryOnConflict("updateWhere", root, conflictDetect) {
+      commitWith(spark, root) { s =>
+        require(s.ids.nonEmpty, s"txtable: create $root before updating")
+        if (conflictDetect) Fs.warnIfNonAtomic(root, "updateWhere(conflictDetect)")
+        Some { k =>
+          val matched = s.cache(liveWithId(spark, root, s.ids).filter(predicate))
+          val old = matched.drop("__dv_file", "__dv_row")
+          require(set.keySet.subsetOf(old.columns.toSet),
+            s"txtable.updateWhere: SET names ${set.keySet.mkString(",")} " +
+              s"must be existing columns (${old.columns.mkString(",")})")
+          Legs(kills = Some(matched),
+            // ONE select, so every SET expression evaluates against the
+            // OLD row (SQL UPDATE semantics — a fold of withColumn would
+            // let one SET read another's result in map order)
+            adds = Some(old.select(old.columns.map(c =>
+              set.getOrElse(c, col(c)).as(c)): _*)),
+            bloomCols = bloomCols, partitionCols = partitionCols,
+            validate = () => if (conflictDetect) validateNoFileConflicts(spark,
+              root, k, s.ids.toSet, dvFileKeys(spark, root, Seq(k)), conflictWaitMs))
         }
-      }
-      commit(root, k)
-      k
-    } finally { matched.unpersist(); () }
+      }.get
+    }
   }
 
-  /** The DML retry loop — [[upsert]]'s shape for the predicate paths:
-    * recompute from a fresh snapshot on every [[CommitConflictException]],
-    * loud after 8 livelocked attempts. */
+  /** The DML retry loop: recompute from a fresh snapshot on every
+    * [[CommitConflictException]], loud after 8 livelocked attempts. */
   private def retryOnConflict(what: String, root: String,
       conflictDetect: Boolean)(once: => Long): Long = {
-    if (!conflictDetect) return once
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      try return once
-      catch {
-        case e: CommitConflictException =>
-          if (attempts >= 8) throw new IllegalStateException(
-            s"txtable: $what under $root conflicted on every one of " +
-              s"$attempts attempts — concurrent writers are livelocking; " +
-              "serialize them upstream", e)
-      }
+    def attempt(n: Int): Long = try once catch {
+      case e: CommitConflictException if conflictDetect =>
+        if (n >= 8) throw new IllegalStateException(
+          s"txtable: $what under $root conflicted on every one of $n " +
+            "attempts — concurrent writers are livelocking; serialize them " +
+            "upstream", e)
+        attempt(n + 1)
     }
-    throw new IllegalStateException("unreachable")
+    attempt(1)
   }
 
-  /** Scheme-insensitive file set a commit's deletion vectors reference —
-    * the commit's conflict DOMAIN under file-identity validation (the DV
-    * sidecar is tiny: one row per touched file region). */
-  private def dvFileKeys(spark: SparkSession, root: String, k: Long): Set[String] =
-    if (!Fs.isDirectory(dvDir(root, k))) Set.empty
-    else spark.read.parquet(dvDir(root, k))
-      .select(col("file_path")).distinct()
+  /** Scheme-insensitive file set the deletion vectors of commits `ks`
+    * reference — a commit's conflict DOMAIN under file-identity
+    * validation (the DV sidecars are tiny: one row per touched file
+    * region), read in one job. */
+  private def dvFileKeys(spark: SparkSession, root: String, ks: Seq[Long]): Set[String] = {
+    val dirs = existingDvDirs(root, ks)
+    if (dirs.isEmpty) Set.empty
+    else spark.read.parquet(dirs: _*).select(col("file_path")).distinct()
       .collect().map(r => pathKey(r.getString(0))).toSet
+  }
 
-  /** Optimistic FILE-IDENTITY validation (round 19) — the predicate-DML
-    * twin of [[validateNoKeyConflicts]], same claim-id-ordered protocol:
-    * wait on unresolved lower claims, then retry when any commit this
-    * writer did not see at its snapshot MOVED rows out of `ourFiles` —
-    * a checkpoint (all file identities change), or any kill+ADD commit
-    * (compact fold, upsert, update) whose deletion vectors intersect
-    * them: its re-added copies would escape our positional kills. Pure
-    * kill commits (no data dir) never conflict — DV sidecars OR-fold and
-    * double-kills are idempotent; adds-only commits never conflict —
-    * rows born after our snapshot are later facts a snapshot-isolation
-    * DELETE/UPDATE does not cover (Delta's WriteSerializable stance).
-    * The zombie closure mirrors the upsert's: once OUR claim has aged
-    * past `waitMs`, a higher-id writer may have presumed us crashed and
-    * committed above us — validate UPWARD with the same file test and
-    * lose to the younger winner. */
+  /** The optimistic FILE-IDENTITY test (round 19) over [[validateClaim]]
+    * — the predicate-DML twin of [[validateNoKeyConflicts]]: a commit
+    * this writer did not see conflicts when it MOVED rows out of
+    * `ourFiles` — a checkpoint (all file identities change), or any
+    * kill+ADD commit (compact fold, upsert, update) whose deletion
+    * vectors intersect them: its re-added copies would escape our
+    * positional kills. Pure kill commits (no data dir) never conflict —
+    * DV sidecars OR-fold and double-kills are idempotent; adds-only
+    * commits never conflict — rows born after our snapshot are later
+    * facts a snapshot-isolation DELETE/UPDATE does not cover (Delta's
+    * WriteSerializable stance). The same test runs upward under the
+    * zombie closure. A commit that kills nothing has nothing to test. */
   private[graft] def validateNoFileConflicts(spark: SparkSession,
       root: String, k: Long, snap: Set[Long], ourFiles: Set[String],
-      waitMs: Long): Unit = {
-    if (ourFiles.isEmpty) return
-    val deadline = System.currentTimeMillis() + math.max(0L, waitMs)
-    var unresolved = Seq.empty[Long]
-    var first = true
-    do {
-      if (!first) Thread.sleep(50)
-      first = false
-      val committedNow = committedIds(root).toSet
-      val claims = Fs.listFiles(claimsDir(root))
-        .filter(_.getPath.getName.matches("c\\d+"))
-        .map(st => st.getPath.getName.stripPrefix("c").toLong ->
-          st.getModificationTime).toMap
-      unresolved = claims.keys.toSeq
-        .filter(c => c < k && !committedNow.contains(c) && !snap.contains(c))
-        .filter(c => System.currentTimeMillis() - claims(c) <= waitMs)
-    } while (unresolved.nonEmpty && System.currentTimeMillis() < deadline)
-
-    val cps = markerIds(checkpointsDir(root)).toSet
-    def conflicts(c: Long): Boolean =
+      waitMs: Long): Unit = if (ourFiles.nonEmpty) {
+    // listed after the wait: a checkpoint that landed during it counts
+    lazy val cps = markerIds(checkpointsDir(root)).toSet
+    def moved(ids: Seq[Long]): Seq[Long] = ids.filter(c =>
       cps.contains(c) ||
         (Fs.isDirectory(dvDir(root, c)) && Fs.isDirectory(dataDir(root, c)) &&
-          dvFileKeys(spark, root, c).exists(ourFiles.contains))
-
-    val myAge = Fs.listFiles(claimsDir(root))
-      .find(_.getPath.getName == s"c$k")
-      .map(st => System.currentTimeMillis() - st.getModificationTime)
-    val committedNow = committedIds(root)
-    if (myAge.exists(_ > waitMs)) {
-      val upHits = committedNow.filter(c => c > k && conflicts(c))
-      if (upHits.nonEmpty)
-        throw new CommitConflictException(
-          s"txtable: claim $k stalled past its wait window and commits " +
-            s"${upHits.mkString(",")} above it moved rows out of its " +
-            "files — the younger writer won; retrying against the fresh " +
-            "snapshot")
-    }
-    val newHits = committedNow
-      .filter(c => c < k && !snap.contains(c)).filter(conflicts)
-    if (newHits.nonEmpty)
-      throw new CommitConflictException(
-        s"txtable: claim $k's kill files were moved by concurrent " +
-          s"commits ${newHits.mkString(",")} — retrying against the " +
-          "fresh snapshot")
+          dvFileKeys(spark, root, Seq(c)).exists(ourFiles.contains)))
+    validateClaim(root, k, snap, waitMs)(
+      below = ids => Some(moved(ids)).filter(_.nonEmpty).map(m =>
+        s"its kill files were moved by concurrent commits ${m.mkString(",")}"),
+      above = ids => Some(moved(ids)).filter(_.nonEmpty).map(m =>
+        s"commits ${m.mkString(",")} above it moved rows out of its files"))
   }
 
   private def statsPath(root: String) = s"$root/_txn/stats/manifest"
@@ -1937,109 +1693,105 @@ object TxTable {
    * [[checkpoint]] would rewrite the whole table. Dead counts come
    * from the DV sidecars alone (popcount per file); live totals from a
    * footer pass over the DV-carrying files only — no data read decides
-   * anything. Returns the commit id, or None when no file crosses the
-   * threshold (or the hot files hold no live rows). Single maintenance
-   * writer, like every maintenance pass — and FENCED against live
-   * upserts like [[checkpoint]] (round 18): an in-flight writer may be
-   * killing rows in exactly the files this fold is moving, and its kill
-   * of the OLD position would not reach the moved copy — the key would
-   * resurrect. The fold therefore ABORTS ([[CommitConflictException]],
-   * claim and dirs removed) over unredeemed lower claims or lower
-   * commits that landed mid-fold.
+   * anything, and no id is claimed until a fold is due. Returns the
+   * commit id, or None when no file crosses the threshold (or the hot
+   * files hold no live rows). Single maintenance writer, like every
+   * maintenance pass — and FENCED against live upserts like
+   * [[checkpoint]] (round 18): an in-flight writer may be killing rows
+   * in exactly the files this fold is moving, and its kill of the OLD
+   * position would not reach the moved copy — the key would resurrect.
+   * The fold therefore ABORTS ([[CommitConflictException]], the id
+   * abandoned) over unredeemed lower claims or lower commits that
+   * landed mid-fold.
    */
   def compactFiles(spark: SparkSession, root: String,
       minDeadFraction: Double = 0.3,
       targetFileBytes: Long = 512L * 1024 * 1024,
       bloomCols: Seq[String] = Seq.empty,
-      partitionCols: Seq[String] = Seq.empty): Option[Long] = {
-    val ks = committedIds(root)
-    require(ks.nonEmpty, s"txtable: nothing committed under $root")
-    val rks = resolvedOf(root, ks)
-    val dv = DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks))
-    val deadPerFile = dv.groupBy(col("__dv_fp"))
-      .agg(sum(bit_count(col("__dv_mask"))).cast("long").as("dead"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (deadPerFile.isEmpty) return None
-    // vectors can reference files already folded out of the resolution
-    // set (e.g. pre-checkpoint) — only files still resolved count; the
-    // SAME rks snapshot that fed the fold (one listing per operation)
-    val universe = filesOf(root, rks).map(pathKey).toSet
-    val cands = deadPerFile.keys.filter(f => universe.contains(pathKey(f)))
-      .toSeq.sorted
-    if (cands.isEmpty) return None
-    val totals = StatsManifest.rowCounts(spark, cands)
-    val hot = cands.filter(f =>
-      deadPerFile(f).toDouble / math.max(1L, totals.getOrElse(f, 1L)) >=
-        minDeadFraction)
-    if (hot.isEmpty) return None
+      partitionCols: Seq[String] = Seq.empty): Option[Long] =
+    commitWith(spark, root) { s =>
+      require(s.ids.nonEmpty, s"txtable: nothing committed under $root")
+      val rks = resolvedOf(root, s.ids)
+      val dv = DeleteVectors.foldDvDirs(spark, existingDvDirs(root, rks))
+      val deadPerFile = dv.groupBy(col("__dv_fp"))
+        .agg(sum(bit_count(col("__dv_mask"))).cast("long").as("dead"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // vectors can reference files already folded out of the resolution
+      // set (e.g. pre-checkpoint) — only files still resolved count; the
+      // SAME rks snapshot that fed the fold (one listing per operation)
+      val cands =
+        if (deadPerFile.isEmpty) Seq.empty
+        else {
+          val universe = filesOf(root, rks).map(pathKey).toSet
+          deadPerFile.keys.filter(f => universe.contains(pathKey(f))).toSeq.sorted
+        }
+      val hot =
+        if (cands.isEmpty) Seq.empty
+        else {
+          val totals = StatsManifest.rowCounts(spark, cands)
+          cands.filter(f => deadPerFile(f).toDouble /
+            math.max(1L, totals.getOrElse(f, 1L)) >= minDeadFraction)
+        }
+      // fully dead files: nothing to move
+      val liveHot = Some(hot).filter(_.nonEmpty).map(h => s.cache(
+          DeleteVectors.applyVectorsKeepId(scanResolvedFiles(spark, h), dv)))
+        .filterNot(_.isEmpty)
+      liveHot.map(moving => { k =>
+        fence("compactFiles", root, k, s.ids, s.ids)
+        val parts = math.max(1L, ParquetIO.inputBytes(spark, hot) /
+          math.max(1L, targetFileBytes)).toInt
+        val moved = moving.drop("__dv_file", "__dv_row")
+        Legs(kills = Some(moving),
+          adds = Some(
+            if (partitionCols.isEmpty) moved.coalesce(parts)
+            // cluster by the partition column so the fold keeps the hive
+            // layout at ~one file per (task, value) instead of parts × values
+            else moved.repartition(parts, partitionCols.map(col): _*)),
+          bloomCols = bloomCols, partitionCols = partitionCols,
+          precluster = false, prune = false,
+          validate = { () =>
+            val committedNow = fence("compactFiles", root, k, s.ids, committedIds(root))
+            // zombie-writer fence, the [[checkpoint]] shape made PRECISE
+            // for a partial fold (round 19): a commit above k that killed
+            // rows in the files THIS fold is moving wrote those kills
+            // against the pre-move positions — the moved copies would
+            // resurrect them. Only the hot set matters (a kill in a cold
+            // file is untouched by this fold), so the fence reads the tiny
+            // DV sidecars above k and intersects their file lists with it.
+            val above = committedNow.filter(_ > k)
+            if (dvFileKeys(spark, root, above).exists(hot.map(pathKey).toSet.contains))
+              abort("compactFiles", root, k, s"commits ${above.mkString(",")} " +
+                "above it kill rows in the files this fold is moving (a writer " +
+                "presumed this fold crashed); their kills would miss the moved copies")
+          })
+      })
+    }
 
-    val liveHot = DeleteVectors.applyVectorsKeepId(
-      scanResolvedFiles(spark, hot), dv)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (liveHot.isEmpty) return None // fully dead files: nothing to move
-      val k = claimId(root)
-      def abort(reason: String): Nothing = {
-        Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-        Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, k)))
-        Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-        throw new CommitConflictException(
-          s"txtable: compactFiles claim $k under $root aborted — $reason")
-      }
-      def unredeemedBelow(committed: Set[Long]): Seq[Long] =
-        markerIds(claimsDir(root)).filter(c => c < k && !committed.contains(c))
-      val inFlight0 = unredeemedBelow(ks.toSet)
-      if (inFlight0.nonEmpty)
-        abort(s"writers ${inFlight0.mkString(",")} are in flight below it — " +
-          "their kills could miss the moved copies; retry once they resolve")
-      val hits = liveHot.select(
-        col("__dv_file").as("file_path"), col("__dv_row").as("ri"))
-      val hotBytes = ParquetIO.inputBytes(spark, hot)
-      val parts = math.max(1L, hotBytes / math.max(1L, targetFileBytes)).toInt
-      val moved = liveHot.drop("__dv_file", "__dv_row")
-      val sized =
-        if (partitionCols.isEmpty) moved.coalesce(parts)
-        // cluster by the partition column so the fold keeps the hive
-        // layout at ~one file per (task, value) instead of parts × values
-        else moved.repartition(parts, partitionCols.map(col): _*)
-      // re-kill leg ∥ moved-copies leg, both over the persisted liveHot
-      // (round 22, guide §2.6)
-      inParallel(
-        DeleteVectors.buildVectors(hits)
-          .write.mode("overwrite").parquet(dvDir(root, k)),
-        writeData(sized, dataDir(root, k), bloomCols, partitionCols,
-          precluster = false))
-      // post-fold fence, same shape as checkpoint's: a lower writer that
-      // claimed or committed mid-fold may have killed rows in the moved
-      // files with this fold blind to it
-      val committedNow = committedIds(root)
-      val missed = committedNow.filter(c => c < k && !ks.contains(c))
-      if (missed.nonEmpty)
-        abort(s"commits ${missed.mkString(",")} landed below it during the fold")
-      val inFlight1 = unredeemedBelow(committedNow.toSet)
-      if (inFlight1.nonEmpty)
-        abort(s"writers ${inFlight1.mkString(",")} are still in flight below it")
-      // zombie-writer fence, the [[checkpoint]] shape made PRECISE for a
-      // partial fold (round 19): a commit above k that killed rows in
-      // the files THIS fold is moving wrote those kills against the
-      // pre-move positions — the moved copies would resurrect them. Only
-      // the hot set matters here (a kill in a cold file is untouched by
-      // this fold), so the fence reads the tiny DV sidecars above k and
-      // intersects their file lists with the hot set.
-      val dvAbove = committedNow.filter(c => c > k && Fs.isDirectory(dvDir(root, c)))
-      if (dvAbove.nonEmpty) {
-        val hotKeys = hot.map(pathKey).toSet
-        val theirFiles = spark.read.parquet(dvAbove.map(dvDir(root, _)): _*)
-          .select(col("file_path")).distinct()
-          .collect().map(r => pathKey(r.getString(0)))
-        if (theirFiles.exists(hotKeys.contains))
-          abort(s"commits ${dvAbove.mkString(",")} above it kill rows in " +
-            "the files this fold is moving (a writer presumed this fold " +
-            "crashed); their kills would miss the moved copies")
-      }
-      commit(root, k)
-      Some(k)
-    } finally { liveHot.unpersist(); () }
+  /** A maintenance fold's abort: [[commitWith]] abandons the claimed id. */
+  private def abort(what: String, root: String, k: Long, reason: String): Nothing =
+    throw new CommitConflictException(
+      s"txtable: $what claim $k under $root aborted — $reason")
+
+  /** The maintenance WRITER FENCE (round 18) shared by [[checkpoint]] and
+    * [[compactFiles]], run before the fold against its own snapshot and
+    * again before the marker against a fresh listing `committedNow`: a
+    * fold built from `snap` aborts when a lower commit landed outside
+    * `snap`, or a lower id is still claimed but uncommitted — either may
+    * kill rows in the files the fold moves, and the kills would miss the
+    * moved copies. Claims taken after ours have ids above `k`, so passing
+    * the final fence is final. Returns `committedNow`. */
+  private def fence(what: String, root: String, k: Long, snap: Seq[Long],
+      committedNow: Seq[Long]): Seq[Long] = {
+    val seen = snap.toSet
+    val missed = committedNow.filter(c => c < k && !seen.contains(c))
+    if (missed.nonEmpty)
+      abort(what, root, k, s"commits ${missed.mkString(",")} landed below it during the fold")
+    val committed = committedNow.toSet
+    val inFlight = markerIds(claimsDir(root)).filter(c => c < k && !committed.contains(c))
+    if (inFlight.nonEmpty)
+      abort(what, root, k, s"writers ${inFlight.mkString(",")} are in flight " +
+        "below it; retry once they commit or are vacuumed")
+    committedNow
   }
 
   /**
@@ -2068,16 +1820,17 @@ object TxTable {
    * readable ([[readAt]]) until [[expire]] collapses it.
    *
    * WRITER FENCING (round 18, closing the round-17 advisory): the fold
-   * works from a snapshot FROZEN at one listing (commits ≤ the claimed
-   * id — a commit claimed after us can never double-count into both the
-   * fold and the post-checkpoint tail), and the checkpoint ABORTS —
-   * [[CommitConflictException]], claim and dirs removed — when any
-   * lower id is still claimed-but-uncommitted before the fold or at
-   * commit time, or when a lower commit landed after the freeze: such a
-   * commit would be silently excluded from the post-checkpoint
-   * resolution set (ids ≥ k) and then physically deleted by [[expire]].
-   * Callers retry once in-flight writers drain; quiescing writers is no
-   * longer a correctness requirement, only an availability one.
+   * CLAIMS FIRST and works from a snapshot FROZEN at the one listing
+   * after it (commits ≤ the claimed id — a commit claimed after us can
+   * never double-count into both the fold and the post-checkpoint
+   * tail), and the checkpoint ABORTS — [[CommitConflictException]], the
+   * id abandoned — when any lower id is still claimed-but-uncommitted
+   * before the fold or at commit time, or when a lower commit landed
+   * after the freeze: such a commit would be silently excluded from the
+   * post-checkpoint resolution set (ids ≥ k) and then physically deleted
+   * by [[expire]]. Callers retry once in-flight writers drain; quiescing
+   * writers is no longer a correctness requirement, only an availability
+   * one.
    */
   def checkpoint(spark: SparkSession, root: String,
       targetFileBytes: Long = 512L * 1024 * 1024,
@@ -2087,87 +1840,68 @@ object TxTable {
       zCols: Seq[String] = Seq.empty): Long = {
     require(sortCols.isEmpty || zCols.isEmpty,
       "txtable.checkpoint: sortCols and zCols are alternative layouts — pass one")
-    val k = claimId(root)
-    def abort(reason: String): Nothing = {
-      Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, k)))
-      Fs.deleteIfExists(s"${claimsDir(root)}/c$k")
-      throw new CommitConflictException(
-        s"txtable: checkpoint claim $k under $root aborted — $reason")
-    }
-    def unredeemedBelow(committed: Set[Long]): Seq[Long] =
-      markerIds(claimsDir(root)).filter(c => c < k && !committed.contains(c))
-    // cheap pre-flight before the expensive fold
-    val snap = committedIds(root)
-    if (snap.isEmpty) abort("nothing committed to fold")
-    val inFlight0 = unredeemedBelow(snap.toSet)
-    if (inFlight0.nonEmpty)
-      abort(s"writers ${inFlight0.mkString(",")} are in flight below it; " +
-        "retry once they commit or vacuum")
-    // the FROZEN fold: exactly the commits ≤ k seen at the one snapshot
-    // listing — never a re-list mid-operation
-    val ks = resolvedOf(root, snap, k)
-    val data = existingDataDirs(root, ks)
-    val live = DeleteVectors.applyVectors(
-      scanResolved(spark, data),
-      DeleteVectors.foldDvDirs(spark, existingDvDirs(root, ks)))
-    val bytes = ParquetIO.inputBytes(spark, data)
-    val parts = math.max(1L, bytes / math.max(1L, targetFileBytes)).toInt
-    val sized =
-      if (sortCols.nonEmpty)
-        live.repartitionByRange(parts, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      // Z-ORDERED fold (round 18): the compactZOrder recipe in-log —
-      // every checkpoint file becomes a small (k1, k2) hyper-rectangle,
-      // so ONE manifest rebuild restores file-level pruning on EITHER
-      // key of a mutating table (sortCols clusters one key only)
-      else if (zCols.nonEmpty)
-        ParquetIO.withZValue(live, zCols)
-          .repartitionByRange(parts, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z")
-      // partitioned fold: cluster by the partition column so the
-      // checkpoint keeps ~one file per (task, value), not parts × values
-      else if (partitionCols.nonEmpty)
-        live.repartition(parts, partitionCols.map(col): _*)
-      else live.repartition(parts)
-    writeData(sized, dataDir(root, k), bloomCols, partitionCols,
-      precluster = false)
-    // post-fold fence: any lower commit not in the frozen snapshot, or
-    // any still-unredeemed lower claim (it could commit after us), would
-    // be dropped from the live view — abort instead. Claims taken AFTER
-    // ours have ids > k, so passing this check is final.
-    val committedNow = committedIds(root)
-    val missed = committedNow.filter(c => c < k && !snap.contains(c))
-    if (missed.nonEmpty)
-      abort(s"commits ${missed.mkString(",")} landed below it during the fold")
-    val inFlight1 = unredeemedBelow(committedNow.toSet)
-    if (inFlight1.nonEmpty)
-      abort(s"writers ${inFlight1.mkString(",")} are still in flight below it")
-    // ZOMBIE-WRITER fence (round 19, closing the r18 advisory's high
-    // finding): a conflictDetect upsert whose wait window is shorter
-    // than this fold presumes the fold's claim crashed and commits —
-    // with deletion vectors aimed at PRE-fold files. Post-checkpoint
-    // readers resolve the folded copies instead, so those kills would
-    // silently miss (lost update by file identity) and [[expire]] would
-    // make it permanent. Any DV-carrying commit ABOVE k at commit time
-    // therefore aborts the fold; adds-only commits (appends) are safe —
-    // they ride the post-checkpoint tail untouched. Residual window:
-    // such a commit landing between this listing and the marker, which
-    // requires the fold to have already outlived the writer's full wait
-    // window AND the two final listings to interleave within
-    // milliseconds — the same residual as the upsert zombie closure;
-    // keeping conflictWaitMs above the longest maintenance fold closes
-    // it entirely.
-    val dvAbove = committedNow.filter(c => c > k && Fs.isDirectory(dvDir(root, c)))
-    if (dvAbove.nonEmpty)
-      abort(s"commits ${dvAbove.mkString(",")} above it carry deletion " +
-        "vectors written against the pre-fold layout (a writer presumed " +
-        "this fold crashed); their kills would miss the folded copies")
-    require(Fs.createMarker(s"${checkpointsDir(root)}/c$k", dataDir(root, k)),
-      s"txtable: checkpoint marker c$k already exists under $root — " +
-        "lost a commit race")
-    commit(root, k)
-    k
+    commitWith(spark, root, claimFirst = true) { s =>
+      Some { k =>
+        // cheap pre-flight before the expensive fold
+        if (s.ids.isEmpty) abort("checkpoint", root, k, "nothing committed to fold")
+        fence("checkpoint", root, k, s.ids, s.ids)
+        // the FROZEN fold: exactly the commits ≤ k seen at the one
+        // snapshot listing — never a re-list mid-operation
+        val ks = resolvedOf(root, s.ids, k)
+        val data = existingDataDirs(root, ks)
+        val live = DeleteVectors.applyVectors(
+          scanResolved(spark, data),
+          DeleteVectors.foldDvDirs(spark, existingDvDirs(root, ks)))
+        val parts = math.max(1L, ParquetIO.inputBytes(spark, data) /
+          math.max(1L, targetFileBytes)).toInt
+        val sized =
+          if (sortCols.nonEmpty)
+            live.repartitionByRange(parts, sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.map(col): _*)
+          // Z-ORDERED fold (round 18): the compactZOrder recipe in-log —
+          // every checkpoint file becomes a small (k1, k2) hyper-rectangle,
+          // so ONE manifest rebuild restores file-level pruning on EITHER
+          // key of a mutating table (sortCols clusters one key only)
+          else if (zCols.nonEmpty)
+            ParquetIO.withZValue(live, zCols)
+              .repartitionByRange(parts, col("__z"))
+              .sortWithinPartitions(col("__z"))
+              .drop("__z")
+          // partitioned fold: cluster by the partition column so the
+          // checkpoint keeps ~one file per (task, value), not parts × values
+          else if (partitionCols.nonEmpty)
+            live.repartition(parts, partitionCols.map(col): _*)
+          else live.repartition(parts)
+        Legs(adds = Some(sized), bloomCols = bloomCols,
+          partitionCols = partitionCols, precluster = false, prune = false,
+          checkpoint = true,
+          validate = { () =>
+            val committedNow = fence("checkpoint", root, k, s.ids, committedIds(root))
+            // ZOMBIE-WRITER fence (round 19, closing the r18 advisory's
+            // high finding): a conflictDetect upsert whose wait window is
+            // shorter than this fold presumes the fold's claim crashed and
+            // commits — with deletion vectors aimed at PRE-fold files.
+            // Post-checkpoint readers resolve the folded copies instead,
+            // so those kills would silently miss (lost update by file
+            // identity) and [[expire]] would make it permanent. Any
+            // DV-carrying commit ABOVE k at commit time therefore aborts
+            // the fold; adds-only commits (appends) are safe — they ride
+            // the post-checkpoint tail untouched. Residual window: such a
+            // commit landing between this listing and the marker, which
+            // requires the fold to have already outlived the writer's full
+            // wait window AND the two final listings to interleave within
+            // milliseconds — the same residual as the upsert zombie
+            // closure; keeping conflictWaitMs above the longest
+            // maintenance fold closes it entirely.
+            val dvAbove = committedNow.filter(c => c > k && Fs.isDirectory(dvDir(root, c)))
+            if (dvAbove.nonEmpty)
+              abort("checkpoint", root, k, s"commits ${dvAbove.mkString(",")} " +
+                "above it carry deletion vectors written against the pre-fold " +
+                "layout (a writer presumed this fold crashed); their kills " +
+                "would miss the folded copies")
+          })
+      }
+    }.get
   }
 
   private def cursorsDir(root: String) = s"$root/_txn/cursors"

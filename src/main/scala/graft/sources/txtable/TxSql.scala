@@ -30,9 +30,9 @@ import graft.sources.TxTable
  * The statement is parsed by `spark.sessionState.sqlParser` — real SQL,
  * not a home-grown grammar — and the parsed plan routes to
  * [[TxTable.deleteWhere]] / [[TxTable.updateWhere]] /
- * [[TxTable.mergeInto]] / [[TxTable.mergeClauses]]; predicates, SET
- * expressions, and clause conditions round-trip through their canonical
- * SQL form into Columns, so anything those APIs evaluate works here.
+ * [[TxTable.mergeClauses]]; predicates, SET expressions, and clause
+ * conditions round-trip through their canonical SQL form into Columns,
+ * so anything those APIs evaluate works here.
  * `tables` maps statement-level table names to txtable roots; a MERGE
  * source not named there resolves as a temp view / catalog table
  * (`spark.table`), or as another txtable root when it is.
@@ -43,12 +43,12 @@ import graft.sources.TxTable
  * order, and `NOT MATCHED BY SOURCE` update/delete all route to
  * [[TxTable.mergeClauses]] — with the statement's own target/source
  * aliases rescoped to the engine's `t`/`s` scopes, so `u.price` in the
- * statement IS `s.price` in the clause engine. The unconditional
- * `UPDATE SET *` / `DELETE` / `INSERT *` shapes keep routing to the
- * tuned [[TxTable.mergeInto]] fast path unchanged. The ON clause must
- * be a conjunction of same-name column equalities — the key-join shape
- * every CDC merge uses (a general ON theta-join has no MERGE-ON-READ
- * kill set; loud error, not silent drift).
+ * statement IS `s.price` in the clause engine. Every MERGE, the
+ * unconditional `UPDATE SET *` / `DELETE` / `INSERT *` shapes included,
+ * takes that one engine. The ON clause must be a conjunction of
+ * same-name column equalities — the key-join shape every CDC merge uses
+ * (a general ON theta-join has no MERGE-ON-READ kill set; loud error,
+ * not silent drift).
  */
 object TxSql {
 
@@ -75,51 +75,14 @@ object TxSql {
       case m: MergeIntoTable =>
         val root = rootOf(m.targetTable, tables)
         val source = sourceOf(spark, m.sourceTable, tables)
-        val keys = keysOf(m.mergeCondition)
-        if (isStarShape(m))
-          execStarShape(spark, m, root, source, keys,
-            conflictDetect, conflictWaitMs)
-        else
-          execClauses(spark, m, root, source, keys,
-            conflictDetect, conflictWaitMs)
+        execClauses(spark, m, root, source, keysOf(m.mergeCondition),
+          conflictDetect, conflictWaitMs)
 
       case other => fail(
         s"TxSql.exec routes MERGE/DELETE/UPDATE statements; got " +
           s"${other.getClass.getSimpleName} — run reads through " +
           "format(\"txtable\") / the graft catalog / spark.sql directly")
     }
-  }
-
-  /** The round-19 unconditional star shapes — routed to the tuned
-    * [[TxTable.mergeInto]] plan unchanged. */
-  private def isStarShape(m: MergeIntoTable): Boolean = {
-    val matchedOk = m.matchedActions match {
-      case Seq() | Seq(UpdateStarAction(None)) | Seq(DeleteAction(None)) => true
-      case _ => false
-    }
-    val insertOk = m.notMatchedActions match {
-      case Seq() | Seq(InsertStarAction(None)) => true
-      case _ => false
-    }
-    val bySourceOk = m.notMatchedBySourceActions match {
-      case Seq() | Seq(DeleteAction(None)) => true
-      case _ => false
-    }
-    matchedOk && insertOk && bySourceOk
-  }
-
-  private def execStarShape(spark: SparkSession, m: MergeIntoTable,
-      root: String, source: DataFrame, keys: Seq[String],
-      conflictDetect: Boolean, conflictWaitMs: Long): Long = {
-    val matchedAction = m.matchedActions match {
-      case Seq() => "none"
-      case Seq(UpdateStarAction(None)) => "update"
-      case Seq(DeleteAction(None)) => "delete"
-      case other => fail(s"unreachable star shape $other")
-    }
-    TxTable.mergeInto(spark, root, source, keys, matchedAction,
-      m.notMatchedActions.nonEmpty, m.notMatchedBySourceActions.nonEmpty,
-      conflictDetect = conflictDetect, conflictWaitMs = conflictWaitMs)
   }
 
   /** Full clause fidelity (round 20): every action maps to a

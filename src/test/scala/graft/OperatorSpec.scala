@@ -1232,6 +1232,19 @@ class ClusterPairsSpec extends AnyFunSuite {
     assert(got.forall(_._2 == 0L))
   }
 
+  test("the convergence probe reads footers, and fails fast on an unknown column") {
+    val df = Seq((1L, false), (2L, true)).toDF("id", "chg")
+    assert(graft.operators.Materialize.viaParquetAnyTrue(df, "cc_probe", "chg")._2)
+    assert(!graft.operators.Materialize.viaParquetAnyTrue(
+      df.filter(!col("chg")), "cc_probe", "chg")._2)
+    // a misspelled column matches no footer column chunk, so every
+    // block would read as "maybe true" and the loop could never converge
+    val ex = intercept[IllegalArgumentException] {
+      graft.operators.Materialize.viaParquetAnyTrue(df, "cc_probe", "chng")
+    }
+    assert(ex.getMessage.contains("chng"))
+  }
+
   test("keep-one dedup policy over jaccard clusters on crafted dups") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
