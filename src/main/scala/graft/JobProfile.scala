@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
  * Round-21 optimization profiler: run named queries once (after a warm
  * pass) with a listener that attributes wall time to Spark jobs — the
  * local-mode substitute for the Spark UI's job/stage tables (guide §1/§7).
- * For each query prints: wall, #jobs, Σ task time, shuffle read/write
- * bytes, and the slowest jobs with their descriptions. What it separates:
+ * For each query prints: wall, #jobs, #stages that ran tasks, Σ task
+ * time, shuffle read/write bytes, and the slowest jobs with their
+ * descriptions. What it separates:
  * scheduling/driver overhead (many tiny jobs: wall ≫ Σtask/cores) from
  * compute (few jobs, task time ≈ wall × cores) from shuffle volume.
  *
@@ -36,6 +37,7 @@ object JobProfile {
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val ranStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties)
@@ -51,6 +53,7 @@ object JobProfile {
         Option(jobs.get(e.jobId)).foreach(_.completed = e.time)
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        ranStages.add(e.stageId)
         val jid = stageToJob.get(e.stageId)
         val r = jobs.get(jid)
         if (r != null && e.taskMetrics != null) r.synchronized {
@@ -76,7 +79,7 @@ object JobProfile {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t) / 1e9
       }
-      jobs.clear(); stageToJob.clear()
+      jobs.clear(); stageToJob.clear(); ranStages.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -98,7 +101,7 @@ object JobProfile {
       val sr = rs.map(_.shufReadB).sum / 1e6
       val sw = rs.map(_.shufWriteB).sum / 1e6
       val in = rs.map(_.inputB).sum / 1e6
-      println(f"== $name wall=$wall%.2fs jobs=$nJobs taskSum=$sumTask%.1fs " +
+      println(f"== $name wall=$wall%.2fs jobs=$nJobs stages=${ranStages.size} taskSum=$sumTask%.1fs " +
         f"jobWallSum=$sumJobWall%.2fs offJobGap=$gaps%.2fs shufR=$sr%.1fMB shufW=$sw%.1fMB input=$in%.1fMB")
       val byDesc = rs.groupBy(_.desc.takeWhile(_ != '+').trim)
         .map { case (d, js) => (d, js.size,

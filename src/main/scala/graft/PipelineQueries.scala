@@ -1759,24 +1759,24 @@ object PipelineQueries {
 
     "q_delete_vectors" -> ((s, dir) => {
       // merge-on-read deletes (round 16): orders lands as an 8-file
-      // table; two delete batches mark rows WITHOUT rewriting any data
-      // file — epoch 0 a keyed erasure (o_orderkey % 7), epoch 1 an
+      // TxTable; two delete commits mark rows WITHOUT rewriting any data
+      // file — the first a keyed erasure (o_orderkey % 7), the second an
       // overlapping customer sweep (o_custkey % 13) whose bitmaps
-      // OR-compose per file at read time. The DV-applied scan aggregate
-      // equals the oracle's plain double-NOT reconstruction, proving the
-      // sparse bitmap round-trip (build → epoch commit → OR-merge →
-      // O(1) bit test) row-exactly. The table files are untouched:
+      // OR-compose per file at read time. The DV-applied snapshot
+      // aggregate equals the oracle's plain double-NOT reconstruction,
+      // proving the sparse bitmap round-trip (build → commit → OR-fold
+      // → O(1) bit test) row-exactly. The table files are untouched:
       // at 100 TB this is the difference between a GDPR batch costing
       // one matched-rows shuffle and costing a full-table rewrite.
-      import graft.sources.DeleteVectors
-      val tmp = graft.operators.Materialize.scratch(s, "delvec")
-      rd(s, dir, "orders")
+      import graft.sources.TxTable
+      val t = s"${graft.operators.Materialize.scratch(s, "delvec")}/t"
+      TxTable.create(s, t, rd(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
-        .repartition(8).write.parquet(s"$tmp/t")
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("o_orderkey") % 7 === 0)
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("o_custkey") % 13 === 0)
-      DeleteVectors.read(s, s"$tmp/t")
+        .repartition(8))
+      TxTable.deleteWhere(s, t, col("o_orderkey") % 7 === 0)
+      TxTable.deleteWhere(s, t, col("o_custkey") % 13 === 0)
+      TxTable.read(s, t)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
@@ -1874,28 +1874,27 @@ object PipelineQueries {
     }),
 
     "q_dv_skip" -> ((s, dir) => {
-      // the two round-16 sidecars COMPOSED: lineitem sort-compacted on
-      // l_orderkey carries a stats manifest (planning cuts files) and
-      // two overlapping delete epochs (merge-on-read cuts rows);
-      // readFiles applies the DV broadcast over only the
+      // the two round-16 sidecars COMPOSED: a TxTable created from
+      // lineitem range-partitioned and sorted on l_orderkey (an explicit
+      // layout the commit writes verbatim, so per-file key ranges stay
+      // disjoint) carries two overlapping delete commits (merge-on-read
+      // cuts rows) and a stats manifest (planning cuts files);
+      // readSkipping applies the DV broadcast over only the
       // manifest-surviving files. Equality with the oracle's
       // WHERE range AND NOT(deleted) reconstruction proves the stack:
       // a selective query on a mutated 100 TB table pays
       // (surviving files) scan + one KB-scale broadcast — neither a
       // listing-width scan nor a rewrite.
-      import graft.sources.{DeleteVectors, ParquetIO, StatsManifest}
-      val tmp = graft.operators.Materialize.scratch(s, "dvskip")
-      rd(s, dir, "lineitem")
+      import graft.sources.TxTable
+      val t = s"${graft.operators.Materialize.scratch(s, "dvskip")}/t"
+      TxTable.create(s, t, rd(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-        .write.parquet(s"$tmp/in")
-      ParquetIO.compactSorted(s, Seq(s"$tmp/in"), s"$tmp/t",
-        Seq("l_orderkey"), targetFileBytes = 64L * 1024)
-      StatsManifest.build(s, s"$tmp/t", Seq("l_orderkey"))
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("l_quantity") > 45)
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("l_orderkey") % 11 === 0)
-      val files = StatsManifest.prune(s, s"$tmp/t", "l_orderkey", 1000L, 5000L)
-      DeleteVectors.readFiles(s, s"$tmp/t", files)
-        .filter(col("l_orderkey") >= 1000L && col("l_orderkey") <= 5000L)
+        .repartitionByRange(16, col("l_orderkey"))
+        .sortWithinPartitions("l_orderkey"))
+      TxTable.deleteWhere(s, t, col("l_quantity") > 45)
+      TxTable.deleteWhere(s, t, col("l_orderkey") % 11 === 0)
+      TxTable.buildManifest(s, t, Seq("l_orderkey"))
+      TxTable.readSkipping(s, t, "l_orderkey", 1000L, 5000L)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
@@ -1933,23 +1932,26 @@ object PipelineQueries {
     }),
 
     "q_dv_changes" -> ((s, dir) => {
-      // the DELETE change feed (round 16): after the same two epochs as
-      // q_delete_vectors, the feed from epoch 1 returns exactly the
-      // customer sweep's NEW kills — rows epoch 0 already marked never
-      // reappear (bitmap AND-NOT against earlier epochs). This is the
+      // the DELETE change feed (round 16): after the same two delete
+      // commits as q_delete_vectors, the feed's `d` rows from the second
+      // commit are exactly the customer sweep's NEW kills — rows the
+      // first commit already killed never reappear (each delete
+      // evaluates its predicate over the live snapshot). This is the
       // deletes half of CDC for a merge-on-read table: an incremental
       // consumer (ANN index, dedup state) retires these rows instead of
-      // rebuilding, and the scan behind the feed touches only files
-      // CARRYING epoch-1 vectors — cost ∝ the delete, not the table.
-      import graft.sources.DeleteVectors
-      val tmp = graft.operators.Materialize.scratch(s, "dvchanges")
-      rd(s, dir, "orders")
+      // rebuilding, and the scan behind the feed touches only files the
+      // second commit's vectors reference — cost ∝ the delete, not the
+      // table.
+      import graft.sources.TxTable
+      val t = s"${graft.operators.Materialize.scratch(s, "dvchanges")}/t"
+      TxTable.create(s, t, rd(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
-        .repartition(8).write.parquet(s"$tmp/t")
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("o_orderkey") % 7 === 0)
-      DeleteVectors.deleteWhere(s, s"$tmp/t", col("o_custkey") % 13 === 0)
-      DeleteVectors.deletes(s, s"$tmp/t", fromEpoch = 1L)
+        .repartition(8))
+      TxTable.deleteWhere(s, t, col("o_orderkey") % 7 === 0)
+      val sweep = TxTable.deleteWhere(s, t, col("o_custkey") % 13 === 0)
+      TxTable.changeFeed(s, t, Seq("o_orderkey"), fromCommit = sweep)
+        .filter(col("op") === "d")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
@@ -2060,7 +2062,7 @@ object PipelineQueries {
       // re-inserted under negated keys (i); unchanged keys are DROPPED.
       // ParquetIO.changeFeed derives the delta from plain snapshots (one
       // full-outer key join + null-safe struct compare), so any two
-      // upsertSink generations become a replayable changelog. The oracle
+      // table versions become a replayable changelog. The oracle
       // constructs the expected i/u/d rows directly from the base table.
       import graft.sources.ParquetIO
       val orders = rd(s, dir, "orders")
@@ -4185,7 +4187,7 @@ object PipelineQueries {
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
          FROM orders WHERE o_orderkey BETWEEN 500 AND 900
          ORDER BY 1""",
-    // epoch-1 delete feed == the sweep's NEW kills only (AND-NOT epoch 0)
+    // the second delete's feed == the sweep's NEW kills only
     "q_dv_changes" ->
       """SELECT o_orderstatus, COUNT(*) AS n,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,

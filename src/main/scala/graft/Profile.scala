@@ -36,7 +36,6 @@ object Profile {
     "plandump-r9" -> (PlanDumpR9.run _, "round-9 plan dumps"),
     "listing" -> (ProfileListing.run _, "partition-listing wall at >=10^4 dirs: driver loop vs distributed (args: nDirs nFiles)"),
     "bpe8k" -> (ProfileBpe8k.run _, "tokenizer-scale BPE: learn+encode at >=8k rules, native-vs-fold parity (args: numMerges)"),
-    "delvec" -> (ProfileDeleteVectors.run _, "merge-on-read deletes at 100x: mark/read/fold walls vs copy-on-write rewrite"),
     "manifest" -> (ProfileStatsManifest.run _, "stats-manifest skipping at 2048 files: build/prune/refresh walls, bloom point lookup at 256 files"),
     "txtable" -> (ProfileTxTable.run _, "transactional MOR merge vs copy-on-write at 100x: upsert/read/checkpoint walls + write volumes"),
     "txtable17" -> (ProfileTxTable17.run _, "round-17 TxTable: upsert broadcast vs shuffled fallback (CDC + backfill), compactFiles vs checkpoint on a skewed delete, changeFeed"),

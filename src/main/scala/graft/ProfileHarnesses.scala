@@ -174,113 +174,6 @@ object ProfileDedup {
 }
 
 /**
- * Merge-on-read vs copy-on-write at 100× (round 16, SCALE.md): a 15 M-row
- * 32-file orders table (the bench corpus ×100, same replica recipe as
- * ProfileScale100) takes a 0.1 % keyed erasure. Measures the four walls
- * that decide the operating point:
- *
- *   1. baseline scan-aggregate on the untouched table
- *   2. `deleteWhere` (mark) — matched-rows shuffle + sidecar write only
- *   3. DV-applied scan-aggregate — the standing per-query tax
- *   4. the copy-on-write alternative: filter + full rewrite
- *
- * The 100 TB claim under test: (2) is proportional to MATCHED rows and
- * (3) to file COUNT (one broadcast + an O(1) bit test per row), while
- * (4) is proportional to TABLE size — so merge-on-read wins whenever the
- * dead fraction is small, which is exactly the GDPR-batch / spam-sweep
- * regime. A second overlapping sweep shows epoch OR-composition doesn't
- * compound the read tax.
- */
-object ProfileDeleteVectors {
-
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
-  import graft.sources.DeleteVectors
-  private val Table = "/tmp/graft_delvec/orders"
-  private val Replicas = 100
-
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[delvec] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
-
-  private def synthesize(spark: SparkSession): Unit = {
-    if (!new java.io.File(Table).exists()) {
-      val src = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      (0 until Replicas).map { r =>
-        src.withColumn("o_orderkey", col("o_orderkey") + lit(r * 10000000L))
-      }.reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(Table)
-      println(s"[delvec] wrote $Table")
-    }
-  }
-
-  private def agg(df: DataFrame): Unit = {
-    val r = df.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n"), sum("o_totalprice").as("s"))
-      .orderBy("o_orderstatus").collect()
-    println(s"[delvec]   -> ${r.map(x => s"${x.get(0)}:${x.get(1)}").mkString(" ")}")
-  }
-
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // fresh vectors every run: the rehearsal measures the mark, not a
-    // pre-existing state
-    graft.sources.Fs.deleteRecursive(new org.apache.hadoop.fs.Path(s"$Table/_deletes"))
-    synthesize(spark)
-
-    val n = spark.read.parquet(Table).count()
-    println(s"[delvec] table: $n rows, " +
-      s"${graft.sources.Fs.listFiles(Table).count(_.getPath.getName.endsWith(".parquet"))} files")
-
-    time("baseline scan-aggregate")(agg(spark.read.parquet(Table)))
-
-    val marked = time("deleteWhere 0.1% (o_orderkey % 1000 = 0)") {
-      DeleteVectors.deleteWhere(spark, Table, col("o_orderkey") % 1000 === 0)
-    }
-    println(s"[delvec]   marked $marked rows (${100.0 * marked / n}%)")
-
-    time("DV-applied scan-aggregate (1 epoch)")(agg(DeleteVectors.read(spark, Table)))
-
-    val marked2 = time("overlapping sweep (o_custkey % 997 = 0)") {
-      DeleteVectors.deleteWhere(spark, Table, col("o_custkey") % 997 === 0)
-    }
-    println(s"[delvec]   marked $marked2 more rows")
-
-    time("DV-applied scan-aggregate (2 epochs, OR-composed)") {
-      agg(DeleteVectors.read(spark, Table))
-    }
-
-    time("deletedCount (vectors only, no scan)") {
-      println(s"[delvec]   -> ${DeleteVectors.deletedCount(spark, Table)}")
-    }
-
-    time("copy-on-write alternative: full filtered rewrite") {
-      spark.read.parquet(Table)
-        .filter(!(col("o_orderkey") % 1000 === 0) &&
-          !(col("o_custkey") % 997 === 0))
-        .repartition(32)
-        .write.mode("overwrite").parquet("/tmp/graft_delvec/rewrite")
-    }
-
-    time("rewriteDeleted (fold-down at the threshold)") {
-      DeleteVectors.rewriteDeleted(spark, Table, "/tmp/graft_delvec/folded",
-        targetFileBytes = 32L * 1024 * 1024)
-    }
-    spark.stop()
-  }
-}
-
-/**
  * changeFeed cost vs commit-log length (round 17, SCALE.md): builds an
  * n-commit log (one tiny upsert per commit — the worst per-commit
  * fixed-cost ratio) and measures feed CONSTRUCTION (planning + chunk
@@ -1953,7 +1846,7 @@ object ProfileStatsManifest {
 
 /**
  * Transactional MOR MERGE vs copy-on-write MERGE at 100× (round 16,
- * SCALE.md): a 15 M-row orders table (the delvec replica corpus) takes
+ * SCALE.md): a 15 M-row orders table ([[source]]) takes
  * a 0.1 % CDC reprice batch through BOTH merge paths:
  *
  *   - `TxTable.upsert` — one snapshot scan + batch-sized winner/DV
@@ -1973,8 +1866,25 @@ object ProfileTxTable {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, ParquetIO, TxTable}
-  private val Source = "/tmp/graft_delvec/orders" // ProfileDeleteVectors corpus
+  private val Source = "/tmp/graft_delvec/orders"
   private val Root = "/tmp/graft_txtable/t"
+
+  /** The 15 M-row 32-file orders corpus every TxTable rehearsal reads
+    * (the bench corpus ×100, the same replica recipe as
+    * ProfileScale100), synthesized on first use. */
+  private[graft] def source(spark: SparkSession): DataFrame = {
+    if (!Fs.isDirectory(Source)) {
+      val src = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      (0 until 100).map { r =>
+        src.withColumn("o_orderkey", col("o_orderkey") + lit(r * 10000000L))
+      }.reduce(_ unionByName _)
+        .repartition(32)
+        .write.mode("overwrite").parquet(Source)
+      println(s"[txtable] wrote $Source")
+    }
+    spark.read.parquet(Source)
+  }
 
   private def time[A](label: String)(f: => A): A = {
     val t0 = System.nanoTime()
@@ -1999,11 +1909,9 @@ object ProfileTxTable {
       .config("spark.driver.memory", "16g")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    require(Fs.isDirectory(Source),
-      s"run `Profile delvec` first to synthesize $Source")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path("/tmp/graft_txtable"))
 
-    val src = spark.read.parquet(Source)
+    val src = ProfileTxTable.source(spark)
     time("create (15 M rows -> c0)") {
       TxTable.create(spark, Root, src.withColumn("version", lit(0L)))
     }
@@ -2060,7 +1968,7 @@ object ProfileTxTable {
  * Round-17 TxTable rehearsal (SCALE.md): the size-gated upsert
  * broadcast measured in BOTH regimes, file-level fold-down vs the
  * whole-table checkpoint on a skewed delete, and the change feed — all
- * on the 15 M-row delvec corpus, re-laid out by RANGE on the key so a
+ * on the 15 M-row [[ProfileTxTable.source]] corpus, re-laid out by RANGE on the key so a
  * key-range delete skews to few files (the day-partitioned shape
  * deletes actually have at 100 TB).
  *
@@ -2078,7 +1986,6 @@ object ProfileTxTable17 {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, TxTable}
-  private val Source = "/tmp/graft_delvec/orders" // ProfileDeleteVectors corpus
   private val Base = "/tmp/graft_txtable17"
   private val Root = s"$Base/t"
 
@@ -2105,11 +2012,9 @@ object ProfileTxTable17 {
       .config("spark.driver.memory", "16g")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    require(Fs.isDirectory(Source),
-      s"run `Profile delvec` first to synthesize $Source")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
 
-    val src = spark.read.parquet(Source)
+    val src = ProfileTxTable.source(spark)
     time("create (15 M rows, RANGE layout on o_orderkey -> 32 files)") {
       TxTable.create(spark, Root, src.withColumn("version", lit(0L))
         .repartitionByRange(32, col("o_orderkey")))
@@ -2227,7 +2132,6 @@ object ProfileTxTable18 {
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, TxTable}
   import graft.streaming.Streams
-  private val Source = "/tmp/graft_delvec/orders" // ProfileDeleteVectors corpus
   private val Base = "/tmp/graft_txtable18"
 
   private def time[A](label: String)(f: => A): A = {
@@ -2244,10 +2148,8 @@ object ProfileTxTable18 {
       .config("spark.driver.memory", "16g")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    require(Fs.isDirectory(Source),
-      s"run `Profile delvec` first to synthesize $Source")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
-    val src = spark.read.parquet(Source)
+    val src = ProfileTxTable.source(spark)
 
     // ---- leg 1: conflictDetect overhead, single writer ----------------
     val t1 = s"$Base/occ"
@@ -2346,7 +2248,6 @@ object ProfileStreamRep {
   import org.apache.spark.sql.streaming.Trigger
   import graft.sources.{Fs, TxTable}
 
-  private val Source = "/tmp/graft_delvec/orders" // ProfileDeleteVectors corpus
   private val Base = "/tmp/graft_streamrep"
 
   private def time[A](label: String)(f: => A): A = {
@@ -2363,10 +2264,8 @@ object ProfileStreamRep {
       .config("spark.driver.memory", "16g")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    require(Fs.isDirectory(Source),
-      s"run `Profile delvec` first to synthesize $Source")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
-    val src = spark.read.parquet(Source)
+    val src = ProfileTxTable.source(spark)
     val t = s"$Base/src"
     val rep = s"$Base/rep"
 

@@ -3,20 +3,18 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.jdk.CollectionConverters._
-
 /**
- * Merge-on-read deletes via per-file deletion vectors (round 16).
+ * Deletion-vector (DV) bitmap primitives behind [[TxTable]]'s
+ * merge-on-read deletes (round 16).
  *
- * [[ParquetIO.upsert]] is copy-on-write: every MERGE rewrites the whole
- * surviving generation. Correct, and the right call when the update side
- * is a meaningful fraction of the table — but a 100 TB table asked to
- * drop 0.1 % of its rows (a GDPR erasure batch, a spam sweep, a bad
- * crawl day) should not pay a 100 TB rewrite. The lakehouse answer
- * (Delta deletion vectors, Iceberg positional delete files) is
- * merge-on-read: record WHICH rows of WHICH files are dead in a tiny
- * sidecar, apply it at scan time, and fold it into a physical rewrite
- * only when the dead fraction justifies one.
+ * Copy-on-write answers a delete by rewriting every file that holds a
+ * dead row; a 100 TB table asked to drop 0.1 % of its rows (a GDPR
+ * erasure batch, a spam sweep, a bad crawl day) should not pay that.
+ * The lakehouse answer (Delta deletion vectors, Iceberg positional
+ * delete files) is to record WHICH rows of WHICH files are dead in a
+ * tiny sidecar, apply it at scan time, and fold it into a physical
+ * rewrite only when the dead fraction justifies one
+ * ([[TxTable.checkpoint]], [[TxTable.compactFiles]]).
  *
  * Representation: one row per data file holding a sparse 64-bit-word
  * bitmap — `map<word_index, or-mask>` over the file's parquet row
@@ -39,73 +37,16 @@ import scala.jdk.CollectionConverters._
  * `broadcast()` is for. Rows whose (file, word) carries no vector row
  * pass through the join null-armed and are kept.
  *
- * Epoch layout under `<table>/_deletes/epoch=<k>/` with the repo's
- * create-once commit markers (`_deletes/_commits/epoch<k>`): a crashed
- * [[deleteWhere]] leaves an unmarked directory that readers ignore and
- * the next epoch number skips past — no rename, no pointer, the same
- * object-store contract as the generation lifecycle
- * (reference capability: the merge/lifecycle surface of
- * parquet-merge.cc:1 re-expressed for mutating tables at scale).
- * Readers OR the committed epochs' bitmaps per file, so overlapping
- * delete batches compose; [[deleteWhere]] evaluates its predicate over
- * the LIVE view, so re-marking already-dead rows is a no-op by
- * construction as well as by bitmap algebra.
- *
- * [[rewriteDeleted]] is the fold-down: when `deletedFraction` crosses
- * the caller's threshold, materialize the live rows as a sized
- * generation (one scan, the same sized-write path as every compactor)
- * and drop the vectors. Until then, every reader pays one tiny
- * broadcast — not a rewrite.
+ * Where the sidecars live, and when they count, is [[TxTable]]'s
+ * commit protocol: each commit writes its vectors under
+ * `_txn/dv/<k>`, and a read OR-folds the dirs of the commits it
+ * resolves ([[foldDvDirs]]), so overlapping deletes compose by bitmap
+ * OR and a later commit's vectors vanish with its marker.
  */
 object DeleteVectors {
 
-  private def epochRoot(table: String) = s"$table/_deletes"
-  private def commitsDir(table: String) = s"${epochRoot(table)}/_commits"
-  private def epochDir(table: String, k: Long) = s"${epochRoot(table)}/epoch=$k"
-
-  /** Committed epoch ids, ascending: directory exists AND marker exists —
-    * the generation-lifecycle resolution rule, one `_commits` listing. */
-  private[sources] def committedEpochs(table: String): Seq[Long] = {
-    if (!Fs.isDirectory(commitsDir(table))) return Seq.empty
-    val marked = Fs.listFiles(commitsDir(table))
-      .map(_.getPath.getName)
-      .filter(_.matches("epoch\\d+"))
-      .map(_.stripPrefix("epoch").toLong)
-      .toSet
-    Fs.listDirs(epochRoot(table))
-      .map(_.getPath.getName)
-      .filter(_.startsWith("epoch="))
-      .map(_.stripPrefix("epoch=").toLong)
-      .filter(marked.contains)
-      .sorted
-  }
-
-  /** Next free epoch id: past every id any epoch DIRECTORY or marker has
-    * touched — committed or crashed — matching [[TxTable]]'s never-reuse
-    * rule, so a crashed [[deleteWhere]]'s unmarked directory is skipped
-    * (and later vacuumable) instead of silently overwritten. */
-  private def nextEpoch(table: String): Long = {
-    val dirIds =
-      if (!Fs.isDirectory(epochRoot(table))) Seq.empty
-      else Fs.listDirs(epochRoot(table))
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("epoch=") &&
-          n.stripPrefix("epoch=").forall(_.isDigit))
-        .map(_.stripPrefix("epoch=").toLong)
-    val markIds =
-      if (!Fs.isDirectory(commitsDir(table))) Seq.empty
-      else Fs.listFiles(commitsDir(table))
-        .map(_.getPath.getName)
-        .filter(_.matches("epoch\\d+"))
-        .map(_.stripPrefix("epoch").toLong)
-    (dirIds ++ markIds :+ -1L).max + 1
-  }
-
   /** The scan with physical row identity attached — every DV operation
     * hangs off these two metadata columns. */
-  private def scanWithRowId(spark: SparkSession, table: String): DataFrame =
-    scanWithRowId(spark, Seq(table))
-
   private[sources] def scanWithRowId(spark: SparkSession,
       paths: Seq[String]): DataFrame =
     scanWithRowId(spark, paths, None)
@@ -165,24 +106,10 @@ object DeleteVectors {
         .as("dv"),
         sum(col("n")).as("n_deleted"))
 
-  /** Merged DV state: (__dv_fp, __dv_word, __dv_mask) rows — committed
-    * epochs OR-folded per (file, 64-row word). Empty (schema-stable)
-    * when no epoch exists. Tiny by construction: bounded by dead-rows
-    * (≤ one row per 64 dead rows per file). */
-  def deletionVectors(spark: SparkSession, table: String): DataFrame =
-    foldEpochs(spark, table, committedEpochs(table))
-
-  /** OR-fold a SUBSET of committed epochs into per-file maps — the
-    * shared core of [[deletionVectors]] (all epochs) and [[deletes]]
-    * (the epoch ranges either side of the change-feed cursor). */
-  private def foldEpochs(spark: SparkSession, table: String,
-      epochs: Seq[Long]): DataFrame =
-    foldDvDirs(spark, epochs.map(epochDir(table, _)))
-
   /** OR-fold arbitrary DV sidecar dirs (each written by
-    * [[buildVectors]]'s shape) into (file, word, mask) ROWS — shared
-    * with [[TxTable]], whose vectors live under its commit log rather
-    * than `_deletes` epochs. Rows, not per-file maps, deliberately:
+    * [[buildVectors]]'s shape) into (file, word, mask) ROWS — the
+    * `_txn/dv/<k>` dirs of the commits a [[TxTable]] read resolves.
+    * Rows, not per-file maps, deliberately:
     * application is then a broadcast HASH join on (file, word) — O(1)
     * per scanned row — where a per-file `map<word, mask>` probe is a
     * LINEAR scan of the map under Spark's `element_at` and degrades
@@ -238,160 +165,4 @@ object DeleteVectors {
     org.apache.spark.sql.functions.shiftright(c, bits)
   private def shiftleftDyn(c: Column, bits: Column): Column =
     call_function("shiftleft", c, bits.cast("int"))
-
-  /** The LIVE view of the table: scan minus deletion vectors. The 100 TB
-    * side stays a plain parquet scan (pushdown/pruning intact — the DV
-    * join is on metadata columns, not data); the DV side broadcasts. */
-  def read(spark: SparkSession, table: String): DataFrame =
-    readFiles(spark, table, Seq(table))
-
-  /**
-   * The live view over a SUBSET of the table's data files — the
-   * composition point with planning-time file skipping
-   * ([[StatsManifest.prune]]/[[StatsManifest.pruneEquality]] hand back
-   * exactly such a subset): the two sidecars stack, a selective query
-   * on a mutated table pays (surviving files) scan + one DV broadcast,
-   * neither a full listing-width scan nor a rewrite. `files` must
-   * belong to `table` — the DV relation is still resolved (and
-   * broadcast) from the TABLE root, keyed by `_metadata.file_path`, so
-   * vectors for unread files simply never match.
-   */
-  def readFiles(spark: SparkSession, table: String,
-      files: Seq[String]): DataFrame =
-    applyVectors(scanWithRowId(spark, files), deletionVectors(spark, table))
-
-  /**
-   * Mark every LIVE row matching `predicate` deleted, as one new
-   * committed epoch. Returns the number of rows marked. The predicate
-   * runs over the DV-applied view, so a second call with the same
-   * predicate marks 0 rows; overlapping predicates compose by bitmap
-   * OR at read time. Cost: one scan of the table (predicate-pushed) +
-   * a shuffle of the MATCHED rows only — never a rewrite.
-   */
-  def deleteWhere(spark: SparkSession, table: String,
-      predicate: Column): Long = {
-    val hits = applyVectorsKeepId(
-        scanWithRowId(spark, table), deletionVectors(spark, table))
-      .filter(predicate)
-      .select(col("__dv_file").as("file_path"), col("__dv_row").as("ri"))
-    val vectors = buildVectors(hits)
-    val epoch = nextEpoch(table)
-    val out = epochDir(table, epoch)
-    // the marked-row count rides the WRITE job itself as an observed
-    // metric (round 22): the old read-back of the written sidecar was
-    // one extra job per delete just to re-learn a number the write had
-    // already aggregated
-    val obs = org.apache.spark.sql.Observation()
-    vectors.observe(obs, coalesce(sum("n_deleted"), lit(0L)).as("n"))
-      .write.mode("overwrite").parquet(out)
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n == 0L) { Fs.deleteRecursive(new org.apache.hadoop.fs.Path(out)); 0L }
-    else {
-      // data first, marker last — the create-once commit protocol; a
-      // crash before this line leaves an unmarked dir readers ignore
-      Fs.createMarker(s"${commitsDir(table)}/epoch$epoch", out)
-      n
-    }
-  }
-
-  /** Dead-row count and fraction — the rewrite trigger's inputs, read
-    * from the vectors alone (no table scan). */
-  def deletedCount(spark: SparkSession, table: String): Long = {
-    val epochs = committedEpochs(table)
-    if (epochs.isEmpty) 0L
-    else deletionVectors(spark, table)
-      .agg(coalesce(sum(bit_count(col("__dv_mask"))), lit(0L)).cast("long"))
-      .head().getLong(0)
-  }
-
-  /**
-   * The DELETE change feed: rows whose death was committed by epoch
-   * `fromEpoch` or later — each row exactly once, attributed to the
-   * first marking epoch (bitmap AND-NOT against the union of earlier
-   * epochs, so a row epoch 0 already killed never reappears when
-   * epoch 2 re-matches it). This is what downstream incremental
-   * consumers need from a mutating table: the upsert change feed
-   * carries inserts/updates, this carries the merge-on-read deletes —
-   * an ANN index or dedup state can retire exactly these rows instead
-   * of rebuilding.
-   *
-   * Scale shape: the scan is restricted to files that CARRY new-epoch
-   * vectors (their path list is the broadcast side's keys — bounded by
-   * files-touched, collected like every planner file list), so the
-   * feed costs (files touched by the delete) scan + two tiny
-   * broadcasts — independent of table size, like the delete itself.
-   * Returns the table schema unchanged (schema-stable empty frame when
-   * no committed epoch ≥ `fromEpoch` exists).
-   */
-  def deletes(spark: SparkSession, table: String,
-      fromEpoch: Long = 0L): DataFrame = {
-    val epochs = committedEpochs(table)
-    val newer = epochs.filter(_ >= fromEpoch)
-    if (newer.isEmpty)
-      return spark.read.parquet(table).filter(lit(false))
-    val dvNew = foldEpochs(spark, table, newer)
-    val dvOld = foldEpochs(spark, table, epochs.filter(_ < fromEpoch))
-      .withColumnRenamed("__dv_fp", "__dv_fp_old")
-      .withColumnRenamed("__dv_word", "__dv_word_old")
-      .withColumnRenamed("__dv_mask", "__dv_mask_old")
-    val files = dvNew.select("__dv_fp").distinct()
-      .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq.sorted
-    val base = scanWithRowId(spark, files)
-    base
-      // inner: only words carrying NEW kills can contribute changes
-      .join(broadcast(dvNew),
-        base("__dv_file") === dvNew("__dv_fp") &&
-          shiftright(base("__dv_row"), 6) === dvNew("__dv_word"))
-      .join(broadcast(dvOld),
-        base("__dv_file") === dvOld("__dv_fp_old") &&
-          shiftright(base("__dv_row"), 6) === dvOld("__dv_word_old"),
-        "left")
-      .filter(isDeleted(col("__dv_mask"), col("__dv_row")) &&
-        !isDeleted(col("__dv_mask_old"), col("__dv_row")))
-      .drop("__dv_file", "__dv_row", "__dv_fp", "__dv_word", "__dv_mask",
-        "__dv_fp_old", "__dv_word_old", "__dv_mask_old")
-  }
-
-  /** Dead fraction of the table — the [[rewriteDeleted]] trigger.
-    * Numerator is [[deletedCount]] (vectors only); denominator is the
-    * footer row-count sum, a distributed metadata-only pass over the
-    * data files (cost ∝ file COUNT — no data pages, same shape as
-    * [[StatsManifest.build]]). 0.0 on an untouched table. */
-  def deletedFraction(spark: SparkSession, table: String): Double = {
-    val dead = deletedCount(spark, table)
-    if (dead == 0L) return 0.0
-    val conf = new StatsManifest.SerConf(
-      spark.sparkContext.hadoopConfiguration)
-    val files = Fs.listFiles(table)
-      .map(_.getPath.toString)
-      .filter(p => p.endsWith(".parquet") &&
-        !new org.apache.hadoop.fs.Path(p).getName.startsWith("_"))
-    val total = spark.createDataset(files)(
-        org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.min(files.size, 64))
-      .map { f: String =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf.value))
-        try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally r.close()
-      }(org.apache.spark.sql.Encoders.scalaLong)
-      .agg(sum("value")).head().getLong(0)
-    dead.toDouble / math.max(1L, total)
-  }
-
-  /**
-   * Fold the vectors down: write the live rows as a sized table at
-   * `outPath` and (on success) the caller can retire the old table+DVs.
-   * The one-scan rewrite merge-on-read defers until the dead fraction
-   * makes it worth a pass — the Delta/Iceberg maintenance contract.
-   */
-  def rewriteDeleted(spark: SparkSession, table: String, outPath: String,
-      targetFileBytes: Long = 512L * 1024 * 1024,
-      opts: ParquetIO.WriteOptions = ParquetIO.WriteOptions()): Unit = {
-    val live = read(spark, table)
-    val totalBytes = ParquetIO.inputBytes(spark, Seq(table))
-    val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
-    ParquetIO.write(live.repartition(parts), outPath, opts)
-  }
 }

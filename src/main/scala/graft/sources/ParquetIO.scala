@@ -174,8 +174,7 @@ object ParquetIO {
    * row-level delete would be a full-table rewrite). Lexicographic
    * compare matches ISO dates (`dt=2024-01-31` < `dt=2024-02-01`);
    * returns the dropped partition values. A partition whose delete
-   * fails midway is NOT reported dropped (same contract as
-   * [[graft.streaming.Streams.vacuumGenerations]]).
+   * fails midway is NOT reported dropped.
    *
    * All path work goes through the Hadoop FileSystem API ([[Fs]]) so the
    * TTL job runs unchanged against hdfs:// and s3a:// — the only
@@ -466,9 +465,8 @@ object ParquetIO {
     upsertWrite(base, upd, outPath, keyCols, versionCol, parts, opts, opCol)
   }
 
-  /** DataFrame core of [[upsert]] — also the body of the streaming
-    * foreachBatch MERGE sink ([[graft.streaming.Streams.upsertSink]]),
-    * where the update side arrives as a micro-batch, not files.
+  /** DataFrame core of [[upsert]], for callers whose update side is
+    * already a DataFrame (a micro-batch, a query result), not files.
     *
     * `opCol` (round 12) turns the merge into the FULL CDC MERGE contract:
     * the named column on the update side carries `"u"` (upsert, the
@@ -525,9 +523,9 @@ object ParquetIO {
    * (new values for i/u, last-known old values for d). Unchanged keys are
    * dropped, so downstream consumers replay deltas, not snapshots — the
    * Delta Lake "change data feed" / Iceberg changelog-scan capability,
-   * derived from plain snapshots so it works on any two generations
-   * ([[graft.streaming.Streams.readGeneration]]) with no write-path
-   * cooperation.
+   * derived from plain snapshots so it works on any two table versions
+   * (two [[upsert]] outputs, two [[TxTable.readAt]] snapshots) with no
+   * write-path cooperation.
    *
    * One shuffle: the full-outer join key-hashes both sides once; payload
    * comparison is a null-safe struct equality (codegen'd, no

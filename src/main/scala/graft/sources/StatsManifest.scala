@@ -138,7 +138,7 @@ object StatsManifest {
     } finally reader.close()
   }
 
-  /** The table's parquet data files (sidecar dirs like `_stats`/`_deletes`
+  /** The table's parquet data files (sidecar dirs like `_stats`/`_txn`
     * excluded by the underscore rule Spark itself uses). */
   private def dataFiles(table: String): Seq[String] =
     Fs.listFiles(table)

@@ -9,13 +9,14 @@ import org.apache.spark.storage.StorageLevel
  * A minimal transactional table layout (round 16, hardened round 17) —
  * the sidecar machinery composed into snapshot-isolated commits, so a
  * mutating 100 TB table gets ATOMIC merge-on-read upserts instead of
- * choosing between [[ParquetIO.upsert]]'s copy-on-write generations
- * (rewrite ∝ table) and raw [[DeleteVectors]] epochs (no atomicity
- * across the delete-then-append pair a CDC batch needs).
+ * choosing between [[ParquetIO.upsert]]'s copy-on-write rewrite
+ * (∝ table) and bare deletion vectors (no atomicity across the
+ * delete-then-append pair a CDC batch needs). It is the engine's one
+ * commit protocol.
  *
  * Layout, all under one root, all object-store safe (create-once
  * markers only — no rename, no pointer, no listing-freshness
- * assumption; the [[Streams]] generation-lifecycle contract):
+ * assumption):
  *
  * {{{
  *   <root>/data/c<k>/part-….parquet   commit k's added rows (optional)
@@ -75,7 +76,7 @@ import org.apache.spark.storage.StorageLevel
  * (batch wins ties, the update-side-wins rule), and a batch winner
  * that loses to a strictly newer live row is dropped entirely, so a
  * late/out-of-order CDC batch can never regress committed data.
- * Cost: one table scan + work ∝ BATCH size — no generation rewrite.
+ * Cost: one table scan + work ∝ BATCH size — no table rewrite.
  * The batch key set broadcasts below `broadcastKeyLimit` keys and
  * falls back to a shuffled join above it (a backfill is not a CDC
  * batch). At 0.1 %-of-table batches this is the regime where
@@ -544,13 +545,22 @@ object TxTable {
     * at all (the estimate is then leaf-derived, reliable) OR every leaf
     * is itself under the bar (whatever the guesses say, at most 8 MB of
     * source rows feed the batch; the keys projection cannot exceed it).
-    * Anything else falls back to the exact `count()` gate. */
+    * Under the cost-based optimizer (`spark.sql.cbo.enabled`) a Join or
+    * Aggregate estimate comes from column-stat guesses too — two big
+    * leaves whose key ranges miss each other estimate near zero rows —
+    * so those nodes count as guesses as well. Anything else falls back
+    * to the exact `count()` gate. */
   private[graft] def smallByStats(df: DataFrame): Boolean = {
     val bar = BigInt(8L * 1024 * 1024)
     val plan = df.queryExecution.optimizedPlan
     if (plan.stats.sizeInBytes > bar) return false
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val guessy = plan.exists { case _: Filter => true; case _ => false }
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join}
+    val cbo = df.sparkSession.conf.get("spark.sql.cbo.enabled", "false").toBoolean
+    val guessy = plan.exists {
+      case _: Filter => true
+      case _: Join | _: Aggregate => cbo
+      case _ => false
+    }
     !guessy || plan.collectLeaves().forall(_.stats.sizeInBytes <= bar)
   }
 
@@ -2106,7 +2116,7 @@ object TxTable {
   /** Sweep crashed-writer leftovers: data/DV/key dirs and unredeemed
     * claim markers whose id has no commit marker AND is below the newest
     * committed id (an id above it may be an in-flight writer — never
-    * touched, the generation-vacuum rule) AND is older than `graceMs`
+    * touched) AND is older than `graceMs`
     * (round 18, closing the round-17 advisory: claim ids are monotonic
     * but COMMIT order is not — writer A claims k, writer B claims k+1
     * and commits first, so tip > k while A is still writing; the

@@ -165,95 +165,11 @@ object Streams {
   }
 
   /**
-   * CDC-style streaming MERGE sink: every micro-batch upserts into a
-   * keyed table via [[graft.sources.ParquetIO.upsertWrite]] — latest
-   * version per key wins, the incoming batch winning ties, and (round 12)
-   * `opCol` tombstones delete their key — and each merge lands as a NEW
-   * generation directory `gen<batchId>` committed by a create-once
-   * MARKER file `_commits/gen<batchId>` written strictly after the data
-   * (write-new, mark-later: a crashed batch leaves a dangling directory
-   * without a marker, never a half-merged readable table). Read the
-   * table with [[currentGeneration]].
-   *
-   * Commit protocol (round 14 — the object-store-safe design): there is
-   * NO mutable pointer and NO rename anywhere. Generation ids are
-   * monotonic (the streaming batch id), each generation's commit bit is
-   * the EXISTENCE of its own marker file, and the current table state is
-   * resolved read-side as max(committed id) from one `_commits` listing.
-   * Every write is a new-object create — a single atomic PUT on S3, and
-   * safe even where creates aren't atomic because a partial marker can
-   * only exist after its generation's data is fully written. This is why
-   * the tier runs unchanged on file://, hdfs://, and s3a://.
-   *
-   * Crash-window replay (round 12 guard, re-keyed on the marker):
-   * foreachBatch can replay a batch whose write finished but whose
-   * CHECKPOINT commit didn't. If the crash hit after the table marker
-   * was created, the replayed batch would resolve `currentGeneration` ==
-   * its own output and try to overwrite the path it is reading from —
-   * Spark refuses and the stream could never restart. The guard: when
-   * gen<batchId>'s marker already exists, the merge is fully applied
-   * (the marker is created strictly after a complete write), so the
-   * replay is a no-op. If the crash hit BEFORE the marker, the replayed
-   * batch reads the previous committed generation and simply rewrites
-   * the dangling directory — also safe.
-   *
-   * CONTRACT: the checkpoint and the table directory are a UNIT —
-   * generation ids ARE streaming batch ids. Resetting or deleting the
-   * checkpoint while keeping the table restarts batch ids at 0, which
-   * the replay guard cannot distinguish from a true replay: already-
-   * committed ids would be skipped (their NEW data dropped) and fresh
-   * ids would collide with existing generation directories. To
-   * reprocess, start a new table directory (or vacuum to empty) along
-   * with the new checkpoint.
-   */
-  def upsertSink(updates: DataFrame, tableDir: String, checkpoint: String,
-      keyCols: Seq[String], versionCol: String, parts: Int = 4,
-      opCol: Option[String] = None): StreamingQuery = {
-    // one-time legacy upgrade (round 15): attaching the writer to a
-    // pre-marker table converts its _CURRENT pointer into markers, so
-    // every later resolution is the single _commits LIST
-    migrateLegacyGenerations(tableDir)
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val gen = s"$tableDir/gen$batchId"
-        // ONE committed-generations resolution per micro-batch (round-14
-        // review: isCommitted + currentGeneration each re-listed the
-        // table and _commits dirs — doubled LIST/GET round-trips per
-        // batch on an object store, growing with generation count)
-        val cg = committedGenerations(tableDir)
-        if (cg.exists(_._1 == batchId)) {
-          // replay of a batch that already committed its write AND its
-          // marker: gen<batchId> is complete — rewriting it from itself
-          // would be read-while-overwrite; skip.
-          ()
-        } else {
-          cg.lastOption.map(_._2) match {
-            case Some(c) =>
-              graft.sources.ParquetIO.upsertWrite(
-                spark.read.parquet(c), batch.toDF(), gen, keyCols, versionCol,
-                parts, opCol = opCol)
-            case None =>
-              graft.sources.ParquetIO.upsertWrite(
-                spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  batch.schema),
-                batch.toDF(), gen, keyCols, versionCol, parts, opCol = opCol)
-          }
-          // commit = create-once marker, strictly after the full write
-          graft.sources.Fs.createMarker(commitMarkerPath(tableDir, batchId), gen)
-        }
-        ()
-      }
-      .start()
-  }
-
-  /**
    * Streaming CDC into the TRANSACTIONAL merge-on-read table (round 17):
    * every micro-batch lands as one [[graft.sources.TxTable.upsert]]
    * commit — atomic delete+append under a single marker, write volume ∝
-   * the batch — instead of [[upsertSink]]'s copy-on-write generation
-   * rewrite per batch. This is the 100 TB CDC shape: a 0.1 % batch costs
+   * the batch — instead of a copy-on-write rewrite of the table per
+   * batch. This is the 100 TB CDC shape: a 0.1 % batch costs
    * batch-sized files + a KB DV sidecar (SCALE.md `txtable`), and the
    * sink stays correct under foreachBatch's at-least-once delivery two
    * ways: a per-batch create-once marker (`_txn/stream/b<id>`) skips a
@@ -949,194 +865,6 @@ object Streams {
     perceptualDedupSink(newVideo, corpus, outDir, checkpoint,
       (d, i, m) => graft.operators.Multimodal.videoAHash(d, i, m, nSample),
       idCol, mediaCol, maxHamming)
-
-  /** Marker file whose existence commits generation `id` — one flat
-    * `_commits/` directory per table, so resolving EVERY commit bit is a
-    * single listing (one LIST RPC on an object store), not a per-
-    * generation existence probe. */
-  private[graft] def commitMarkerPath(tableDir: String, id: Long): String =
-    s"$tableDir/_commits/gen$id"
-
-  /** Is generation `id` committed? Marker existence (the `_CURRENT`
-    * pointer era is handled by a one-time [[migrateLegacyGenerations]];
-    * see [[committedGenerations]]). */
-  private[graft] def isCommitted(tableDir: String, id: Long): Boolean =
-    committedGenerations(tableDir).exists(_._1 == id)
-
-  /**
-   * One-time migration of a pre-marker table (round 15, retiring the
-   * permanent `_CURRENT` fallback): if the legacy pointer exists, every
-   * generation id ≤ its target — each a committed snapshot under the old
-   * protocol — gets a create-once commit marker, then the pointer is
-   * deleted. Ordering is the crash-safety: markers first, pointer last,
-   * so a crash mid-migration leaves the pointer in place and a re-run
-   * completes (markers are create-once; re-creating is a no-op).
-   * Idempotent — a marker-native table returns 0 without any write.
-   * [[upsertSink]] runs this at sink creation, so attaching the writer
-   * to a legacy table upgrades it; read-only consumers of a
-   * NOT-yet-migrated legacy table must run it once explicitly (the
-   * read path no longer pays the pointer GET per resolution).
-   * Returns the number of markers written.
-   */
-  def migrateLegacyGenerations(tableDir: String): Int =
-    graft.sources.Fs.readUtf8(s"$tableDir/_CURRENT").map(_.trim) match {
-      case None => 0
-      case Some(ptr) =>
-        val all = listGenerations(tableDir)
-        val q = graft.sources.Fs.qualified(ptr)
-        val target = all.collectFirst {
-          case (id, p) if graft.sources.Fs.qualified(p) == q => id
-        }
-        val written = target.toSeq.flatMap { p =>
-          all.collect { case (id, path) if id <= p => (id, path) }
-        }.map { case (id, path) =>
-          if (graft.sources.Fs.createMarker(commitMarkerPath(tableDir, id), path)) 1 else 0
-        }.sum
-        // the pointer goes LAST — and only when it resolved to a live
-        // generation (a dangling pointer is surfaced, not swallowed)
-        require(target.isDefined,
-          s"$tableDir/_CURRENT names '$ptr', which matches no generation directory")
-        graft.sources.Fs.deleteIfExists(s"$tableDir/_CURRENT")
-        written
-    }
-
-  /** Generation ids with a commit marker (ascending). One listing. */
-  private def markerIds(tableDir: String): Seq[Long] = {
-    val dir = s"$tableDir/_commits"
-    if (!graft.sources.Fs.isDirectory(dir)) Seq.empty
-    else graft.sources.Fs.listFiles(dir)
-      .map(_.getPath.getName)
-      .filter(_.matches("gen\\d+"))
-      .map(_.stripPrefix("gen").toLong)
-      .sorted
-  }
-
-  /** COMMITTED generations of the table, ascending — (id, path). The
-    * read-side resolution of the round-14 commit protocol: a generation
-    * counts iff its directory exists AND its `_commits/gen<id>` marker
-    * exists. ONE `_commits` listing resolves every bit — since round 15
-    * there is no `_CURRENT` pointer GET on this path: pre-marker tables
-    * are upgraded once by [[migrateLegacyGenerations]] (automatic at
-    * [[upsertSink]] creation), after which the pointer file is gone. */
-  def committedGenerations(tableDir: String): Seq[(Long, String)] = {
-    val all = listGenerations(tableDir)
-    if (all.isEmpty) Seq.empty
-    else {
-      val marked = markerIds(tableDir).toSet
-      all.filter { case (id, _) => marked.contains(id) }
-    }
-  }
-
-  /** The current table state: the newest COMMITTED generation's path.
-    * Pure read-side resolution — one `_commits` listing, no pointer
-    * file, no rename dependence; safe on S3. */
-  def currentGeneration(tableDir: String): Option[String] =
-    committedGenerations(tableDir).lastOption.map(_._2)
-
-  /** Every generation directory of a [[upsertSink]] table, ascending by
-    * generation id — (id, path), committed or not. Pure directory
-    * listing through the Hadoop FS API; dangling generations from a
-    * crashed batch (written, never committed) appear too, which is
-    * exactly what [[vacuumGenerations]] needs to see. */
-  def listGenerations(tableDir: String): Seq[(Long, String)] = {
-    if (!graft.sources.Fs.isDirectory(tableDir)) Seq.empty
-    else graft.sources.Fs.listDirs(tableDir)
-      .filter(_.getPath.getName.matches("gen\\d+"))
-      .map(f => (f.getPath.getName.stripPrefix("gen").toLong, f.getPath.toString))
-      .sortBy(_._1)
-  }
-
-  /** Time travel: read COMMITTED generation `gen` of the table as of its
-    * batch — every generation is a complete copy-on-write snapshot (the
-    * [[upsertSink]] merge rewrites survivors wholesale), so reading an
-    * old one needs no log replay. Loud error when the generation is
-    * missing (vacuumed, never written) or dangling (its batch crashed
-    * before the commit marker — the directory may be half-written and
-    * must never be served as a snapshot). */
-  def readGeneration(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, gen: Long): DataFrame = {
-    val committed = committedGenerations(tableDir)
-    committed.find(_._1 == gen) match {
-      case Some((_, path)) => spark.read.parquet(path)
-      case None =>
-        val dangling = listGenerations(tableDir).map(_._1)
-          .filterNot(committed.map(_._1).toSet)
-        throw new IllegalArgumentException(
-          s"generation $gen not committed under $tableDir — " +
-            s"committed: ${committed.map(_._1).mkString(", ")}" +
-            (if (dangling.nonEmpty) s"; uncommitted (crashed batch): ${dangling.mkString(", ")}"
-             else ""))
-    }
-  }
-
-  /**
-   * Retention for the generational table: delete all but the newest
-   * `keepLast` COMMITTED generations. The newest committed generation
-   * (the current table state) is NEVER deleted regardless of `keepLast`,
-   * and DANGLING generations newer than it are also kept — a dangling
-   * directory from a crashed batch is that batch's replay target, not
-   * garbage. Dangling directories OLDER than the current generation are
-   * superseded crash leftovers (their batch was since replayed into a
-   * later committed generation) and are swept. Returns the deleted
-   * paths. Ordering per generation: data directory first, marker after —
-   * a crash in between leaves a marker with no directory, which the
-   * read side ignores (committed = marker AND directory) and the next
-   * vacuum's orphan-marker sweep removes. Driver-side surgery on table
-   * METADATA volume (generation count), not data volume.
-   */
-  def vacuumGenerations(tableDir: String, keepLast: Int): Seq[String] = {
-    require(keepLast >= 1, s"vacuumGenerations: keepLast must be >= 1, got $keepLast")
-    // Vacuum is a WRITE path, so it migrates a legacy `_CURRENT` table
-    // first (round-16 review): without this, legacy generations on a
-    // mixed table (pointer-era snapshots + newer marker-era ones) have
-    // no markers, classify as crashed leftovers (id < maxCommitted), and
-    // their committed data would be deleted. Read paths stay pure —
-    // only explicit migration or a writer attachment upgrades a table.
-    migrateLegacyGenerations(tableDir)
-    val all = listGenerations(tableDir)
-    val committed = committedGenerations(tableDir)
-    if (committed.isEmpty) return Seq.empty // nothing provably garbage
-    val committedIds = committed.map(_._1).toSet
-    val maxCommitted = committed.last._1
-    val keep = committed.takeRight(keepLast).map(_._1).toSet + maxCommitted
-    val deletable = all.filter { case (id, _) =>
-      if (committedIds.contains(id)) !keep.contains(id)
-      else id < maxCommitted
-    }
-    // orphan markers (marker present, directory gone — a previous vacuum
-    // crashed between dir delete and marker delete): sweep them too.
-    // ONLY ids < maxCommitted (round-14 review): the marker listing here
-    // is FRESHER than the `all` directory snapshot above, so a live sink
-    // committing gen N concurrently (dir first, then marker) can appear
-    // in markerIds while its dir is absent from the stale dirIds — and
-    // generation ids are batch ids, strictly increasing, so any such
-    // concurrent commit has id > maxCommitted while a true crashed-vacuum
-    // orphan was deletable under an older (≤ current) maxCommitted.
-    // Without the bound the sweep would demote a freshly committed
-    // generation to dangling and a later vacuum would delete its data.
-    val dirIds = all.map(_._1).toSet
-    markerIds(tableDir)
-      .filter(id => id < maxCommitted && !dirIds.contains(id))
-      .foreach(id => graft.sources.Fs.deleteIfExists(commitMarkerPath(tableDir, id)))
-    deletable.flatMap { case (id, path) =>
-      // a failed delete (open handle, permission) must NOT be reported as
-      // vacuumed: a half-deleted generation still lists, and silently
-      // claiming success would let a reader trust a corrupt dir without
-      // any signal (round-12 review); Fs.deleteRecursive returns false
-      // instead of throwing for exactly this contract. Data dir first,
-      // marker after: a crash in between leaves an orphan MARKER (dir
-      // gone), which readers ignore — committed requires marker AND
-      // directory — and the sweep above removes next run. The reverse
-      // order would leave an intact-but-unreadable snapshot instead.
-      if (graft.sources.Fs.deleteRecursive(new org.apache.hadoop.fs.Path(path))) {
-        graft.sources.Fs.deleteIfExists(commitMarkerPath(tableDir, id))
-        Some(path)
-      } else {
-        System.err.println(s"[vacuum] FAILED to fully delete $path — generation left partially present")
-        None
-      }
-    }
-  }
 
   /**
    * Streaming OBSERVABILITY (round 12): a StreamingQueryListener that

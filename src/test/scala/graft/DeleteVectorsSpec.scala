@@ -1,164 +1,61 @@
 package graft
 
-import graft.sources.{DeleteVectors, Fs}
+import graft.sources.TxTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
 /**
- * Merge-on-read deletion vectors (round 16): sparse per-file bitmaps,
- * epoch commit markers, OR-composition across overlapping delete
- * batches, and the no-rewrite guarantee (data files byte-untouched).
+ * Merge-on-read deletion vectors (round 16), driven through
+ * [[TxTable]]'s delete commits: overlapping delete batches OR-compose
+ * per file, the change feed reports each death once, and the DV join
+ * leaves the data scan's pushdown intact.
  */
 class DeleteVectorsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def tmp(): String = Files.createTempDirectory("graft-dv").toString
 
-  /** (name, mtime, len) of every data file — the rewrite detector. */
-  private def dataFiles(table: String): Set[(String, Long, Long)] =
-    Fs.listFiles(table)
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(f => (f.getPath.getName, f.getModificationTime, f.getLen)).toSet
-
-  private def freshTable(dir: String, n: Int = 1000, parts: Int = 4): Unit = {
+  private def freshTable(root: String, n: Int = 1000, parts: Int = 4): Unit = {
     import spark.implicits._
-    (0 until n).map(i => (i.toLong, s"name$i", i % 10))
+    TxTable.create(spark, root, (0 until n).map(i => (i.toLong, s"name$i", i % 10))
       .toDF("id", "name", "bucket")
-      .repartition(parts).write.parquet(dir)
+      .repartition(parts))
   }
 
-  test("deleteWhere marks without rewriting; read applies the vectors") {
-    val t = tmp() + "/t"
-    freshTable(t)
-    val before = dataFiles(t)
-    val n = DeleteVectors.deleteWhere(spark, t, col("id") % 3 === 0)
-    assert(n === 334) // ids 0,3,...,999 → ceil(1000/3)
-    assert(dataFiles(t) === before, "delete must not touch data files")
-    val live = DeleteVectors.read(spark, t)
-    assert(live.count() === 666L)
-    assert(live.filter(col("id") % 3 === 0).count() === 0L)
-    // untouched rows come back value-exact, original schema only
-    assert(live.columns.toSeq === Seq("id", "name", "bucket"))
-    val row = live.filter(col("id") === 7L).head
-    assert(row.getString(1) === "name7" && row.getInt(2) === 7)
-    assert(DeleteVectors.deletedCount(spark, t) === 334L)
-    assert(math.abs(DeleteVectors.deletedFraction(spark, t) - 0.334) < 1e-9)
-  }
-
-  test("overlapping epochs OR-compose; re-deleting marks zero") {
-    val t = tmp() + "/t"
-    freshTable(t)
-    assert(DeleteVectors.deleteWhere(spark, t, col("id") < 100) === 100L)
-    // overlaps [0,100) ∪ multiples of 10 — only NEW rows count
-    val n2 = DeleteVectors.deleteWhere(spark, t, col("id") % 10 === 0)
-    assert(n2 === 90L, "already-dead rows must not be re-marked")
-    assert(DeleteVectors.read(spark, t).count() === 1000L - 190L)
-    assert(DeleteVectors.deletedCount(spark, t) === 190L)
-    // idempotence: same predicate again marks nothing, adds no epoch
-    val epochsBefore = Fs.listDirs(s"$t/_deletes").map(_.getPath.getName).toSet
-    assert(DeleteVectors.deleteWhere(spark, t, col("id") < 100) === 0L)
-    assert(Fs.listDirs(s"$t/_deletes").map(_.getPath.getName).toSet === epochsBefore)
-  }
-
-  test("an unmarked (crashed) epoch directory is invisible to readers") {
-    val t = tmp() + "/t"
-    freshTable(t)
-    assert(DeleteVectors.deleteWhere(spark, t, col("id") < 50) === 50L)
-    // simulate a crash-after-data-before-marker for epoch 1 by copying
-    // epoch 0's committed payload and NOT writing its marker
-    val src = s"$t/_deletes/epoch=0"; val dst = s"$t/_deletes/epoch=1"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(src)
-    val fs = p.getFileSystem(conf)
-    org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
-      new org.apache.hadoop.fs.Path(dst), false, conf)
-    assert(DeleteVectors.read(spark, t).count() === 950L,
-      "uncommitted epoch must not apply")
-    // the next committed delete skips PAST the crashed dir's number —
-    // never reuses/overwrites it (round 17: TxTable.nextId's rule)
-    assert(DeleteVectors.deleteWhere(spark, t, col("id") === 999L) === 1L)
-    assert(DeleteVectors.read(spark, t).count() === 949L)
-    assert(graft.sources.Fs.isDirectory(s"$t/_deletes/epoch=2"),
-      "the new epoch must take the next free number")
-    assert(!graft.sources.Fs.exists(s"$t/_deletes/_commits/epoch1"),
-      "the crashed epoch must stay uncommitted, not be adopted")
-  }
-
-  test("rewriteDeleted folds vectors into a clean sized table") {
-    val t = tmp() + "/t"; val out = tmp() + "/compacted"
-    freshTable(t)
-    DeleteVectors.deleteWhere(spark, t, col("bucket") === 3)
-    DeleteVectors.rewriteDeleted(spark, t, out, targetFileBytes = 16L * 1024)
-    val rewritten = spark.read.parquet(out)
-    assert(rewritten.count() === 900L)
-    assert(rewritten.filter(col("bucket") === 3).count() === 0L)
-    assert(rewritten.columns.toSeq.sorted === Seq("bucket", "id", "name"))
-    // parity with the merge-on-read view it folded down
-    val a = DeleteVectors.read(spark, t).orderBy("id").collect().toSeq
-    val b = rewritten.orderBy("id").collect().toSeq
-    assert(a === b)
-  }
-
-  test("delete matching zero rows commits no epoch") {
-    val t = tmp() + "/t"
-    freshTable(t)
-    assert(DeleteVectors.deleteWhere(spark, t, col("id") > 100000L) === 0L)
-    assert(!Fs.isDirectory(s"$t/_deletes") ||
-      Fs.listDirs(s"$t/_deletes").forall(_.getPath.getName == "_commits"))
-    assert(DeleteVectors.read(spark, t).count() === 1000L)
-    assert(DeleteVectors.deletedFraction(spark, t) === 0.0)
-  }
-
-  test("deletes change feed: each death reported once, at its first epoch") {
-    val t = tmp() + "/t"
-    freshTable(t)
-    // no epochs yet: schema-stable empty feed
-    val pre = DeleteVectors.deletes(spark, t)
-    assert(pre.count() === 0L && pre.columns.toSeq === Seq("id", "name", "bucket"))
-    DeleteVectors.deleteWhere(spark, t, col("id") < 100)      // epoch 0
-    DeleteVectors.deleteWhere(spark, t, col("id") % 10 === 0) // epoch 1: 90 NEW
-    assert(DeleteVectors.deletes(spark, t).count() === 190L)
-    val delta = DeleteVectors.deletes(spark, t, fromEpoch = 1L)
-    assert(delta.count() === 90L,
-      "rows epoch 0 already killed must not reappear in epoch 1's feed")
-    assert(delta.filter(col("id") % 10 =!= 0 || col("id") < 100).count() === 0L)
-    // row payload comes back intact for a sampled change
-    val r = delta.filter(col("id") === 250L).head
-    assert(r.getString(1) === "name250" && r.getInt(2) === 0)
-    // cursor past the tip: empty, schema unchanged
-    val past = DeleteVectors.deletes(spark, t, fromEpoch = 2L)
-    assert(past.count() === 0L && past.columns.toSeq === Seq("id", "name", "bucket"))
-  }
-
-  test("readFiles composes with manifest pruning: skip + DV == filter + DV") {
-    import graft.sources.{ParquetIO, StatsManifest}
-    val t = tmp() + "/t"
+  test("overlapping deletes OR-compose; each death feeds once, at its first delete") {
     import spark.implicits._
-    // sorted layout so the manifest can actually cut files…
-    ParquetIO.write(
-      (0 until 10000).map(i => (i.toLong, i % 10)).toDF("id", "bucket")
-        .repartitionByRange(8, col("id")).sortWithinPartitions("id"), t)
-    StatsManifest.build(spark, t, Seq("id"))
-    // …then a delete lands INSIDE the range a later query asks for
-    DeleteVectors.deleteWhere(spark, t, col("id") % 5 === 0)
-    val files = StatsManifest.prune(spark, t, "id", 2000L, 2999L)
-    assert(files.nonEmpty && files.size < 8, s"prune must cut (kept ${files.size})")
-    val got = DeleteVectors.readFiles(spark, t, files)
-      .filter(col("id") >= 2000L && col("id") <= 2999L)
-      .orderBy("id").collect().toSeq
-    val want = DeleteVectors.read(spark, t)
-      .filter(col("id") >= 2000L && col("id") <= 2999L)
-      .orderBy("id").collect().toSeq
-    assert(got === want && got.size === 800,
-      "the pruned-scan live view must equal the full-scan live view")
+    val t = tmp() + "/t"
+    freshTable(t)
+    val first = TxTable.deleteWhere(spark, t, col("id") < 100)
+    // overlaps [0,100) ∪ multiples of 10: only the 90 NEW deaths are its
+    val second = TxTable.deleteWhere(spark, t, col("id") % 10 === 0)
+    assert(TxTable.read(spark, t).count() === 1000L - 190L)
+    def deaths(from: Long) = TxTable.changeFeed(spark, t, Seq("id"), fromCommit = from)
+      .filter(col("op") === "d")
+    assert(deaths(first).count() === 190L)
+    val delta = deaths(second)
+    assert(delta.count() === 90L,
+      "rows the first delete already killed must not reappear in the second's feed")
+    assert(delta.filter(col("id") % 10 =!= 0 || col("id") < 100).count() === 0L)
+    // row payload comes back intact for a sampled death
+    val r = delta.filter(col("id") === 250L).head
+    assert(r.getAs[String]("name") === "name250" && r.getAs[Int]("bucket") === 0)
+    // re-deleting kills nothing: an empty commit, no vectors, same snapshot
+    val again = TxTable.deleteWhere(spark, t, col("id") < 100)
+    assert(!graft.sources.Fs.isDirectory(s"$t/_txn/dv/$again"))
+    assert(TxTable.read(spark, t).count() === 810L)
+    assert(deaths(again).count() === 0L)
+    // the payload columns are the table's own, whatever the cursor
+    assert(deaths(again + 1).select("id", "name", "bucket").as[(Long, String, Int)]
+      .collect().isEmpty)
   }
 
   test("the scan side keeps pushdown: DV join is metadata-only") {
     val t = tmp() + "/t"
     freshTable(t)
-    DeleteVectors.deleteWhere(spark, t, col("id") < 10)
-    val plan = DeleteVectors.read(spark, t)
+    TxTable.deleteWhere(spark, t, col("id") < 10)
+    val plan = TxTable.read(spark, t)
       .filter(col("bucket") === 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(bucket), EqualTo(bucket,5)]") ||

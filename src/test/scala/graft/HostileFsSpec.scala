@@ -9,24 +9,23 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * An adversarial object-store stand-in (round 16, judge ask): local
  * storage exposed under the `hostile:` scheme with the two properties
- * the generation-lifecycle tier claims it does NOT depend on:
+ * the TxTable commit protocol claims it does NOT depend on:
  *
  *   - **No rename atomicity**: every rename OUTSIDE a committer
  *     `_temporary` staging dir throws. Object stores implement rename as
  *     copy+delete (non-atomic, non-cheap); a protocol that renames a
- *     pointer or a generation into place is broken there. The
+ *     pointer or a commit into place is broken there. The
  *     `_temporary` carve-out exists because Spark's own parquet
  *     committer stages through renames — a separate, well-known problem
  *     with its own cloud committers, deliberately out of scope; the
- *     assertion made here is that the LIFECYCLE layer (markers,
- *     migration, vacuum, resolution) attempts ZERO renames, counted.
+ *     assertion made here is that the COMMIT layer (claims, markers,
+ *     vacuum, resolution) attempts ZERO renames, counted.
  *
  *   - **No list freshness**: a directory's listing can be FROZEN to a
  *     snapshot taken earlier, so two listings the protocol takes at
- *     different times (generation dirs, then `_commits` markers) can
- *     disagree — the exact race the round-14 orphan-sweep bound
- *     (`id < maxCommitted`) defends against, now exercised by an
- *     actually-stale listing instead of a code comment.
+ *     different times can disagree — the race the vacuum's id-below-tip
+ *     bound defends against, exercised by an actually-stale listing
+ *     instead of a code comment.
  */
 class HostileFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "hostile"
@@ -73,7 +72,8 @@ class HostileFsSpec extends AnyFunSuite {
   private def hostileDir(tag: String): String =
     "hostile:" + java.nio.file.Files.createTempDirectory(tag).toString
 
-  test("upsertSink commits and resolves on a no-rename store; the lifecycle layer attempts zero renames") {
+  test("txUpsertSink commits and resolves on a no-rename store with zero renames") {
+    import graft.sources.TxTable
     val table = hostileDir("graft-hostile-sink") + "/table"
     // checkpoint and source stay on file:. — at scale the checkpoint
     // lives on HDFS (Structured Streaming's offset log DOES rename);
@@ -84,59 +84,24 @@ class HostileFsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema("id LONG, tag STRING, v LONG")
       .json(s"$local/in")
     val before = HostileFileSystem.deniedRenames.get()
-    val q = Streams.upsertSink(stream, table, s"$local/ckpt", Seq("id"), "v",
-      parts = 1)
+    val q = Streams.txUpsertSink(stream, table, s"$local/ckpt", Seq("id"), "v")
     try {
       q.processAllAvailable()
       Seq((2L, "b2", 2L), (3L, "c", 2L)).toDF("id", "tag", "v")
         .coalesce(1).write.mode("append").json(s"$local/in")
       q.processAllAvailable()
     } finally q.stop()
-    // both generations committed and resolvable through the markers
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L))
-    val cur = spark.read.parquet(Streams.currentGeneration(table).get)
+    // the empty create plus one commit per batch, resolved through the
+    // markers
+    assert(TxTable.committedIds(table) == Seq(0L, 1L, 2L))
+    val cur = TxTable.read(spark, table)
     assert(cur.count() == 3)
     assert(cur.filter(col("id") === 2L).select("tag").as[String].head() == "b2")
     // the write path staged through _temporary renames (allowed), but the
-    // lifecycle layer itself never attempted one: markers are create-once
-    // PUTs, commit needs no rename
+    // sink itself never attempted one: claims, commits and batch markers
+    // are create-once PUTs
     assert(HostileFileSystem.deniedRenames.get() == before,
-      "a lifecycle operation attempted a rename — broken on object stores")
-  }
-
-  test("vacuum under a STALE generation-dir listing never demotes a freshly committed generation") {
-    val table = hostileDir("graft-hostile-stale") + "/table"
-    for (g <- 0 to 1) {
-      (1L to 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-      Fs.createMarker(s"$table/_commits/gen$g", s"$table/gen$g")
-    }
-    // the dir listing goes stale NOW; a concurrent writer then commits
-    // gen2 (dir + marker). The vacuum below reads: dirs = {gen0, gen1}
-    // (stale), markers = {0, 1, 2} (fresh) — the object-store two-listing
-    // race. The round-14 bound (orphan sweep only below maxCommitted)
-    // must keep gen2's marker; resolution keeps gen2 once the listing
-    // refreshes.
-    HostileFileSystem.freeze(table)
-    try {
-      (1L to 9L).map(i => (i, "g2")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen2")
-      Fs.createMarker(s"$table/_commits/gen2", s"$table/gen2")
-      val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-      // committed = dirs ∩ markers, so the stale dir view caps
-      // maxCommitted at 1: gen1 is retained as "newest committed" and
-      // ONLY gen0 is deletable — staleness makes vacuum MORE
-      // conservative, never destructive
-      assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0"))
-      assert(Fs.exists(s"$table/_commits/gen2"),
-        "the stale-listing race demoted a fresh commit's marker")
-    } finally HostileFileSystem.thaw(table)
-    // listing fresh again: gen2 resolves current; a re-vacuum now
-    // applies the retention it could not prove safe under the stale view
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(1L, 2L))
-    assert(spark.read.parquet(Streams.currentGeneration(table).get).count() == 9)
-    assert(Streams.vacuumGenerations(table, keepLast = 1)
-      .map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen1"))
+      "the sink attempted a rename — broken on object stores")
   }
 
   test("TxTable's full lifecycle runs rename-free on the hostile scheme") {
@@ -217,20 +182,5 @@ class HostileFsSpec extends AnyFunSuite {
     // fresh listing: the commit is simply there
     val fresh = TxTable.read(spark, root)
     assert(fresh.filter(col("id") === 3L).head.getDouble(1) == 3333.0)
-  }
-
-  test("legacy migration and time travel run rename-free on the hostile scheme") {
-    val table = hostileDir("graft-hostile-legacy") + "/table"
-    for (g <- 0 to 2)
-      (1L to (g + 1) * 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-    Fs.writeUtf8(s"$table/_CURRENT", s"$table/gen2")
-    val before = HostileFileSystem.deniedRenames.get()
-    assert(Streams.migrateLegacyGenerations(table) == 3)
-    assert(Fs.readUtf8(s"$table/_CURRENT").isEmpty)
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L, 2L))
-    assert(Streams.readGeneration(spark, table, 1L).count() == 6)
-    assert(HostileFileSystem.deniedRenames.get() == before,
-      "migration attempted a rename — broken on object stores")
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
-import graft.sources.{Fs, ParquetIO}
+import graft.sources.{Fs, ParquetIO, TxTable}
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 port gate: the table-maintenance tier (partition TTL,
-  * fragmented-partition compaction, generation pointer/list/vacuum) runs
+  * fragmented-partition compaction, TxTable markers/vacuum) runs
   * entirely through `org.apache.hadoop.fs.FileSystem`, so it works on any
   * Hadoop-supported scheme. These tests drive scheme-QUALIFIED `file:`
   * URIs through every entry point — a regression back to `java.io.File`
@@ -93,188 +93,53 @@ class LifecycleFsSpec extends AnyFunSuite {
     assert(back.filter(col("pc") === "b" && col("extra") === "tag205").count() == 1)
   }
 
-  test("generation lifecycle (commit markers, list, read, vacuum) on a file: URI") {
-    val table = schemeDir("graft-fs-gen") + "/table"
-    // build three committed generations by hand through the same Fs
-    // primitives the sink uses (no stream needed to exercise the layer)
-    for (g <- 0 to 2) {
-      (1L to (g + 1) * 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-      assert(Fs.createMarker(s"$table/_commits/gen$g", s"$table/gen$g"))
-    }
-    assert(Streams.listGenerations(table).map(_._1) == Seq(0L, 1L, 2L))
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L, 2L))
-    assert(Streams.currentGeneration(table).get.endsWith("gen2"))
-    assert(Streams.readGeneration(spark, table, 1L).count() == 6)
-    val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0", "gen1"))
-    assert(Streams.listGenerations(table).map(_._1) == Seq(2L))
-    // vacuumed generations' markers are swept with them
-    assert(Fs.listFiles(s"$table/_commits").map(_.getPath.getName).toSet == Set("gen2"))
-    assert(Streams.vacuumGenerations(table, keepLast = 1).isEmpty)
-    assert(Streams.listGenerations(table).map(_._1) == Seq(2L))
+  test("TxTable lifecycle (commit markers, time travel, crash, vacuum) on a file: URI") {
+    val t = schemeDir("graft-fs-tx") + "/t"
+    TxTable.create(spark, t, (1L to 3L).map(i => (i, "c0")).toDF("id", "tag"))
+    TxTable.append(spark, t, (4L to 6L).map(i => (i, "c1")).toDF("id", "tag"))
+    assert(TxTable.committedIds(t) == Seq(0L, 1L))
+    assert(TxTable.readAt(spark, t, 0L).count() == 3)
+    // a crash between the data write and the commit marker: the written
+    // commit stays invisible and the snapshot stays the old one
+    val k = TxTable.append(spark, t, (7L to 9L).map(i => (i, "c2")).toDF("id", "tag"))
+    assert(Fs.deleteIfExists(s"$t/_txn/commits/c$k"))
+    assert(TxTable.read(spark, t).count() == 6)
+    // a later commit supersedes the crashed id; the sweep removes its
+    // data dir and its claim, and the id is never reused
+    val k2 = TxTable.append(spark, t, Seq((10L, "c3")).toDF("id", "tag"))
+    val swept = TxTable.vacuum(spark, t, graceMs = 0L)
+    assert(swept.exists(_.endsWith(s"/data/c$k")))
+    assert(!Fs.isDirectory(s"$t/data/c$k") && !Fs.exists(s"$t/_txn/claims/c$k"))
+    assert(TxTable.committedIds(t) == Seq(0L, 1L, k2))
+    assert(TxTable.read(spark, t).count() == 7)
+    assert(TxTable.vacuum(spark, t, graceMs = 0L).isEmpty)
   }
 
-  test("a crash between generation write and commit marker leaves the OLD generation current") {
-    // the round-14 'done' criterion for the object-store-safe protocol:
-    // gen2's data is fully written but the marker never landed (crash in
-    // the commit window) — every reader must keep resolving gen1, vacuum
-    // must keep the dangling dir (it is the replay target), and the
-    // late-arriving marker (the replayed batch committing) flips the
-    // table forward with no rename anywhere.
-    val table = schemeDir("graft-fs-crash") + "/table"
-    for (g <- 0 to 1) {
-      (1L to (g + 1) * 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-      Fs.createMarker(s"$table/_commits/gen$g", s"$table/gen$g")
-    }
-    (1L to 9L).map(i => (i, "g2")).toDF("id", "tag")
-      .coalesce(1).write.parquet(s"$table/gen2") // written, NEVER committed
-    assert(Streams.currentGeneration(table).get.endsWith("gen1"),
-      "uncommitted generation must not become current")
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L))
-    // time travel refuses the dangling dir, loudly
-    val err = intercept[IllegalArgumentException] {
-      Streams.readGeneration(spark, table, 2L)
-    }
-    assert(err.getMessage.contains("uncommitted (crashed batch): 2"))
-    // vacuum keeps the replay target even at keepLast=1
-    val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0"))
-    assert(Streams.listGenerations(table).map(_._1) == Seq(1L, 2L))
-    // the replayed batch commits: one create-once PUT flips the table
-    Fs.createMarker(s"$table/_commits/gen2", s"$table/gen2")
-    assert(Streams.currentGeneration(table).get.endsWith("gen2"))
-    assert(Streams.readGeneration(spark, table, 2L).count() == 9)
-  }
-
-  test("legacy _CURRENT-pointer tables: unmigrated reads are empty+loud; migration restores them") {
-    // tables written before round 14 have no _commits dir — the pointer
-    // names generation P, and every generation id <= P was once pointed
-    // at (a committed snapshot). Since round 15 the read path is
-    // marker-ONLY: an unmigrated legacy table resolves to zero committed
-    // generations and readGeneration fails loudly, until a one-time
-    // migrateLegacyGenerations (automatic at upsertSink creation and at
-    // vacuum, both write paths) mints markers and deletes the pointer.
-    // The qualified-path compare still matters: the pointer may spell
-    // the target dir without the scheme.
-    val table = schemeDir("graft-fs-legacy") + "/table"
-    for (g <- 0 to 2)
-      (1L to (g + 1) * 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-    val localGen2 = table.stripPrefix("file:") + "/gen2" // unqualified spelling
-    Fs.writeUtf8(s"$table/_CURRENT", localGen2)
-    // pre-migration contract: nothing committed, loud error, no silent reads
-    assert(Streams.committedGenerations(table).isEmpty)
-    assert(Streams.currentGeneration(table).isEmpty)
-    val err = intercept[IllegalArgumentException](Streams.readGeneration(spark, table, 1L))
-    assert(err.getMessage.contains("not committed"))
-    // migration: a marker per id <= pointer target, pointer deleted LAST
-    assert(Streams.migrateLegacyGenerations(table) == 3)
-    assert(Fs.readUtf8(s"$table/_CURRENT").isEmpty)
-    for (g <- 0 to 2) assert(Fs.exists(s"$table/_commits/gen$g"))
-    // resolution now matches the old pointer-fallback semantics exactly
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L, 2L))
-    assert(Streams.currentGeneration(table).get.endsWith("gen2"))
-    assert(Streams.readGeneration(spark, table, 1L).count() == 6)
-    // idempotent: marker-native table migrates as a no-op
-    assert(Streams.migrateLegacyGenerations(table) == 0)
-    // crash-mid-migration: markers partially written, pointer still
-    // present (it goes last) — a re-run completes the remainder
-    Fs.deleteIfExists(s"$table/_commits/gen1")
-    Fs.writeUtf8(s"$table/_CURRENT", localGen2)
-    assert(Streams.migrateLegacyGenerations(table) == 1)
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L, 2L))
-    assert(Fs.readUtf8(s"$table/_CURRENT").isEmpty)
-    // vacuum honors keepLast over the migrated snapshots
-    val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0", "gen1"))
-    assert(Streams.listGenerations(table).map(_._1) == Seq(2L))
-    assert(Streams.vacuumGenerations(table, keepLast = 1).isEmpty)
-  }
-
-  test("vacuum on a MIXED legacy+marker table auto-migrates instead of deleting legacy snapshots") {
-    // round-16 review: legacy generations on a mixed table (pointer-era
-    // snapshots plus a newer marker-era one) have no markers, so without
-    // migration they classify as crashed leftovers (id < maxCommitted)
-    // and vacuum would DELETE committed data. Vacuum is a write path, so
-    // it migrates first; with keepLast covering them nothing is deleted.
-    val table = schemeDir("graft-fs-mixed") + "/table"
-    for (g <- 0 to 3)
-      (1L to 3L).map(i => (i, s"g$g")).toDF("id", "tag")
-        .coalesce(1).write.parquet(s"$table/gen$g")
-    Fs.writeUtf8(s"$table/_CURRENT", s"$table/gen2") // legacy era: gens 0..2
-    Fs.createMarker(s"$table/_commits/gen3", s"$table/gen3") // marker era
-    assert(Streams.vacuumGenerations(table, keepLast = 4).isEmpty)
-    assert(Streams.committedGenerations(table).map(_._1) == Seq(0L, 1L, 2L, 3L))
-    assert(Fs.readUtf8(s"$table/_CURRENT").isEmpty)
-    assert(Streams.readGeneration(spark, table, 0L).count() == 3)
-  }
-
-  test("migrateLegacyGenerations surfaces a dangling _CURRENT pointer") {
-    val table = schemeDir("graft-fs-dangle") + "/table"
-    (1L to 3L).map(i => (i, "g0")).toDF("id", "tag")
-      .coalesce(1).write.parquet(s"$table/gen0")
-    Fs.writeUtf8(s"$table/_CURRENT", s"$table/gen9") // names no live generation
-    val err = intercept[IllegalArgumentException](Streams.migrateLegacyGenerations(table))
-    assert(err.getMessage.contains("matches no generation directory"))
-    // the pointer survives the failure — nothing was swallowed
-    assert(Fs.readUtf8(s"$table/_CURRENT").isDefined)
-  }
-
-  test("upsertSink attachment auto-migrates a legacy _CURRENT table") {
-    val root = schemeDir("graft-fs-attach")
-    val table = root + "/table"
-    (1L to 4L).map(i => (i, "seed", 0L)).toDF("id", "tag", "v")
-      .coalesce(1).write.parquet(s"$table/gen0")
-    Fs.writeUtf8(s"$table/_CURRENT", s"$table/gen0")
-    val src = java.nio.file.Files.createTempDirectory("graft-fs-attach-src").toString
-    Seq((100L, "b0", 1L)).toDF("id", "tag", "v").coalesce(1)
-      .write.mode("append").json(src)
-    val stream = spark.readStream.schema("id LONG, tag STRING, v LONG").json(src)
-    val q = Streams.upsertSink(stream, table, root + "/ckpt", Seq("id"), "v", parts = 1)
-    try {
-      // batch 0 collides with the migrated legacy gen0 and is replay-
-      // skipped (documented contract: generation ids ARE batch ids; a
-      // fresh checkpoint against a non-empty table drops colliding ids)
-      q.processAllAvailable()
-      assert(Fs.readUtf8(s"$table/_CURRENT").isEmpty) // migration ran at attach
-      assert(Fs.exists(s"$table/_commits/gen0"))
-      assert(Streams.committedGenerations(table).map(_._1) == Seq(0L))
-      // batch 1 merges ON TOP of the migrated legacy snapshot
-      Seq((200L, "b1", 2L)).toDF("id", "tag", "v").coalesce(1)
-        .write.mode("append").json(src)
-      q.processAllAvailable()
-    } finally q.stop()
-    val cur = Streams.currentGeneration(table).get
-    assert(cur.endsWith("gen1"))
-    val rows = spark.read.parquet(cur)
-    assert(rows.count() == 5) // 4 legacy-seed rows + batch-1 upsert
-    assert(rows.filter(col("tag") === "seed").count() == 4)
-  }
-
-  test("upsertSink replay guard matches the commit across path spellings") {
-    // round-13 review (re-keyed on markers in round 14): a restart that
-    // spells the SAME tableDir with a scheme ('file:/t' vs '/t') must
-    // still recognize the replayed batch as committed — the marker file
-    // resolves to the same object under either spelling — or the stream
-    // wedges overwriting the directory it is reading.
+  test("txUpsertSink crash-window replay is a snapshot no-op across path spellings") {
+    // a restart that spells the SAME table with a scheme ('file:/t' vs
+    // '/t') must resolve the same commits, so the replayed batch MERGEs
+    // against the snapshot it already changed and is absorbed.
     // Scenario: run with the unqualified spelling, crash inside the
     // commit window, restart with the file:-qualified spelling.
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-fs-replay").toString
     (1L to 40L).map(k => (k, "a", 1L)).toDF("k", "payload", "v")
       .coalesce(1).write.parquet(s"$base/in/f0")
     (21L to 60L).map(k => (k, "b", 2L)).toDF("k", "payload", "v")
       .coalesce(1).write.parquet(s"$base/in/f1")
     val schema = spark.read.parquet(s"$base/in/f0").schema
-    def start(table: String, ckpt: String) = Streams.upsertSink(
+    def start(table: String, ckpt: String) = Streams.txUpsertSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(s"$base/in/*"),
-      table, ckpt, Seq("k"), "v", parts = 2)
+      table, ckpt, Seq("k"), "v")
     val q = start(s"$base/table", s"$base/ckpt")
     try q.processAllAvailable() finally q.stop()
-    // crash window: checkpoint copied minus the last commit marker
+    def snapshot() = TxTable.read(spark, s"$base/table")
+      .select("k", "payload", "v").as[(Long, String, Long)].collect().sorted.toSeq
+    val before = snapshot()
+    // crash window: the table commit landed, the checkpoint commit did
+    // not — the checkpoint is copied minus its last commit file (a real
+    // crash restarts in a fresh JVM; Spark's same-JVM guard forbids two
+    // queries on one checkpoint)
     val src = java.nio.file.Paths.get(s"$base/ckpt")
     val dst = java.nio.file.Paths.get(s"$base/ckpt2")
     import scala.jdk.CollectionConverters._
@@ -288,15 +153,16 @@ class LifecycleFsSpec extends AnyFunSuite {
       .filter(_.getName.forall(_.isDigit))
     val last = commits.maxBy(_.getName.toInt)
     assert(last.delete())
+    // the Hadoop local FS shadows every file with a .name.crc checksum —
+    // leave one behind and the replayed commit's rename fails on it
     new java.io.File(last.getParentFile, s".${last.getName}.crc").delete()
     // restart with the SCHEME-QUALIFIED table spelling: the replayed
-    // batch must still be recognized as already applied
+    // batch must leave the snapshot as it was
     val q2 = start(s"file:$base/table", s"$base/ckpt2")
     try q2.processAllAvailable() finally q2.stop()
-    val out = spark.read.parquet(Streams.currentGeneration(s"$base/table").get)
-      .select("k", "payload", "v").as[(Long, String, Long)].collect()
-    assert(out.length == 60, "replayed batch must not change the table")
-    assert(out.count(_._2 == "b") == 40)
+    val out = snapshot()
+    assert(out == before, "replayed batch must not change the table")
+    assert(out.length == 60 && out.count(_._2 == "b") == 40)
   }
 
   test("Fs.createMarker is create-once and idempotent; readUtf8 round-trips") {

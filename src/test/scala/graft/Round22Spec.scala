@@ -50,6 +50,26 @@ class Round22Spec extends AnyFunSuite {
     assert(TxTable.smallByStats(rd.filter(col("id") % 2 === 0L)))
   }
 
+  test("smallByStats under CBO does not trust a join's estimate") {
+    // two 16 MB leaves whose key ranges do not overlap: CBO's join
+    // estimate from the range column stats is near zero rows, with no
+    // Filter anywhere in the plan
+    val a = spark.range(0L, 2000000L)
+    val b = spark.range(5000000L, 7000000L)
+    val joined = a.join(b, "id")
+    val key = "spark.sql.cbo.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      assert(joined.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(8L * 1024 * 1024), "fixture: CBO must estimate the join small")
+      assert(!TxTable.smallByStats(joined))
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("SessionDefaults carries the engine confs and applies to a builder") {
     assert(SessionDefaults.confs("spark.sql.codegen.cache.maxEntries") === "10000")
     assert(SessionDefaults.confs("spark.sql.maxPlanStringLength") === "1048576")

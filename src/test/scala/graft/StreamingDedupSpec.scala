@@ -370,246 +370,3 @@ class StreamingDedupSpec extends AnyFunSuite {
       (s, c, o, ck) => Streams.videoDedupSink(s, c, o, ck), maxHamming = 6)
   }
 }
-
-/** CDC ingest: micro-batches MERGE into keyed generations; the current
-  * table state always resolves to a fully-written generation (write-new,
-  * mark-later — commit markers, round 14). */
-class StreamingUpsertSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  import spark.implicits._
-
-  test("streaming upsert sink merges micro-batches to latest-wins generations") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sus").toString
-    // two update files → two micro-batches (maxFilesPerTrigger=1); the
-    // version column makes the final state batch-order-independent
-    (1L to 50L).map(k => (k, "a", 1L)).toDF("k", "payload", "v")
-      .coalesce(1).write.parquet(s"$base/in/f0")
-    (26L to 75L).map(k => (k, "b", 2L)).toDF("k", "payload", "v")
-      .coalesce(1).write.parquet(s"$base/in/f1")
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-    val q = Streams.upsertSink(stream, s"$base/table", s"$base/ckpt",
-      Seq("k"), "v", parts = 2)
-    try q.processAllAvailable() finally q.stop()
-    val cur = Streams.currentGeneration(s"$base/table")
-    assert(cur.isDefined, "a committed generation must exist after the stream drains")
-    val out = spark.read.parquet(cur.get)
-      .select("k", "payload", "v").as[(Long, String, Long)].collect()
-    assert(out.length == 75)
-    val m = out.map(r => r._1 -> ((r._2, r._3))).toMap
-    assert((1L to 25L).forall(k => m(k) == ("a", 1L)), "untouched keys keep batch-0 rows")
-    assert((26L to 75L).forall(k => m(k) == ("b", 2L)), "overlapping keys take the v2 update")
-    // two generations on disk, pointer at the later merge
-    val gens = new java.io.File(s"$base/table").listFiles().map(_.getName).filter(_.startsWith("gen"))
-    assert(gens.length == 2, s"expected 2 generations, got ${gens.toSeq}")
-  }
-
-  test("CDC tombstones delete keys; a later re-insert resurrects legitimately") {
-    val base = java.nio.file.Files.createTempDirectory("graft-susd").toString
-    // three micro-batches (maxFilesPerTrigger=1): base load, a
-    // delete-bearing CDC batch, then a re-insert of one deleted key at a
-    // HIGHER version — the tombstone must kill its keys, the re-insert
-    // must win over the tombstone, and version-based latest-wins keeps
-    // the final state batch-order-independent
-    (1L to 50L).map(k => (k, "a", 1L, "u")).toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f0")
-    ((1L to 10L).map(k => (k, "x", 2L, "d")) ++ (41L to 60L).map(k => (k, "b", 2L, "u")))
-      .toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f1")
-    Seq((5L, "c", 3L, "u")).toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f2")
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-    val q = Streams.upsertSink(stream, s"$base/table", s"$base/ckpt",
-      Seq("k"), "v", parts = 2, opCol = Some("op"))
-    try q.processAllAvailable() finally q.stop()
-    val cur = Streams.currentGeneration(s"$base/table")
-    assert(cur.isDefined)
-    val out = spark.read.parquet(cur.get)
-    // op is transport metadata — the stored generation must not carry it
-    // (a persisted tombstone would shadow later legitimate re-inserts)
-    assert(!out.columns.contains("op"), "op column must not persist in the table")
-    val m = out.select("k", "payload", "v").as[(Long, String, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(m.size == 51, s"expected 51 live keys, got ${m.size}")
-    assert((6L to 10L).forall(k => !m.contains(k)), "tombstoned keys stay dead")
-    assert((1L to 4L).forall(k => !m.contains(k)), "tombstoned keys stay dead")
-    assert(m(5L) == ("c", 3L), "higher-version re-insert beats the tombstone")
-    assert((11L to 40L).forall(k => m(k) == ("a", 1L)), "untouched keys survive")
-    assert((41L to 60L).forall(k => m(k) == ("b", 2L)), "CDC upserts apply")
-  }
-
-  test("replay after a crash inside the commit window is an idempotent no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft-susr").toString
-    (1L to 50L).map(k => (k, "a", 1L)).toDF("k", "payload", "v")
-      .coalesce(1).write.parquet(s"$base/in/f0")
-    (26L to 75L).map(k => (k, "b", 2L)).toDF("k", "payload", "v")
-      .coalesce(1).write.parquet(s"$base/in/f1")
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    def start(ckpt: String) = Streams.upsertSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*"),
-      s"$base/table", ckpt, Seq("k"), "v", parts = 2)
-    val q = start(s"$base/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    // simulate the crash window the r11 advice found: the batch's write
-    // finished and its table commit marker landed, but the CHECKPOINT
-    // commit was lost. A real crash restarts in a FRESH JVM, so the
-    // checkpoint (minus the lost checkpoint-commit file) is copied to a
-    // new path — Spark's same-JVM "multiple queries on one checkpoint"
-    // guard would otherwise trip — and the restarted stream REPLAYS the
-    // last batch, which now resolves currentGeneration == its own output
-    // directory. Without the marker-guard the replayed upsertWrite reads
-    // gen1 while overwriting gen1 and Spark kills the stream permanently.
-    val src = java.nio.file.Paths.get(s"$base/ckpt")
-    val dst = java.nio.file.Paths.get(s"$base/ckpt2")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.toSeq.sortBy(_.toString)
-      .foreach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      }
-    val commits = new java.io.File(s"$base/ckpt2/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit))
-    val last = commits.maxBy(_.getName.toInt)
-    assert(last.delete(), "test setup: failed to remove commit marker")
-    // the Hadoop local FS shadows every file with a .name.crc checksum —
-    // leave one behind and the replayed commit's rename fails on it
-    new java.io.File(last.getParentFile, s".${last.getName}.crc").delete()
-    val q2 = start(s"$base/ckpt2")
-    try q2.processAllAvailable() finally q2.stop()
-    val cur = Streams.currentGeneration(s"$base/table")
-    val out = spark.read.parquet(cur.get)
-      .select("k", "payload", "v").as[(Long, String, Long)].collect()
-    assert(out.length == 75, "replayed batch must not change the table")
-    val m = out.map(r => r._1 -> ((r._2, r._3))).toMap
-    assert((1L to 25L).forall(k => m(k) == ("a", 1L)))
-    assert((26L to 75L).forall(k => m(k) == ("b", 2L)))
-  }
-}
-
-/** Generation lifecycle (round 12; commit markers round 14): every
-  * [[Streams.upsertSink]] merge is a complete copy-on-write snapshot, so
-  * old generations are time-travel targets and retention is directory
-  * deletion — with the invariants that make it safe: the newest COMMITTED
-  * generation is never vacuumed, and dangling generations newer than it
-  * (a crashed batch's replay target) are kept. */
-class GenerationLifecycleSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-  import spark.implicits._
-
-  private def buildTable(base: String): Unit = {
-    // three micro-batches → gen0..gen2: base load, tombstone+update, re-insert
-    (1L to 50L).map(k => (k, "a", 1L, "u")).toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f0")
-    ((1L to 10L).map(k => (k, "x", 2L, "d")) ++ (41L to 60L).map(k => (k, "b", 2L, "u")))
-      .toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f1")
-    Seq((5L, "c", 3L, "u")).toDF("k", "payload", "v", "op")
-      .coalesce(1).write.parquet(s"$base/in/f2")
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-    val q = Streams.upsertSink(stream, s"$base/table", s"$base/ckpt",
-      Seq("k"), "v", parts = 2, opCol = Some("op"))
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  test("time travel reads any generation as of its batch") {
-    val base = java.nio.file.Files.createTempDirectory("graft-gen").toString
-    buildTable(base)
-    assert(Streams.listGenerations(s"$base/table").map(_._1) == Seq(0L, 1L, 2L))
-    // gen0: the pre-delete state — tombstoned keys still alive
-    val g0 = Streams.readGeneration(spark, s"$base/table", 0L)
-      .select("k").as[Long].collect().toSet
-    assert(g0 == (1L to 50L).toSet, "gen0 is the full base load")
-    // gen1: deletes applied, re-insert not yet arrived
-    val g1 = Streams.readGeneration(spark, s"$base/table", 1L)
-      .select("k").as[Long].collect().toSet
-    assert(!g1.contains(5L) && !g1.contains(10L) && g1.contains(60L))
-    // gen2 is the current (newest committed) generation
-    val cur = Streams.currentGeneration(s"$base/table").get
-    assert(Streams.readGeneration(spark, s"$base/table", 2L).count() ==
-      spark.read.parquet(cur).count())
-    val err = intercept[IllegalArgumentException] {
-      Streams.readGeneration(spark, s"$base/table", 9L)
-    }
-    assert(err.getMessage.contains("committed: 0, 1, 2"))
-  }
-
-  test("vacuum keeps the newest K committed generations") {
-    val base = java.nio.file.Files.createTempDirectory("graft-vac").toString
-    buildTable(base)
-    val deleted = Streams.vacuumGenerations(s"$base/table", keepLast = 2)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0"))
-    assert(Streams.listGenerations(s"$base/table").map(_._1) == Seq(1L, 2L))
-    // the table is still readable through read-side resolution
-    val cur = Streams.currentGeneration(s"$base/table").get
-    assert(spark.read.parquet(cur).count() == 51)
-    // asking to keep more than exists is a no-op
-    assert(Streams.vacuumGenerations(s"$base/table", keepLast = 5).isEmpty)
-  }
-
-  test("vacuum never deletes the current generation or newer replay targets") {
-    val base = java.nio.file.Files.createTempDirectory("graft-vac2").toString
-    buildTable(base)
-    // simulate a crash inside gen2's commit window (data written, marker
-    // lost) plus a later crashed batch that only made its directory:
-    // committed = {0, 1}, current = gen1, dangling = {2, 3}
-    val table = s"$base/table"
-    assert(graft.sources.Fs.deleteIfExists(
-      Streams.commitMarkerPath(table, 2L)), "test setup: marker removal")
-    val g3 = new java.io.File(s"$table/gen3")
-    assert(g3.mkdir())
-    assert(Streams.currentGeneration(table).get.endsWith("gen1"))
-    // keepLast=1 would by age alone delete gen0..gen2: the current
-    // generation (gen1) and every dangling dir NEWER than it (gen2,
-    // gen3 — replay targets) must survive
-    val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("gen0"))
-    assert(Streams.listGenerations(table).map(_._1) == Seq(1L, 2L, 3L))
-  }
-
-  test("vacuum sweeps dangling directories older than the current generation") {
-    val base = java.nio.file.Files.createTempDirectory("graft-vac3").toString
-    buildTable(base)
-    val table = s"$base/table"
-    // gen1's marker lost long ago, but gen2 since committed: gen1 is a
-    // superseded crash leftover — its batch was replayed into gen2 —
-    // and must be swept even inside the keepLast window
-    assert(graft.sources.Fs.deleteIfExists(Streams.commitMarkerPath(table, 1L)))
-    val deleted = Streams.vacuumGenerations(table, keepLast = 1)
-    assert(deleted.map(p => p.substring(p.lastIndexOf('/') + 1)).sorted == Seq("gen0", "gen1"))
-    assert(Streams.listGenerations(table).map(_._1) == Seq(2L))
-    assert(Streams.currentGeneration(table).get.endsWith("gen2"))
-  }
-
-  test("orphan-marker sweep never touches markers newer than maxCommitted (round 14)") {
-    // the race the bound closes: a live sink commits gen N (dir first,
-    // then marker) BETWEEN vacuum's directory snapshot and its marker
-    // listing — the marker is visible, the dir snapshot is stale, and an
-    // unbounded sweep would delete the fresh commit's marker, demoting a
-    // committed generation to dangling (data loss at the next vacuum).
-    // Simulated by the observable half: a marker with id > maxCommitted
-    // and no dir in the snapshot must SURVIVE; a dirless marker with
-    // id < maxCommitted is a true crashed-vacuum orphan and is swept.
-    val base = java.nio.file.Files.createTempDirectory("graft-vac4").toString
-    buildTable(base) // gens 0,1,2 committed
-    val table = s"$base/table"
-    // true orphan: gen0's dir deleted, marker left (vacuum crash window)
-    assert(graft.sources.Fs.deleteRecursive(
-      new org.apache.hadoop.fs.Path(s"$table/gen0")))
-    // concurrent-commit stand-in: marker for gen9, no dir in the snapshot
-    graft.sources.Fs.createMarker(Streams.commitMarkerPath(table, 9L), "race")
-    Streams.vacuumGenerations(table, keepLast = 2)
-    val markers = graft.sources.Fs.listFiles(s"$table/_commits")
-      .map(_.getPath.getName).sorted
-    assert(!markers.contains("gen0"), s"true orphan gen0 must be swept: $markers")
-    assert(markers.contains("gen9"), s"fresh gen9 marker must survive: $markers")
-    // cleanup the fake marker so later resolution in this dir stays sane
-    assert(graft.sources.Fs.deleteIfExists(Streams.commitMarkerPath(table, 9L)))
-  }
-}

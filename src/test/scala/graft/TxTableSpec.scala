@@ -713,6 +713,10 @@ class TxTableSpec extends AnyFunSuite {
     val got = TxTable.read(spark, t)
     assert(got.count() === 85L) // 15 ids divisible by 7 in 0..99
     assert(got.filter(col("id") % 7 === 0).count() === 0L)
+    // survivors come back value-exact, in the table's own schema
+    assert(got.columns.toSeq === Seq("id", "name", "price", "version"))
+    val r = got.filter(col("id") === 8L).head
+    assert(r.getString(1) === "name8" && r.getDouble(2) === 108.0)
     // no data written, no data touched — vectors only
     assert(!Fs.isDirectory(s"$t/data/c$k"))
     assert(Fs.listFiles(s"$t/data/c0")
