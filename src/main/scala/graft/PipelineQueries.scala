@@ -1879,11 +1879,11 @@ object PipelineQueries {
       // layout the commit writes verbatim, so per-file key ranges stay
       // disjoint) carries two overlapping delete commits (merge-on-read
       // cuts rows) and a stats manifest (planning cuts files);
-      // readSkipping applies the DV broadcast over only the
+      // readSkipping applies the in-scan DV filter over only the
       // manifest-surviving files. Equality with the oracle's
       // WHERE range AND NOT(deleted) reconstruction proves the stack:
       // a selective query on a mutated 100 TB table pays
-      // (surviving files) scan + one KB-scale broadcast — neither a
+      // (surviving files) scan + one KB-scale DV literal — neither a
       // listing-width scan nor a rewrite.
       import graft.sources.TxTable
       val t = s"${graft.operators.Materialize.scratch(s, "dvskip")}/t"
@@ -2277,7 +2277,7 @@ object PipelineQueries {
       // (the keyed tombstone path needs a CDC batch; a cutoff is a
       // predicate). Cost ∝ matched rows + one snapshot scan, no data
       // rewritten. Equality with the plain WHERE NOT oracle proves the
-      // positional kill is row-exact through the DV broadcast.
+      // positional kill is row-exact through the in-scan DV filter.
       import graft.sources.TxTable
       val tmp = graft.operators.Materialize.scratch(s, "txdel")
       val t = s"$tmp/t"
@@ -2361,7 +2361,7 @@ object PipelineQueries {
       // non-matching directories inside EVERY resolved commit before
       // any footer is opened (PartitionFilters in the scan; TxTableSpec
       // pins the file cut). Equality with the plain-WHERE oracle proves
-      // pruning composes with the commit log and the DV broadcast: at
+      // pruning composes with the commit log and the in-scan DV filter: at
       // 100 TB this is the difference between scanning one priority's
       // directories and scanning the table.
       import graft.sources.TxTable

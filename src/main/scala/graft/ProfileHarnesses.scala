@@ -1856,7 +1856,7 @@ object ProfileStatsManifest {
  *
  * The walls matter less than the WRITE VOLUME (printed): at 100 TB and
  * 0.1 % batches the CoW path writes ~1000× the bytes per batch. Also
- * measured: the standing read tax after the commit (one DV broadcast),
+ * measured: the standing read tax after the commit (the in-scan DV filter),
  * `checkpoint` (the deliberate fold — pays the rewrite ONCE to bound
  * the tail), `expire`, and a post-checkpoint upsert proving the tail
  * composes.

@@ -74,7 +74,10 @@ object GraftExtensions {
       (es: Seq[Expression]) => NfcNormalize(es(0))),
     ("graft_bpe_encode",
       new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe_encode"),
-      (es: Seq[Expression]) => BpeEncode(es(0), es(1))))
+      (es: Seq[Expression]) => BpeEncode(es(0), es(1))),
+    ("graft_dv_alive",
+      new ExpressionInfo(classOf[DvAlive].getName, "graft_dv_alive"),
+      (es: Seq[Expression]) => DvAlive(es(0), es(1), es(2))))
 
   /** Idempotent: make graft_* functions available in `spark`'s registry. */
   def register(spark: SparkSession): Unit =
@@ -109,5 +112,16 @@ object GraftExtensions {
     register(spark)
     call_function("graft_bpe_encode", text,
       org.apache.spark.sql.functions.typedlit(merges))
+  }
+
+  /** Deletion-vector application inside the scan ([[DvAlive]]): false
+    * for the rows the encoded index marks dead. */
+  private[graft] def graftDvAlive(spark: SparkSession, file: Column, row: Column,
+      index: Array[Byte]): Column = {
+    // every TxTable read with deletion vectors lands here, and each
+    // re-registration logs a replacement warning per function
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dv_alive")))
+      register(spark)
+    call_function("graft_dv_alive", file, row, org.apache.spark.sql.functions.lit(index))
   }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
+import graft.plans.{DvAlive, GraftExtensions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 
 /**
  * Deletion-vector (DV) bitmap primitives behind [[TxTable]]'s
@@ -26,131 +28,157 @@ import org.apache.spark.sql.functions._
  * single (file, word, mask) triple, regardless of how many rows die in
  * one file; the per-file map assembly aggregates ≤ rows/64 entries.
  *
- * Scan-time application is a broadcast HASH join on (file path,
- * word = row_index/64) + an O(1) bit test (shift, mask — codegen'd
- * builtins; no UDF touches the 100 TB side). The on-disk map explodes
- * to (file, word, mask) ROWS at fold time precisely so the probe is a
- * hash lookup: Spark's map `element_at` is a LINEAR scan of the map,
- * which degrades with kills-per-file (measured 0.8 s → 31.9 s on a
- * 2-file/15 k-kill layout — SCALE.md round-16 txtable). The DV
- * relation is bounded by dead-rows/64, which is exactly the shape
- * `broadcast()` is for. Rows whose (file, word) carries no vector row
- * pass through the join null-armed and are kept.
+ * The sidecars are READ on the driver: a snapshot's sidecar files are
+ * opened with parquet-mr ([[readSidecar]]) and OR-folded into a
+ * file → bitmap hash [[Index]] ([[fold]]), bounded by dead-rows/64
+ * words. The index rides the scan as the literal of one codegen'd
+ * predicate, `graft_dv_alive(_metadata.file_path, _metadata.row_index,
+ * index)` ([[graft.plans.DvAlive]]): a hash probe per file change and a
+ * binary search per row, in the scan's own stage — no sidecar job, no
+ * exchange, no join.
  *
  * Where the sidecars live, and when they count, is [[TxTable]]'s
  * commit protocol: each commit writes its vectors under
- * `_txn/dv/<k>`, and a read OR-folds the dirs of the commits it
- * resolves ([[foldDvDirs]]), so overlapping deletes compose by bitmap
- * OR and a later commit's vectors vanish with its marker.
+ * `_txn/dv/<k>`, and a read OR-folds the sidecars of the commits it
+ * resolves, so overlapping deletes compose by bitmap OR and a later
+ * commit's vectors vanish with its marker.
  */
 object DeleteVectors {
 
-  /** The scan with physical row identity attached — every DV operation
-    * hangs off these two metadata columns. */
-  private[sources] def scanWithRowId(spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    scanWithRowId(spark, paths, None)
+  /** The on-disk sidecar schema [[buildVectors]] writes: one row per
+    * data file — its `_metadata.file_path`, its word → mask bitmap and
+    * its kill count. */
+  private[sources] val SidecarSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType),
+    StructField("dv", MapType(LongType, LongType)),
+    StructField("n_deleted", LongType)))
+  private val Seq(filePath, dvCol, nDeleted) = SidecarSchema.fieldNames.toSeq
 
-  /** `basePath` variant: an explicit FILE list below a hive-partitioned
-    * root keeps its partition columns (Spark recovers them from the
-    * directory names relative to `basePath`) — [[TxTable]]'s skipping
-    * reads over partitioned commit dirs. */
-  private[sources] def scanWithRowId(spark: SparkSession,
-      paths: Seq[String], basePath: Option[String]): DataFrame = {
+  /** The scan with physical row identity attached — every DV operation
+    * hangs off these two metadata columns. `basePath`: an explicit FILE
+    * list below a hive-partitioned root keeps its partition columns
+    * (Spark recovers them from the directory names relative to
+    * `basePath`). `schema`: the data schema when the caller already
+    * knows it from a footer, which spares Spark's inference job. */
+  private[sources] def scanWithRowId(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None,
+      schema: Option[StructType] = None): DataFrame = {
     val rd = basePath.foldLeft(spark.read)((r, b) => r.option("basePath", b))
-    rd.parquet(paths: _*)
+    schema.foldLeft(rd)(_.schema(_)).parquet(paths: _*)
       .select(col("*"),
         col("_metadata.file_path").as("__dv_file"),
         col("_metadata.row_index").as("__dv_row"))
   }
 
-  /** Apply a folded DV relation to a row-identified scan: broadcast
-    * HASH join on (file, word = row/64) — an O(1) probe per scanned
-    * row, never a per-file map scan — then the bit test. Identity
-    * columns kept for callers that still need them. */
-  private[sources] def applyVectorsKeepId(base: DataFrame,
-      dv: DataFrame): DataFrame =
-    base.join(broadcast(dv),
-      base("__dv_file") === dv("__dv_fp") &&
-        shiftright(base("__dv_row"), 6) === dv("__dv_word"), "left")
-      .filter(!isDeleted(col("__dv_mask"), col("__dv_row")))
-      .drop("__dv_fp", "__dv_word", "__dv_mask")
+  /** One sidecar row as read on the driver: the data file, its
+    * (word, mask) pairs and its kill count. */
+  private[sources] final case class FileVector(file: String,
+      dv: Seq[(Long, Long)], nDeleted: Long)
+
+  /** The OR-fold of a snapshot's sidecars: file → [[DvAlive.Bitmap]]. */
+  private[sources] final class Index(val bitmaps: Map[String, DvAlive.Bitmap]) {
+    def isEmpty: Boolean = bitmaps.isEmpty
+    /** Dead rows per file — the popcount of its masks. */
+    def deadPerFile: Map[String, Long] = bitmaps.map { case (f, b) =>
+      f -> b.masks.map(java.lang.Long.bitCount(_).toLong).sum
+    }
+    /** True for the rows of `base` (row-identified) the index keeps. */
+    def alive(base: DataFrame): Column =
+      GraftExtensions.graftDvAlive(base.sparkSession, base("__dv_file"),
+        base("__dv_row"), DvAlive.encode(bitmaps.toSeq.sortBy(_._1)))
+  }
+
+  /** Read one sidecar file on the driver (parquet-mr, no Spark job). */
+  private[sources] def readSidecar(path: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Seq[FileVector] = {
+    import org.apache.parquet.example.data.Group
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
+      .withConf(conf).build()
+    def longOr0(g: Group, field: Int): Long =
+      if (g.getFieldRepetitionCount(field) > 0) g.getLong(field, 0) else 0L
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      val m = if (g.getFieldRepetitionCount(dvCol) > 0) Some(g.getGroup(dvCol, 0)) else None
+      val dv = m.toSeq.flatMap(m => (0 until m.getFieldRepetitionCount(0)).map { i =>
+        val kv = m.getGroup(0, i)
+        (kv.getLong(0, 0), longOr0(kv, 1))
+      })
+      FileVector(g.getString(filePath, 0), dv,
+        longOr0(g, g.getType.getFieldIndex(nDeleted)))
+    }.toVector
+    finally reader.close()
+  }
+
+  /** OR-fold sidecar rows into one [[Index]]: overlapping deletes
+    * compose, and a row dead in any vector is dead. */
+  private[sources] def fold(vectors: Iterable[FileVector]): Index = {
+    val acc = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.LongMap[Long]]
+    vectors.foreach { v =>
+      val m = acc.getOrElseUpdate(v.file, scala.collection.mutable.LongMap.empty[Long])
+      v.dv.foreach { case (w, mask) => m(w) = m.getOrElse(w, 0L) | mask }
+    }
+    new Index(acc.map { case (f, m) =>
+      val words = m.keys.toArray.sorted
+      f -> new DvAlive.Bitmap(words, words.map(m))
+    }.toMap)
+  }
+
+  /** Apply a folded index to a row-identified scan as the in-scan
+    * `graft_dv_alive` filter. Identity columns kept for callers that
+    * still need them; an empty index leaves the bare scan. */
+  private[sources] def applyVectorsKeepId(base: DataFrame, index: Index): DataFrame =
+    if (index.isEmpty) base else base.filter(index.alive(base))
 
   /** [[applyVectorsKeepId]] with the row identity dropped — the
     * reader-facing shape. */
-  private[sources] def applyVectors(base: DataFrame, dv: DataFrame): DataFrame =
-    applyVectorsKeepId(base, dv).drop("__dv_file", "__dv_row")
+  private[sources] def applyVectors(base: DataFrame, index: Index): DataFrame =
+    applyVectorsKeepId(base, index).drop("__dv_file", "__dv_row")
 
-  /** The rows a DV relation KILLS — the inverse of [[applyVectors]]:
-    * inner broadcast join on (file, word) + a positive bit test, so the
-    * scan is bounded by the files the vectors reference. Feeds
+  /** The rows an index KILLS — the inverse of [[applyVectors]]. The
+    * caller bounds the scan to the files the vectors reference. Feeds
     * [[TxTable.changeFeed]]'s per-commit kill resolution. */
-  private[sources] def killedRows(base: DataFrame, dv: DataFrame): DataFrame =
+  private[sources] def killedRows(base: DataFrame, index: Index): DataFrame =
+    base.filter(!index.alive(base)).drop("__dv_file", "__dv_row")
+
+  /** The rows each commit's vectors KILL, labelled `__commit` — a row
+    * emits once per commit whose bit kills it, which is what the
+    * one-pass change feed diffs per commit, so these vectors are not
+    * OR-folded. A broadcast hash join on (file, word = row/64) against
+    * the vectors as a local relation, then the bit test. */
+  private[sources] def killedRowsByCommit(base: DataFrame,
+      vectors: Seq[(Long, FileVector)]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val rows = vectors.flatMap { case (k, v) =>
+      v.dv.map { case (w, m) => org.apache.spark.sql.Row(k, v.file, w, m) }
+    }
+    val dv = base.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("__commit", LongType), StructField("__dv_fp", StringType),
+      StructField("__dv_word", LongType), StructField("__dv_mask", LongType))))
     base.join(broadcast(dv),
       base("__dv_file") === dv("__dv_fp") &&
         shiftright(base("__dv_row"), 6) === dv("__dv_word"))
       .filter(isDeleted(col("__dv_mask"), col("__dv_row")))
       .drop("__dv_fp", "__dv_word", "__dv_mask", "__dv_file", "__dv_row")
+  }
 
   /** Distributed bitmap assembly from (file_path, ri) hit rows —
     * (file, word = ri/64) first so no single aggregation row ever holds
     * more than one 64-bit mask, then the per-file map. Output schema is
-    * the sidecar schema every fold reads: (file_path, dv, n_deleted). */
+    * [[SidecarSchema]]. */
   private[sources] def buildVectors(hits: DataFrame): DataFrame =
     hits
-      .groupBy(col("file_path"), shiftright(col("ri"), 6).as("word"))
+      .groupBy(col(filePath), shiftright(col("ri"), 6).as("word"))
       .agg(bit_or(shiftleftDyn(lit(1L), col("ri") % 64)).as("mask"),
         count(lit(1)).as("n"))
-      .groupBy("file_path")
+      .groupBy(filePath)
       .agg(map_from_entries(collect_list(struct(col("word"), col("mask"))))
-        .as("dv"),
-        sum(col("n")).as("n_deleted"))
-
-  /** OR-fold arbitrary DV sidecar dirs (each written by
-    * [[buildVectors]]'s shape) into (file, word, mask) ROWS — the
-    * `_txn/dv/<k>` dirs of the commits a [[TxTable]] read resolves.
-    * Rows, not per-file maps, deliberately:
-    * application is then a broadcast HASH join on (file, word) — O(1)
-    * per scanned row — where a per-file `map<word, mask>` probe is a
-    * LINEAR scan of the map under Spark's `element_at` and degrades
-    * with kills-per-file (measured: a post-checkpoint read over 2
-    * files carrying 15 k kills each went 0.8 s → 31.9 s on the map
-    * representation — SCALE.md round-16 txtable). */
-  private[sources] def foldDvDirs(spark: SparkSession,
-      dirs: Seq[String]): DataFrame = {
-    if (dirs.isEmpty) {
-      // a LocalRelation-backed empty, NOT an emptyRDD one (round 22):
-      // an RDD-backed empty is opaque to the optimizer, so every
-      // DV-less snapshot read kept the left join AND paid a broadcast
-      // build of a zero-row relation — one wasted stage job per read.
-      // A LocalRelation empty lets PropagateEmptyRelation delete the
-      // join from the plan: a table with no deletion vectors reads as
-      // a bare scan.
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__dv_fp",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__dv_word",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__dv_mask",
-            org.apache.spark.sql.types.LongType))))
-    } else {
-      spark.read.parquet(dirs: _*)
-        .select(col("file_path"), explode(col("dv")).as(Seq("word", "mask")))
-        .groupBy("file_path", "word")
-        .agg(bit_or(col("mask")).as("__dv_mask"))
-        .withColumnRenamed("file_path", "__dv_fp")
-        .withColumnRenamed("word", "__dv_word")
-    }
-  }
+        .as(dvCol),
+        sum(col("n")).as(nDeleted))
 
   /** Is the row at (`rowCol`) dead under the joined word-mask column?
-    * Pure builtin arithmetic — O(1) per row, codegen'd, null-safe for
-    * rows whose (file, word) has no vector row (left-join miss ⇒ mask
-    * null ⇒ alive). The word-alignment (mask is FOR rowCol's word) is
-    * the join condition's job — see [[applyVectors]]. */
-  private[sources] def isDeleted(maskCol: Column, rowCol: Column): Column =
+    * Pure builtin arithmetic; the word-alignment (mask is FOR rowCol's
+    * word) is [[killedRowsByCommit]]'s join condition. */
+  private def isDeleted(maskCol: Column, rowCol: Column): Column =
     // shiftleft/right with a column amount has no functions-API
     // overload; the Catalyst node accepts expressions, so go through
     // the SQL-function form of the shift

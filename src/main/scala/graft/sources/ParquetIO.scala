@@ -39,6 +39,56 @@ object ParquetIO {
   def read(spark: SparkSession, paths: Seq[String], mergeSchema: Boolean = false): DataFrame =
     spark.read.option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
 
+  /** The Spark schema of one data file's footer — the conversion
+    * Spark's own inference applies to the one footer it reads (the
+    * schema Spark stored in the footer's key-value metadata when
+    * present, else the parquet types under the session's conversion
+    * flags), without the job inference runs. */
+  private[sources] def footerSchema(
+      file: org.apache.hadoop.fs.Path): org.apache.spark.sql.types.StructType = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, Fs.conf()))
+    try org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file, r.getFooter),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+    finally r.close()
+  }
+
+  /** The first data file of a FLAT parquet input — a file, or a
+    * directory holding its data files directly — by path order, from one
+    * listing. None for a glob, a directory with subdirectories (hive
+    * partitions: their columns come from Spark's partition inference) or
+    * one with no data file; Spark's inference decides those. */
+  private[sources] def firstDataFile(path: String): Option[org.apache.hadoop.fs.Path] = {
+    if (path.exists("*?[{".contains(_))) return None
+    val (fs, p) = Fs.fileSystem(path)
+    // what Spark's parquet listing reads: no hidden or empty file
+    def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    def dataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+      st.isFile && visible(st) && st.getLen > 0
+    val children =
+      try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => return None }
+    // listing a FILE returns the file itself
+    if (children.size == 1 && children.head.getPath == fs.makeQualified(p))
+      return children.headOption.filter(dataFile).map(_.getPath)
+    if (children.exists(c => c.isDirectory && visible(c))) None
+    else children.filter(dataFile).map(_.getPath).sortBy(_.toString).headOption
+  }
+
+  /** `spark.read.parquet(path)` with the schema taken from the first
+    * data file's footer ([[firstDataFile]], [[footerSchema]]) — the same
+    * schema Spark's inference reads from one footer, without its job.
+    * Globs, partitioned dirs and dirs with no data file keep inference. */
+  private[sources] def readFlat(spark: SparkSession, path: String): DataFrame =
+    firstDataFile(path)
+      .map(f => spark.read.schema(footerSchema(f)).parquet(path))
+      .getOrElse(spark.read.parquet(path))
+
   /** S1–S5: parquet sink with writer properties. */
   def write(df: DataFrame, path: String, opts: WriteOptions = WriteOptions()): Unit = {
     val w = df.write
@@ -69,7 +119,7 @@ object ParquetIO {
       outPath: String,
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
-    val dfs = inputPaths.map(p => spark.read.parquet(p))
+    val dfs = inputPaths.map(p => readFlat(spark, p))
     val merged = dfs.reduce(_.unionByName(_, allowMissingColumns = true))
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
@@ -407,7 +457,7 @@ object ParquetIO {
       opts: WriteOptions = WriteOptions()): Unit = {
     require(sortCols.nonEmpty, "compactSorted needs at least one cluster column")
     import org.apache.spark.sql.functions.col
-    val merged = inputPaths.map(p => spark.read.parquet(p))
+    val merged = inputPaths.map(p => readFlat(spark, p))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
@@ -456,9 +506,9 @@ object ParquetIO {
     require(basePaths.nonEmpty, "upsert: basePaths is empty — nothing to merge into")
     require(updatePaths.nonEmpty,
       "upsert: updatePaths is empty — for a pure compaction use compactSorted")
-    val base = basePaths.map(p => spark.read.parquet(p))
+    val base = basePaths.map(p => readFlat(spark, p))
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val upd = updatePaths.map(p => spark.read.parquet(p))
+    val upd = updatePaths.map(p => readFlat(spark, p))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val totalBytes = inputBytes(spark, basePaths ++ updatePaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
@@ -632,7 +682,7 @@ object ParquetIO {
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
     import org.apache.spark.sql.functions.col
-    val merged = inputPaths.map(p => spark.read.parquet(p))
+    val merged = inputPaths.map(p => readFlat(spark, p))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt

@@ -9,7 +9,7 @@ import java.nio.file.Files
 /**
  * Merge-on-read deletion vectors (round 16), driven through
  * [[TxTable]]'s delete commits: overlapping delete batches OR-compose
- * per file, the change feed reports each death once, and the DV join
+ * per file, the change feed reports each death once, and the in-scan DV filter
  * leaves the data scan's pushdown intact.
  */
 class DeleteVectorsSpec extends AnyFunSuite {
@@ -61,6 +61,8 @@ class DeleteVectorsSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(bucket), EqualTo(bucket,5)]") ||
       plan.contains("EqualTo(bucket,5)"),
       s"user predicate must still reach the parquet scan:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"), s"DV side must broadcast:\n$plan")
+    assert(plan.contains("graft_dv_alive") && !plan.contains("Join") &&
+      !plan.contains("Exchange"),
+      s"DV side must be the in-scan graft_dv_alive filter, no join or exchange:\n$plan")
   }
 }

@@ -168,6 +168,25 @@ class ParquetIOSpec extends AnyFunSuite {
     assert(rgs.nonEmpty && rgs.map(_.numRows).sum == 1500L)
   }
 
+  test("merge of drifted inputs == the per-input spark.read.parquet union: schema and rows") {
+    val base = tmp()
+    val ins = Seq(s"$base/a", s"$base/b", s"$base/c")
+    spark.range(600).selectExpr("id", "id * 3 as q", "id / 7.0 as tax").write.parquet(ins(0))
+    // drops tax
+    spark.range(600, 900).selectExpr("id", "id * 3 as q").write.parquet(ins(1))
+    // narrows q to int
+    spark.range(900, 1300).selectExpr("id", "cast(id * 3 as int) as q", "id / 7.0 as tax")
+      .repartition(3).write.parquet(ins(2))
+    val out = s"$base/out"
+    ParquetIO.merge(spark, ins, out)
+    val want = ins.map(p => spark.read.parquet(p))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val got = spark.read.parquet(out)
+    assert(got.schema === want.schema)
+    assert(got.count() === 1300L)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("compactSorted: disjoint per-file key ranges, content preserved") {
     val base = tmp()
     val a = s"$base/a"; val b = s"$base/b"; val out = s"$base/out"

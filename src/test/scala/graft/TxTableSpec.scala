@@ -956,4 +956,39 @@ class TxTableSpec extends AnyFunSuite {
       s"post-expire OCC must still serialize to the max version: ${rows.toSeq}")
     assert(TxTable.read(spark, t).count() === 50L)
   }
+
+  test("a snapshot read of a table with deletion vectors runs no Spark job before its first action") {
+    import spark.implicits._
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, base())
+    TxTable.deleteWhere(spark, t, col("id") % 3 === 0)
+    TxTable.upsert(spark, t, Seq((1L, "one", 1.0, 1L), (5000L, "new", 2.0, 1L))
+      .toDF("id", "name", "price", "version"), Seq("id"), "version")
+    val barrier = "txtable-read-barrier"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val barrierDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def desc(e: org.apache.spark.scheduler.SparkListenerJobStart) =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse(""))
+      private val barrierJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (desc(e) == barrier) barrierJobs.add(e.jobId) else started.add(desc(e))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (barrierJobs.contains(e.jobId)) barrierDone.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val snap = try {
+      val df = TxTable.read(spark, t)
+      // the bus delivers events in order: once the barrier job's end
+      // arrives, every job the read started has been counted
+      spark.sparkContext.setJobDescription(barrier)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(barrierDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.isEmpty, s"TxTable.read ran Spark jobs: ${started.toArray.mkString("; ")}")
+    assert(snap.count() === 1000L - 334L + 1L)
+  }
 }
