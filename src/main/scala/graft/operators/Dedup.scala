@@ -315,26 +315,20 @@ object Dedup {
     // in rounds — and the label tables are tiny (two longs per node in
     // ≥1 pair), so the write is cheap at any scale. File-backed rounds
     // also survive executor loss and need no unpersist hygiene.
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    def tick[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (dbg) System.err.println(f"[cc-debug] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
     // the expensive upstream (e.g. exact Jaccard) executes exactly once —
     // into the edge spill; every loop round re-reads the files
-    val edges = tick("edges")(Materialize.viaParquet(
+    val edges = Materialize.viaParquet(
       pairs.select(col(idA).as("src"), col(idB).as("dst"))
         .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-        .distinct(), "cc_edges"))
+        .distinct(), "cc_edges")
     // init fuses the FIRST propagation round into label creation: each
     // node's starting label is min(self, neighbors), computable from the
     // symmetric edge list with one aggregate — no join, one fewer round
-    var labels = tick("init")(Materialize.viaParquet(
+    var labels = Materialize.viaParquet(
       edges.groupBy(col("src"))
         .agg(min(col("dst")).as("__mn"))
         .select(col("src").as("id"), least(col("src"), col("__mn")).as("cluster")),
-      "cc_gen"))
+      "cc_gen")
     // one propagation round: every node adopts min(self, neighbor labels),
     // then pointer-jumps (Shiloach-Vishkin style label shortcutting):
     // follow the propagated label one more hop through the generation's
@@ -382,8 +376,7 @@ object Dedup {
       // the convergence verdict rides the spill's own parquet footer
       // statistics (boolean max of __chg) — the per-cycle count() job
       // re-read files the driver had just written (round 22)
-      val (nextGen, anyChg) = tick(s"rounds ${i + 1}..${i + roundsThisCycle}")(
-        Materialize.viaParquetAnyTrue(withChg, "cc_gen", "__chg"))
+      val (nextGen, anyChg) = Materialize.viaParquetAnyTrue(withChg, "cc_gen", "__chg")
       converged = !anyChg
       labels = nextGen.select(col("id"), col("cluster"))
       i += roundsThisCycle

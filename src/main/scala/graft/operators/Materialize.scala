@@ -67,17 +67,41 @@ object Materialize {
     * consumer re-scans columnar files instead of recomputing. Each call
     * gets its own directory so earlier results are never overwritten under
     * a live reader; dirs live under the app-scoped root and go with it. */
-  def viaParquet(df: DataFrame, tag: String): DataFrame = {
+  def viaParquet(df: DataFrame, tag: String): DataFrame = spill(df, tag)._1
+
+  /** Write `df` under a fresh dir with the job description
+    * `graft.spill <tag>` (so a job profile names the spill, not Spark's
+    * internal call site), restoring the caller's description after; then
+    * read it back under the schema just written (as-nullable — what
+    * inference would return) instead of re-inferring it: the files are
+    * ours, so the footer listing + inference pass per spill is pure
+    * overhead (round 21; iterative consumers like the CC loop spill every
+    * couple of rounds, so this is per-round driver latency). */
+  private def spill(df: DataFrame, tag: String): (DataFrame, String) = {
     val dir = s"${root(df.sparkSession)}/${tag}_${counter.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(dir)
-    // read back under the schema we just wrote (as-nullable — what
-    // inference would return) instead of re-inferring it: the files are
-    // ours, so the footer listing + inference pass per spill is pure
-    // overhead (round 21; iterative consumers like the CC loop spill
-    // every couple of rounds, so this is per-round driver latency)
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft.spill $tag")
+    try df.write.mode("overwrite").parquet(dir)
+    finally sc.setJobDescription(prev)
     val nullable = org.apache.spark.sql.types.StructType(
       df.schema.fields.map(_.copy(nullable = true)))
-    df.sparkSession.read.schema(nullable).parquet(dir)
+    (df.sparkSession.read.schema(nullable).parquet(dir), dir)
+  }
+
+  /** Footer reads of [[viaParquetAnyTrue]] overlap on this small daemon
+    * pool; idle threads time out. */
+  private lazy val footerPool: java.util.concurrent.ExecutorService = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(4, 4,
+      30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-spill-footer")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
   }
 
   /** [[viaParquet]] plus a FREE "does any row have `boolCol` = true?"
@@ -85,49 +109,60 @@ object Materialize {
     * (parquet keeps boolean min/max per row group) — no Spark job. The
     * CC loop's convergence test consumed one job per spill cycle just
     * to ask this (round 22, guide §1.2: the answer was already in the
-    * bytes the spill wrote). Conservative: a footer without usable
-    * stats for the column answers "maybe true". A `boolCol` that is not
-    * a top-level column of `df` fails fast — it matches no footer
-    * column, so it would otherwise read as "maybe true" forever. */
+    * bytes the spill wrote). The footers are read on a small pool, and
+    * the first file whose max is true decides: the reads still queued
+    * are cancelled. Conservative: a footer without usable stats for the
+    * column answers "maybe true". A `boolCol` that is not a top-level
+    * column of `df` fails fast — it matches no footer column, so it
+    * would otherwise read as "maybe true" forever. */
   def viaParquetAnyTrue(df: DataFrame, tag: String,
       boolCol: String): (DataFrame, Boolean) = {
     require(df.schema.fieldNames.contains(boolCol),
       s"Materialize.viaParquetAnyTrue: no column '$boolCol' in " +
         s"(${df.schema.fieldNames.mkString(", ")})")
-    val dir = s"${root(df.sparkSession)}/${tag}_${counter.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(dir)
-    val nullable = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true)))
-    val back = df.sparkSession.read.schema(nullable).parquet(dir)
+    val (back, dir) = spill(df, tag)
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p).toSeq
+    val files = p.getFileSystem(conf).listStatus(p).toSeq
       .filter(f => f.getPath.getName.endsWith(".parquet") &&
         !f.getPath.getName.startsWith("_") && f.getLen > 0)
-    val anyTrue = files.exists { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        r.getFooter.getBlocks.asScala.exists { b =>
-          b.getColumns.asScala
-            .find(_.getPath.toDotString == boolCol)
-            .forall { c =>
-              val st = c.getStatistics
-              if (st == null || st.isEmpty || !st.hasNonNullValue) {
-                // no usable stats (or an all-null chunk with rows —
-                // can't happen for a non-null boolean, but stay
-                // conservative): treat as possibly-true unless the
-                // chunk is provably all-null
-                st == null || st.isEmpty || c.getValueCount > st.getNumNulls
-              } else st.genericGetMax
-                .asInstanceOf[java.lang.Boolean].booleanValue()
-            }
-        }
-      } finally r.close()
-    }
-    (back, anyTrue)
+    val done = new java.util.concurrent.ExecutorCompletionService[java.lang.Boolean](footerPool)
+    val pending = files.map(f => done.submit(() => java.lang.Boolean.valueOf(maybeTrue(f, conf, boolCol))))
+    try {
+      var anyTrue = false
+      var left = pending.size
+      while (!anyTrue && left > 0) {
+        anyTrue = try done.take().get().booleanValue()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        left -= 1
+      }
+      (back, anyTrue)
+    } finally pending.foreach(_.cancel(false))
+  }
+
+  /** Whether one spill file's footer allows a true `boolCol`. */
+  private def maybeTrue(f: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration, boolCol: String): Boolean = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try {
+      import scala.jdk.CollectionConverters._
+      r.getFooter.getBlocks.asScala.exists { b =>
+        b.getColumns.asScala
+          .find(_.getPath.toDotString == boolCol)
+          .forall { c =>
+            val st = c.getStatistics
+            if (st == null || st.isEmpty || !st.hasNonNullValue) {
+              // no usable stats (or an all-null chunk with rows — can't
+              // happen for a non-null boolean, but stay conservative):
+              // treat as possibly-true unless the chunk is provably
+              // all-null
+              st == null || st.isEmpty || c.getValueCount > st.getNumNulls
+            } else st.genericGetMax
+              .asInstanceOf[java.lang.Boolean].booleanValue()
+          }
+      }
+    } finally r.close()
   }
 
   /**

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.functions.VectorFunctions._
-import graft.plans.GraftExtensions
+import graft.functions.VectorAvgAggregator
+import graft.plans.{GraftExtensions, NearestCells}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -408,79 +408,26 @@ object Similarity {
     }
 
   /**
-   * IVF-style ANN (the classic inverted-file index): k-means-lite coarse
-   * quantizer trained relationally (LSH-seeded, `iters` Lloyd steps, each
-   * one broadcast-join + hash-aggregate), vectors assigned to their
-   * nearest centroid cell. Queries probe only `nProbe` cells — at 100 TB
-   * the cell assignment is the partition key and a probe touches
-   * nProbe/k of the data.
+   * IVF-style ANN (the classic inverted-file index): a k-means-lite
+   * coarse quantizer trained by [[lloyd]] (LSH-seeded, `iters`
+   * reassignments), vectors assigned to their nearest centroid cell.
+   * Queries probe only `nProbe` cells — at 100 TB the cell assignment is
+   * the partition key and a probe touches nProbe/k of the data.
    *
-   * Returns (id, cell) assignments plus the centroid table for probing.
+   * Returns the spilled (id, cell) assignments plus the (cell, d, c)
+   * centroid table (the means of those assignments) for probing.
    */
   def ivfIndex(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 16, iters: Int = 3): (DataFrame, DataFrame) = {
-    val spark = emb.sparkSession
-    // no cache on the exploded scan: consumers recompute it as a map-side
-    // Generate over a pruned parquet read — cheaper per pass than storing
-    // n·dim exploded rows in executor memory, and the round-2 cache here
-    // was never unpersisted (leak). Lloyd iterations re-reading their
-    // input is the normal distributed k-means shape.
-    val parts = emb.select(col(idCol).as("id"), posexplode(col(vecCol)).as(Seq("d", "x")))
-      .withColumn("x", col("x").cast("double"))
-    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // seed cells from LSH buckets (deterministic, data-dependent spread)
-    var assign = lshSignatures(emb, idCol, vecCol, bits = 16)
-      .select(col("id"), pmod(col("sig"), lit(k)).cast("int").as("cell"))
-    for (_ <- 0 until iters) {
-      // centroid means stay relational (one O(n·d) aggregate)…
-      val cents = parts.join(assign, "id")
-        .groupBy(col("cell"), col("d")).agg(avg(col("x")).as("c"))
-      // …but assignment scores against BROADCAST CENTROID ARRAYS with one
-      // codegen dot per (vector, cell) row — O(n·k) rows, not the former
-      // O(n·d·k) per-dimension join (measured 11× wall at the 10×
-      // rehearsal once k started tracking n; see ivfPairs)
-      assign = nearestCell(vecs, centroidArrays(cents), spark)
-    }
-    // an IVF index IS a materialized artifact: probes join it repeatedly,
-    // so hand back file-backed assignment and centroid tables — the lazy
-    // Lloyd chain (each iteration's plan embeds the previous) executes
-    // exactly once into the spill instead of once per downstream
-    // consumer, and at scale the index would be written once and reused
-    // across many queries anyway
-    val assignM = Materialize.viaParquet(assign, "ivf_assign")
-    val centroids = Materialize.viaParquet(
-      parts.join(assignM, "id")
-        .groupBy(col("cell"), col("d")).agg(avg(col("x")).as("c")),
-      "ivf_cents")
-    (assignM, centroids)
+    val rows = emb.select(col(idCol).as("id"), lit(0).as("key"), col(vecCol).as("v"))
+    // one mean step more than reassignments: the returned centroids are
+    // the means of the returned assignment
+    val (books, cell) = lloyd(rows,
+      lshSeed(emb.sparkSession, k, vecDim(emb, vecCol, "ivfIndex")), iters + 1)
+    // an IVF index IS a materialized artifact: probes join it repeatedly
+    val assign = Materialize.viaParquet(rows.select(col("id"), cell.as("cell")), "ivf_assign")
+    (assign, centroidRows(emb.sparkSession, books, None))
   }
-
-  /** Relational centroids (cell, d, c) → k array rows (cell, cvec float[],
-    * cc = ‖c‖²) — small enough to broadcast at any sane k (≤ 4096). */
-  private def centroidArrays(cents: DataFrame): DataFrame =
-    cents.groupBy(col("cell"))
-      .agg(sort_array(collect_list(struct(col("d"), col("c")))).as("dc"))
-      .select(col("cell"),
-        transform(col("dc"), e => e.getField("c").cast("float")).as("cvec"),
-        aggregate(col("dc"), lit(0.0),
-          (acc, e) => acc + e.getField("c") * e.getField("c")).as("cc"))
-
-  /**
-   * Nearest centroid per vector: broadcast the k centroid arrays, score
-   * dist = ‖c‖² − 2·v·c with the codegen dot (one row per (vector, cell)),
-   * then `min(struct(dist, cell))` — a hash aggregate whose partial side
-   * combines the k candidates map-side, so the shuffle carries ONE row per
-   * vector. Same (dist asc, cell asc) tie order as a window would give.
-   */
-  private def nearestCell(vecs: DataFrame, centArr: DataFrame,
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    vecs.crossJoin(broadcast(centArr))
-      .select(col("id"), col("cell"),
-        (col("cc") - lit(2.0) * GraftExtensions.graftDot(spark, col("vec"), col("cvec")))
-          .as("dist"))
-      .groupBy(col("id"))
-      .agg(min(struct(col("dist"), col("cell"))).as("m"))
-      .select(col("id"), col("m.cell").as("cell"))
 
   /** Probe an IVF index: rank cells by query·centroid distance, search the
     * best `nProbe` cells exhaustively with the codegen cosine. */
@@ -524,8 +471,8 @@ object Similarity {
    * Σ_cell freq² = O(n²/k) — quadratic again as n grows (measured: 11×
    * wall at the 10× rehearsal with k=16). Cells must track n so
    * per-cell occupancy stays constant: then candidates are O(n·occ),
-   * linear. The count is one metadata-cheap job next to the Lloyd
-   * iterations the index build already runs. With k ∝ n the ASSIGNMENT
+   * linear. The count shares one aggregate with the vector-length probe,
+   * next to the Lloyd steps the index build already runs. With k ∝ n the ASSIGNMENT
    * stage scores n·k dots — the flat-quantizer wall; [[imiPairs]] is the
    * two-level form that drops it to O(n·√k) and (round 12) carries the
    * registered similarity queries.
@@ -537,43 +484,25 @@ object Similarity {
 
   /** The co-residence candidate relation (id_a, id_b) of [[ivfPairs]]:
     * train the coarse quantizer (centroids only — pair mining never reads
-    * a single-assignment table, so the full [[ivfIndex]] build's final
-    * assignment pass + spill would be wasted work), multi-assign every
-    * vector to its `nAssign` nearest cells, pair up cell cohabitants. */
-  /** Train-then-multi-assign: every vector to its `nAssign` nearest of
-    * `k` Lloyd cells, spilled to parquet because candidate self-joins
-    * consume the table twice (inline, the whole score/window subtree
-    * would execute once per join side — the PPJoin prefix-spill lesson).
-    * Assignment scores n·k dots against the broadcast centroid arrays —
-    * the flat-quantizer cost [[imiCandidates]] exists to undercut. */
-  private def multiAssign(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, nAssign: Int, tag: String): DataFrame =
-    multiAssignWith(emb, idCol, vecCol,
-      trainCentroids(emb, idCol, vecCol, k, iters), nAssign, tag)
-
-  /** Top-`nAssign` cell assignment against a PRE-TRAINED centroid table —
-    * the piece [[imiIncrementalTopK]] needs separately: a Δ batch must be
-    * quantized by the CORPUS index, never retrain it. */
-  private def multiAssignWith(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, nAssign: Int, tag: String): DataFrame = {
-    val spark = emb.sparkSession
-    val scored = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .crossJoin(broadcast(centroidArrays(centroids)))
-      .select(col("id"), col("cell"),
-        (col("cc") - lit(2.0) * GraftExtensions.graftDot(spark, col("vec"), col("cvec")))
-          .as("dist"))
-    val w = Window.partitionBy(col("id")).orderBy(col("dist"), col("cell"))
-    Materialize.viaParquet(
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= nAssign).select(col("id"), col("cell")),
-      tag)
-  }
-
+    * a single-assignment table), multi-assign every vector to its
+    * `nAssign` nearest cells, pair up cell cohabitants. */
   private def ivfCandidates(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, nAssign: Int): DataFrame = {
-    val kEff = if (k > 0) k
-      else math.min(4096L, math.max(16L, emb.count() / 125L)).toInt
-    val ma = multiAssign(emb, idCol, vecCol, kEff, iters, nAssign, "ivf_multiassign")
+    val (kEff, dim) =
+      if (k > 0) (k, vecDim(emb, vecCol, "ivfPairs"))
+      else {
+        val (n, d) = corpusShape(emb, vecCol, "ivfPairs")
+        (math.min(4096L, math.max(16L, n / 125L)).toInt, d)
+      }
+    // train-then-multi-assign: every vector to its `nAssign` nearest of
+    // `k` cells (n·k dots, the flat-quantizer cost [[imiCandidates]]
+    // undercuts), spilled because the candidate self-join reads it twice
+    val rows = emb.select(col(idCol).as("id"), lit(0).as("key"), col(vecCol).as("v"))
+    val (books, _) = lloyd(rows, lshSeed(emb.sparkSession, kEff, dim), iters)
+    val ma = Materialize.viaParquet(
+      rows.select(col("id"), explode(nearest(emb.sparkSession, col("v"), books(0), nAssign))
+        .as("cell")),
+      "ivf_multiassign")
     ma.as("x").join(ma.as("y"), Seq("cell"))
       .filter(col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
@@ -613,114 +542,75 @@ object Similarity {
   /** The product-cell co-residence relation of [[imiPairs]]. */
   private def imiCandidates(emb: DataFrame, idCol: String, vecCol: String,
       kPerHalf: Int, iters: Int, nAssign: Int): DataFrame = {
-    val (half, dim) = halfDims(emb, vecCol)
-    val kEff = resolveKPerHalf(emb, kPerHalf)
-    val cents = trainHalfCentroids(emb, idCol, vecCol, half, dim, kEff, iters)
+    val (half, dim, k) = imiShape(emb, vecCol, kPerHalf)
+    val books = trainHalves(emb, idCol, vecCol, half, dim, k, iters)
     // nAssign² product cells per vector; spilled for the same
     // consumed-twice reason as the flat assignment
-    val product = assignHalfProduct(emb, idCol, vecCol, half, dim, cents,
-      nAssign, "imi_product")
+    val product = Materialize.viaParquet(
+      halfProduct(emb, idCol, vecCol, half, dim, books, nAssign), "imi_product")
     product.as("x").join(product.as("y"), Seq("cl", "cr"))
       .filter(col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
   }
 
-  private def halfDims(emb: DataFrame, vecCol: String): (Int, Int) = {
+  /** The length of the corpus's first vector: one tiny driver job, and a
+    * loud error beats a cryptic failure on an empty corpus. */
+  private def vecDim(emb: DataFrame, vecCol: String, op: String): Int = {
     val firstRow = emb.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(firstRow.nonEmpty, "imiPairs: empty embedding corpus")
-    val dim = firstRow(0).getInt(0)
+    require(firstRow.nonEmpty, s"$op: empty embedding corpus")
+    firstRow(0).getInt(0)
+  }
+
+  /** The corpus's row count and longest vector in ONE aggregate: the
+    * count sizes an automatic k, the length bounds the seed hyperplanes
+    * (and the IMI split). */
+  private def corpusShape(emb: DataFrame, vecCol: String, op: String): (Long, Int) = {
+    val r = emb.agg(count(lit(1)), max(size(col(vecCol)))).head()
+    require(r.getLong(0) > 0, s"$op: empty embedding corpus")
+    (r.getLong(0), r.getInt(1))
+  }
+
+  private def halfDims(dim: Int): (Int, Int) = {
     require(dim >= 2, s"imiPairs needs at least 2 dims, got $dim")
     (dim / 2, dim)
   }
 
-  private def resolveKPerHalf(emb: DataFrame, kPerHalf: Int): Int =
-    if (kPerHalf > 0) kPerHalf
-    else math.max(4, math.ceil(math.sqrt(emb.count() / 20.0)).toInt)
-
-  /** (id, h, hvec) rows — vector split into its two IMI halves, h ∈ {0,1}. */
-  private def vecHalves(df: DataFrame, idCol: String, vecCol: String,
-      half: Int, dim: Int): DataFrame =
-    df.select(col(idCol).as("id"), posexplode(array(
-        slice(col(vecCol), 1, half), slice(col(vecCol), half + 1, dim - half)))
-      .as(Seq("h", "hvec")))
-
-  /**
-   * Train BOTH half-vector quantizers of the IMI in ONE (h, cell)-keyed
-   * Lloyd pipeline — the [[pqEncode]] vectorization applied to the coarse
-   * quantizer (round 12: two serial `trainCentroids` chains cost ~2× the
-   * index-build jobs for identical math; every stage below keys on
-   * (h, cell), so both halves ride each aggregate together). Seeding and
-   * iteration arithmetic match the serial form: per-half LSH signatures
-   * (16 sign projections of the HALF vector, half-local d) mod k, then
-   * `iters` rounds of means + broadcast-scored reassignment. Returns the
-   * spilled centroid table (h, cell, d, c).
-   */
-  private def trainHalfCentroids(emb: DataFrame, idCol: String, vecCol: String,
-      half: Int, dim: Int, k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val halves = vecHalves(emb, idCol, vecCol, half, dim)
-    val parts = halves.select(col("id"), col("h"),
-        posexplode(col("hvec")).as(Seq("d", "x")))
-      .withColumn("x", col("x").cast("double"))
-    val bits = 16
-    val projs = (0 until bits).map { j =>
-      sum(when(pmod(xxhash64(lit(42), lit(j) * 65537 + col("d")), lit(2)) === 0,
-        col("x")).otherwise(-col("x"))).as(s"p$j")
+  /** The IMI split (half, dim) and kPerHalf — by default ⌈√(n/20)⌉, at
+    * least 4. */
+  private def imiShape(emb: DataFrame, vecCol: String, kPerHalf: Int): (Int, Int, Int) =
+    if (kPerHalf > 0) {
+      val (half, dim) = halfDims(vecDim(emb, vecCol, "imiPairs"))
+      (half, dim, kPerHalf)
+    } else {
+      val (n, d) = corpusShape(emb, vecCol, "imiPairs")
+      val (half, dim) = halfDims(d)
+      (half, dim, math.max(4, math.ceil(math.sqrt(n / 20.0)).toInt))
     }
-    var assign = parts.groupBy(col("id"), col("h"))
-      .agg(projs.head, projs.tail: _*)
-      .select(col("id"), col("h"),
-        pmod((0 until bits).map(j => when(col(s"p$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce((a, c) => a.bitwiseOR(c)), lit(k)).cast("int").as("cell"))
-    var cents: DataFrame = null
-    for (i <- 0 until math.max(1, iters)) {
-      cents = parts.join(assign, Seq("id", "h"))
-        .groupBy(col("h"), col("cell"), col("d")).agg(avg(col("x")).as("c"))
-      if (i < iters - 1)
-        assign = halves.join(broadcast(halfCentroidArrays(cents)), "h")
-          .select(col("id"), col("h"), col("cell"),
-            (col("cc") - lit(2.0) * GraftExtensions.graftDot(spark, col("hvec"), col("cvec")))
-              .as("dist"))
-          .groupBy(col("id"), col("h"))
-          .agg(min(struct(col("dist"), col("cell"))).as("m"))
-          .select(col("id"), col("h"), col("m.cell").as("cell"))
-    }
-    Materialize.viaParquet(cents, "imi_cents")
-  }
 
-  /** (h, cell, cvec, cc) broadcastable arrays from the (h, cell, d, c)
-    * centroid rows — [[centroidArrays]] keyed by half. */
-  private def halfCentroidArrays(cents: DataFrame): DataFrame =
-    cents.groupBy(col("h"), col("cell"))
-      .agg(sort_array(collect_list(struct(col("d"), col("c")))).as("dc"))
-      .select(col("h"), col("cell"),
-        transform(col("dc"), e => e.getField("c").cast("float")).as("cvec"),
-        aggregate(col("dc"), lit(0.0),
-          (acc, e) => acc + e.getField("c") * e.getField("c")).as("cc"))
+  private def leftHalf(vec: Column, half: Int): Column = slice(vec, 1, half)
+  private def rightHalf(vec: Column, half: Int, dim: Int): Column =
+    slice(vec, half + 1, dim - half)
 
-  /** Top-`nAssign` cells PER HALF against pre-trained half centroids,
-    * returned as the spilled (id, cl, cr) product relation (nAssign²
-    * rows per vector). One scoring pass + one window serve both halves. */
-  private def assignHalfProduct(df: DataFrame, idCol: String, vecCol: String,
-      half: Int, dim: Int, cents: DataFrame, nAssign: Int, tag: String,
-      spill: Boolean = true): DataFrame = {
+  /** Both half-vector quantizers of the IMI, trained by ONE [[lloyd]]
+    * keyed by the half h ∈ {0, 1}: each half is seeded from the 16 LSH
+    * sign projections of the HALF vector (half-local d) mod k; the longer
+    * half bounds the hyperplanes. */
+  private def trainHalves(emb: DataFrame, idCol: String, vecCol: String,
+      half: Int, dim: Int, k: Int, iters: Int): Codebooks =
+    lloyd(emb.select(col(idCol).as("id"), posexplode(array(
+        leftHalf(col(vecCol), half), rightHalf(col(vecCol), half, dim))).as(Seq("key", "v"))),
+      lshSeed(emb.sparkSession, k, dim - half), iters)._1
+
+  /** The (id, cl, cr) product relation: the `nAssign` nearest cells of
+    * each half, crossed — nAssign² rows per vector, no shuffle. */
+  private def halfProduct(df: DataFrame, idCol: String, vecCol: String,
+      half: Int, dim: Int, books: Codebooks, nAssign: Int): DataFrame = {
     val spark = df.sparkSession
-    val scored = vecHalves(df, idCol, vecCol, half, dim)
-      .join(broadcast(halfCentroidArrays(cents)), "h")
-      .select(col("id"), col("h"), col("cell"),
-        (col("cc") - lit(2.0) * GraftExtensions.graftDot(spark, col("hvec"), col("cvec")))
-          .as("dist"))
-    val w = Window.partitionBy(col("id"), col("h")).orderBy(col("dist"), col("cell"))
-    val topn = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nAssign).select(col("id"), col("h"), col("cell"))
-    val product = topn.filter(col("h") === 0).select(col("id"), col("cell").as("cl"))
-      .join(topn.filter(col("h") === 1).select(col("id"), col("cell").as("cr")), "id")
-    // spill when the product is consumed repeatedly (imiCandidates
-    // self-joins it; the corpus index is read every batch) — but a
-    // MICRO-BATCH assignment feeds exactly one join, and a per-batch
-    // parquet round-trip on the streaming hot path is pure latency
-    // (round-12 review): the caller picks
-    if (spill) Materialize.viaParquet(product, tag) else product
+    df.select(col(idCol).as("id"),
+        nearest(spark, leftHalf(col(vecCol), half), books(0), nAssign).as("__l"),
+        nearest(spark, rightHalf(col(vecCol), half, dim), books(1), nAssign).as("__r"))
+      .select(col("id"), explode(col("__l")).as("cl"), col("__r"))
+      .select(col("id"), col("cl"), explode(col("__r")).as("cr"))
   }
 
   /**
@@ -733,7 +623,7 @@ object Similarity {
    * the centroid tables are maintained index state, built once per
    * compaction epoch). Work per ingest:
    *
-   *   - batch assignment: |Δ|·2·√k broadcast dots (same O(·√k) shape the
+   *   - batch assignment: |Δ|·2·√k dots (same O(·√k) shape the
    *     corpus assignment pays),
    *   - candidate join: batch product-cells × corpus product-cells —
    *     |Δ|·occupancy rows, LINEAR in |Δ| at constant per-cell occupancy,
@@ -754,28 +644,27 @@ object Similarity {
     imiQueryIndex(imiBuildIndex(corpus, idCol, vecCol, kPerHalf, iters, nAssign),
       batch, idCol, vecCol, k)
 
-  /** The standing IMI index state: spilled half-centroid table, spilled
-    * corpus product-cell assignments, and the corpus vectors for the
-    * exact-verify stage. Build ONCE per corpus epoch with
+  /** The standing IMI index state: the half-centroid table (h, cell, d,
+    * c), spilled corpus product-cell assignments, and the corpus vectors
+    * for the exact-verify stage. Build ONCE per corpus epoch with
     * [[imiBuildIndex]]; every ingest batch then pays only its own
     * assignment + cell join via [[imiQueryIndex]] — the streaming sink
     * ([[graft.streaming.Streams.annEnrichSink]]) holds one of these
     * across micro-batches. */
   final case class ImiIndex(cents: DataFrame, corpusCells: DataFrame,
-      corpusVecs: DataFrame, half: Int, dim: Int, nAssign: Int)
+      corpusVecs: DataFrame, half: Int, dim: Int, nAssign: Int) {
+    /** `cents` read back to the driver once — every batch assignment
+      * binds these as its centroid literals. */
+    @transient private[graft] lazy val books: Codebooks = booksOf(cents, "h")
+  }
 
   /** Train the index state of [[imiIncrementalTopK]] — a corpus artifact,
     * independent of any batch. */
   def imiBuildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       kPerHalf: Int = 0, iters: Int = 2, nAssign: Int = 2): ImiIndex = {
-    val (half, dim) = halfDims(corpus, vecCol)
-    val kEff = resolveKPerHalf(corpus, kPerHalf)
-    val cents = trainHalfCentroids(corpus, idCol, vecCol, half, dim, kEff, iters)
-    val corpProduct = assignHalfProduct(corpus, idCol, vecCol, half, dim,
-      cents, nAssign, "inc_corp_cells")
-    ImiIndex(cents, corpProduct,
-      corpus.select(col(idCol).as("nbr"), col(vecCol).as("cvec")),
-      half, dim, nAssign)
+    val (half, dim, k) = imiShape(corpus, vecCol, kPerHalf)
+    val books = trainHalves(corpus, idCol, vecCol, half, dim, k, iters)
+    indexOf(books, corpus, idCol, vecCol, half, dim, nAssign)
   }
 
   /** Rebuild an [[ImiIndex]] from a PERSISTED centroid table instead of
@@ -790,33 +679,37 @@ object Similarity {
     * until an explicit index-rebuild epoch. */
   def imiBuildIndexFrom(cents: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, nAssign: Int = 2): ImiIndex = {
-    val (half, dim) = halfDims(corpus, vecCol)
-    val corpProduct = assignHalfProduct(corpus, idCol, vecCol, half, dim,
-      cents, nAssign, "inc_corp_cells")
-    ImiIndex(cents, corpProduct,
-      corpus.select(col(idCol).as("nbr"), col(vecCol).as("cvec")),
-      half, dim, nAssign)
+    val (half, dim) = halfDims(vecDim(corpus, vecCol, "imiPairs"))
+    indexOf(booksOf(cents, "h"), corpus, idCol, vecCol, half, dim, nAssign)
   }
 
+  /** An index over trained half codebooks; its `cents` is their local
+    * (h, cell, d, c) table, so reading them back costs no job. */
+  private def indexOf(books: Codebooks, corpus: DataFrame, idCol: String,
+      vecCol: String, half: Int, dim: Int, nAssign: Int): ImiIndex =
+    ImiIndex(centroidRows(corpus.sparkSession, books, Some("h")),
+      Materialize.viaParquet(halfProduct(corpus, idCol, vecCol, half, dim, books, nAssign),
+        "inc_corp_cells"),
+      corpus.select(col(idCol).as("nbr"), col(vecCol).as("cvec")),
+      half, dim, nAssign)
+
   /** Quantize a batch with a PRE-BUILT index — the (id, cl, cr)
-    * product-cell relation, |Δ|·2·√k broadcast dots, not spilled (one
+    * product-cell relation, |Δ|·2·√k dots, not spilled (one
     * consumer decides). Round 15: exposed so the streaming dedup sinks
     * can APPEND each committed micro-batch's assignments to their
     * standing cell table (the Δ×Δ fix) without re-quantizing history. */
   private[graft] def imiAssignWithIndex(index: ImiIndex, df: DataFrame,
       idCol: String, vecCol: String): DataFrame =
-    assignHalfProduct(df, idCol, vecCol, index.half, index.dim, index.cents,
-      index.nAssign, "inc_delta_cells", spill = false)
+    halfProduct(df, idCol, vecCol, index.half, index.dim, index.books, index.nAssign)
 
   /** Per new vector in `batch`, its top-`k` corpus neighbors through a
     * pre-built [[ImiIndex]] — |Δ|-sized work only: batch assignment
-    * (|Δ|·2·√k broadcast dots), cell join against the spilled corpus
+    * (|Δ|·2·√k dots), cell join against the spilled corpus
     * assignments, exact verify, bounded per-id rank. */
   def imiQueryIndex(index: ImiIndex, batch: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     val spark = batch.sparkSession
-    val batProduct = assignHalfProduct(batch, idCol, vecCol, index.half,
-      index.dim, index.cents, index.nAssign, "inc_bat_cells", spill = false)
+    val batProduct = imiAssignWithIndex(index, batch, idCol, vecCol)
     val cands = batProduct.as("q").join(index.corpusCells.as("c"), Seq("cl", "cr"))
       .filter(col("q.id") =!= col("c.id"))
       .select(col("q.id").as("id"), col("c.id").as("nbr")).distinct()
@@ -850,32 +743,113 @@ object Similarity {
         .distinct(),
       minCos)
 
+  /** A trained quantizer: per key (IMI half, PQ subspace; 0 for a flat
+    * IVF), its populated cells' double means, ascending by cell. */
+  private[graft] type Codebooks = Map[Int, Seq[(Int, Array[Double])]]
+
   /**
-   * Lloyd training to a centroid table only — the shared quantizer core:
-   * LSH-seeded cells, then `iters` rounds of (means, reassign) with the
-   * LAST reassignment elided because only the means are returned (the
-   * caller scores against centroids; a final top-1 assignment table is
-   * [[ivfIndex]]'s job). Every stage is one hash-aggregate or one
-   * broadcast-scored cut; the result is parquet-spilled because centroid
-   * consumers traverse it repeatedly.
+   * The one Lloyd kernel behind [[ivfIndex]], [[ivfPairs]], [[imiPairs]]
+   * and [[pqEncode]]: k-means over the (`key`, `v` array<float>) rows of
+   * `rows`, with every key's quantizer trained in the same plan. `seed`
+   * is each row's first cell; `steps` mean steps run, with a reassignment
+   * between consecutive ones.
+   *
+   * A mean step is ONE groupBy(key, cell) vector-mean aggregate
+   * ([[graft.functions.VectorAvgAggregator]], double sums) whose k·d
+   * result is collected to the driver. A reassignment is
+   * `graft_nearest_cells` against those means bound as a literal
+   * ([[NearestCells]]), evaluated per row inside the next step's scan:
+   * no per-dimension explode, no (vector × cell) rows, no join, and no
+   * centroid spill. The driver holds k·d doubles per key, which every
+   * caller bounds (SCALE.md).
+   *
+   * Returns the last step's means and the cell column they were averaged
+   * over (the seed when `steps` = 1).
    */
-  private def trainCentroids(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val parts = emb.select(col(idCol).as("id"), posexplode(col(vecCol)).as(Seq("d", "x")))
-      .withColumn("x", col("x").cast("double"))
-    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    var assign = lshSignatures(emb, idCol, vecCol, bits = 16)
-      .select(col("id"), pmod(col("sig"), lit(k)).cast("int").as("cell"))
-    var cents: DataFrame = null
-    for (i <- 0 until math.max(1, iters)) {
-      cents = parts.join(assign, "id")
-        .groupBy(col("cell"), col("d")).agg(avg(col("x")).as("c"))
-      if (i < iters - 1)
-        assign = nearestCell(vecs, centroidArrays(cents), spark)
+  private def lloyd(rows: DataFrame, seed: Column, steps: Int): (Codebooks, Column) = {
+    val spark = rows.sparkSession
+    var cell = seed
+    var books: Codebooks = Map.empty
+    for (i <- 0 until math.max(1, steps)) {
+      if (i > 0) cell = nearestCell(spark, books)
+      books = rows.select(col("key"), cell.as("cell"), col("v"))
+        .groupBy(col("key"), col("cell")).agg(vecAvg(col("v")).as("c"))
+        .collect().toSeq
+        .groupBy(_.getInt(0))
+        .map { case (key, rs) =>
+          key -> rs.map(r => (r.getInt(1), r.getSeq[Double](2).toArray)).sortBy(_._1)
+        }
     }
-    Materialize.viaParquet(cents, "ivf_cents")
+    (books, cell)
   }
+
+  private lazy val vecAvg = udaf(VectorAvgAggregator)
+
+  /** The IVF/IMI seed cell of a `v` of at most `dim` elements: its 16 LSH
+    * sign bits ([[graft.functions.VectorFunctions.lshSignature]], seed
+    * 42) mod k. Each ±1 hyperplane is evaluated once on the driver and
+    * bound as a float literal, so a projection is one codegen'd
+    * `graft_dot` instead of an interpreted fold. x·(±1) is exact and the
+    * dot sums in dimension order from 0.0, so every bit equals the
+    * fold's. */
+  private def lshSeed(spark: org.apache.spark.sql.SparkSession, k: Int, dim: Int): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val sig = (0 until 16).map { j =>
+      val plane = Array.tabulate(dim) { d =>
+        val h = XxHash64(Seq(Literal(42), Literal(j * 65537 + d)), 42L).eval().asInstanceOf[Long]
+        if (java.lang.Math.floorMod(h, 2L) == 0L) 1.0f else -1.0f
+      }
+      when(GraftExtensions.graftDot(spark, col("v"), lit(plane)) > 0, lit(1L << j))
+        .otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    pmod(sig, lit(k)).cast("int")
+  }
+
+  /** The `n` nearest of `cells` to `v`, nearest first ([[NearestCells]]). */
+  private def nearest(spark: org.apache.spark.sql.SparkSession, v: Column,
+      cells: Seq[(Int, Array[Double])], n: Int): Column =
+    GraftExtensions.graftNearestCells(spark, v, NearestCells.encode(cells), n)
+
+  /** Per (`key`, `v`) row, the nearest cell of its key's codebook. */
+  private def nearestCell(spark: org.apache.spark.sql.SparkSession, books: Codebooks): Column = {
+    val byKey = books.toSeq.sortBy(_._1).map { case (k, cells) =>
+      (k, nearest(spark, col("v"), cells, 1).getItem(0))
+    }
+    if (byKey.size == 1) byKey.head._2
+    else byKey.tail.foldLeft(when(col("key") === byKey.head._1, byKey.head._2)) {
+      case (acc, (k, e)) => acc.when(col("key") === k, e)
+    }
+  }
+
+  /** Codebooks as the long (key, cell, d, c) centroid table, without the
+    * key column when `keyCol` is None — a local relation, no job. */
+  private def centroidRows(spark: org.apache.spark.sql.SparkSession, books: Codebooks,
+      keyCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = for {
+      (key, cells) <- books.toSeq.sortBy(_._1)
+      (cell, c) <- cells
+      d <- c.indices
+    } yield Row.fromSeq(keyCol.map(_ => key).toSeq ++ Seq[Any](cell, d, c(d)))
+    val schema = StructType(keyCol.map(StructField(_, IntegerType)).toSeq ++ Seq(
+      StructField("cell", IntegerType), StructField("d", IntegerType),
+      StructField("c", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The inverse of [[centroidRows]]: a (keyCol, cell, d, c) table read
+    * back to the driver. */
+  private def booksOf(cents: DataFrame, keyCol: String): Codebooks =
+    cents.select(col(keyCol).cast("int"), col("cell").cast("int"), col("d").cast("int"),
+        col("c").cast("double"))
+      .collect().toSeq
+      .groupBy(_.getInt(0))
+      .map { case (key, rs) =>
+        key -> rs.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (cell, ds) =>
+          (cell, ds.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
+        }
+      }
 
   /** Per-group vector mean (centroids) — posexplode + groupBy, the
     * distributed formulation of a vector-average aggregate: partial sums
@@ -888,14 +862,15 @@ object Similarity {
   /**
    * Product quantization (Jégou et al., TPAMI 2011 — public): the d-dim
    * vector splits into `m` subspaces of d/m dims, each with its own
-   * k-entry codebook trained by the SAME broadcast-centroid-array Lloyd
-   * as [[ivfIndex]], vectorized across subspaces — every stage keys on
-   * (sub, cell), so all m codebooks train in one pipeline with no
-   * per-subspace driver loop. A vector encodes as m small codes:
-   * d·4 bytes → m·1 bytes at k ≤ 256 (32× here vs int8's 4×).
+   * k-entry codebook trained by the SAME [[lloyd]] as [[ivfIndex]], keyed
+   * by subspace — all m codebooks train in one plan with no per-subspace
+   * driver loop. Seeds are xxhash64(subvector) mod k. A vector encodes as
+   * m small codes: d·4 bytes → m·1 bytes at k ≤ 256 (32× here vs int8's
+   * 4×).
    *
-   * Returns (codes (id, sub, cell), codebook (sub, cell, cvec, cc), dim)
-   * — the tables are parquet-spilled index artifacts like [[ivfIndex]]'s,
+   * Returns (codes (id, sub, cell), codebook (sub, cell, cvec, cc), dim):
+   * the codes are a parquet-spilled index artifact like [[ivfIndex]]'s
+   * assignments, the codebook (the means of those codes) a local table,
    * and the measured dimensionality rides along so downstream helpers
    * ([[pqReconstructionRmse]], [[pqTopK]]) never re-run a driver job to
    * learn it.
@@ -903,37 +878,26 @@ object Similarity {
   def pqEncode(emb: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, k: Int = 16, iters: Int = 2): (DataFrame, DataFrame, Int) = {
     val spark = emb.sparkSession
-    // one tiny driver job to learn dimensionality — index build is
-    // already a multi-job operation, and a loud error beats a cryptic
-    // head() failure on an empty corpus
-    val firstRow = emb.select(size(col(vecCol)).as("d")).limit(1).collect()
-    require(firstRow.nonEmpty, "pqEncode: empty embedding corpus")
-    val dim = firstRow(0).getInt(0)
+    val dim = vecDim(emb, vecCol, "pqEncode")
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
     val subs = emb.select(col(idCol).as("id"), posexplode(
       array((0 until m).map(s => slice(col(vecCol), s * subDim + 1, subDim)): _*))
-      .as(Seq("sub", "svec")))
-    // deterministic data-dependent seeds, like ivfIndex's LSH buckets
-    var codes = subs.select(col("id"), col("sub"),
-      pmod(xxhash64(col("svec")), lit(k)).cast("int").as("cell"))
-    for (_ <- 0 until iters) {
-      val cents = subs
-        .select(col("id"), col("sub"), posexplode(col("svec")).as(Seq("dpos", "x")))
-        .withColumn("x", col("x").cast("double"))
-        .join(codes, Seq("id", "sub"))
-        .groupBy(col("sub"), col("cell"), col("dpos")).agg(avg(col("x")).as("c"))
-      codes = nearestSubCell(subs, subCentroidArrays(cents), spark)
-    }
-    val codesM = Materialize.viaParquet(codes, "pq_codes")
-    val book = Materialize.viaParquet(
-      subCentroidArrays(subs
-        .select(col("id"), col("sub"), posexplode(col("svec")).as(Seq("dpos", "x")))
-        .withColumn("x", col("x").cast("double"))
-        .join(codesM, Seq("id", "sub"))
-        .groupBy(col("sub"), col("cell"), col("dpos")).agg(avg(col("x")).as("c"))),
-      "pq_book")
-    (codesM, book, dim)
+      .as(Seq("key", "v")))
+    val (books, cell) = lloyd(subs,
+      pmod(xxhash64(col("v")), lit(k)).cast("int"), iters + 1)
+    val codes = Materialize.viaParquet(
+      subs.select(col("id"), col("key").as("sub"), cell.as("cell")), "pq_codes")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val bookRows = for {
+      (sub, cells) <- books.toSeq.sortBy(_._1)
+      (c, mean) <- cells
+    } yield Row(sub, c, mean.map(_.toFloat), NearestCells.squaredNorm(mean))
+    val book = spark.createDataFrame(java.util.Arrays.asList(bookRows: _*), StructType(Seq(
+      StructField("sub", IntegerType), StructField("cell", IntegerType),
+      StructField("cvec", ArrayType(FloatType)), StructField("cc", DoubleType))))
+    (codes, book, dim)
   }
 
   /** Per-vector reconstruction RMSE of a PQ encoding: decode = the
@@ -1040,30 +1004,6 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("id"))
       .limit(kTop)
   }
-
-  /** (sub, cell, d, c) relational centroids → (sub, cell, cvec, cc) array
-    * rows; m·k rows, broadcastable. The subspace-keyed twin of
-    * [[centroidArrays]]. */
-  private def subCentroidArrays(cents: DataFrame): DataFrame =
-    cents.groupBy(col("sub"), col("cell"))
-      .agg(sort_array(collect_list(struct(col("dpos"), col("c")))).as("dc"))
-      .select(col("sub"), col("cell"),
-        transform(col("dc"), e => e.getField("c").cast("float")).as("cvec"),
-        aggregate(col("dc"), lit(0.0),
-          (acc, e) => acc + e.getField("c") * e.getField("c")).as("cc"))
-
-  /** Nearest cell per (vector, subspace): the equi-join on `sub` fans each
-    * subvector out to its k candidate cells only; min(struct) combines
-    * map-side, one surviving row per (id, sub). */
-  private def nearestSubCell(subs: DataFrame, centArr: DataFrame,
-      spark: org.apache.spark.sql.SparkSession): DataFrame =
-    subs.join(broadcast(centArr), "sub")
-      .select(col("id"), col("sub"), col("cell"),
-        (col("cc") - lit(2.0) * GraftExtensions.graftDot(spark, col("svec"), col("cvec")))
-          .as("dist"))
-      .groupBy(col("id"), col("sub"))
-      .agg(min(struct(col("dist"), col("cell"))).as("m"))
-      .select(col("id"), col("sub"), col("m.cell").as("cell"))
 
   /**
    * kNN majority-vote label propagation — the auto-labeling /

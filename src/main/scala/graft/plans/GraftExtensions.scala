@@ -34,6 +34,9 @@ object GraftExtensions {
     ("graft_cosine",
       new ExpressionInfo(classOf[FloatVecCosine].getName, "graft_cosine"),
       (es: Seq[Expression]) => FloatVecCosine(es(0), es(1))),
+    ("graft_nearest_cells",
+      new ExpressionInfo(classOf[NearestCells].getName, "graft_nearest_cells"),
+      (es: Seq[Expression]) => NearestCells(es(0), es(1), es(2))),
     ("graft_simsig",
       new ExpressionInfo(classOf[FloatVecSimSig].getName, "graft_simsig"),
       (es: Seq[Expression]) => {
@@ -85,13 +88,28 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
     }
 
+  /** Register once per session: each re-registration logs a replacement
+    * warning per function, and the hot callers build many columns. */
+  private def ensure(spark: SparkSession, name: String): Unit =
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)))
+      register(spark)
+
   /** Column API over the registered functions. */
   def graftDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_dot", a, b)
+    ensure(spark, "graft_dot"); call_function("graft_dot", a, b)
   }
 
   def graftCosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("graft_cosine", a, b)
+    ensure(spark, "graft_cosine"); call_function("graft_cosine", a, b)
+  }
+
+  /** The `n` nearest cells of a centroid table bound as a literal
+    * ([[NearestCells]]); `table` is [[NearestCells.encode]]'s output. */
+  private[graft] def graftNearestCells(spark: SparkSession, vec: Column,
+      table: Array[Byte], n: Int): Column = {
+    ensure(spark, "graft_nearest_cells")
+    call_function("graft_nearest_cells", vec,
+      org.apache.spark.sql.functions.lit(table), org.apache.spark.sql.functions.lit(n))
   }
 
   def graftSimSig(spark: SparkSession, vec: Column, bits: Int, seed: Long = 42L): Column = {
@@ -118,10 +136,8 @@ object GraftExtensions {
     * for the rows the encoded index marks dead. */
   private[graft] def graftDvAlive(spark: SparkSession, file: Column, row: Column,
       index: Array[Byte]): Column = {
-    // every TxTable read with deletion vectors lands here, and each
-    // re-registration logs a replacement warning per function
-    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dv_alive")))
-      register(spark)
+    // every TxTable read with deletion vectors lands here
+    ensure(spark, "graft_dv_alive")
     call_function("graft_dv_alive", file, row, org.apache.spark.sql.functions.lit(index))
   }
 }

@@ -1,10 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 private[plans] trait FloatArrayPair { self: BinaryExpression =>
   // AbstractDataType/ExpectsInputTypes are private[sql] in Spark 4 — check by hand
@@ -182,4 +184,135 @@ case class FloatVecCosine(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/**
+ * Nearest-centroid assignment for the Lloyd quantizers
+ * ([[graft.operators.Similarity]]): `graft_nearest_cells(vec, table, n)`
+ * is the ids of the `n` cells of `table` nearest to `vec`, nearest first.
+ * A cell scores ‖c‖² − 2·v·c, with c the float-cast centroid and the dot
+ * accumulated in double over the shorter of the two arrays (the
+ * [[FloatVecDot]] loop); ties go to the lower cell id. A table with fewer
+ * than `n` cells yields all of them.
+ *
+ * `table` is a FOLDABLE binary literal in the [[NearestCells.encode]]
+ * format, decoded once per expression instance; `n` is an integer
+ * literal. Each row then costs one dot per cell inside whole-stage
+ * codegen — no (vector × cell) rows, no join, no aggregate. The plan
+ * string prints a summary of the table, not its floats.
+ */
+case class NearestCells(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_nearest_cells"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (first.dataType, second.dataType, third.dataType) match {
+      case (ArrayType(FloatType, _), BinaryType, IntegerType) =>
+        if (second.foldable && third.foldable) TypeCheckResult.TypeCheckSuccess
+        else TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires a literal centroid table and a literal n")
+      case (v, t, n) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (array<float>, binary, int), got ($v, $t, $n)")
+    }
+
+  @transient private lazy val bytes: Array[Byte] =
+    second.eval(null).asInstanceOf[Array[Byte]]
+  @transient private lazy val table: NearestCells.Table = NearestCells.decode(bytes)
+  @transient private lazy val n: Int = third.eval(null).asInstanceOf[Int]
+
+  def nearest(v: ArrayData): ArrayData = {
+    val t = table
+    val best = new Array[Int](math.min(n, t.ids.length))
+    val bestD = new Array[Double](best.length)
+    var filled = 0
+    var c = 0
+    while (c < t.ids.length) {
+      val cv = t.vecs(c)
+      val m = math.min(v.numElements(), cv.length)
+      var s = 0.0; var i = 0
+      while (i < m) { s += v.getFloat(i).toDouble * cv(i).toDouble; i += 1 }
+      val d = t.norms(c) - 2.0 * s
+      // cells arrive in ascending id order: a tie keeps the earlier cell
+      if (filled < best.length || (filled > 0 && d < bestD(filled - 1))) {
+        var j = math.min(filled, best.length - 1)
+        while (j > 0 && d < bestD(j - 1)) {
+          best(j) = best(j - 1); bestD(j) = bestD(j - 1); j -= 1
+        }
+        best(j) = t.ids(c); bestD(j) = d
+        if (filled < best.length) filled += 1
+      }
+      c += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(best)
+  }
+
+  override protected def nullSafeEval(v: Any, t: Any, k: Any): Any =
+    nearest(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearestCells", this, classOf[NearestCells].getName)
+    val v = first.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      boolean ${ev.isNull} = ${v.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      if (!${ev.isNull}) { ${ev.value} = $ref.nearest(${v.value}); }""")
+  }
+
+  private def summary: String = {
+    val cells = if (bytes.length >= 4) java.nio.ByteBuffer.wrap(bytes).getInt(0) else 0
+    s"<centroids: $cells cells, ${bytes.length} bytes>"
+  }
+  override def toString: String = s"$prettyName($first, $summary, $third)"
+  override def sql: String = s"$prettyName(${first.sql}, '$summary', ${third.sql})"
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object NearestCells {
+
+  /** A decoded centroid table: cell ids ascending, their float-cast
+    * centroids and the ‖c‖² of the double centroids. */
+  private[graft] final class Table(val ids: Array[Int], val vecs: Array[Array[Float]],
+      val norms: Array[Double])
+
+  /** The literal format: cell count, then per cell (ascending id) its id,
+    * ‖c‖² (summed in double, dimension order), dimension and float-cast
+    * coordinates. */
+  private[graft] def encode(cells: Seq[(Int, Array[Double])]): Array[Byte] = {
+    val sorted = cells.sortBy(_._1)
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeInt(sorted.size)
+    sorted.foreach { case (id, c) =>
+      out.writeInt(id)
+      out.writeDouble(squaredNorm(c))
+      out.writeInt(c.length)
+      c.foreach(x => out.writeFloat(x.toFloat))
+    }
+    out.flush()
+    bos.toByteArray
+  }
+
+  /** ‖c‖², summed in double in dimension order. */
+  private[graft] def squaredNorm(c: Array[Double]): Double =
+    c.foldLeft(0.0)((acc, x) => acc + x * x)
+
+  private[graft] def decode(bytes: Array[Byte]): Table = {
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    val n = in.getInt()
+    val ids = new Array[Int](n)
+    val norms = new Array[Double](n)
+    val vecs = new Array[Array[Float]](n)
+    (0 until n).foreach { c =>
+      ids(c) = in.getInt()
+      norms(c) = in.getDouble()
+      vecs(c) = Array.fill(in.getInt())(in.getFloat())
+    }
+    new Table(ids, vecs, norms)
+  }
 }

@@ -456,23 +456,28 @@ object Tools {
   }
 
   /** P2+A1: the `parquet-scan` tool — timed, column-projected full scan
-    * returning (rows, seconds). Column pruning reaches the parquet reader
-    * via Catalyst; `batchSize` is the vectorized reader's
-    * `columnarReaderBatchSize`, the `--batch-size` knob of
-    * `cpp/tools/parquet/parquet-scan.cc:35`. The knob is a session conf in
-    * Spark (the vectorized reader has no per-read option), so it is set
-    * for the scan and restored after. */
+    * returning (rows, seconds). The requested columns (all when empty)
+    * are materialized into the noop sink, and the row count comes from
+    * an `Observation` on the same pass: a `count()` would let Catalyst
+    * prune every column, timing the same work for any projection.
+    * `batchSize` is the vectorized reader's `columnarReaderBatchSize`,
+    * the `--batch-size` knob of `cpp/tools/parquet/parquet-scan.cc:35`.
+    * The knob is a session conf in Spark (the vectorized reader has no
+    * per-read option), so it is set for the scan and restored after. */
   def timedScan(spark: SparkSession, path: String, columns: Seq[String] = Nil,
       batchSize: Option[Int] = None): (Long, Double) = {
+    import org.apache.spark.sql.functions.{col, count, lit}
     val key = "spark.sql.parquet.columnarReaderBatchSize"
     val prev = spark.conf.getOption(key)
     batchSize.foreach(b => spark.conf.set(key, b.toString))
     try {
       val df0 = spark.read.parquet(path)
-      val df = if (columns.nonEmpty) df0.select(columns.map(org.apache.spark.sql.functions.col): _*) else df0
+      val df = if (columns.nonEmpty) df0.select(columns.map(col): _*) else df0
+      val rows = org.apache.spark.sql.Observation("timed_scan")
       val t0 = System.nanoTime()
-      val n = df.count()
-      (n, (System.nanoTime() - t0) / 1e9)
+      df.observe(rows, count(lit(1)).as("n")).write.format("noop").mode("overwrite").save()
+      val secs = (System.nanoTime() - t0) / 1e9
+      (rows.get("n").asInstanceOf[Long], secs)
     } finally if (batchSize.isDefined) {
       prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
     }

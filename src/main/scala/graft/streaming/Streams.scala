@@ -550,7 +550,7 @@ object Streams {
    * creation (a corpus artifact, spilled; the centroid table persists
    * under `outDir` and a restart reloads it — see
    * [[graft.operators.Similarity.imiBuildIndexFrom]]); each batch pays
-   * only its own assignment (|Δ|·2·√k broadcast dots) and the cell join —
+   * only its own assignment (|Δ|·2·√k dots) and the cell join —
    * never |Δ|·n, and never a retrain. Round 16 (Δ×Δ, same recipe as
    * [[semanticDedupSink]]): each committed batch's cell assignments and
    * vectors APPEND to a standing feed under `outDir`, so a later

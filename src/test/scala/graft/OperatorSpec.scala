@@ -1245,6 +1245,17 @@ class ClusterPairsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("chng"))
   }
 
+  test("the convergence probe finds a true row that sits only in the last of several files") {
+    // eight files, one per range partition; only the highest id is true
+    val df = spark.range(0, 800).repartitionByRange(8, col("id"))
+      .select(col("id"), (col("id") === 799L).as("chg"))
+    val (back, anyTrue) = graft.operators.Materialize.viaParquetAnyTrue(df, "cc_probe", "chg")
+    assert(back.inputFiles.length == 8)
+    assert(anyTrue)
+    assert(!graft.operators.Materialize.viaParquetAnyTrue(
+      df.filter(col("id") < 799L), "cc_probe", "chg")._2)
+  }
+
   test("keep-one dedup policy over jaccard clusters on crafted dups") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank"),

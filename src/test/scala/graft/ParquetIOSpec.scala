@@ -268,6 +268,31 @@ class ParquetIOSpec extends AnyFunSuite {
     assert(rows == 6000L && secs > 0.0)
   }
 
+  test("timed scan reads exactly the requested columns") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scans = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener
+        with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .foreach(s => scans.put(s.requiredSchema.fieldNames.mkString(",")))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val path = s"${TestSpark.sf}/lineitem.parquet"
+      val (rows, _) = Tools.timedScan(spark, path, Seq("l_orderkey", "l_quantity"))
+      assert(rows == 6000L)
+      assert(scans.poll(30, java.util.concurrent.TimeUnit.SECONDS) == "l_orderkey,l_quantity")
+      Tools.timedScan(spark, path)
+      assert(scans.poll(30, java.util.concurrent.TimeUnit.SECONDS) ==
+        spark.read.parquet(path).schema.fieldNames.mkString(","))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("timed scan honors --batch-size without leaking session conf (parquet-scan.cc:35)") {
     val key = "spark.sql.parquet.columnarReaderBatchSize"
     val before = spark.conf.getOption(key)

@@ -54,4 +54,17 @@ class VectorExpressionsSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("array<float>"))
   }
+
+  test("graft_nearest_cells: nearest first, ties to the lower cell, at most the table's cells") {
+    import graft.plans.NearestCells
+    // cells 1 and 2 are the same point; cell 3 is farther from (0, 1)
+    val table = NearestCells.encode(Seq(
+      3 -> Array(1.0, 0.0), 2 -> Array(0.0, 1.0), 1 -> Array(0.0, 1.0)))
+    val vecs = Seq(Some(Seq(0.0f, 1.0f)), None).toDF("v")
+    def cells(n: Int) = vecs.select(GraftExtensions.graftNearestCells(spark, col("v"), table, n))
+      .collect().map(r => Option(r.getSeq[Int](0)))
+    assert(cells(1).toSeq == Seq(Some(Seq(1)), None))
+    assert(cells(2).head == Some(Seq(1, 2)))
+    assert(cells(5).head == Some(Seq(1, 2, 3)))
+  }
 }
