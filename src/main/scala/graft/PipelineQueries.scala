@@ -702,10 +702,11 @@ object PipelineQueries {
       // guarantee-by-parameters trick as q_embed_ivf's nProbe = k. So
       // the full IVF machinery runs under the driver gate AND the output
       // hash-matches DuckDB's exact enumeration. IVF alone cannot get
-      // there: ProfileR9 measured it missing 4/14 (sf0.01) resp. 48/144
-      // (sf0.1) exact pairs at 0.45 — isotropic data defeats any space
-      // partition, the documented reason annPairs exists. Per-cell
-      // recall on CLUSTERED corpora stays pinned by IvfPairsSpec.
+      // there: ProfileR9 (last in commit 977a720) measured it missing
+      // 4/14 (sf0.01) resp. 48/144 (sf0.1) exact pairs at 0.45 —
+      // isotropic data defeats any space partition, the documented
+      // reason annPairs exists. Per-cell recall on CLUSTERED corpora
+      // stays pinned by IvfPairsSpec.
       // (round-9 follow-up: candidates union at the CANDIDATE level and
       // share one exact-verify pass — Similarity.multiIndexPairs — and
       // the quantizer trains centroids only, skipping the index build's
@@ -910,8 +911,9 @@ object PipelineQueries {
       //              decoder, whose RMSE is exactly the vector's rms
       //              coordinate (1/√dim = 0.125 on these unit-norm
       //              embeddings). Measured max 0.1125 at both SFs
-      //              (ProfileR9), and the hash seeds + exact relational
-      //              means make the value deterministic per corpus.
+      //              (ProfileR9, last in commit 977a720), and the hash
+      //              seeds + exact relational means make the value
+      //              deterministic per corpus.
       // The engine-specific code string + raw RMSE stay spec-gated
       // (PqSpec: exact reconstruction, code ranges, determinism, ADC).
       val emb = rd(s, dir, "embeddings")
@@ -936,11 +938,12 @@ object PipelineQueries {
       // |√adc − ‖q−v‖| ≤ ‖v−ĉ(v)‖, which is a THEOREM for a correct ADC
       // (adc ≡ ‖q−ĉ(v)‖²), so the flag is corpus-independent and
       // oracles as a constant. Measured-containment re-ranking was the
-      // rejected alternative: ProfileR9/R9b showed ADC top-100 still
-      // missing exact-top-20 members at both SFs even at m=64/k=256 —
-      // on an isotropic corpus reconstruction error ~ signal rms, so no
-      // honest containment width exists. ADC ranking quality stays
-      // pinned by PqSpec on exactly-reconstructible data.
+      // rejected alternative: ProfileR9/R9b (last in commit 977a720)
+      // showed ADC top-100 still missing exact-top-20 members at both
+      // SFs even at m=64/k=256 — on an isotropic corpus reconstruction
+      // error ~ signal rms, so no honest containment width exists. ADC
+      // ranking quality stays pinned by PqSpec on exactly-reconstructible
+      // data.
       val emb = rd(s, dir, "embeddings")
       val (codes, book, dim) = Similarity.pqEncode(emb, "vec_id", "embedding",
         m = 8, k = 16, iters = 2)

@@ -1,39 +1,25 @@
 package graft
 
 /**
- * Single entry point for the measurement harnesses behind SCALE.md /
- * PLANS.md claims (round-11 consolidation: 16 per-round one-off mains
- * folded into one dispatcher). Usage:
+ * Single entry point for the measurement harnesses that regenerate a
+ * claim SCALE.md, PLANS.md or a code comment still makes. Usage:
  *
  *   sbt "runMain graft.Profile <name> [args...]"
  *   sbt "runMain graft.Profile list"
  *
- * Each harness keeps its original object — the round numbering is part of
- * the provenance trail the docs cite (e.g. "ProfileR9b measured the sketch
- * floor") — but none of them is a main anymore; this dispatcher is.
- * `graft.Explain` stays a separate entry point for plan-posture review,
- * and Smoke/Verify/Bench/ToolsCli are driver contract, not profiling.
+ * A harness stays registered while a doc cites it; one no doc cites is
+ * deleted, and a comment that keeps quoting its figures names the last
+ * commit that had it. `graft.Explain` stays a separate entry point for
+ * plan-posture review, and Smoke/Verify/Bench/ToolsCli are driver
+ * contract, not profiling.
  */
 object Profile {
   private val registry: Map[String, (Array[String] => Unit, String)] = Map(
     "scale" -> (ProfileScale.run _, "synthesize /tmp sf1 (10x) and time queries at sf0.1 vs sf1 (SCALE.md)"),
     "scale100" -> (ProfileScale100.run _, "synthesize /tmp sf10 (100x) and probe the simhash/ann escape hatches (args: census simhash ann)"),
     "r11" -> (ProfileR11.run _, "IVF candidate recall operating points (also: r11 planted | r11 clustered)"),
-    "r12" -> (ProfileR12.run _, "similarity-trio phase profile (corpus/index/cands/verify/CC)"),
     "oracle-six" -> (ProfileOracleSix.run _, "sketch-cut margin for the 0.45 semantic threshold"),
-    "r9" -> (ProfileR9.run _, "round-9 query timings"),
-    "r9b" -> (ProfileR9b.run _, "sketch est-cos floor over exact top-5 pairs (kNN-ANN operating point)"),
-    "r9c" -> (ProfileR9c.run _, "round-9 follow-up timings"),
-    "cc" -> (ProfileCc.run _, "connected-components spill-interval study"),
-    "dedup" -> (ProfileDedup.run _, "dedup stage timings"),
-    "prefix" -> (ProfilePrefix.run _, "PPJoin prefix-filter effectiveness"),
-    "reuse" -> (ProfileReuse.run _, "exchange/subtree reuse probes"),
-    "round3" -> (ProfileRound3.run _, "round-3 baseline timings"),
-    "shingles" -> (ProfileShingles.run _, "shingle-stage cost"),
-    "simhash" -> (ProfileSimhash.run _, "simhash bucket-join cost"),
     "simhash-cap" -> (ProfileSimhashCap.run _, "simhash hot-block cap study"),
-    "simhash-phases" -> (ProfileSimhashPhases.run _, "simhash per-phase breakdown"),
-    "plandump-r9" -> (PlanDumpR9.run _, "round-9 plan dumps"),
     "listing" -> (ProfileListing.run _, "partition-listing wall at >=10^4 dirs: driver loop vs distributed (args: nDirs nFiles)"),
     "bpe8k" -> (ProfileBpe8k.run _, "tokenizer-scale BPE: learn+encode at >=8k rules, native-vs-fold parity (args: numMerges)"),
     "manifest" -> (ProfileStatsManifest.run _, "stats-manifest skipping at 2048 files: build/prune/refresh walls, bloom point lookup at 256 files"),

@@ -1,12 +1,10 @@
 package graft
 
 /**
- * The measurement harnesses behind SCALE.md / PLANS.md claims, folded
- * into ONE file (round 18 — the judge's accretion flag: 25 one-off
- * harness files were dead weight as separate objects). Each object keeps
- * its original name because the round numbering is part of the
- * provenance trail the docs cite; `graft.Profile` is the only main and
- * dispatches by name. File-local imports moved inside each object.
+ * The measurement harnesses behind SCALE.md / PLANS.md claims, in one
+ * file. Each object keeps the name the docs cite; `graft.Profile` is the
+ * only main and dispatches by name. File-local imports live inside each
+ * object.
  */
 
 /**
@@ -108,80 +106,14 @@ object ProfileBpe8k {
   }
 }
 
-/** One-off profiler for the connected-components loop feeding
-  * q_dedup_clusters: phase timings on sf0.1 to locate where its bench
-  * seconds go (upstream Jaccard pairs vs CC rounds vs materialize), and
-  * inline-index vs spilled-index pair generation. */
-object ProfileCc {
-  import org.apache.spark.sql.functions._
-  private[graft] def run(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[cc] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    // warm the corpus
-    docs.count()
-    for (it <- 1 to 2) {
-      t(s"it$it inline: pairs+cc") {
-        val pairs = graft.operators.Dedup.jaccardPairs(docs, "doc_id", "text")
-          .filter(col("jaccard") >= 0.6)
-        val out = graft.operators.Dedup.clusterPairs(pairs)
-        System.err.println(s"[cc] labels=${out.count()}")
-      }
-      t(s"it$it spilled: pairs+cc") {
-        val idx = t(s"it$it   spill idx") {
-          graft.operators.Materialize.viaParquet(
-            graft.operators.Dedup.featureIndex(docs, "doc_id", "text", 3, 10000),
-            "cc_idx")
-        }
-        val pairs = graft.operators.Dedup.jaccardPairsFromIndex(idx)
-          .filter(col("jaccard") >= 0.6)
-        val out = graft.operators.Dedup.clusterPairs(pairs)
-        System.err.println(s"[cc] labels=${out.count()}")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Scratch profiler for dedup pipelines at sf0.1 (not part of the contract). */
-object ProfileDedup {
-  import org.apache.spark.sql.SparkSession
-  import graft.operators.Dedup
-  def time[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    System.err.println(f"[prof] $name%-28s ${(System.nanoTime()-t0)/1e9}%8.2f s"); r
-  }
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    time("minhash pairs")(Dedup.minHashPairs(docs, "doc_id", "text").count())
-    time("simhash pairs")(Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 40).count())
-    time("jaccard pairs")(Dedup.jaccardPairs(docs, "doc_id", "text").count())
-    spark.stop()
-  }
-}
-
 /**
  * changeFeed cost vs commit-log length (round 17, SCALE.md): builds an
  * n-commit log (one tiny upsert per commit — the worst per-commit
- * fixed-cost ratio) and measures feed CONSTRUCTION (planning + chunk
- * spills) separately from execution. The flat per-commit union was
- * superlinear in Catalyst (14.9 s planning + 9.2 s execution at just
- * 40 commits); the chunked spill bounds every plan at `spillEvery`
- * branches, making the whole feed linear at a measured ~0.35 s/commit
- * fixed cost (args: nCommits, default 40).
+ * fixed-cost ratio) and measures feed CONSTRUCTION (planning) separately
+ * from execution. A flat per-commit union was superlinear in Catalyst
+ * (14.9 s planning + 9.2 s execution at just 40 commits); the one-pass
+ * feed is one adds scan, one kills scan and one full-outer join however
+ * long the log (args: nCommits, default 40).
  */
 object ProfileFeedWidth {
   import org.apache.spark.sql.SparkSession
@@ -206,7 +138,7 @@ object ProfileFeedWidth {
     println(s"[feedwidth] $n commits done")
     val t0 = System.nanoTime()
     val feed = TxTable.changeFeed(spark, t, Seq("id"))
-    feed.queryExecution.executedPlan // force planning (chunk spills run here)
+    feed.queryExecution.executedPlan // force planning
     println(f"[feedwidth] feed constructed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     val t1 = System.nanoTime()
     val counts = feed.groupBy("op").count().orderBy("op").collect()
@@ -371,107 +303,6 @@ object ProfileOracleSix {
         .select((abs(col("z.ap") - col("z.ep")) / col("z.ep")).as("rel"))
         .agg(max("rel")).as[Double].collect().head
       println(f"approx_quantile max rel err = $aq%.4f")
-    }
-    spark.stop()
-  }
-}
-
-/** Scratch profiler for the prefix-filtered jaccard stages (not part of the contract). */
-object ProfilePrefix {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
-  import graft.operators.{Dedup, Materialize}
-  def time[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"[prof] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-  }
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    val t = 0.8
-
-    // staged decomposition of jaccardPairsThresholded
-    (1 to 2).foreach { round =>
-      val idx = time(s"r$round idx materialize")(
-        Materialize.viaParquet(Dedup.shingleIndex(docs, "doc_id", "text", 3), s"pp_idx"))
-      val dfreq = idx.groupBy(col("feat")).agg(count(lit(1)).as("dfreq"))
-      val ordW = Window.partitionBy(col("id")).orderBy(col("dfreq"), col("feat"))
-      val fullFrame = ordW.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val prefix = time(s"r$round prefix materialize")(Materialize.viaParquet(
-        idx.join(dfreq, "feat")
-          .withColumn("sz", count(lit(1)).over(fullFrame))
-          .withColumn("rn", row_number().over(ordW))
-          .filter(col("rn") <= col("sz") - ceil(lit(t) * col("sz") - lit(1e-9)) + 1)
-          .select(col("id"), col("feat"), col("sz")), "pp_prefix"))
-      val cands = time(s"r$round cands materialize")(Materialize.viaParquet(
-        prefix.as("x").join(prefix.as("y"), Seq("feat"))
-          .filter(col("x.id") < col("y.id"))
-          .filter(col("y.sz") >= ceil(lit(t) * col("x.sz") - lit(1e-9)) &&
-            col("y.sz") <= floor(col("x.sz") / lit(t) + lit(1e-9)))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct(), "pp_cands"))
-      val candIds = cands.select(col("id_a").as("id"))
-        .union(cands.select(col("id_b").as("id"))).distinct()
-      val docFeats = idx.join(candIds, Seq("id"), "left_semi")
-        .groupBy(col("id"))
-        .agg(collect_list(col("feat")).as("feats"), count(lit(1)).as("sz"))
-      val out = cands
-        .join(docFeats.select(col("id").as("id_a"), col("feats").as("fa"), col("sz").as("size_a")), "id_a")
-        .join(docFeats.select(col("id").as("id_b"), col("feats").as("fb"), col("sz").as("size_b")), "id_b")
-        .withColumn("inter", size(array_intersect(col("fa"), col("fb"))).cast("long"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= t)
-      time(s"r$round verify+out")(out.write.format("noop").mode("overwrite").save())
-    }
-    time("whole op t=0.8")(
-      Dedup.jaccardPairsThresholded(docs, "doc_id", "text", minJaccard = 0.8)
-        .write.format("noop").mode("overwrite").save())
-    time("whole op t=0.6")(
-      Dedup.jaccardPairsThresholded(docs, "doc_id", "text", minJaccard = 0.6)
-        .write.format("noop").mode("overwrite").save())
-    time("full jaccard>=0.6")(
-      Dedup.jaccardPairs(docs, "doc_id", "text").filter(col("jaccard") >= 0.6)
-        .write.format("noop").mode("overwrite").save())
-
-    // experiment: aggregate-based prefix (hash agg + per-doc sort_array +
-    // slice) instead of the two windows (count full-frame + row_number)
-    (1 to 2).foreach { round =>
-      val idx = Materialize.viaParquet(Dedup.shingleIndex(docs, "doc_id", "text", 3), s"pa_idx")
-      val dfreq = idx.groupBy(col("feat")).agg(count(lit(1)).as("dfreq"))
-      val prefLen = (c: org.apache.spark.sql.Column) =>
-        (c - ceil(lit(t) * c - lit(1e-9)) + 1).cast("int")
-      val prefixAgg = time(s"agg r$round prefix materialize")(Materialize.viaParquet(
-        idx.join(dfreq, "feat")
-          .groupBy(col("id"))
-          .agg(sort_array(collect_list(struct(col("dfreq"), col("feat")))).as("fs"),
-            count(lit(1)).as("sz"))
-          .select(col("id"), col("sz"),
-            explode(slice(col("fs"), lit(1), prefLen(col("sz")))).as("s"))
-          .select(col("id"), col("s.feat").as("feat"), col("sz")), "pa_prefix"))
-      val cands = time(s"agg r$round cands materialize")(Materialize.viaParquet(
-        prefixAgg.as("x").join(prefixAgg.as("y"), Seq("feat"))
-          .filter(col("x.id") < col("y.id"))
-          .filter(col("y.sz") >= ceil(lit(t) * col("x.sz") - lit(1e-9)) &&
-            col("y.sz") <= floor(col("x.sz") / lit(t) + lit(1e-9)))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct(), "pa_cands"))
-      val candIds = cands.select(col("id_a").as("id"))
-        .union(cands.select(col("id_b").as("id"))).distinct()
-      val docFeats = idx.join(candIds, Seq("id"), "left_semi")
-        .groupBy(col("id"))
-        .agg(collect_list(col("feat")).as("feats"), count(lit(1)).as("sz"))
-      val out = cands
-        .join(docFeats.select(col("id").as("id_a"), col("feats").as("fa"), col("sz").as("size_a")), "id_a")
-        .join(docFeats.select(col("id").as("id_b"), col("feats").as("fb"), col("sz").as("size_b")), "id_b")
-        .withColumn("inter", size(array_intersect(col("fa"), col("fb"))).cast("long"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= t)
-      time(s"agg r$round verify+out")(out.write.format("noop").mode("overwrite").save())
     }
     spark.stop()
   }
@@ -698,322 +529,6 @@ object ProfileR11 {
           f"wall=$secs%.2f s")
       }
       exact.unpersist()
-    }
-    spark.stop()
-  }
-}
-
-/** Round-12 phase profile: where do the similarity trio's seconds go at
-  * sf0.1 — corpus construction, IMI index build, candidate join, exact
-  * verify, CC loop? Drives the decision whether a vectorized two-half
-  * Lloyd (the pqEncode pattern) is worth the oracle re-verification. */
-object ProfileR12 {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import graft.operators.{Dedup, Similarity}
-  private def t[A](tag: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"[r12] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
-
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-
-    val (corpus0, nC) = t("clusteredEmbeddings (lazy)")(
-      PipelineQueries.clusteredEmbeddings(emb))
-    val corpus = t("corpus spill")(
-      graft.operators.Materialize.viaParquet(corpus0, "r12_corpus"))
-    println(s"[r12] nC=$nC")
-    t("imiPairs cands+verify")(
-      Similarity.imiPairs(corpus, "vec_id", "embedding",
-        nAssign = 2, minCos = 0.9).write.format("noop").mode("overwrite").save())
-    val pairs = Similarity.imiPairs(corpus, "vec_id", "embedding",
-        nAssign = 2, minCos = 0.9)
-      .select(col("id_a"), col("id_b"))
-    t("clusterPairs on the edges")(
-      Dedup.clusterPairs(pairs).write.format("noop").mode("overwrite").save())
-    t("q_dedup_semantic end-to-end")(
-      SparkEntry.queries("q_dedup_semantic")(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-    t("q_knn_classify_ann end-to-end")(
-      SparkEntry.queries("q_knn_classify_ann")(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-    spark.stop()
-  }
-}
-
-/** Scratch measurement harness (not part of the contract): round-9
-  * operating-point measurements that let the last three rows-only queries
-  * become exact-verified and DuckDB-oracle-able, and the candidates-fed
-  * kNN register as the scale path.
-  *
-  *  1. ivfPairs candidate recall vs the exact pair set at thresholds —
-  *     if recall is 1.0 at T, the verified output equals the exact set.
-  *  2. PQ reconstruction RMSE envelope → an in-row tolerance flag bound.
-  *  3. ADC top-M containment of the exact top-20 → the re-rank width at
-  *     which PQ search returns exactly the brute-force answer.
-  *  4. Prediction equality of knnClassify fed by mined candidates vs the
-  *     exact quadratic baseline.
-  */
-object ProfileR9 {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import graft.operators.Similarity
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-
-    for (sf <- Seq("sf0.01", "sf0.1")) {
-      val dir = s"/root/testdata/$sf"
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      println(s"===== $sf =====")
-
-      // 1. ivfPairs recall vs exact pairs (registered config: auto k,
-      // iters=2, nAssign=2), sweeping the verify threshold
-      val exact = Similarity.exactCosinePairs(emb, "vec_id", "embedding", minCos = 0.25)
-        .cache()
-      val ivf = Similarity.ivfPairs(emb, "vec_id", "embedding",
-        iters = 2, nAssign = 2, minCos = 0.25).cache()
-      for (t <- Seq(0.30, 0.35, 0.40, 0.45)) {
-        val ex = exact.filter(col("cos_sim") >= t)
-        val n = ex.count()
-        val miss = ex.join(ivf.filter(col("cos_sim") >= t), Seq("id_a", "id_b"), "left_anti").count()
-        println(f"ivf_pairs cos>=$t%.2f: exact_n=$n ivf_miss=$miss")
-      }
-      exact.unpersist(); ivf.unpersist()
-
-      // 2. PQ rmse envelope at the registered config
-      val (codes, book, dim) = Similarity.pqEncode(emb, "vec_id", "embedding",
-        m = 8, k = 16, iters = 2)
-      val rmse = Similarity.pqReconstructionRmse(emb, "vec_id", "embedding",
-        codes, book, m = 8, dim = dim)
-      val Array(mx, av) = rmse.agg(max("rmse"), avg("rmse")).as[(Double, Double)]
-        .collect().flatMap(t => Array(t._1, t._2))
-      println(f"pq rmse: max=$mx%.4f avg=$av%.4f dim=$dim")
-      // rms norm of the raw vectors, for a relative bound
-      val nrm = emb.select(
-        sqrt(aggregate(col("embedding"), lit(0.0), (a, x) => a + x * x) / lit(dim)).as("rn"))
-        .agg(min("rn"), avg("rn")).as[(Double, Double)].collect().head
-      println(f"vector rms-coord: min=${nrm._1}%.4f avg=${nrm._2}%.4f")
-
-      // 3. ADC top-M containment of exact top-20 (query 0)
-      val exactTop = Similarity.topKForId(emb, "vec_id", "embedding", 0L, 20)
-        .select(col("vec_id")).as[Long].collect().toSet
-      for (mWide <- Seq(40, 60, 100)) {
-        val adc = Similarity.pqTopK(emb, "vec_id", "embedding", codes, book,
-          m = 8, dim = dim, queryId = 0L, kTop = mWide)
-          .select(col("id")).as[Long].collect().toSet
-        println(s"adc top-$mWide contains exact top-20: ${exactTop.subsetOf(adc)} " +
-          s"(missing ${(exactTop -- adc).size})")
-      }
-
-      // 4. kNN prediction equality: candidates vs exact
-      val exactPred = Similarity.knnClassify(emb, "vec_id", "embedding", "label", k = 5)
-        .select("id", "pred_label").cache()
-      for (nA <- Seq(2, 4)) {
-        val cands = Similarity.ivfPairs(emb, "vec_id", "embedding",
-          iters = 2, nAssign = nA, minCos = -1.0)
-        val annPred = Similarity.knnClassify(emb, "vec_id", "embedding", "label",
-          k = 5, candidates = Some(cands)).select("id", "pred_label")
-        val nDiff = exactPred.as("e").join(annPred.as("a"), "id")
-          .filter(col("e.pred_label") =!= col("a.pred_label")).count()
-        val nMissing = exactPred.join(annPred, Seq("id"), "left_anti").count()
-        println(s"knn candidates nAssign=$nA: pred_diff=$nDiff missing_ids=$nMissing")
-      }
-      exactPred.unpersist()
-    }
-    spark.stop()
-  }
-}
-
-/** Round-9 follow-up measurements after ProfileR9 showed IVF/PQ bucketing
-  * cannot reach recall 1.0 on the isotropic corpus:
-  *  1. PQ (m,k) grid → the operating point where ADC top-M re-rank
-  *     provably returns the exact top-20.
-  *  2. Sketch est-cos floor over each vector's exact top-5 pairs → the
-  *     minEstCos cut for candidates-fed kNN with prediction equality.
-  *  3. Sanity: ivf ∪ sketch candidates exact-verified == exact pair set.
-  */
-object ProfileR9b {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.expressions.Window
-  import graft.operators.Similarity
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-
-    for (sf <- Seq("sf0.01", "sf0.1")) {
-      val dir = s"/root/testdata/$sf"
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      println(s"===== $sf =====")
-
-      // 1. PQ grid: rmse + ADC containment of exact top-20
-      val exactTop = Similarity.topKForId(emb, "vec_id", "embedding", 0L, 20)
-        .select(col("vec_id")).as[Long].collect().toSet
-      for ((m, k, iters) <- Seq((32, 64, 2), (64, 256, 2))) {
-        val t0 = System.nanoTime()
-        val (codes, book, dim) = Similarity.pqEncode(emb, "vec_id", "embedding",
-          m = m, k = k, iters = iters)
-        val mx = Similarity.pqReconstructionRmse(emb, "vec_id", "embedding",
-          codes, book, m, dim).agg(max("rmse")).as[Double].collect().head
-        val conts = Seq(30, 60).map { mWide =>
-          val adc = Similarity.pqTopK(emb, "vec_id", "embedding", codes, book,
-            m, dim, queryId = 0L, kTop = mWide)
-            .select(col("id")).as[Long].collect().toSet
-          s"top$mWide=${(exactTop -- adc).size}miss"
-        }
-        println(f"pq m=$m k=$k iters=$iters: max_rmse=$mx%.4f ${conts.mkString(" ")} " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
-
-      // 2. est-cos floor over exact top-5 pairs (the kNN candidate cut)
-      val bits = 512
-      val sigs = emb.select(col("vec_id").as("id"),
-        graft.plans.GraftExtensions.graftSimSig(spark, col("embedding"), bits, 42L).as("sig"))
-      val exact = Similarity.exactCosinePairs(emb, "vec_id", "embedding", minCos = -1.0)
-      val sym = exact.select(col("id_a").as("id"), col("id_b").as("nbr"), col("cos_sim"))
-        .unionAll(exact.select(col("id_b").as("id"), col("id_a").as("nbr"), col("cos_sim")))
-      val w = Window.partitionBy(col("id")).orderBy(col("cos_sim").desc, col("nbr"))
-      val top5 = sym.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
-        .select(col("id"), col("nbr"), col("cos_sim"))
-      val hammingXY = (0 until bits / 64).map(wd =>
-          bit_count(element_at(col("xsig"), wd + 1).bitwiseXOR(element_at(col("ysig"), wd + 1))))
-        .reduce(_ + _)
-      val withEst = top5
-        .join(sigs.select(col("id").as("xid"), col("sig").as("xsig")), col("id") === col("xid"))
-        .join(sigs.select(col("id").as("yid"), col("sig").as("ysig")), col("nbr") === col("yid"))
-        .select(col("cos_sim"),
-          cos(lit(math.Pi) * hammingXY.cast("double") / lit(bits.toDouble)).as("est"))
-      val st = withEst.agg(min("cos_sim"), min("est")).as[(Double, Double)].collect().head
-      println(f"top5 pairs: min_cos=${st._1}%.4f min_est=${st._2}%.4f")
-      // candidate fraction at cuts near the floor
-      val n = emb.count()
-      for (cut <- Seq(st._2 - 0.02, st._2 - 0.05)) {
-        val frac = Similarity.annPairs(emb, "vec_id", "embedding",
-          minEstCos = cut, minCos = -1.0).count().toDouble / (n * (n - 1) / 2)
-        println(f"annPairs cut=$cut%.3f candidate_frac=$frac%.3f")
-      }
-
-      // 3. ivf ∪ sketch == exact at 0.45
-      val uni = Similarity.ivfPairs(emb, "vec_id", "embedding", iters = 2,
-          nAssign = 2, minCos = 0.45)
-        .unionByName(Similarity.annPairs(emb, "vec_id", "embedding", minCos = 0.45))
-        .distinct()
-      val ex45 = exact.filter(col("cos_sim") >= 0.45)
-      val a = uni.count(); val b = ex45.count()
-      val miss = ex45.join(uni, Seq("id_a", "id_b"), "left_anti").count()
-      println(s"union==exact@0.45: union_n=$a exact_n=$b miss=$miss")
-    }
-    spark.stop()
-  }
-}
-
-/** Component timing for the round-9 q_embed_ivf_pairs union (9.8 s at
-  * sf0.1 vs 3.4 s for the old IVF-only form): which stage pays. */
-object ProfileR9c {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import graft.operators.Similarity
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    def time(tag: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"[r9c] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    }
-    emb.count()
-    // twice each: first run takes codegen/JIT warmup
-    for (round <- 1 to 2) {
-      println(s"--- round $round ---")
-      time("ivfPairs(0.45)") {
-        Similarity.ivfPairs(emb, "vec_id", "embedding", iters = 2, nAssign = 2,
-          minCos = 0.45).write.format("noop").mode("overwrite").save()
-      }
-      time("annPairs(0.45)") {
-        Similarity.annPairs(emb, "vec_id", "embedding", minCos = 0.45)
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("union+distinct+sort") {
-        Similarity.ivfPairs(emb, "vec_id", "embedding", iters = 2, nAssign = 2,
-            minCos = 0.45)
-          .unionByName(Similarity.annPairs(emb, "vec_id", "embedding", minCos = 0.45))
-          .distinct()
-          .orderBy(col("cos_sim").desc, col("id_a"), col("id_b"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("ivfIndex only") {
-        val (a, c) = Similarity.ivfIndex(emb, "vec_id", "embedding", k = 40, iters = 2)
-        a.count(); c.count()
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Scratch: confirm AQE stage reuse in the executed q_dedup_jaccard plan
-  * (not part of the contract). */
-object ProfileReuse {
-  import org.apache.spark.sql.SparkSession
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val df = SparkEntry.queries("q_dedup_jaccard")(spark, "/root/testdata/sf0.01")
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan.toString
-    println("[reuse] ReusedExchange/Stage occurrences: " +
-      ("ReusedExchange|ReusedSubquery|StageReuse|reused".r.findAllIn(plan).size))
-    println(plan.linesIterator.filter(l => l.contains("Reused") || l.contains("TableCacheQueryStage")).mkString("\n"))
-    spark.stop()
-  }
-}
-
-/** Scratch profiler: time a named subset of registered queries at a given
-  * sf dir (not part of the contract). Usage: runMain graft.ProfileRound3 q1 q2... */
-object ProfileRound3 {
-  import org.apache.spark.sql.SparkSession
-  private[graft] def run(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val names = if (args.nonEmpty) args.toSeq else Seq("q_embed_ann", "q_dedup_simhash")
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[prof] $name%-24s run$i ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
-      val leaked = spark.sparkContext.getPersistentRDDs
-      if (leaked.nonEmpty) println(s"[prof] $name LEAKED ${leaked.size} persistent RDDs")
     }
     spark.stop()
   }
@@ -1555,70 +1070,6 @@ object ProfileScale100 {
   }
 }
 
-object ProfileShingles {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.expressions.Window
-  import graft.functions.TextFunctions._
-  def time[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    System.err.println(f"[prof] $name%-28s ${(System.nanoTime()-t0)/1e9}%8.2f s"); r
-  }
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    time("warmup count")(docs.count())
-    // current: per-row HOF construction
-    time("HOF shingles explode")(
-      docs.select(col("doc_id"), explode(distinctShingles(col("text"), 3)).as("f")).count())
-    time("HOF shingles explode x2")(
-      docs.select(col("doc_id"), explode(distinctShingles(col("text"), 3)).as("f")).count())
-    // relational: posexplode + window lead
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val rel = docs.select(col("doc_id"), posexplode(split(col("text"), " +")).as(Seq("pos", "tok")))
-      .select(col("doc_id"), concat_ws(" ", col("tok"),
-        lead(col("tok"), 1).over(w), lead(col("tok"), 2).over(w)).as("f"),
-        lead(col("tok"), 2).over(w).as("ok"))
-      .filter(col("ok").isNotNull).select(col("doc_id"), col("f")).distinct()
-    time("window-lead shingles")(rel.count())
-    time("window-lead shingles x2")(rel.count())
-    spark.stop()
-  }
-}
-
-/** Scratch profiler: hamming distance of simhash sigs vs exact jaccard on
-  * the test corpus (not part of the contract). */
-object ProfileSimhash {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions._
-  import graft.operators.Dedup
-  import graft.functions.TextFunctions._
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.1")) {
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-      val sigs = Dedup.simHashSignatures(docs, "doc_id", "text", k = 3)
-      val jp = Dedup.jaccardPairs(docs, "doc_id", "text").filter(col("jaccard") >= 0.5)
-      val joined = jp
-        .join(sigs.select(col("id").as("id_a"), col("sig").as("sa")), "id_a")
-        .join(sigs.select(col("id").as("id_b"), col("sig").as("sb")), "id_b")
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          hamming64(col("sa"), col("sb")).as("hamming"))
-        .orderBy(col("jaccard").desc)
-      println(s"== $sf : jaccard>=0.5 pairs with simhash hamming ==")
-      joined.collect().foreach(r => println(f"${r.getLong(0)}%6d ${r.getLong(1)}%6d j=${r.getDouble(2)}%.3f h=${r.getInt(3)}%d"))
-    }
-    spark.stop()
-  }
-}
-
 object ProfileSimhashCap {
   import org.apache.spark.sql.SparkSession
   import graft.operators.Dedup
@@ -1633,47 +1084,6 @@ object ProfileSimhashCap {
       val t0 = System.nanoTime()
       val n = Dedup.simHashPairs(sf1, "doc_id", "text", hotBucketCap = cap).count()
       println(f"[cap] cap=$cap%-11d pairs=$n ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    }
-    spark.stop()
-  }
-}
-
-/** Scratch profiler: per-phase timings of the q_dedup_simhash shape at
-  * sf0.1 — spilled index, signature aggregate, banded bucket join to
-  * candidates, exact verification — to locate its bench seconds. */
-object ProfileSimhashPhases {
-  import org.apache.spark.sql.functions._
-  import graft.operators.{Dedup, Materialize}
-  private[graft] def run(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[sh] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    docs.count()
-    for (it <- 1 to 2) {
-      val idx = t(s"it$it spill idx") {
-        Materialize.viaParquet(Dedup.shingleIndex(docs, "doc_id", "text", 3), s"shp_idx")
-      }
-      val sigs = t(s"it$it signatures") {
-        val s = Materialize.viaParquet(Dedup.simHashSignaturesFromFeats(idx), "shp_sigs")
-        s.count(); s
-      }
-      val cands = t(s"it$it cands (bucket join)") {
-        val c = Materialize.viaParquet(
-          Dedup.simHashPairsFromFeats(idx).select(col("id_a"), col("id_b")), "shp_cands")
-        System.err.println(s"[sh] cands=${c.count()}"); c
-      }
-      t(s"it$it verify") {
-        val v = Dedup.verifyJaccardOnIndex(cands, idx).filter(col("jaccard") >= 0.9)
-        System.err.println(s"[sh] verified=${v.count()}")
-      }
     }
     spark.stop()
   }
@@ -2088,29 +1498,6 @@ object ProfileTxTable17 {
       agg(TxTable.read(spark, Root))
     }
     println(s"[txtable17] committed=${TxTable.committedIds(Root)}")
-    spark.stop()
-  }
-}
-
-/** Plan-audit helper: dump the formatted physical plan of the named
-  * registered queries (args; defaults to the round-9 additions) at
-  * sf0.01 — the evidence source for PLANS.md. */
-object PlanDumpR9 {
-  import org.apache.spark.sql.SparkSession
-  private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = "/root/testdata/sf0.01"
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("q_sample_temperature", "q_dedup_keep_best", "q_bm25", "q_dedup_containment")
-    for (q <- names) {
-      println(s"===== $q =====")
-      println(SparkEntry.queries(q)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(8000))
-    }
     spark.stop()
   }
 }

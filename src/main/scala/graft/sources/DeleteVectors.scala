@@ -134,25 +134,21 @@ object DeleteVectors {
   private[sources] def applyVectors(base: DataFrame, index: Index): DataFrame =
     applyVectorsKeepId(base, index).drop("__dv_file", "__dv_row")
 
-  /** The rows an index KILLS — the inverse of [[applyVectors]]. The
-    * caller bounds the scan to the files the vectors reference. Feeds
-    * [[TxTable.changeFeed]]'s per-commit kill resolution. */
-  private[sources] def killedRows(base: DataFrame, index: Index): DataFrame =
-    base.filter(!index.alive(base)).drop("__dv_file", "__dv_row")
-
-  /** The rows each commit's vectors KILL, labelled `__commit` — a row
-    * emits once per commit whose bit kills it, which is what the
-    * one-pass change feed diffs per commit, so these vectors are not
-    * OR-folded. A broadcast hash join on (file, word = row/64) against
-    * the vectors as a local relation, then the bit test. */
+  /** The rows each commit's vectors KILL, labelled with their commit in
+    * column `commitCol` — a row emits once per commit whose bit kills
+    * it, which is what the change feed diffs per commit, so these
+    * vectors are not OR-folded. The inverse of [[applyVectors]]; the
+    * caller bounds the scan to the files the vectors reference. A
+    * broadcast hash join on (file, word = row/64) against the vectors as
+    * a local relation, then the bit test. */
   private[sources] def killedRowsByCommit(base: DataFrame,
-      vectors: Seq[(Long, FileVector)]): DataFrame = {
+      vectors: Seq[(Long, FileVector)], commitCol: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rows = vectors.flatMap { case (k, v) =>
       v.dv.map { case (w, m) => org.apache.spark.sql.Row(k, v.file, w, m) }
     }
     val dv = base.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("__commit", LongType), StructField("__dv_fp", StringType),
+      StructField(commitCol, LongType), StructField("__dv_fp", StringType),
       StructField("__dv_word", LongType), StructField("__dv_mask", LongType))))
     base.join(broadcast(dv),
       base("__dv_file") === dv("__dv_fp") &&

@@ -43,16 +43,32 @@ object ParquetIO {
     * Spark's own inference applies to the one footer it reads (the
     * schema Spark stored in the footer's key-value metadata when
     * present, else the parquet types under the session's conversion
-    * flags), without the job inference runs. */
+    * flags), without the job inference runs. Every level is nullable,
+    * as Spark's file scan reads it whatever the footer says, so two
+    * files that differ only in `required` vs `optional` compare equal. */
   private[sources] def footerSchema(
       file: org.apache.hadoop.fs.Path): org.apache.spark.sql.types.StructType = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, Fs.conf()))
-    try org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    try nullable(org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file, r.getFooter),
         new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
     finally r.close()
+  }
+
+  /** `t` with every field, element and value nullable. */
+  private def nullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
   }
 
   /** The first data file of a FLAT parquet input — a file, or a

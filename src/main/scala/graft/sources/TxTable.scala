@@ -1440,31 +1440,38 @@ object TxTable {
 
   /**
    * Row-level CHANGE FEED out of the commit log (round 17) — the
-   * merge-on-read twin of [[ParquetIO.changeFeed]]: for each commit
-   * k ≥ `fromCommit`, the commit's adds (its data dir) are diffed by
-   * `keys` against its kills (`_txn/dv/<k>` resolved back through row
-   * identity — a scan bounded by the files the commit TOUCHED, never
-   * the table), emitting `op ∈ {i, u, d}` rows with the surviving
-   * payload and a `commit` column. An update is one `u` (new values),
-   * a pure delete one `d` (last-known values), a pure insert one `i`;
-   * a kill+re-add with identical payload — a [[compactFiles]] move —
-   * compares equal and is feed-INVISIBLE, and [[checkpoint]] commits
-   * (which supersede rather than change) are skipped, so maintenance
-   * never pollutes the feed. Replaying the feed in commit order
-   * reconstructs any snapshot; requires commits ≥ `fromCommit` to be
-   * unexpired. Cost: Σ per-commit (files touched) — run it at CDC
+   * merge-on-read twin of [[ParquetIO.changeFeed]]: for each commit k
+   * in [`fromCommit`, `toCommit`], the commit's adds (its data dir) are
+   * diffed by `keys` against its kills (`_txn/dv/<k>` resolved back
+   * through row identity — a scan bounded by the files the commit
+   * TOUCHED, never the table), emitting `op ∈ {i, u, d}` rows with the
+   * surviving payload and a `commit` column. An update is one `u` (new
+   * values), a pure delete one `d` (last-known values), a pure insert
+   * one `i`; a kill+re-add with identical payload — a [[compactFiles]]
+   * move — compares equal and is feed-INVISIBLE, and [[checkpoint]]
+   * commits (which supersede rather than change) are skipped, so
+   * maintenance never pollutes the feed. Replaying the feed in commit
+   * order reconstructs any snapshot; requires commits ≥ `fromCommit` to
+   * be unexpired. Cost: Σ per-commit (files touched) — run it at CDC
    * cadence, before [[checkpoint]]+[[expire]] collapse the history.
    *
-   * Long logs do NOT widen the plan: per-commit deltas fold in chunks
-   * of `spillEvery`, each chunk spilled once to scratch parquet (the
-   * repo's spill-once candidate-relation pattern), so Catalyst plans
-   * O(spillEvery) branches at a time instead of one branch per commit —
-   * measured at 40 commits: 14.9 s of pure PLANNING on the flat union
-   * vs bounded chunk plans (SCALE.md round-17).
+   * The whole range is ONE diff: one scan of every feed commit's data
+   * dir, each row's commit read from its file's `c<k>` dir
+   * ([[commitDirOf]]'s rule, so flat and hive-partitioned files both
+   * resolve); one scan of the union kill-file set, each killed row
+   * labelled by the commit whose vector kills it; one full-outer join
+   * keyed (keys, commit). The join key carries the commit, so adds and
+   * kills never compare across commits, and the plan keeps O(1) join
+   * branches however long the log. Schema drift is the scans' own
+   * by-name union ([[scanGroups]]); both sides are then widened to the
+   * union of their columns, null where a commit lacks one, so a column
+   * absent from both sides of a commit compares equal.
+   *
+   * A table column named `op` or `commit` (any case) would clash with
+   * the feed's own columns, so the call fails up front naming it.
    */
   def changeFeed(spark: SparkSession, root: String, keys: Seq[String],
-      fromCommit: Long = 0L, spillEvery: Int = 8,
-      withPreimage: Boolean = false,
+      fromCommit: Long = 0L, withPreimage: Boolean = false,
       toCommit: Long = Long.MaxValue): DataFrame = {
     require(keys.nonEmpty, "txtable.changeFeed needs key columns")
     val all = committedIds(root)
@@ -1473,126 +1480,48 @@ object TxTable {
     val feedIds = all.filter(k =>
       k >= fromCommit && k <= toCommit && !cps.contains(k))
     // the feed commits' sidecars, read once on the driver: every
-    // commit's touched-file list and its kills, with no Spark job
+    // commit's touched files and its kills, with no Spark job
     val vectors = dvVectors(root, feedIds)
-    val vectorsOf = vectors.groupBy(_._1)
-    val killFiles: Map[Long, Seq[String]] = vectorsOf.map { case (k, v) =>
-      k -> v.map(_._2.file).distinct.sorted
-    }
-    // ONE-PASS multi-commit delta (round 22, r21 verdict #6): when every
-    // involved commit dir is flat and shares one footer signature — the
-    // overwhelmingly common case; schema evolution and hive layouts take
-    // the per-commit fallback below — the whole feed is ONE diff: one
-    // scan of all adds dirs (commit attributed from the file path), one
-    // scan of the union kill-file set joined against the commit-labeled
-    // vectors, one full-outer join keyed (commit, keys). The
-    // per-commit form planned and executed one kill-resolution join PER
-    // COMMIT (the r21 profile's q_incr_agg_cdc/q_mor_change_feed cost);
-    // the fold produces the same rows — the join key carries the commit,
-    // so every comparison stays within its commit — with O(1) plan
-    // branches however long the log, which also supersedes the
-    // spillEvery chunking (that existed to bound PLANNING width).
-    val addDirs = feedIds.map(dataDir(root, _)).filter(Fs.isDirectory(_))
-    val allKillFiles = killFiles.values.flatten.toSeq.distinct.sorted
-    val involved = (addDirs ++ allKillFiles.map(commitDirOf)).distinct
-    // the one-pass plan reserves `__commit`/`commit`/`op` working names;
-    // a table whose OWN columns collide routes to the per-commit path
-    // (whose behavior for such tables — `withColumn` replacement —
-    // predates the one-pass plan and stays untouched)
-    val reserved = Set("commit", "__commit", "op")
-    involved.map(flatSchema).distinct match {
-      case Seq(Some(schema)) if !schema.fieldNames.exists(n => reserved(n.toLowerCase)) =>
-        return onePassFeed(spark, keys, addDirs, allKillFiles, vectors,
-          schema, withPreimage)
-      case _ =>
-    }
-    val feeds = feedIds.flatMap(k =>
-      commitChanges(spark, root, k, keys, killFiles.getOrElse(k, Seq.empty),
-        DeleteVectors.fold(vectorsOf.getOrElse(k, Seq.empty).map(_._2)), withPreimage))
-    if (feeds.isEmpty) {
-      val base = read(spark, root)
-      val payload = base.columns.filterNot(keys.contains).toSeq
-      base.select(keys.map(col) ++ Seq(lit("").as("op")) ++
-        payload.map(col) :+ lit(0L).as("commit"): _*).filter(lit(false))
-    } else {
-      def union(ds: Seq[DataFrame]): DataFrame =
-        ds.reduce(_.unionByName(_, allowMissingColumns = true))
-      val chunks = feeds.grouped(math.max(1, spillEvery)).toSeq
-      if (chunks.size <= 1) union(feeds)
-      else union(chunks.map(c =>
-        graft.operators.Materialize.viaParquet(union(c), "txfeed")))
-    }
-  }
-
-  /** The one-pass feed body: commit-labeled kills diffed to
-    * commit-labeled adds in ONE full-outer join on (commit, keys) —
-    * emits exactly the rows the per-commit [[commitChanges]] union
-    * emits for uniform-schema flat commits (the join key carries the
-    * commit, so adds/kills never compare across commits; a kill+re-add
-    * with identical payload inside one commit still compares equal and
-    * stays feed-invisible). Every scan reads with the commits' shared
-    * footer `schema`. */
-  private def onePassFeed(spark: SparkSession, keys: Seq[String],
-      addDirs: Seq[String], killFilesAll: Seq[String],
-      vectors: Seq[(Long, DeleteVectors.FileVector)],
-      schema: org.apache.spark.sql.types.StructType,
-      withPreimage: Boolean): DataFrame = {
-    val commitOfParent =
-      regexp_extract(element_at(split(col("_metadata.file_path"), "/"), -2),
-        "^c?(\\d+)$", 1).cast("long").as("__commit")
-    val adds: Option[DataFrame] =
-      if (addDirs.isEmpty) None
-      else Some(spark.read.schema(schema).parquet(addDirs: _*)
-        .withColumn("__commit", commitOfParent))
-    val kills: Option[DataFrame] =
-      if (killFilesAll.isEmpty) None
-      else Some(DeleteVectors.killedRowsByCommit(
-        DeleteVectors.scanWithRowId(spark, killFilesAll, schema = Some(schema)), vectors))
-    val some = adds.orElse(kills).get
-    val o = kills.getOrElse(some.filter(lit(false)))
-    val n = adds.getOrElse(some.filter(lit(false)))
-    val payload = n.columns.filterNot((keys :+ "__commit").contains).toSeq
-    ParquetIO.changeFeed(o, n, keys :+ "__commit", withPreimage)
-      .select(keys.map(col) ++ Seq(col("op")) ++ payload.map(col) :+
-        col("__commit").as("commit"): _*)
-  }
-
-  /** One commit's i/u/d delta: kills (rows `vectors` marks dead, over
-    * the precomputed `killFiles` the commit touched) diffed to adds (the
-    * data dir) by key — [[ParquetIO.changeFeed]] does the comparing;
-    * schema drift between the two sides reconciles by name first.
-    * None when the commit changed nothing. */
-  private def commitChanges(spark: SparkSession, root: String, k: Long,
-      keys: Seq[String], killFiles: Seq[String], vectors: DeleteVectors.Index,
-      withPreimage: Boolean): Option[DataFrame] = {
-    val dDir = dataDir(root, k)
-    val adds =
-      if (Fs.isDirectory(dDir)) Some(ParquetIO.readFlat(spark, dDir)) else None
-    val kills =
-      if (killFiles.isEmpty) None
-      else Some(DeleteVectors.killedRows(scanResolvedFiles(spark, killFiles), vectors))
-    if (adds.isEmpty && kills.isEmpty) return None
-    // widen both sides to the union schema (nulls for the missing leg)
-    // so the diff survives schema evolution between commits
-    val fields = (adds.toSeq ++ kills.toSeq).flatMap(_.schema.fields)
+    val addDirs = existingDataDirs(root, feedIds)
+    val killFiles = vectors.map(_._2.file).distinct.sorted
+    val adds = Some(addDirs).filter(_.nonEmpty).map(scanResolved(spark, _))
+    val killScan = Some(killFiles).filter(_.nonEmpty).map(scanResolvedFiles(spark, _))
+    val fields = (adds.toSeq ++ killScan).flatMap(_.schema.fields)
+      .filterNot(f => f.name == "__dv_file" || f.name == "__dv_row")
       .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
         (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
       }
-    def widen(dfo: Option[DataFrame]): DataFrame = {
-      val proto = dfo.orElse(adds).orElse(kills).get
-      // LocalRelation-backed empty so PropagateEmptyRelation can
-      // collapse the one-sided diff (adds-only commit → plain "i"
-      // projection, no full-outer join)
-      val df = dfo.getOrElse(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        proto.schema))
-      df.select(fields.map { f =>
+    lazy val base = read(spark, root)
+    val columns = if (fields.isEmpty) base.columns.toSeq else fields.map(_.name)
+    val clash = columns.filter(c => Set("op", "commit")(c.toLowerCase))
+    require(clash.isEmpty, s"txtable.changeFeed: table column(s) " +
+      s"${clash.mkString(", ")} clash with the feed's op/commit columns")
+    val payload = columns.filterNot(keys.contains)
+    if (fields.isEmpty)
+      return base.select(keys.map(col) ++ Seq(lit("").as("op")) ++
+        payload.map(col) :+ lit(0L).as("commit"): _*).filter(lit(false))
+    // the working commit column, under a name no table column uses
+    val commitCol = Iterator.iterate("__commit")(_ + "_")
+      .find(n => !columns.exists(_.equalsIgnoreCase(n))).get
+    val ofFile = regexp_extract(col("__dv_file"), "^.*/data/c(\\d+)/", 1).cast("long")
+    def widen(side: Option[DataFrame]): DataFrame = side match {
+      case Some(df) => df.select(fields.map { f =>
         if (df.columns.contains(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+      } :+ col(commitCol): _*)
+      // LocalRelation-backed empty, so PropagateEmptyRelation collapses
+      // the one-sided diff to a plain projection
+      case None => spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType(
+          fields :+ org.apache.spark.sql.types.StructField(
+            commitCol, org.apache.spark.sql.types.LongType)))
     }
-    Some(ParquetIO.changeFeed(widen(kills), widen(adds), keys, withPreimage)
-      .withColumn("commit", lit(k)))
+    val n = widen(adds.map(_.withColumn(commitCol, ofFile)))
+    val o = widen(killScan.map(DeleteVectors.killedRowsByCommit(_, vectors, commitCol)))
+    ParquetIO.changeFeed(o, n, keys :+ commitCol, withPreimage)
+      .select(keys.map(col) ++ Seq(col("op")) ++ payload.map(col) :+
+        col(commitCol).as("commit"): _*)
   }
 
   /**
@@ -1612,8 +1541,7 @@ object TxTable {
    * that retract ([[graft.operators.Materialize.incrementalAggCdc]]).
    */
   def changeFeedFrom(spark: SparkSession, root: String, keys: Seq[String],
-      cursor: Long, withPreimage: Boolean = false,
-      spillEvery: Int = 8): Option[(DataFrame, Long)] = {
+      cursor: Long, withPreimage: Boolean = false): Option[(DataFrame, Long)] = {
     val all = committedIds(root)
     require(all.nonEmpty, s"txtable: nothing committed under $root")
     // LOUD, never lossy (round 18): if maintenance expired commits the
@@ -1645,8 +1573,7 @@ object TxTable {
     // listing and changeFeed's own would otherwise be emitted both now
     // and after the advanced cursor — a duplicate
     else Some((changeFeed(spark, root, keys, fromCommit = cursor + 1,
-      spillEvery = spillEvery, withPreimage = withPreimage, toCommit = tip),
-      tip))
+      withPreimage = withPreimage, toCommit = tip), tip))
   }
 
   /** Scheme-insensitive identity for crossing the `_metadata.file_path`

@@ -36,10 +36,10 @@ import graft.sources.TxTable
  * DSv2 read: this is the V1 `Source` API (the one Delta's own streaming
  * source ships on) because `getBatch` returns a DATAFRAME — the
  * library's own [[TxTable.changeFeed]] plan with its vectorized parquet
- * scans, sidecar-driven kill resolution, and chunk-spilled unions — so
- * nothing re-implements parquet reading behind a row-based
- * `PartitionReader`, and a batch over 40 commits plans in chunk-bounded
- * time exactly like the batch API.
+ * scans, sidecar-driven kill resolution, and one diff over the whole
+ * commit range — so nothing re-implements parquet reading behind a
+ * row-based `PartitionReader`, and a batch over 40 commits plans in the
+ * same constant width as the batch API.
  *
  * FIRST batch (no prior offset), by `startingCursor`:
  *  - absent (default): SNAPSHOT BOOTSTRAP — the live table at the

@@ -991,4 +991,52 @@ class TxTableSpec extends AnyFunSuite {
     assert(started.isEmpty, s"TxTable.read ran Spark jobs: ${started.toArray.mkString("; ")}")
     assert(snap.count() === 1000L - 334L + 1L)
   }
+
+  test("changeFeed rejects a table column named op, naming it") {
+    import spark.implicits._
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, Seq((1L, "x", 0L)).toDF("id", "op", "version"))
+    val one = intercept[IllegalArgumentException](TxTable.changeFeed(spark, t, Seq("id")))
+    assert(one.getMessage.contains("op"), one.getMessage)
+    TxTable.upsert(spark, t, Seq((2L, "y", 1L)).toDF("id", "op", "version"),
+      Seq("id"), "version")
+    val many = intercept[IllegalArgumentException](TxTable.changeFeed(spark, t, Seq("id")))
+    assert(many.getMessage.contains("op"), many.getMessage)
+  }
+
+  test("changeFeed rejects a table column named commit; __commit feeds") {
+    import spark.implicits._
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, Seq((1L, 77L, 0L)).toDF("id", "Commit", "version"))
+    val e = intercept[IllegalArgumentException](TxTable.changeFeed(spark, t, Seq("id")))
+    assert(e.getMessage.contains("Commit"), e.getMessage)
+    // a table column under the feed's working name keeps its own values
+    val u = tmp() + "/u"
+    TxTable.create(spark, u, Seq((1L, 77L, 0L), (2L, 88L, 0L)).toDF("id", "__commit", "version"))
+    TxTable.upsert(spark, u, Seq((2L, 99L, 1L)).toDF("id", "__commit", "version"),
+      Seq("id"), "version")
+    val rows = TxTable.changeFeed(spark, u, Seq("id"))
+      .select("id", "op", "__commit", "commit").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    assert(rows === Set((1L, "i", 77L, 0L), (2L, "i", 88L, 0L), (2L, "u", 99L, 1L)))
+  }
+
+  test("nullability-only drift: a read over a checkpoint and an upsert is one scan") {
+    import spark.implicits._
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, base(100))
+    TxTable.checkpoint(spark, t)
+    // a literal version column is written `required`, the checkpoint's `optional`
+    TxTable.upsert(spark, t, Seq((3L, "n3", 3.0)).toDF("id", "name", "price")
+      .withColumn("version", lit(1L)), Seq("id"), "version")
+    val q = TxTable.read(spark, t)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val plan = q.queryExecution.sparkPlan
+    assert(plan.collect { case s: FileSourceScanExec => s }.size === 1, plan.toString)
+    assert(q.queryExecution.optimizedPlan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.isEmpty,
+      q.queryExecution.optimizedPlan.toString)
+    assert(q.count() === 100L)
+    assert(q.filter(col("id") === 3L).head.getAs[Double]("price") === 3.0)
+  }
 }
