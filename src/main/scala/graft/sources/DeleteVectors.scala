@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.plans.{DvAlive, GraftExtensions}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 
@@ -54,21 +54,12 @@ object DeleteVectors {
     StructField("n_deleted", LongType)))
   private val Seq(filePath, dvCol, nDeleted) = SidecarSchema.fieldNames.toSeq
 
-  /** The scan with physical row identity attached — every DV operation
-    * hangs off these two metadata columns. `basePath`: an explicit FILE
-    * list below a hive-partitioned root keeps its partition columns
-    * (Spark recovers them from the directory names relative to
-    * `basePath`). `schema`: the data schema when the caller already
-    * knows it from a footer, which spares Spark's inference job. */
-  private[sources] def scanWithRowId(spark: SparkSession, paths: Seq[String],
-      basePath: Option[String] = None,
-      schema: Option[StructType] = None): DataFrame = {
-    val rd = basePath.foldLeft(spark.read)((r, b) => r.option("basePath", b))
-    schema.foldLeft(rd)(_.schema(_)).parquet(paths: _*)
-      .select(col("*"),
-        col("_metadata.file_path").as("__dv_file"),
-        col("_metadata.row_index").as("__dv_row"))
-  }
+  /** `scan` with physical row identity attached — every DV operation
+    * hangs off these two metadata columns, taken per file scan. */
+  private[sources] def withRowId(scan: DataFrame): DataFrame =
+    scan.select(col("*"),
+      col("_metadata.file_path").as("__dv_file"),
+      col("_metadata.row_index").as("__dv_row"))
 
   /** One sidecar row as read on the driver: the data file, its
     * (word, mask) pairs and its kill count. */

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Parquet source/sink parity surface (SURVEY.md §2.1, S1–S13).
@@ -46,21 +47,20 @@ object ParquetIO {
     * flags), without the job inference runs. Every level is nullable,
     * as Spark's file scan reads it whatever the footer says, so two
     * files that differ only in `required` vs `optional` compare equal. */
-  private[sources] def footerSchema(
-      file: org.apache.hadoop.fs.Path): org.apache.spark.sql.types.StructType = {
+  private def footerSchema(file: org.apache.hadoop.fs.Path): StructType = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, Fs.conf()))
     try nullable(org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file, r.getFooter),
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+      .asInstanceOf[StructType]
     finally r.close()
   }
 
   /** `t` with every field, element and value nullable. */
   private def nullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    import org.apache.spark.sql.types.{ArrayType, MapType}
     t match {
       case s: StructType => StructType(s.fields.map(f =>
         f.copy(dataType = nullable(f.dataType), nullable = true)))
@@ -76,7 +76,7 @@ object ParquetIO {
     * listing. None for a glob, a directory with subdirectories (hive
     * partitions: their columns come from Spark's partition inference) or
     * one with no data file; Spark's inference decides those. */
-  private[sources] def firstDataFile(path: String): Option[org.apache.hadoop.fs.Path] = {
+  private def firstDataFile(path: String): Option[org.apache.hadoop.fs.FileStatus] = {
     if (path.exists("*?[{".contains(_))) return None
     val (fs, p) = Fs.fileSystem(path)
     // what Spark's parquet listing reads: no hidden or empty file
@@ -91,38 +91,96 @@ object ParquetIO {
       catch { case _: java.io.FileNotFoundException => return None }
     // listing a FILE returns the file itself
     if (children.size == 1 && children.head.getPath == fs.makeQualified(p))
-      return children.headOption.filter(dataFile).map(_.getPath)
+      return children.headOption.filter(dataFile)
     if (children.exists(c => c.isDirectory && visible(c))) None
-    else children.filter(dataFile).map(_.getPath).sortBy(_.toString).headOption
+    else children.filter(dataFile).sortBy(_.getPath.toString).headOption
   }
 
-  /** `spark.read.parquet(path)` with the schema taken from the first
-    * data file's footer ([[firstDataFile]], [[footerSchema]]) — the same
-    * schema Spark's inference reads from one footer, without its job.
-    * Globs, partitioned dirs and dirs with no data file keep inference. */
-  private[sources] def readFlat(spark: SparkSession, path: String): DataFrame =
-    firstDataFile(path)
-      .map(f => spark.read.schema(footerSchema(f)).parquet(path))
-      .getOrElse(spark.read.parquet(path))
+  /** [[footerSchema]] of an input's [[firstDataFile]], cached by that
+    * file's (path, length, modification time): an input overwritten in
+    * place under the same name is a new key. Dumb full-clear cap. */
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+  private def schemaOf(root: String): Option[StructType] =
+    firstDataFile(root).map { st =>
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+      Option(footerSchemas.get(key)).getOrElse {
+        val schema = footerSchema(st.getPath)
+        if (footerSchemas.size > 4096) footerSchemas.clear()
+        footerSchemas.put(key, schema)
+        schema
+      }
+    }
 
-  /** S1–S5: parquet sink with writer properties. */
-  def write(df: DataFrame, path: String, opts: WriteOptions = WriteOptions()): Unit = {
-    val w = df.write
-      .mode("overwrite")
+  /** [[readByName]] with each path its own root. */
+  private[sources] def readByName(spark: SparkSession, paths: Seq[String]): DataFrame =
+    readByName(spark, paths.map(p => (p, Seq(p))), identity)
+
+  /**
+   * S13's read: N parquet inputs as one dataset, schema drift reconciled
+   * by NAME (missing columns null, int ∪ long widened). `groups` pairs
+   * each input root with the paths to read under it — the root itself,
+   * or a file subset of it.
+   *
+   * A root's schema is its first footer's ([[schemaOf]]), so no scan
+   * runs Spark's inference job, and the roots that share one share ONE
+   * scan over all their paths: one scan per distinct footer schema, in
+   * order of first appearance, so a uniform input set is a single
+   * multi-path scan with pushdown intact. A root with no footer schema
+   * — a hive-partitioned dir, a dir without data files, a glob — scans
+   * alone with its inferred schema, with `basePath` = the root when it
+   * reads a subset (partition columns come back from the directory
+   * names). `perScan` runs on each scan before the union (a `_metadata`
+   * column must be taken per scan). Each group being a distinct schema,
+   * every column first appears in its group's first input, so columns
+   * come in the per-input fold's order, first input's first. A path
+   * listed twice is read twice.
+   */
+  private[sources] def readByName(spark: SparkSession,
+      groups: Seq[(String, Seq[String])], perScan: DataFrame => DataFrame): DataFrame = {
+    val keyed = groups.toVector.zipWithIndex.map { case ((root, paths), i) =>
+      (schemaOf(root).toLeft(i), root, paths)
+    }
+    val scans = keyed.map(_._1).distinct.map {
+      case key @ Left(schema) =>
+        spark.read.schema(schema).parquet(keyed.filter(_._1 == key).flatMap(_._3): _*)
+      case Right(i) =>
+        val (_, root, paths) = keyed(i)
+        (if (paths == Seq(root)) spark.read else spark.read.option("basePath", root))
+          .parquet(paths: _*)
+    }
+    scans.map(perScan).reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** `w` with `opts` applied and parquet bloom filters on `bloomCols`,
+    * sized for `expectedNdv` distinct values per row group — the one
+    * place a [[WriteOptions]] becomes writer options, so every writer
+    * honors all of them. `maxRecordsPerFile = 0` stays unset. */
+  private[graft] def configured(w: DataFrameWriter[Row], opts: WriteOptions,
+      bloomCols: Seq[String] = Seq.empty, expectedNdv: Long = 100000L): DataFrameWriter[Row] = {
+    val base = w
       .option("compression", opts.compression)
       .option("parquet.block.size", opts.rowGroupBytes.toString)
       .option("parquet.page.row.count.limit", opts.pageRowCountLimit.toString)
-    (if (opts.maxRecordsPerFile > 0)
-       w.option("maxRecordsPerFile", opts.maxRecordsPerFile.toString)
-     else w)
-      .parquet(path)
+    val withBloom = bloomCols.foldLeft(base) { (b, c) =>
+      b.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.expected.ndv#$c", expectedNdv.toString)
+    }
+    if (opts.maxRecordsPerFile > 0)
+      withBloom.option("maxRecordsPerFile", opts.maxRecordsPerFile.toString)
+    else withBloom
   }
+
+  /** S1–S5: parquet sink with writer properties. */
+  def write(df: DataFrame, path: String, opts: WriteOptions = WriteOptions()): Unit =
+    configured(df.write.mode("overwrite"), opts).parquet(path)
 
   /**
    * S13 — the repo's namesake capability: N parquet files → one dataset →
    * rewritten with controlled row groups. Composition of S7 + S4/S12, with
-   * schema drift handled by name (`unionByName(allowMissingColumns)`), the
-   * DataFrame analogue of footer-schema reconciliation.
+   * schema drift handled by name ([[readByName]]: one scan per distinct
+   * footer schema, the scans unioned by name), the DataFrame analogue of
+   * footer-schema reconciliation.
    *
    * Output file count is derived from total input bytes / `targetFileBytes`
    * so the plan holds at 100 TB: a fixed small `repartition(k)` would
@@ -135,8 +193,7 @@ object ParquetIO {
       outPath: String,
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
-    val dfs = inputPaths.map(p => readFlat(spark, p))
-    val merged = dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    val merged = readByName(spark, inputPaths)
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
     // coalesce (narrow) when reducing partition count; repartition only to
@@ -169,19 +226,7 @@ object ParquetIO {
   def writeWithBloomFilters(df: DataFrame, path: String, bloomCols: Seq[String],
       expectedNdv: Long = 100000L, opts: WriteOptions = WriteOptions()): Unit = {
     require(bloomCols.nonEmpty, "writeWithBloomFilters needs at least one column")
-    val base = df.write
-      .mode("overwrite")
-      .option("compression", opts.compression)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
-      .option("parquet.page.row.count.limit", opts.pageRowCountLimit.toString)
-    val withBloom = bloomCols.foldLeft(base) { (w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", expectedNdv.toString)
-    }
-    (if (opts.maxRecordsPerFile > 0)
-       withBloom.option("maxRecordsPerFile", opts.maxRecordsPerFile.toString)
-     else withBloom)
-      .parquet(path)
+    configured(df.write.mode("overwrite"), opts, bloomCols, expectedNdv).parquet(path)
   }
 
   /**
@@ -192,17 +237,8 @@ object ParquetIO {
    * files instead of one giant one.
    */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-      opts: WriteOptions = WriteOptions()): Unit = {
-    val w = df.write
-      .mode("overwrite")
-      .option("compression", opts.compression)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
-      .partitionBy(partitionCols: _*)
-    (if (opts.maxRecordsPerFile > 0)
-       w.option("maxRecordsPerFile", opts.maxRecordsPerFile.toString)
-     else w)
-      .parquet(path)
-  }
+      opts: WriteOptions = WriteOptions()): Unit =
+    configured(df.write.mode("overwrite"), opts).partitionBy(partitionCols: _*).parquet(path)
 
   /**
    * DYNAMIC partition overwrite — the daily-restatement primitive: rewrite
@@ -218,15 +254,8 @@ object ParquetIO {
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String],
       opts: WriteOptions = WriteOptions()): Unit = {
     require(partitionCols.nonEmpty, "overwritePartitions needs at least one partition column")
-    val w = df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", opts.compression)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
+    configured(df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic"), opts)
       .partitionBy(partitionCols: _*)
-    (if (opts.maxRecordsPerFile > 0)
-       w.option("maxRecordsPerFile", opts.maxRecordsPerFile.toString)
-     else w)
       .parquet(path)
   }
 
@@ -364,10 +393,7 @@ object ParquetIO {
     require(bucketCols.nonEmpty, "writeBucketed needs at least one bucket column")
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     df.sparkSession.sql(s"DROP TABLE IF EXISTS $tableName")
-    df.write
-      .mode("overwrite")
-      .option("compression", opts.compression)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
+    configured(df.write.mode("overwrite"), opts)
       .option("path", path)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
@@ -389,10 +415,7 @@ object ParquetIO {
       numBuckets: Int, bucketCols: Seq[String],
       opts: WriteOptions = WriteOptions()): Unit = {
     require(bucketCols.nonEmpty, "appendBucketed needs at least one bucket column")
-    df.write
-      .mode("append")
-      .option("compression", opts.compression)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
+    configured(df.write.mode("append"), opts)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
@@ -473,8 +496,7 @@ object ParquetIO {
       opts: WriteOptions = WriteOptions()): Unit = {
     require(sortCols.nonEmpty, "compactSorted needs at least one cluster column")
     import org.apache.spark.sql.functions.col
-    val merged = inputPaths.map(p => readFlat(spark, p))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val merged = readByName(spark, inputPaths)
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
     val cols = sortCols.map(col)
@@ -482,20 +504,6 @@ object ParquetIO {
       outPath, opts)
   }
 
-  /**
-   * Z-order compaction: [[compactSorted]] for MULTI-dimensional pruning.
-   * A single-key sort makes footer stats tight on that key and useless on
-   * every other; interleaving the bits of 2–3 keys onto one space-filling
-   * curve (Morton order) bounds each output file to a small hyper-rectangle,
-   * so min/max stats prune scans filtered on ANY z dimension — the standard
-   * layout maintenance for a 100 TB fact table queried on several keys.
-   *
-   * Buckets are equal-width over each column's [min, max] (one tiny agg +
-   * broadcast; rank-based buckets would need a per-column global sort).
-   * The interleave itself is a fold of shift/and/or arithmetic — fully
-   * codegen'd, no UDF — and the final layout pass is the same declarative
-   * range-exchange + in-partition sort + sized write as [[compactSorted]].
-   */
   /**
    * Keyed upsert-compaction (round 11) — the MERGE-INTO analogue every
    * lakehouse table format institutionalizes: base files ∪ update files,
@@ -522,10 +530,8 @@ object ParquetIO {
     require(basePaths.nonEmpty, "upsert: basePaths is empty — nothing to merge into")
     require(updatePaths.nonEmpty,
       "upsert: updatePaths is empty — for a pure compaction use compactSorted")
-    val base = basePaths.map(p => readFlat(spark, p))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val upd = updatePaths.map(p => readFlat(spark, p))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val base = readByName(spark, basePaths)
+    val upd = readByName(spark, updatePaths)
     val totalBytes = inputBytes(spark, basePaths ++ updatePaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
     upsertWrite(base, upd, outPath, keyCols, versionCol, parts, opts, opCol)
@@ -698,8 +704,7 @@ object ParquetIO {
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
     import org.apache.spark.sql.functions.col
-    val merged = inputPaths.map(p => readFlat(spark, p))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val merged = readByName(spark, inputPaths)
     val totalBytes = inputBytes(spark, inputPaths)
     val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
     write(withZValue(merged, zCols)

@@ -59,15 +59,15 @@ import org.apache.spark.storage.StorageLevel
  * ATOMICALLY: both ride the same k, both appear at marker creation or
  * not at all.
  *
- * Reads: the snapshot is (∪ committed data dirs) scanned once with row
+ * Reads: the snapshot is (∪ committed data dirs) scanned with row
  * identity, minus the OR-fold of ALL committed DV sidecars — read on
  * the driver and applied inside the scan as one codegen'd filter
  * ([[DeleteVectors.applyVectors]]). Planning a read runs no Spark job:
- * flat commit dirs scan with the schema of their first footer.
- * Commits written under DIFFERENT schemas reconcile by name at read
- * time (missing columns null — the [[ParquetIO.merge]] S13 contract,
- * oldest commit's columns first); the uniform-schema fast path stays
- * one multi-dir scan with pushdown intact. [[readAt]] is time travel
+ * flat commit dirs scan with the schema of their first footer. The
+ * scan is [[ParquetIO.merge]]'s S13 read ([[ParquetIO.readByName]]):
+ * one scan per distinct footer schema, unioned by name (missing
+ * columns null, oldest commit's columns first), so a uniform-schema
+ * log is one multi-dir scan with pushdown intact. [[readAt]] is time travel
  * for free: resolve markers ≤ k only, and a later commit's deletes
  * vanish WITH its adds, keeping historical snapshots exact.
  *
@@ -263,9 +263,10 @@ object TxTable {
   private def resolvedIds(root: String, asOf: Long = Long.MaxValue): Seq[Long] =
     resolvedOf(root, committedIds(root), asOf)
 
-  /** Data write with optional parquet bloom filters on `bloomCols` —
-    * the write-side half of [[readSkippingEquality]]'s point-lookup
-    * path ([[ParquetIO.writeWithBloomFilters]]) — and optional HIVE
+  /** Data write under the default [[ParquetIO.WriteOptions]] with
+    * optional parquet bloom filters on `bloomCols` — the write-side half
+    * of [[readSkippingEquality]]'s point-lookup path
+    * ([[ParquetIO.configured]]) — and optional HIVE
     * PARTITIONING on `partitionCols` (round 18): each commit's data dir
     * lays out as `c<k>/<col>=<val>/…`, so partition pruning composes
     * with the commit log (Catalyst's `PartitionFilters` cut directories
@@ -281,7 +282,7 @@ object TxTable {
   private def writeData(df: DataFrame, path: String,
       bloomCols: Seq[String], partitionCols: Seq[String] = Seq.empty,
       precluster: Boolean = true): Unit = {
-    if (partitionCols.isEmpty) {
+    val w = if (partitionCols.isEmpty) {
       // REBALANCE flat commits too (round 21, guide §6): a map-only
       // batch (create/append, the anti-joined adds when the planner
       // keeps scan partitioning) otherwise writes one file PER INPUT
@@ -306,8 +307,7 @@ object TxTable {
       }
       val sized =
         if (precluster && !explicitLayout) df.hint("rebalance") else df
-      if (bloomCols.isEmpty) sized.write.mode("overwrite").parquet(path)
-      else ParquetIO.writeWithBloomFilters(sized, path, bloomCols)
+      sized.write
     } else {
       require(partitionCols.forall(df.columns.contains),
         s"txtable: partition columns ${partitionCols.mkString(",")} missing from batch")
@@ -321,79 +321,23 @@ object TxTable {
       // second exchange would undo it.
       val clustered =
         if (precluster) df.hint("rebalance", partitionCols: _*) else df
-      val base = clustered.write.mode("overwrite").partitionBy(partitionCols: _*)
-      val withBloom = bloomCols.foldLeft(base) { (w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-          .option(s"parquet.bloom.filter.expected.ndv#$c", "100000")
-      }
-      withBloom.parquet(path)
+      clustered.write.partitionBy(partitionCols: _*)
     }
+    ParquetIO.configured(w.mode("overwrite"), ParquetIO.WriteOptions(), bloomCols).parquet(path)
   }
-
-  /** A commit dir laid out hive-style by [[writeData]]'s
-    * `partitionCols` — one listing, decided by the `<col>=<val>`
-    * child-name shape. */
-  private def isHivePartitioned(dir: String): Boolean =
-    Fs.isDirectory(dir) && Fs.listDirs(dir).exists(_.getPath.getName.contains("="))
 
   /** One row-identified scan over data dirs, schema evolution
-    * reconciled by NAME: when commits were written under different
-    * schemas, each dir scans separately and unions by name with
-    * missing columns null ([[ParquetIO.merge]]'s S13 contract), oldest
-    * commit's columns leading. Same-schema commits — the common case —
-    * keep the single multi-dir scan (pushdown and pruning intact).
-    * PARTITIONED commit dirs always scan per-dir with `basePath` = the
-    * dir (Spark refuses partition discovery across multiple roots —
-    * CONFLICTING_DIRECTORY_STRUCTURES); partition pruning still reaches
-    * each scan through the union, and [[checkpoint]] bounds how many
-    * branches a long log contributes. */
+    * reconciled by NAME ([[ParquetIO.readByName]], the S13 contract of
+    * [[ParquetIO.merge]]): one scan per distinct footer schema, so
+    * same-schema commits — the common case — are a single multi-dir
+    * scan (pushdown and pruning intact), and drifted ones union by name
+    * with missing columns null, oldest commit's columns leading.
+    * PARTITIONED commit dirs scan one by one (Spark refuses partition
+    * discovery across multiple roots — CONFLICTING_DIRECTORY_STRUCTURES);
+    * partition pruning still reaches each scan through the union, and
+    * [[checkpoint]] bounds how many branches a long log contributes. */
   private def scanResolved(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    scanGroups(spark, dirs.map(d => (d, Seq(d))))
-
-  /** The scan behind [[scanResolved]] and [[scanResolvedFiles]]: `groups`
-    * pairs each commit data dir with the paths to read under it (the dir
-    * itself, or a file subset). A flat dir's schema comes from its
-    * footer ([[flatSchema]]), so no scan runs Spark's inference job; one
-    * shared footer schema across every group is the single scan, and
-    * anything else — drift, a partitioned dir (scanned with `basePath`
-    * = the dir, its schema inferred), a dir without data files — is the
-    * by-name union. */
-  private def scanGroups(spark: SparkSession,
-      groups: Seq[(String, Seq[String])]): DataFrame = {
-    val schemas = groups.map { case (d, _) => flatSchema(d) }
-    def scanGroup(dir: String, paths: Seq[String],
-        schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-      if (schema.isEmpty && isHivePartitioned(dir))
-        DeleteVectors.scanWithRowId(spark, paths, basePath = Some(dir))
-      else DeleteVectors.scanWithRowId(spark, paths, schema = schema)
-    schemas.distinct match {
-      case Seq(one @ Some(_)) => DeleteVectors.scanWithRowId(spark, groups.flatMap(_._2), schema = one)
-      case _ =>
-        groups.zip(schemas).map { case ((d, ps), f) => scanGroup(d, ps, f) }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
-  }
-
-  /** The Spark schema of a FLAT commit data dir: its first data file's
-    * footer ([[ParquetIO.firstDataFile]] — one listing). Cached by that
-    * FILE's path, which carries its writing job's unique id, so a
-    * dropped and recreated table never reuses an entry (dumb full-clear
-    * cap like the snapshot cache). None for a partitioned dir or a dir
-    * with no data file. */
-  private val footerSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private def flatSchema(dir: String): Option[org.apache.spark.sql.types.StructType] =
-    ParquetIO.firstDataFile(dir).map { f =>
-      val key = f.toString
-      val cached = footerSchemaCache.get(key)
-      if (cached != null) cached
-      else {
-        val schema = ParquetIO.footerSchema(f)
-        if (footerSchemaCache.size > 4096) footerSchemaCache.clear()
-        footerSchemaCache.put(key, schema)
-        schema
-      }
-    }
+    ParquetIO.readByName(spark, dirs.map(d => (d, Seq(d))), DeleteVectors.withRowId)
 
   /** The commit data dir a file belongs to: the nearest ancestor named
     * `c<k>` under `…/data` — the direct parent for a flat commit, a
@@ -411,19 +355,19 @@ object TxTable {
   }
 
   /** [[scanResolved]] over an explicit FILE subset (the skipping
-    * paths): files group back to their commit dirs to detect schema
-    * drift, commit order preserved. Groups with files below partition
-    * subdirectories scan with `basePath` = the commit dir, so the
-    * partition columns a [[writeData]] `partitionBy` moved into
-    * directory names come back as columns. */
+    * paths): files group back to their commit dirs, whose footers give
+    * the schemas, commit order preserved. A partitioned commit's files
+    * scan with `basePath` = the commit dir, so the partition columns a
+    * [[writeData]] `partitionBy` moved into directory names come back
+    * as columns. */
   private def scanResolvedFiles(spark: SparkSession,
       files: Seq[String]): DataFrame =
-    scanGroups(spark, files
+    ParquetIO.readByName(spark, files
       .groupBy(commitDirOf)
       .toSeq
       .sortBy { case (d, _) =>
         new org.apache.hadoop.fs.Path(d).getName.stripPrefix("c").toLong
-      })
+      }, DeleteVectors.withRowId)
 
   /** Create the table: the initial snapshot becomes commit 0.
     * `partitionCols` (round 18) lays the commit out hive-partitioned —
@@ -1374,7 +1318,7 @@ object TxTable {
     require(files.nonEmpty, s"txtable: nothing committed under $root")
     StatsManifest.statsFor(spark, files, cols)
       .write.mode("overwrite").parquet(statsPath(root))
-    ParquetIO.readFlat(spark, statsPath(root))
+    ParquetIO.readByName(spark, Seq(statsPath(root)))
   }
 
   /**
@@ -1397,7 +1341,7 @@ object TxTable {
     val excluded: Set[String] =
       if (!Fs.isDirectory(statsPath(root))) Set.empty
       else StatsManifest.excludedFiles(
-        ParquetIO.readFlat(spark, statsPath(root)), column, lo, hi)
+        ParquetIO.readByName(spark, Seq(statsPath(root))), column, lo, hi)
     val survivors = files.filterNot(excluded)
     val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
     if (survivors.isEmpty) read(spark, root).filter(lit(false))
@@ -1429,7 +1373,7 @@ object TxTable {
     val excluded: Set[String] =
       if (!Fs.isDirectory(statsPath(root))) Set.empty
       else StatsManifest.excludedFiles(
-        ParquetIO.readFlat(spark, statsPath(root)), column, value, value)
+        ParquetIO.readByName(spark, Seq(statsPath(root))), column, value, value)
     val candidates = files.filterNot(excluded)
     val survivors = StatsManifest.bloomSurvivors(spark, candidates, column, value)
     if (survivors.isEmpty) read(spark, root).filter(lit(false))
@@ -1463,7 +1407,7 @@ object TxTable {
    * keyed (keys, commit). The join key carries the commit, so adds and
    * kills never compare across commits, and the plan keeps O(1) join
    * branches however long the log. Schema drift is the scans' own
-   * by-name union ([[scanGroups]]); both sides are then widened to the
+   * by-name union ([[ParquetIO.readByName]]); both sides are then widened to the
    * union of their columns, null where a commit lacks one, so a column
    * absent from both sides of a commit compares equal.
    *

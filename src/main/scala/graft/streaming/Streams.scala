@@ -147,11 +147,7 @@ object Streams {
     val w = df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write
-          .mode("append")
-          .option("compression", opts.compression)
-          .option("parquet.block.size", opts.rowGroupBytes.toString)
-          .parquet(outPath)
+        graft.sources.ParquetIO.configured(batch.write.mode("append"), opts).parquet(outPath)
       }
     // Trigger.AvailableNow (round 13): process EVERYTHING currently
     // available, then stop — the scheduled-incremental shape a 100 TB

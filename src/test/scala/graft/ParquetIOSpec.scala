@@ -187,6 +187,83 @@ class ParquetIOSpec extends AnyFunSuite {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
+  /** The FileSourceScanExec count of the first query `body` runs that
+    * scans files under `dir`. */
+  private def scansUnder(dir: String)(body: => Unit): Integer = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val counts = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener
+        with AdaptiveSparkPlanHelper {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val n = collect(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+        }.size
+        if (n > 0) counts.put(n)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; counts.poll(60, java.util.concurrent.TimeUnit.SECONDS) }
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  test("merge of 8 inputs in 2 schemas plans one scan per schema, rows and column order kept") {
+    val base = tmp()
+    val li = spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+    // the parquet_merge shape: every second input drops l_tax and
+    // narrows l_quantity to int
+    val ins = (0 until 8).map { i =>
+      val part = li.filter(pmod(hash(col("l_orderkey"), col("l_linenumber")), lit(8)) === i)
+      val p = s"$base/in$i"
+      (if (i % 2 == 1) part.drop("l_tax").withColumn("l_quantity", col("l_quantity").cast("int"))
+       else part).write.parquet(p)
+      p
+    }
+    val out = s"$base/out"
+    assert(scansUnder(base)(ParquetIO.merge(spark, ins, out)) === 2)
+    val want = ins.map(p => spark.read.parquet(p))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val got = spark.read.parquet(out)
+    assert(got.schema === want.schema)
+    assert(got.count() === li.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("merge reads an input file replaced in place under the same name with its new schema") {
+    val base = tmp()
+    val in = s"$base/in.parquet"
+    def place(df: org.apache.spark.sql.DataFrame): Unit = {
+      val stage = s"$base/stage"
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, java.nio.file.Paths.get(in),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    place(spark.range(10).selectExpr("id", "id * 2 as x"))
+    ParquetIO.merge(spark, Seq(in), s"$base/out1")
+    assert(spark.read.parquet(s"$base/out1").columns.toSeq === Seq("id", "x"))
+    place(spark.range(10, 30).selectExpr("id", "cast(id as string) as y", "id * 3 as z"))
+    ParquetIO.merge(spark, Seq(in), s"$base/out2")
+    val got = spark.read.parquet(s"$base/out2")
+    assert(got.columns.toSeq === Seq("id", "y", "z"))
+    assert(got.filter("y IS NOT NULL AND z IS NOT NULL").count() === 20L)
+  }
+
+  test("merge: an input listed twice contributes its rows twice") {
+    val base = tmp()
+    val (a, b) = (s"$base/a", s"$base/b")
+    spark.range(10).selectExpr("id", "id * 2 as x").write.parquet(a)
+    spark.range(100, 105).selectExpr("id", "id * 2 as x", "id as extra").write.parquet(b)
+    ParquetIO.merge(spark, Seq(a, b, a), s"$base/out")
+    val got = spark.read.parquet(s"$base/out")
+    assert(got.count() === 25L)
+    assert(got.filter("id < 10").groupBy("id").count().filter("count != 2").isEmpty)
+    assert(got.filter("extra IS NOT NULL").count() === 5L)
+  }
+
   test("compactSorted: disjoint per-file key ranges, content preserved") {
     val base = tmp()
     val a = s"$base/a"; val b = s"$base/b"; val out = s"$base/out"

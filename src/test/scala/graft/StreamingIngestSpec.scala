@@ -63,4 +63,19 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(landed.count() == 45, "relaunch must land ONLY the 15 new rows (no re-read)")
     assert(landed.select("id").distinct().count() == 45)
   }
+
+  test("parquetSink honors maxRecordsPerFile") {
+    val base = java.nio.file.Files.createTempDirectory("graft-sinkopts").toString
+    spark.range(1000).selectExpr("id", "concat('doc ', id) as text")
+      .coalesce(1).write.parquet(s"$base/in")
+    val schema = spark.read.parquet(s"$base/in").schema
+    val q = Streams.parquetSink(spark.readStream.schema(schema).parquet(s"$base/in"),
+      s"$base/out", s"$base/ckpt",
+      opts = graft.sources.ParquetIO.WriteOptions(maxRecordsPerFile = 100), availableNow = true)
+    assert(q.awaitTermination(120000), "AvailableNow run must stop on its own")
+    val perFile = spark.read.parquet(s"$base/out")
+      .groupBy(col("_metadata.file_path")).count().collect().map(_.getLong(1))
+    assert(perFile.sum === 1000L)
+    assert(perFile.max <= 100L, s"rows per file: ${perFile.sorted.mkString(",")}")
+  }
 }

@@ -184,7 +184,9 @@ class TxFeedParitySpec extends AnyFunSuite {
     assertParity(t, from = 99L)
   }
 
-  test("a 40-commit drifted log") {
+  /** A 40-commit log whose upserts add a `tag` or a `note` column now
+    * and then, with a delete every eighth commit; built once, only read. */
+  private lazy val driftedLog: String = {
     val t = tmp()
     TxTable.create(spark, t, rows(0L until 100L, 0L))
     (1 to 40).foreach { v =>
@@ -196,7 +198,33 @@ class TxFeedParitySpec extends AnyFunSuite {
       if (v % 8 == 0) TxTable.deleteWhere(spark, t, col("id") % 13 === v % 13)
       else TxTable.upsert(spark, t, drifted, Seq("id"), "version")
     }
+    t
+  }
+
+  test("a 40-commit drifted log") {
+    val t = driftedLog
     assertParity(t)
     assertParity(t, from = 20L, to = 30L)
+  }
+
+  test("a 40-commit drifted log: read and changeFeed plan one scan per distinct footer schema") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val t = driftedLog
+    /** The schema of a commit dir's first data file, as Spark reads it. */
+    def footer(dir: String) = spark.read.parquet(Fs.listFiles(dir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+      .map(_.toString).min).schema
+    def distinctSchemas(dirs: Seq[String]) = dirs.map(footer).distinct.size
+    def scans(df: DataFrame) =
+      df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }.size
+    val dataDirs = TxTable.committedIds(t).map(k => s"$t/data/c$k").filter(Fs.isDirectory(_))
+    val dvDirs = TxTable.committedIds(t).map(k => s"$t/_txn/dv/$k").filter(Fs.isDirectory(_))
+    val killDirs = spark.read.parquet(dvDirs: _*).select("file_path").distinct()
+      .collect().map(r => commitDir(r.getString(0))).distinct.toSeq
+    val readScans = distinctSchemas(dataDirs)
+    assert(readScans > 1 && readScans < dataDirs.size, s"$readScans schemas over ${dataDirs.size} dirs")
+    assert(scans(TxTable.read(spark, t)) === readScans)
+    assert(scans(TxTable.changeFeed(spark, t, Seq("id"))) ===
+      readScans + distinctSchemas(killDirs))
   }
 }
