@@ -1120,7 +1120,7 @@ object ProfileStatsManifest {
 
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
-  import graft.sources.{Fs, ParquetIO, StatsManifest}
+  import graft.sources.{Fs, ParquetIO, StatsManifest, Tools}
   private val Root = "/tmp/graft_manifest"
   private val RangeTable = s"$Root/range2048"
   private val BloomTable = s"$Root/bloom256"
@@ -1156,8 +1156,7 @@ object ProfileStatsManifest {
   private def synthesize(spark: SparkSession): Unit = {
     // a prior run's refresh leg appended 8 files — restore the 2 048-file
     // baseline so every rehearsal measures the same corpus
-    if (Fs.isDirectory(RangeTable) && Fs.listFiles(RangeTable)
-        .count(_.getPath.getName.endsWith(".parquet")) != 2048)
+    if (Fs.isDirectory(RangeTable) && Tools.dataFiles(RangeTable).size != 2048)
       Fs.deleteRecursive(new org.apache.hadoop.fs.Path(RangeTable))
     if (!Fs.isDirectory(RangeTable)) {
       time("synthesize range2048 (15 M rows, 2 048 sorted files)") {
@@ -1191,8 +1190,7 @@ object ProfileStatsManifest {
     synthesize(spark)
 
     // ---- range corpus: 2 048 sorted files --------------------------------
-    val nFiles = Fs.listFiles(RangeTable)
-      .count(_.getPath.getName.endsWith(".parquet"))
+    val nFiles = Tools.dataFiles(RangeTable).size
     println(s"[manifest] range table: $nFiles data files")
 
     time(s"build (distributed footer pass, $nFiles files)") {

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.sources.Tools
 import org.apache.spark.sql.DataFrame
 
 /**
@@ -89,32 +90,18 @@ object Materialize {
     (df.sparkSession.read.schema(nullable).parquet(dir), dir)
   }
 
-  /** Footer reads of [[viaParquetAnyTrue]] overlap on this small daemon
-    * pool; idle threads time out. */
-  private lazy val footerPool: java.util.concurrent.ExecutorService = {
-    val pool = new java.util.concurrent.ThreadPoolExecutor(4, 4,
-      30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-spill-footer")
-        t.setDaemon(true)
-        t
-      })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-
   /** [[viaParquet]] plus a FREE "does any row have `boolCol` = true?"
     * verdict, decided from the written files' FOOTER STATISTICS
     * (parquet keeps boolean min/max per row group) — no Spark job. The
     * CC loop's convergence test consumed one job per spill cycle just
     * to ask this (round 22, guide §1.2: the answer was already in the
-    * bytes the spill wrote). The footers are read on a small pool, and
-    * the first file whose max is true decides: the reads still queued
-    * are cancelled. Conservative: a footer without usable stats for the
-    * column answers "maybe true". A `boolCol` that is not a top-level
-    * column of `df` fails fast — it matches no footer column, so it
-    * would otherwise read as "maybe true" forever. */
+    * bytes the spill wrote). The footers are read on
+    * [[graft.sources.Tools.driverPool]], and the first file whose max is
+    * true decides: the reads still queued are cancelled. Conservative: a
+    * footer without usable stats for the column answers "maybe true". A
+    * `boolCol` that is not a top-level column of `df` fails fast — it
+    * matches no footer column, so it would otherwise read as "maybe
+    * true" forever. */
   def viaParquetAnyTrue(df: DataFrame, tag: String,
       boolCol: String): (DataFrame, Boolean) = {
     require(df.schema.fieldNames.contains(boolCol),
@@ -122,11 +109,9 @@ object Materialize {
         s"(${df.schema.fieldNames.mkString(", ")})")
     val (back, dir) = spill(df, tag)
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val files = p.getFileSystem(conf).listStatus(p).toSeq
-      .filter(f => f.getPath.getName.endsWith(".parquet") &&
-        !f.getPath.getName.startsWith("_") && f.getLen > 0)
-    val done = new java.util.concurrent.ExecutorCompletionService[java.lang.Boolean](footerPool)
+    val files = Tools.dataFiles(dir, conf)
+    val done = new java.util.concurrent.ExecutorCompletionService[java.lang.Boolean](
+      Tools.driverPool)
     val pending = files.map(f => done.submit(() => java.lang.Boolean.valueOf(maybeTrue(f, conf, boolCol))))
     try {
       var anyTrue = false
@@ -142,10 +127,8 @@ object Materialize {
 
   /** Whether one spill file's footer allows a true `boolCol`. */
   private def maybeTrue(f: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration, boolCol: String): Boolean = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-    try {
+      conf: org.apache.hadoop.conf.Configuration, boolCol: String): Boolean =
+    Tools.withFooter(f, conf) { r =>
       import scala.jdk.CollectionConverters._
       r.getFooter.getBlocks.asScala.exists { b =>
         b.getColumns.asScala
@@ -162,8 +145,7 @@ object Materialize {
               .asInstanceOf[java.lang.Boolean].booleanValue()
           }
       }
-    } finally r.close()
-  }
+    }
 
   /**
    * Incremental AGGREGATE maintenance (round 12) — materialized-view

@@ -52,21 +52,6 @@ object Fs {
     fs.listStatus(p).toSeq.filter(_.isFile)
   }
 
-  /** ALL files under a directory, any depth — needed for
-    * hive-partitioned data dirs whose leaf files sit below
-    * `<col>=<val>/` subdirectories. A recursive `listStatus` walk, NOT
-    * `FileSystem.listFiles(recursive)`: the latter materializes
-    * LocatedFileStatus through RawLocal permission probes that throw on
-    * any local-backed wrapper scheme (HostileFsSpec caught it), and the
-    * depth here is the partition tree (1–2 levels), not a deep walk. */
-  def listFilesRecursive(path: String, c: Configuration = conf()): Seq[FileStatus] = {
-    val (fs, p) = fileSystem(path, c)
-    def walk(st: FileStatus): Seq[FileStatus] =
-      if (st.isFile) Seq(st)
-      else fs.listStatus(st.getPath).toSeq.flatMap(walk)
-    fs.listStatus(p).toSeq.flatMap(walk)
-  }
-
   def exists(path: String, c: Configuration = conf()): Boolean = {
     val (fs, p) = fileSystem(path, c)
     fs.exists(p)
@@ -265,22 +250,6 @@ object Fs {
           "fs.s3a.create.conditional.enabled) or coordinate writers " +
           "externally; single-writer use is unaffected.")
 
-  /** Hadoop `Configuration` is not `java.io.Serializable`; this minimal
-    * Writable-backed wrapper ships it into tasks (the same trick Spark
-    * uses internally) so distributed listing tasks resolve filesystems
-    * with the DRIVER's credentials/tuning, not an executor default. */
-  private class SerializableConf(@transient var value: Configuration) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** One directory's matching-file count (object-level, not a local def:
     * executor closures must reach it as a static module call, never
     * capture it). Missing/unlistable dirs count 0. */
@@ -319,7 +288,8 @@ object Fs {
       dirs.map(countOneDir(_, nameSuffix, c)).toMap
     } else {
       val sc = spark.sparkContext
-      val serConf = new SerializableConf(sc.hadoopConfiguration)
+      // ships the driver's conf, so tasks list with its credentials/tuning
+      val serConf = new org.apache.spark.util.SerializableConfiguration(sc.hadoopConfiguration)
       val slices = math.min(dirs.size, sc.defaultParallelism * 4)
       sc.parallelize(dirs, slices)
         .mapPartitions { it =>

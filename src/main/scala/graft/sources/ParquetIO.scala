@@ -47,16 +47,14 @@ object ParquetIO {
     * flags), without the job inference runs. Every level is nullable,
     * as Spark's file scan reads it whatever the footer says, so two
     * files that differ only in `required` vs `optional` compare equal. */
-  private def footerSchema(file: org.apache.hadoop.fs.Path): StructType = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, Fs.conf()))
-    try nullable(org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-      .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file, r.getFooter),
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
-      .asInstanceOf[StructType]
-    finally r.close()
-  }
+  private def footerSchema(file: org.apache.hadoop.fs.FileStatus): StructType =
+    Tools.withFooter(file, Fs.conf()) { r =>
+      nullable(org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file.getPath, r.getFooter),
+          new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
+        .asInstanceOf[StructType]
+    }
 
   /** `t` with every field, element and value nullable. */
   private def nullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
@@ -73,27 +71,21 @@ object ParquetIO {
 
   /** The first data file of a FLAT parquet input — a file, or a
     * directory holding its data files directly — by path order, from one
-    * listing. None for a glob, a directory with subdirectories (hive
-    * partitions: their columns come from Spark's partition inference) or
-    * one with no data file; Spark's inference decides those. */
+    * listing, under [[Tools.isData]]. None for a glob, a directory with
+    * a data subdirectory (hive partitions: their columns come from
+    * Spark's partition inference) or one with no data file; Spark's
+    * inference decides those. */
   private def firstDataFile(path: String): Option[org.apache.hadoop.fs.FileStatus] = {
     if (path.exists("*?[{".contains(_))) return None
     val (fs, p) = Fs.fileSystem(path)
-    // what Spark's parquet listing reads: no hidden or empty file
-    def visible(st: org.apache.hadoop.fs.FileStatus): Boolean = {
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    def dataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      st.isFile && visible(st) && st.getLen > 0
     val children =
-      try fs.listStatus(p).toSeq
+      try fs.listStatus(p).toSeq.filter(Tools.isData)
       catch { case _: java.io.FileNotFoundException => return None }
     // listing a FILE returns the file itself
     if (children.size == 1 && children.head.getPath == fs.makeQualified(p))
-      return children.headOption.filter(dataFile)
-    if (children.exists(c => c.isDirectory && visible(c))) None
-    else children.filter(dataFile).sortBy(_.getPath.toString).headOption
+      children.headOption
+    else if (children.exists(_.isDirectory)) None
+    else children.sortBy(_.getPath.toString).headOption
   }
 
   /** [[footerSchema]] of an input's [[firstDataFile]], cached by that
@@ -105,7 +97,7 @@ object ParquetIO {
     firstDataFile(root).map { st =>
       val key = (st.getPath.toString, st.getLen, st.getModificationTime)
       Option(footerSchemas.get(key)).getOrElse {
-        val schema = footerSchema(st.getPath)
+        val schema = footerSchema(st)
         if (footerSchemas.size > 4096) footerSchemas.clear()
         footerSchemas.put(key, schema)
         schema

@@ -1,11 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -77,10 +76,8 @@ object StatsManifest {
   /** Footer → per-file stats rows (executor-side; static module call so
     * closures don't capture the object graph). */
   private[sources] def fileStats(path: String, conf: Configuration,
-      cols: Set[String]): Seq[ColStats] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
-    try {
+      cols: Set[String]): Seq[ColStats] =
+    Tools.withFooter(new org.apache.hadoop.fs.Path(path), conf) { reader =>
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
       blocks.flatMap(_.getColumns.asScala)
@@ -135,16 +132,7 @@ object StatsManifest {
           }
           ColStats(path, name, phys.name, rows, nulls, lo, hi, dlo, dhi, slo, shi)
         }.toSeq
-    } finally reader.close()
-  }
-
-  /** The table's parquet data files (sidecar dirs like `_stats`/`_txn`
-    * excluded by the underscore rule Spark itself uses). */
-  private def dataFiles(table: String): Seq[String] =
-    Fs.listFiles(table)
-      .map(_.getPath.toString)
-      .filter(p => p.endsWith(".parquet") &&
-        !new org.apache.hadoop.fs.Path(p).getName.startsWith("_"))
+    }
 
   /** The distributed footer pass: files fan out, each task reads only
     * footers and emits (file, column) stats rows. Shared with
@@ -152,7 +140,7 @@ object StatsManifest {
     * resolution set rather than a directory listing. */
   private[sources] def statsFor(spark: SparkSession, files: Seq[String],
       cols: Seq[String]): DataFrame = {
-    val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val colSet = cols.toSet
     spark.createDataset(files)(org.apache.spark.sql.Encoders.STRING)
       .repartition(math.min(files.size, 64))
@@ -172,7 +160,7 @@ object StatsManifest {
    */
   def build(spark: SparkSession, table: String,
       cols: Seq[String] = Seq.empty): DataFrame = {
-    val files = dataFiles(table)
+    val files = Tools.dataFiles(table).map(_.getPath.toString)
     require(files.nonEmpty, s"statsManifest: no parquet data files under $table")
     statsFor(spark, files, cols)
       .write.mode("overwrite").parquet(manifestPath(table))
@@ -196,7 +184,7 @@ object StatsManifest {
   def refresh(spark: SparkSession, table: String,
       cols: Seq[String] = Seq.empty): DataFrame = {
     if (!Fs.isDirectory(manifestPath(table))) return build(spark, table, cols)
-    val current = dataFiles(table)
+    val current = Tools.dataFiles(table).map(_.getPath.toString)
     require(current.nonEmpty, s"statsManifest: no parquet data files under $table")
     val m = spark.read.parquet(manifestPath(table))
     val known = m.select("file").distinct()
@@ -263,8 +251,16 @@ object StatsManifest {
     // build/refresh have no manifest row, are not in the excluded set,
     // and are therefore KEPT — a stale manifest costs performance,
     // never rows (the TxTable.readSkipping rule, applied here too)
-    dataFiles(table).filterNot(excluded).sorted
+    Tools.dataFiles(table).map(_.getPath.toString).filterNot(excluded).sorted
   }
+
+  /** A scan of some of `table`'s data files with `table`'s own schema:
+    * `table` is the base path, so a hive-partitioned table's partition
+    * columns are still inferred from the leaf files' `<col>=<val>/`
+    * dirs. */
+  private def readFiles(spark: SparkSession, table: String,
+      files: Seq[String]): DataFrame =
+    spark.read.option("basePath", table).parquet(files: _*)
 
   /** Scan only the files that can match `column` ∈ [lo, hi]. The range
     * filter itself is ALSO applied (pushed to the surviving scans), so
@@ -277,7 +273,7 @@ object StatsManifest {
     if (survivors.isEmpty)
       spark.read.parquet(table).filter(lit(false))
     else
-      spark.read.parquet(survivors: _*).filter(pred)
+      readFiles(spark, table, survivors).filter(pred)
   }
 
   /**
@@ -290,36 +286,14 @@ object StatsManifest {
    * bitset reads only (a few KB per row group), never data pages.
    */
   private[sources] def bloomKeepsFile(path: String, conf: Configuration,
-      column: String, value: Any): Boolean = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
-    try {
+      column: String, value: Any): Boolean =
+    Tools.withFooter(new org.apache.hadoop.fs.Path(path), conf) { reader =>
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       blocks.isEmpty || blocks.exists { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == column).forall {
-          chunk =>
-            val bf = reader.getBloomFilterDataReader(b).readBloomFilter(chunk)
-            if (bf == null) true
-            else {
-              // hash in the CHUNK's physical domain, not the literal's —
-              // parquet blooms hash plain-encoded physical values, so a
-              // Long probe against an INT32 chunk would mis-hash and
-              // could wrongly reject a present value
-              val hash = (chunk.getPrimitiveType.getPrimitiveTypeName, value) match {
-                case (PrimitiveTypeName.INT64, v: Number)  => Some(bf.hash(v.longValue))
-                case (PrimitiveTypeName.INT32, v: Number)  => Some(bf.hash(v.intValue))
-                case (PrimitiveTypeName.DOUBLE, v: Number) => Some(bf.hash(v.doubleValue))
-                case (PrimitiveTypeName.FLOAT, v: Number)  => Some(bf.hash(v.floatValue))
-                case (PrimitiveTypeName.BINARY, v: String) => Some(bf.hash(
-                  org.apache.parquet.io.api.Binary.fromString(v)))
-                case _ => None
-              }
-              hash.forall(bf.findHash)
-            }
-        }
+        b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .forall(Tools.bloomProbe(reader, b, _, value).getOrElse(true))
       }
-    } finally reader.close()
-  }
+    }
 
   /**
    * Files that can contain rows with `column == value` — the POINT-
@@ -348,32 +322,12 @@ object StatsManifest {
       files: Seq[String], column: String, value: Any): Seq[String] = {
     if (files.isEmpty) Seq.empty
     else {
-      val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
+      val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
       spark.createDataset(files)(org.apache.spark.sql.Encoders.STRING)
         .repartition(math.min(files.size, 64))
         .filter { f: String => bloomKeepsFile(f, conf.value, column, value) }
         .collect().toSeq.sorted
     }
-  }
-
-  /** Per-file footer ROW COUNTS as one distributed metadata pass — the
-    * denominator of [[TxTable.compactFiles]]'s per-file dead fraction
-    * (cost ∝ file count, no data pages). */
-  private[sources] def rowCounts(spark: SparkSession,
-      files: Seq[String]): Map[String, Long] = {
-    if (files.isEmpty) return Map.empty
-    val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
-    spark.createDataset(files)(org.apache.spark.sql.Encoders.STRING)
-      .repartition(math.min(files.size, 64))
-      .map { f: String =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f), conf.value))
-        try (f, r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        finally r.close()
-      }(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong))
-      .collect().toMap
   }
 
   /** Scan only the files whose stats AND blooms admit `column == value`;
@@ -386,19 +340,6 @@ object StatsManifest {
     if (survivors.isEmpty)
       spark.read.parquet(table).filter(lit(false))
     else
-      spark.read.parquet(survivors: _*).filter(col(column) === lit(value))
-  }
-
-  /** Serializable Hadoop-conf carrier for the footer tasks (the
-    * Writable-backed trick Spark uses internally). */
-  private[sources] class SerConf(@transient var value: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false); value.readFields(in)
-    }
+      readFiles(spark, table, survivors).filter(col(column) === lit(value))
   }
 }

@@ -1,8 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.jdk.CollectionConverters._
@@ -19,6 +24,18 @@ import scala.jdk.CollectionConverters._
  * Footer-level facts (row groups, per-chunk stats, KV metadata) come from
  * parquet-mr on the driver — footers only, never data pages, mirroring the
  * reference's `--only-metadata` fast path (`parquet_reader.cc:44-45`).
+ *
+ * This object also holds the engine's one footer reader, which every
+ * footer read elsewhere (ParquetIO's footer schemas, TxTable's written
+ * row counts, the stats manifest's footer and bloom passes, the spill
+ * convergence test) goes through:
+ *  - [[dataFiles]]: which files are data — Spark's own rule ([[isData]]):
+ *    any depth, no name starting with `_` or `.`, no empty file;
+ *  - [[withFooter]]: one footer open, from the listing's status where
+ *    the caller has one (no second status call), closed after;
+ *  - [[bloomProbe]]: one bloom verdict, hashed in the chunk's physical
+ *    type;
+ *  - [[onDriverPool]]: driver-side footer and sidecar reads overlapped.
  */
 object Tools {
 
@@ -39,13 +56,9 @@ object Tools {
     * `reader_writer.h:41-42`): Spark has no TIME-millis column type, but
     * the tools path reads the annotation and [[valueLevels]] carries the
     * value as its physical int millis. */
-  def parquetSchemaTree(spark: SparkSession, file: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
-    try reader.getFooter.getFileMetaData.getSchema.toString
-    finally reader.close()
-  }
+  def parquetSchemaTree(spark: SparkSession, file: String): String =
+    withFooter(new Path(file), spark.sparkContext.hadoopConfiguration)(
+      _.getFooter.getFileMetaData.getSchema.toString)
 
   final case class RowGroupInfo(
       file: String,
@@ -68,49 +81,149 @@ object Tools {
       minValue: String,
       maxValue: String)
 
-  private[graft] def parquetFiles(spark: SparkSession, path: String): Seq[Path] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs: FileSystem = p.getFileSystem(conf)
-    if (fs.getFileStatus(p).isDirectory)
-      fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    else Seq(p)
+  /** Spark's listing rule for one entry: a file or directory whose name
+    * starts with `_` or `.` is not data (`_SUCCESS`, `_txn`, `_stats`,
+    * `.crc` checksums), and neither is an empty file. */
+  private[graft] def isData(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".") && (st.isDirectory || st.getLen > 0)
   }
+
+  /** The data files under `path` by [[isData]], at any depth — a
+    * hive-partitioned dir's leaf files sit below `<col>=<val>/` — in
+    * listing order. A file lists as itself, under the caller's spelling
+    * of its path. A `listStatus` walk, NOT `FileSystem.listFiles
+    * (recursive)`: the latter materializes LocatedFileStatus through
+    * RawLocal permission probes that throw on local-backed wrapper
+    * schemes (HostileFsSpec). Throws on a missing path. */
+  private[graft] def dataFiles(path: String, conf: Configuration = Fs.conf()): Seq[FileStatus] = {
+    val (fs, p) = Fs.fileSystem(path, conf)
+    val top = fs.listStatus(p).toSeq
+    // listing a FILE returns the file itself
+    if (top.size == 1 && top.head.isFile && top.head.getPath == fs.makeQualified(p)) {
+      top.head.setPath(p)
+      top
+    } else {
+      def walk(st: FileStatus): Seq[FileStatus] =
+        if (!isData(st)) Nil
+        else if (st.isFile) Seq(st)
+        else fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      top.flatMap(walk)
+    }
+  }
+
+  /** [[dataFiles]] of `path` as paths (the tools' and CLI's file list). */
+  private[graft] def parquetFiles(spark: SparkSession, path: String): Seq[Path] =
+    dataFiles(path, spark.sparkContext.hadoopConfiguration).map(_.getPath)
+
+  /** The one footer open: `f` over a reader of `file`'s footer, closed
+    * after. The listing's status opens without another status call. */
+  private[graft] def withFooter[A](file: FileStatus, conf: Configuration)(
+      f: ParquetFileReader => A): A =
+    withFooter(HadoopInputFile.fromStatus(file, conf))(f)
+
+  /** [[withFooter]] for a caller holding only the path (one status call). */
+  private[graft] def withFooter[A](file: Path, conf: Configuration)(
+      f: ParquetFileReader => A): A =
+    withFooter(HadoopInputFile.fromPath(file, conf))(f)
+
+  private def withFooter[A](in: HadoopInputFile)(f: ParquetFileReader => A): A = {
+    val reader = ParquetFileReader.open(in)
+    try f(reader) finally reader.close()
+  }
+
+  /** One row group's bloom verdict on `column == value`: None when the
+    * chunk carries no bloom filter, or `value` has no hash in the chunk's
+    * physical type. Hashed in the CHUNK's physical type, not the
+    * literal's — parquet blooms hash plain-encoded physical values, so a
+    * Long probe of an INT32 chunk hashed as a long would reject present
+    * values. Numbers hash only as Java primitives, and a DECIMAL chunk
+    * never hashes: it stores the unscaled value (4200 for 42.00), so a
+    * decimal probe converted with `longValue` would reject present
+    * values too. */
+  private[graft] def bloomProbe(reader: ParquetFileReader, block: BlockMetaData,
+      chunk: ColumnChunkMetaData, value: Any): Option[Boolean] =
+    Option(reader.getBloomFilterDataReader(block).readBloomFilter(chunk)).flatMap { bf =>
+      def primitive(v: Number) = v match {
+        case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+            _: java.lang.Byte | _: java.lang.Double | _: java.lang.Float => true
+        case _ => false
+      }
+      val decimal = chunk.getPrimitiveType.getLogicalTypeAnnotation
+        .isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
+      ((chunk.getPrimitiveType.getPrimitiveTypeName, value) match {
+        case _ if decimal => None
+        case (PrimitiveTypeName.INT64, v: Number) if primitive(v)  => Some(bf.hash(v.longValue))
+        case (PrimitiveTypeName.INT32, v: Number) if primitive(v)  => Some(bf.hash(v.intValue))
+        case (PrimitiveTypeName.DOUBLE, v: Number) if primitive(v) => Some(bf.hash(v.doubleValue))
+        case (PrimitiveTypeName.FLOAT, v: Number) if primitive(v)  => Some(bf.hash(v.floatValue))
+        case (PrimitiveTypeName.BINARY, v: String) => Some(bf.hash(Binary.fromString(v)))
+        case (PrimitiveTypeName.BINARY | PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
+            v: Array[Byte]) => Some(bf.hash(Binary.fromConstantByteArray(v)))
+        case _ => None
+      }).map(bf.findHash)
+    }
+
+  /** The driver's one daemon pool: a commit's legs
+    * ([[TxTable]]`.runLegs`) and driver-side footer and DV-sidecar reads
+    * ([[onDriverPool]], the spill convergence test) overlap on it. Its
+    * tasks never wait on each other and no pool thread submits to it,
+    * so the fixed bound can only queue work, never deadlock; idle
+    * threads time out. */
+  private[graft] lazy val driverPool: java.util.concurrent.ExecutorService = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(16, 16,
+      60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-driver")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** `f` over `xs` on [[driverPool]]: overlapped driver-side reads, still
+    * no Spark job — serially at object-store latency each is a
+    * round-trip. Two or fewer run inline. */
+  private[graft] def onDriverPool[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 2) xs.map(f)
+    else xs.map(x => driverPool.submit(new java.util.concurrent.Callable[B] {
+      override def call(): B = f(x)
+    })).map(_.get())
 
   /** M2/M5: per-row-group footer metadata (the `num_row_groups()/num_rows` surface,
     * `reader-writer.cc:185-193`, and the row-group size invariant `reader-writer2.cc:222`). */
   def rowGroups(spark: SparkSession, path: String): Seq[RowGroupInfo] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    parquetFiles(spark, path).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
+    dataFiles(path, conf).flatMap { f =>
+      withFooter(f, conf) { reader =>
         reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
-          RowGroupInfo(f.toString, i, b.getRowCount, b.getTotalByteSize,
+          RowGroupInfo(f.getPath.toString, i, b.getRowCount, b.getTotalByteSize,
             b.getCompressedSize, b.getColumns.size())
         }
-      } finally reader.close()
+      }
     }
   }
 
   /** M2: per-column-chunk stats (types, codec, null counts, min/max). */
   def columnChunks(spark: SparkSession, path: String): Seq[ColumnChunkInfo] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    parquetFiles(spark, path).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
+    dataFiles(path, conf).flatMap { f =>
+      withFooter(f, conf) { reader =>
         reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (b, i) =>
           b.getColumns.asScala.toSeq.map { c =>
             val st = c.getStatistics
             ColumnChunkInfo(
-              f.toString, i, c.getPath.toDotString, c.getPrimitiveType.getPrimitiveTypeName.name,
+              f.getPath.toString, i, c.getPath.toDotString,
+              c.getPrimitiveType.getPrimitiveTypeName.name,
               c.getCodec.name, c.getValueCount, c.getTotalSize, c.getTotalUncompressedSize,
               if (st != null && st.isNumNullsSet) st.getNumNulls else -1L,
               if (st != null && st.hasNonNullValue) String.valueOf(st.genericGetMin) else "",
               if (st != null && st.hasNonNullValue) String.valueOf(st.genericGetMax) else "")
           }
         }
-      } finally reader.close()
+      }
     }
   }
 
@@ -118,49 +231,38 @@ object Tools {
    * Bloom-filter introspection for [[ParquetIO.writeWithBloomFilters]]:
    * per row group, does `column`'s bloom filter say `value` might be
    * present? Returns one `(file, rowGroup, mightContain)` row per row
-   * group; `mightContain = None` when the chunk carries no bloom filter.
-   * No false negatives (a present value is always Some(true)); absent
-   * values prune wherever the bitset rejects. Footer + bloom bitset reads
-   * only — never data pages — like the rest of this tools surface.
-   * `value` may be Long, Int, Double, Float, String, or Array[Byte],
-   * matching the column's physical type.
+   * group of every data file under `path` (hive partition dirs
+   * included); `mightContain = None` when the chunk carries no bloom
+   * filter, or `value` has no hash in the column's physical type. No
+   * false negatives (a present value is always Some(true)): the probe
+   * hashes in the chunk's physical type ([[bloomProbe]]), so a Long
+   * probe of an int column and an Int probe of a long column both work.
+   * Absent values prune wherever the bitset rejects. Footer + bloom
+   * bitset reads only — never data pages — like the rest of this tools
+   * surface. `value` may be a Long, Int, Double or Float for a numeric
+   * column, a String for a string column, or an Array[Byte] for a
+   * binary one; a decimal column answers None.
    */
   def bloomMightContain(spark: SparkSession, path: String, column: String,
       value: Any): Seq[(String, Int, Option[Boolean])] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    parquetFiles(spark, path).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
+    dataFiles(path, conf).flatMap { f =>
+      withFooter(f, conf) { reader =>
         reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
           val chunk = b.getColumns.asScala
             .find(_.getPath.toDotString == column)
-            .getOrElse(sys.error(s"no column '$column' in $f"))
-          val bf = reader.getBloomFilterDataReader(b).readBloomFilter(chunk)
-          val verdict = Option(bf).map { filter =>
-            val hash = value match {
-              case v: Long        => filter.hash(v)
-              case v: Int         => filter.hash(v)
-              case v: Double      => filter.hash(v)
-              case v: Float       => filter.hash(v)
-              case v: String      => filter.hash(org.apache.parquet.io.api.Binary.fromString(v))
-              case v: Array[Byte] => filter.hash(org.apache.parquet.io.api.Binary.fromConstantByteArray(v))
-              case other => sys.error(s"unsupported bloom probe type: ${other.getClass}")
-            }
-            filter.findHash(hash)
-          }
-          (f.toString, i, verdict)
+            .getOrElse(sys.error(s"no column '$column' in ${f.getPath}"))
+          (f.getPath.toString, i, bloomProbe(reader, b, chunk, value))
         }
-      } finally reader.close()
+      }
     }
   }
 
   /** M4 (read side): file key-value (user) metadata from the footer. */
   def keyValueMetadata(spark: SparkSession, path: String): Map[String, String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    parquetFiles(spark, path).headOption.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try reader.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap
-      finally reader.close()
+    dataFiles(path, conf).headOption.map { f =>
+      withFooter(f, conf)(_.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap)
     }.getOrElse(Map.empty)
   }
 
@@ -184,8 +286,7 @@ object Tools {
   /** Configuration-based core of [[writeKeyValueMetadata]] — static so
     * the distributed [[stampKeyValueMetadata]] tasks call it without
     * capturing a SparkSession. */
-  private[sources] def writeKeyValueMetadataFile(
-      conf: org.apache.hadoop.conf.Configuration,
+  private[sources] def writeKeyValueMetadataFile(conf: Configuration,
       srcFile: String, dstFile: String, extra: Map[String, String]): Unit = {
     val in = HadoopInputFile.fromPath(new Path(srcFile), conf)
     val reader = ParquetFileReader.open(in)
@@ -223,19 +324,28 @@ object Tools {
    * pass — so a 2·10⁵-file table stamps in one task wave per slot,
    * not a driver loop of 2·10⁵ round-trips. Existing KV entries
    * (including Spark's schema key) are preserved per file; `extra`
-   * wins on conflict. Returns the number of files stamped.
+   * wins on conflict. Every data file under `srcDir` ([[dataFiles]],
+   * hive partition dirs included) keeps its path relative to `srcDir`
+   * below `dstDir`: one task writes the same file name into every
+   * partition dir it touches. Returns the number of files stamped.
    */
   def stampKeyValueMetadata(spark: SparkSession, srcDir: String,
       dstDir: String, extra: Map[String, String]): Long = {
-    val files = parquetFiles(spark, srcDir).map(_.toString)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val (fs, src) = Fs.fileSystem(srcDir, hconf)
+    val root = fs.makeQualified(src).toUri.getPath
+    val files = dataFiles(srcDir, hconf).map { st =>
+      val rel = fs.makeQualified(st.getPath).toUri.getPath.stripPrefix(root).stripPrefix("/")
+      (st.getPath.toString, if (rel.isEmpty) st.getPath.getName else rel)
+    }
     require(files.nonEmpty, s"stampKeyValueMetadata: no parquet files under $srcDir")
-    val conf = new StatsManifest.SerConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     val dst = dstDir
-    spark.createDataset(files)(org.apache.spark.sql.Encoders.STRING)
+    spark.createDataset(files)(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.STRING))
       .repartition(math.min(files.size, 64))
-      .map { f: String =>
-        val name = new Path(f).getName
-        writeKeyValueMetadataFile(conf.value, f, s"$dst/$name", extra)
+      .map { case (f, rel) =>
+        writeKeyValueMetadataFile(conf.value, f, s"$dst/$rel", extra)
         1L
       }(org.apache.spark.sql.Encoders.scalaLong)
       .reduce(_ + _)
@@ -305,7 +415,7 @@ object Tools {
 
   /** Open a footer+pages reader over either the Hadoop stream path or the
     * S9 memory-mapped path — the reference's `memory_map` toggle. */
-  private def openReader(file: String, conf: org.apache.hadoop.conf.Configuration,
+  private def openReader(file: String, conf: Configuration,
       mmap: Boolean): ParquetFileReader =
     if (!mmap) ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
     else {

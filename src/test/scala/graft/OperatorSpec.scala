@@ -1208,6 +1208,22 @@ class KvMetadataWriteSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/dst").as[(Long, String)].collect().toSet
       === df.as[(Long, String)].collect().toSet)
   }
+
+  test("M4 write, distributed: a hive-partitioned dir keeps each leaf's partition path") {
+    val base = java.nio.file.Files.createTempDirectory("graft-kvh").toString
+    // one task writes the same file name into both partition dirs
+    val df = (0 until 100).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "p")
+    df.repartition(1).write.partitionBy("p").mode("overwrite").parquet(s"$base/src")
+    assert(graft.sources.Tools.rowGroups(spark, s"$base/src").size === 2)
+    val n = graft.sources.Tools.stampKeyValueMetadata(spark, s"$base/src",
+      s"$base/dst", Map("graft.lineage" -> "hive"))
+    assert(n === 2L, s"expected 2 files stamped, got $n")
+    assert(graft.sources.Tools.parquetFiles(spark, s"$base/dst").forall(f =>
+      graft.sources.Tools.keyValueMetadata(spark, f.toString).get("graft.lineage")
+        .contains("hive")))
+    assert(spark.read.parquet(s"$base/dst").as[(Long, String, Int)].collect().toSet
+      === df.as[(Long, String, Int)].collect().toSet)
+  }
 }
 
 class ClusterPairsSpec extends AnyFunSuite {

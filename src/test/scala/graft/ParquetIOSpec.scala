@@ -117,6 +117,23 @@ class ParquetIOSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).filter(col("k") === 12345L).count() == 0)
   }
 
+  test("bloom probe hashes in the column's physical type: Long on int, Int on long") {
+    val dir = tmp() + "/bloom_types"
+    val df = spark.range(1000).selectExpr("cast(id * 2 as int) as i", "id * 2 as l",
+      "cast(id * 2 as decimal(12,2)) as d").coalesce(1)
+    ParquetIO.writeWithBloomFilters(df, dir, Seq("i", "l", "d"), expectedNdv = 1000)
+    val longOnInt = Tools.bloomMightContain(spark, dir, "i", 42L)
+    val intOnLong = Tools.bloomMightContain(spark, dir, "l", 42)
+    assert(longOnInt.nonEmpty && longOnInt.forall(_._3.contains(true)), longOnInt)
+    assert(intOnLong.nonEmpty && intOnLong.forall(_._3.contains(true)), intOnLong)
+    // a decimal(12,2) chunk is INT64 holding the UNSCALED value (4200 for
+    // 42.00): a BigDecimal probe must never read as absent
+    for (v <- Seq[Any](new java.math.BigDecimal("42.00"), BigDecimal("42.00"))) {
+      val onDecimal = Tools.bloomMightContain(spark, dir, "d", v)
+      assert(onDecimal.nonEmpty && !onDecimal.exists(_._3.contains(false)), onDecimal)
+    }
+  }
+
   test("DecimalType round-trip: FLBA physical for p>18, INT64 for p<=18, values exact") {
     // SURVEY §1 type table: FIXED_LEN_BYTE_ARRAY ⇄ DecimalType(p,s). The
     // standard (non-legacy) writer packs p<=18 into INT64 and p>18 into

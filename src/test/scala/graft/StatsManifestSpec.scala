@@ -198,4 +198,33 @@ class StatsManifestSpec extends AnyFunSuite {
     assert(StatsManifest.readSkippingEquality(spark, t, "id", 1234L)
       .count() === 1L)
   }
+  test("a hive-partitioned table skips with its partition column kept") {
+    val t = tmp() + "/t"
+    import spark.implicits._
+    // every range-clustered task writes into both partition dirs: 8 leaf
+    // files, each leaf's id range disjoint from its dir-mates'
+    (0 until 4000).map(i => (i.toLong * 2, i % 2)).toDF("id", "p")
+      .repartitionByRange(4, col("id")).sortWithinPartitions("id")
+      .write.option("parquet.bloom.filter.enabled#id", "true")
+      .option("parquet.bloom.filter.expected.ndv#id", "1000")
+      .partitionBy("p").parquet(t)
+    StatsManifest.build(spark, t, Seq("id"))
+    assert(StatsManifest.manifest(spark, t).select("file").distinct().count() === 8L)
+    val full = spark.read.parquet(t)
+    def same(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.schema === want.schema)
+      assert(got.orderBy("id").collect().toSeq === want.orderBy("id").collect().toSeq)
+    }
+    assert(StatsManifest.prune(spark, t, "id", 2000L, 2999L).size < 8)
+    same(StatsManifest.readSkipping(spark, t, "id", 2000L, 2999L),
+      full.filter(col("id") >= 2000L && col("id") <= 2999L))
+    // a predicate on the partition column itself: no stats rows, all kept
+    same(StatsManifest.readSkipping(spark, t, "p", 1, 1), full.filter(col("p") === 1))
+    assert(StatsManifest.pruneEquality(spark, t, "id", 74L).size < 8)
+    same(StatsManifest.readSkippingEquality(spark, t, "id", 74L), full.filter(col("id") === 74L))
+    // an absent value: blooms usually prune every file, and the empty
+    // frame keeps the schema too
+    same(StatsManifest.readSkippingEquality(spark, t, "id", 75L), full.filter(col("id") === 75L))
+  }
 }

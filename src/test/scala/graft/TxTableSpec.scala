@@ -992,6 +992,39 @@ class TxTableSpec extends AnyFunSuite {
     assert(snap.count() === 1000L - 334L + 1L)
   }
 
+  test("compactFiles below minDeadFraction decides without a Spark job and returns None") {
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, base(4000).repartition(4))
+    TxTable.deleteWhere(spark, t, col("id") < 5L)
+    val barrier = "txtable-compact-barrier"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val barrierDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private def desc(e: org.apache.spark.scheduler.SparkListenerJobStart) =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse(""))
+      private val barrierJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (desc(e) == barrier) barrierJobs.add(e.jobId) else started.add(desc(e))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (barrierJobs.contains(e.jobId)) barrierDone.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val k = try {
+      val k = TxTable.compactFiles(spark, t, minDeadFraction = 0.3)
+      // the bus delivers events in order: once the barrier job's end
+      // arrives, every job the call started has been counted
+      spark.sparkContext.setJobDescription(barrier)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(barrierDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      k
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.isEmpty, s"compactFiles ran Spark jobs: ${started.toArray.mkString("; ")}")
+    assert(k.isEmpty, "5 dead rows of 4000 are below the 0.3 threshold")
+    assert(TxTable.read(spark, t).count() === 3995L)
+  }
+
   test("changeFeed rejects a table column named op, naming it") {
     import spark.implicits._
     val t = tmp() + "/t"
