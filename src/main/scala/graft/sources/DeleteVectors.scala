@@ -80,12 +80,15 @@ object DeleteVectors {
   }
 
   /** Read one sidecar file on the driver (parquet-mr, no Spark job). */
-  private[sources] def readSidecar(path: org.apache.hadoop.fs.Path,
+  private[sources] def readSidecar(file: org.apache.hadoop.fs.FileStatus,
       conf: org.apache.hadoop.conf.Configuration): Seq[FileVector] = {
     import org.apache.parquet.example.data.Group
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(conf).build()
+    // opened from the listing's status: one open, no status call
+    val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf)) {
+      override protected def getReadSupport() =
+        new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }.withConf(conf).build()
     def longOr0(g: Group, field: Int): Long =
       if (g.getFieldRepetitionCount(field) > 0) g.getLong(field, 0) else 0L
     try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>

@@ -52,14 +52,30 @@ object Fs {
     fs.listStatus(p).toSeq.filter(_.isFile)
   }
 
+  /** One listing of `path` — its children, or the file itself — and
+    * empty when `path` is missing: one `listStatus`, where an
+    * exists-then-list pair costs three round trips on an object store.
+    * Only `FileNotFoundException` reads as "nothing there"; any other
+    * failure propagates, so a failed listing can never pass for an empty
+    * commit log. */
+  def listOrEmpty(path: String, c: Configuration = conf()): Seq[FileStatus] = {
+    val (fs, p) = fileSystem(path, c)
+    try fs.listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
   def exists(path: String, c: Configuration = conf()): Boolean = {
     val (fs, p) = fileSystem(path, c)
     fs.exists(p)
   }
 
+  /** One status call; false when `path` is missing or a file. For the
+    * callers that must tell a missing dir from an empty one — the rest
+    * list with [[listOrEmpty]]. */
   def isDirectory(path: String, c: Configuration = conf()): Boolean = {
     val (fs, p) = fileSystem(path, c)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
+    try fs.getFileStatus(p).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
   }
 
   /** Recursive delete; returns false (never throws on failure) so the
@@ -90,20 +106,20 @@ object Fs {
         false
     }
 
-  /** Read a small UTF-8 file (a pointer/manifest), if present. */
+  /** Read a small UTF-8 file (a pointer/manifest), if present — one
+    * `open`, a missing file is None. */
   def readUtf8(path: String, c: Configuration = conf()): Option[String] = {
     val (fs, p) = fileSystem(path, c)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
+    val in =
+      try fs.open(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      var n = in.read(buf)
+      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+      Some(new String(out.toByteArray, "UTF-8"))
+    } finally in.close()
   }
 
   /** Plain small-file write (create, overwrite allowed). NOT atomic —
@@ -250,14 +266,16 @@ object Fs {
           "fs.s3a.create.conditional.enabled) or coordinate writers " +
           "externally; single-writer use is unaffected.")
 
-  /** One directory's matching-file count (object-level, not a local def:
-    * executor closures must reach it as a static module call, never
-    * capture it). Missing/unlistable dirs count 0. */
+  /** One directory's count of data files ([[Tools.isData]]) whose name
+    * ends with `nameSuffix` (object-level, not a local def: executor
+    * closures must reach it as a static module call, never capture it).
+    * Missing/unlistable dirs count 0. */
   private def countOneDir(p: String, nameSuffix: String, c: Configuration): (String, Long) = {
     val cnt =
       try {
         val (fs, pp) = fileSystem(p, c)
-        fs.listStatus(pp).count(s => s.isFile && s.getPath.getName.endsWith(nameSuffix)).toLong
+        fs.listStatus(pp).count(s => s.isFile && Tools.isData(s) &&
+          s.getPath.getName.endsWith(nameSuffix)).toLong
       } catch { case scala.util.control.NonFatal(_) => 0L }
     (p, cnt)
   }
@@ -269,7 +287,10 @@ object Fs {
     * directory serializes 10⁵ round-trips; spread across executors the
     * same listing is bounded by slice width, and at real scale the
     * executors' aggregate RPC concurrency is exactly what the object
-    * store is provisioned for. Returns dir → count (missing/unlistable
+    * store is provisioned for. Only data files count — Spark's rule
+    * ([[Tools.isData]]: no `_`/`.` prefix, not empty), so a `.crc`
+    * checksum, an `_`-prefixed leftover or an empty file never tips a
+    * partition into compaction. Returns dir → count (missing/unlistable
     * dirs count 0 — same as "no matching files" for the compaction
     * decision). Small inputs short-circuit to a driver loop: a Spark
     * job per maintenance call would cost more than it saves below a few

@@ -71,16 +71,15 @@ object ParquetIO {
 
   /** The first data file of a FLAT parquet input — a file, or a
     * directory holding its data files directly — by path order, from one
-    * listing, under [[Tools.isData]]. None for a glob, a directory with
-    * a data subdirectory (hive partitions: their columns come from
-    * Spark's partition inference) or one with no data file; Spark's
-    * inference decides those. */
-  private def firstDataFile(path: String): Option[org.apache.hadoop.fs.FileStatus] = {
+    * listing (`list`), under [[Tools.isData]]. None for a glob, a
+    * directory with a data subdirectory (hive partitions: their columns
+    * come from Spark's partition inference), a missing path or one with
+    * no data file; Spark's inference decides those. */
+  private def firstDataFile(path: String,
+      list: String => Seq[org.apache.hadoop.fs.FileStatus]): Option[org.apache.hadoop.fs.FileStatus] = {
     if (path.exists("*?[{".contains(_))) return None
     val (fs, p) = Fs.fileSystem(path)
-    val children =
-      try fs.listStatus(p).toSeq.filter(Tools.isData)
-      catch { case _: java.io.FileNotFoundException => return None }
+    val children = list(path).filter(Tools.isData)
     // listing a FILE returns the file itself
     if (children.size == 1 && children.head.getPath == fs.makeQualified(p))
       children.headOption
@@ -93,8 +92,9 @@ object ParquetIO {
     * place under the same name is a new key. Dumb full-clear cap. */
   private val footerSchemas =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
-  private def schemaOf(root: String): Option[StructType] =
-    firstDataFile(root).map { st =>
+  private def schemaOf(root: String,
+      list: String => Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
+    firstDataFile(root, list).map { st =>
       val key = (st.getPath.toString, st.getLen, st.getModificationTime)
       Option(footerSchemas.get(key)).getOrElse {
         val schema = footerSchema(st)
@@ -126,12 +126,15 @@ object ParquetIO {
    * column must be taken per scan). Each group being a distinct schema,
    * every column first appears in its group's first input, so columns
    * come in the per-input fold's order, first input's first. A path
-   * listed twice is read twice.
+   * listed twice is read twice. `list` lists a root (empty when it is
+   * missing); a caller that already listed its roots passes its
+   * listings, so no root is listed twice.
    */
   private[sources] def readByName(spark: SparkSession,
-      groups: Seq[(String, Seq[String])], perScan: DataFrame => DataFrame): DataFrame = {
+      groups: Seq[(String, Seq[String])], perScan: DataFrame => DataFrame,
+      list: String => Seq[org.apache.hadoop.fs.FileStatus] = Fs.listOrEmpty(_)): DataFrame = {
     val keyed = groups.toVector.zipWithIndex.map { case ((root, paths), i) =>
-      (schemaOf(root).toLeft(i), root, paths)
+      (schemaOf(root, list).toLeft(i), root, paths)
     }
     val scans = keyed.map(_._1).distinct.map {
       case key @ Left(schema) =>

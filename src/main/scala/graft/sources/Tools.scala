@@ -98,7 +98,14 @@ object Tools {
     * schemes (HostileFsSpec). Throws on a missing path. */
   private[graft] def dataFiles(path: String, conf: Configuration = Fs.conf()): Seq[FileStatus] = {
     val (fs, p) = Fs.fileSystem(path, conf)
-    val top = fs.listStatus(p).toSeq
+    dataFilesOf(path, fs.listStatus(p).toSeq, conf)
+  }
+
+  /** [[dataFiles]] from `top`, the listing of `path` the caller already
+    * holds: only the subdirectories of a hive-partitioned dir list again. */
+  private[graft] def dataFilesOf(path: String, top: Seq[FileStatus],
+      conf: Configuration): Seq[FileStatus] = {
+    val (fs, p) = Fs.fileSystem(path, conf)
     // listing a FILE returns the file itself
     if (top.size == 1 && top.head.isFile && top.head.getPath == fs.makeQualified(p)) {
       top.head.setPath(p)

@@ -199,16 +199,13 @@ class TxFeedSource(spark: SparkSession, root: String, keys: Seq[String],
           // changelog with silent holes — the folded commits are
           // feed-invisible. Registered streams (consumerName) never
           // hit this: their cursor floors the expire.
-          val oldest = TxTable.committedIds(root).min
-          require(lo + 1 >= oldest,
+          feedAfter(lo, hi, oldest =>
             s"txtable: stream offset $lo predates the retained history " +
               s"(oldest commit $oldest) — the stream fell behind " +
               "checkpoint+expire maintenance; rebuild its state from a " +
               "snapshot read and restart with a fresh checkpoint (set " +
               "consumerName to register a retention cursor and prevent " +
               "this)")
-          aligned(TxTable.changeFeed(spark, root, keys,
-            fromCommit = lo + 1, withPreimage = withPreimage, toCommit = hi))
         }
       case None => firstBatch(hi)
     }
@@ -226,18 +223,23 @@ class TxFeedSource(spark: SparkSession, root: String, keys: Seq[String],
     case Some("latest") => aligned(emptyFeed())
     case Some(n) =>
       val cursor = n.toLong
-      val oldest = TxTable.committedIds(root).min
       // same loud-never-lossy stance as changeFeedFrom: a cursor below
       // retained history would yield a changelog with silent holes
-      require(cursor + 1 >= oldest,
+      feedAfter(cursor, hi, oldest =>
         s"txtable: startingCursor $cursor predates the retained history " +
           s"(oldest commit $oldest) — commits below it were folded into a " +
           "checkpoint and are feed-invisible; drop startingCursor to " +
           "bootstrap from the snapshot instead")
-      if (hi <= cursor) aligned(emptyFeed())
-      else aligned(TxTable.changeFeed(spark, root, keys,
-        fromCommit = cursor + 1, withPreimage = withPreimage, toCommit = hi))
   }
+
+  /** The feed of commits (`lo`, `hi`] — empty when `hi <= lo` — refused
+    * with `predates(oldest)` when `lo` is below the retained history.
+    * The check and the feed read ONE commits listing. */
+  private def feedAfter(lo: Long, hi: Long, predates: Long => String): DataFrame =
+    aligned(TxTable.changeFeedOver(spark, root, keys, withPreimage) { all =>
+      require(lo + 1 >= all.min, predates(all.min))
+      Some((lo + 1, hi))
+    }.get._1)
 
   /** schema-shaped zero rows (a range holding only checkpoint commits,
     * or a "latest" start) */

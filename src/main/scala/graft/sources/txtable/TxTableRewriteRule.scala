@@ -75,16 +75,16 @@ case class TxTableRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // below the oldest retained id were folded into a checkpoint
         // and are feed-invisible — a fromCommit below that would
         // silently return a changelog with holes
-        val oldest = graft.sources.TxTable.committedIds(t.root).min
-        require(t.fromCommit >= oldest,
-          s"txtable: feed read fromCommit=${t.fromCommit} predates the " +
-            s"retained history (oldest commit $oldest) — those commits " +
-            "were folded into a checkpoint and are feed-invisible; read " +
-            s"the snapshot instead, or set fromCommit >= $oldest")
-        rewire(r, t.name(),
-          graft.sources.TxTable.changeFeed(spark, t.root, t.keys,
-            fromCommit = t.fromCommit, withPreimage = t.withPreimage,
-            toCommit = t.toCommit).queryExecution.analyzed)
+        val feed = graft.sources.TxTable.changeFeedOver(spark, t.root, t.keys,
+            t.withPreimage) { all =>
+          require(t.fromCommit >= all.min,
+            s"txtable: feed read fromCommit=${t.fromCommit} predates the " +
+              s"retained history (oldest commit ${all.min}) — those commits " +
+              "were folded into a checkpoint and are feed-invisible; read " +
+              s"the snapshot instead, or set fromCommit >= ${all.min}")
+          Some((t.fromCommit, t.toCommit))
+        }.get._1
+        rewire(r, t.name(), feed.queryExecution.analyzed)
     }
   }
 

@@ -2,8 +2,18 @@ package graft
 
 import graft.sources.{Fs, ParquetIO, TxTable}
 import graft.streaming.Streams
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A local store whose listings fail with a plain I/O error (an
+  * unreachable store, a throttled request) — never "not found". */
+class ListFailFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "listfail"
+  override def getUri: java.net.URI = java.net.URI.create("listfail:///")
+  override def listStatus(f: Path): Array[FileStatus] =
+    throw new java.io.IOException(s"listfail: listing refused ($f)")
+}
 
 /** Round-13 port gate: the table-maintenance tier (partition TTL,
   * fragmented-partition compaction, TxTable markers/vacuum) runs
@@ -59,10 +69,18 @@ class LifecycleFsSpec extends AnyFunSuite {
         .write.mode("append").partitionBy("pc").parquet(dir)
     val dirs = Fs.listDirs(dir).map(_.getPath.toString).filter(_.contains("pc="))
     assert(dirs.size == 4)
+    // neither an empty .parquet file nor an `_`-prefixed one is data
+    val p1 = new java.io.File(new java.net.URI(dirs.find(_.endsWith("pc=p1")).get))
+    new java.io.File(p1, "empty.parquet").createNewFile()
+    java.nio.file.Files.write(new java.io.File(p1, "_x.parquet").toPath, Array[Byte](1, 2, 3))
     val seqCounts = dirs.map(p => p -> Fs.listFiles(p)
-      .count(_.getPath.getName.endsWith(".parquet")).toLong).toMap
+      .count(st => st.getLen > 0 && !st.getPath.getName.startsWith("_") &&
+        st.getPath.getName.endsWith(".parquet")).toLong).toMap
     val distCounts = Fs.countFilesDistributed(spark, dirs, ".parquet", driverLoopBelow = 0)
     assert(distCounts == seqCounts, s"distributed=$distCounts sequential=$seqCounts")
+    assert(Fs.countFilesDistributed(spark, dirs, ".parquet") == seqCounts)
+    assert(seqCounts(dirs.find(_.endsWith("pc=p1")).get) ==
+      Fs.listFiles(p1.toString).count(_.getPath.getName.startsWith("part-")).toLong)
     // the 6 appended files all landed in pc=p0 and are visible to both paths
     assert(distCounts(dirs.find(_.endsWith("pc=p0")).get) >= 6L)
     // a missing dir counts 0 on the distributed path, not an exception
@@ -180,5 +198,28 @@ class LifecycleFsSpec extends AnyFunSuite {
     assert(Fs.deleteIfExists(p))
     assert(Fs.readUtf8(p).isEmpty)
     assert(Fs.deleteIfExists(p), "deleting an absent file reports gone")
+  }
+
+  test("Fs.listOrEmpty: missing and empty dirs list empty, files list") {
+    val dir = schemeDir("graft-fs-list")
+    assert(Fs.listOrEmpty(s"$dir/absent").isEmpty)
+    Fs.writeUtf8(s"$dir/full/a", "1")
+    Fs.writeUtf8(s"$dir/full/b", "2")
+    new java.io.File(new java.net.URI(s"$dir/empty")).mkdirs()
+    assert(Fs.listOrEmpty(s"$dir/empty").isEmpty)
+    assert(Fs.listOrEmpty(s"$dir/full").map(_.getPath.getName)
+      .filterNot(_.endsWith(".crc")).sorted == Seq("a", "b"))
+  }
+
+  test("Fs.listOrEmpty propagates a listing failure that is not 'not found'") {
+    // read as "empty", a failed listing of _txn/commits would silently
+    // hide every commit
+    val c = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    c.set("fs.listfail.impl", classOf[ListFailFileSystem].getName)
+    c.setBoolean("fs.listfail.impl.disable.cache", true)
+    val dir = java.nio.file.Files.createTempDirectory("graft-fs-listfail").toString
+    val e = intercept[java.io.IOException](Fs.listOrEmpty(s"listfail:$dir", c))
+    assert(e.getMessage.contains("listing refused"))
+    assert(!e.isInstanceOf[java.io.FileNotFoundException])
   }
 }
