@@ -103,13 +103,13 @@ object Bench {
     }.mkString("{", ",", "}")
     System.err.println(s"""[bench] spread $spread""")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    // the stdout line is captured with a 2000-char TAIL limit: with 100
-    // queries the inline per-query map pushed the line past the limit and
-    // decapitated the JSON two rounds running (r7/r8 parsed:null). Keep
-    // stdout to ONE SHORT line (total only — always parseable) and route
-    // the full per-query medians to a sidecar file + stderr.
+    // stdout carries two lines: the full per-query record (medians and
+    // spread) for readers that parse every line, then the short total
+    // line LAST — a reader that keeps only a 2000-char tail (with 100
+    // queries an inline map once decapitated the JSON: r7/r8
+    // parsed:null) still gets a parseable last line
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"queries":$qs,"spread":$spread,"sf":"$sfDir"}"""
-    System.err.println(s"[bench] full $full")
+    println(full)
     // a FILTERED run lands in a _partial sidecar: neither the shared nor
     // the round-stamped full-battery record may be replaced by a targeted
     // re-measurement (r11 advice closed the stamped copy; the shared one

@@ -1447,7 +1447,7 @@ object TxTable {
   /**
    * CURSOR-DRIVEN change-feed consumption (round 18) — the polling
    * primitive that lets a standing consumer (an incremental aggregate,
-   * an ANN/dedup state — [[graft.streaming.Streams.txFeedSink]]) follow
+   * a vector state — [[graft.streaming.Streams.txVectorStateSync]]) follow
    * a mutating table without replaying history: returns the i/u/d feed
    * of every commit STRICTLY AFTER `cursor` plus the new cursor (the
    * committed tip at the one listing this call makes), `None` when
@@ -1474,8 +1474,8 @@ object TxTable {
       // a FRESH consumer (cursor < 0) on a FOLDED table is the same hole
       // from the other side (round 19): checkpoints are feed-invisible, so
       // the folded base rows are gone from the feed — bootstrap from a
-      // snapshot read instead ([[graft.streaming.Streams.txFeedSink]]'s
-      // pattern) and resume from the returned tip.
+      // snapshot read instead ([[graft.sources.txtable.TxFeedSource]]'s
+      // default start) and resume from the returned tip.
       require(cursor >= 0 || all.min == 0,
         s"txtable: changeFeedFrom with a fresh cursor ($cursor) on a folded " +
           s"table (oldest commit ${all.min} > 0) — the folded base rows are " +

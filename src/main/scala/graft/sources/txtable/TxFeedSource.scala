@@ -11,8 +11,8 @@ import graft.sources.TxTable
 
 /**
  * STREAMING READ of the transactional table (round 19) — the source
- * half of the Spark-idiomatic surface, completing
- * [[graft.streaming.Streams.txFeedSink]]'s foreachBatch adapter:
+ * half of the Spark-idiomatic surface and the library's one change-feed
+ * consumer (its sink half is [[TxStreamSink]]):
  *
  * {{{
  *   spark.readStream.format("txtable")
@@ -46,8 +46,8 @@ import graft.sources.TxTable
  *    listed tip as `op='i'` rows stamped `commit=tip`, then deltas.
  *    Uniformly correct: on a long-lived table whose history was folded
  *    away the old feed rows live inside feed-invisible checkpoint
- *    commits, and a feed-only start would silently miss them
- *    ([[graft.streaming.Streams.txFeedTick]]'s contract).
+ *    commits, and a feed-only start would silently miss them (the
+ *    case [[TxTable.changeFeedFrom]] refuses for a fresh cursor).
  *  - `N` (a long): the real historical feed from commit `N+1` — loud,
  *    never lossy when the range predates retained history (`-1` = full
  *    history, requires the table never folded).

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -229,8 +230,9 @@ object Streams {
 
   /**
    * ONE sink micro-batch — the shared body behind [[txUpsertSink]]
-   * (foreachBatch) and the `df.writeStream.format("txtable")` V1 Sink
-   * ([[graft.sources.txtable.TxTableSource]], round 19): marker-gated
+   * (foreachBatch), the `df.writeStream.format("txtable")` V1 Sink
+   * ([[graft.sources.txtable.TxTableSource]], round 19) and every
+   * standing sink's state commit ([[commitState]]): marker-gated
    * exactly-once MERGE of the batch into the table, first-batch
    * auto-create, optional in-stream maintenance cadence.
    */
@@ -264,18 +266,21 @@ object Streams {
         conflictDetect = conflictDetect, conflictWaitMs = conflictWaitMs)
       if (checkpointEvery > 0 && batchId > 0 &&
           batchId % checkpointEvery == 0) {
-        // under multi-writer OCC the fold can lose its fence race —
-        // skip this cadence and fold at the next one rather than
-        // fail the stream (single-writer deployments never hit it)
+        // the fold loses its fence to a concurrent writer under
+        // multi-writer OCC, and to the unredeemed claim of a writer
+        // killed mid-commit in any deployment — skip this cadence and
+        // fold at a later one rather than fail the stream. Vacuum runs
+        // either way: it sweeps a dead writer's claim once the claim
+        // outlives the grace window, which unblocks the fold
         try {
           TxTable.checkpoint(spark, root, partitionCols = partitionCols)
           TxTable.expire(spark, root)
-          TxTable.vacuum(spark, root)
         } catch {
-          case e: TxTable.CommitConflictException if conflictDetect =>
+          case e: TxTable.CommitConflictException =>
             System.err.println(
               s"[txUpsertSink] maintenance fold skipped this cadence: ${e.getMessage}")
         }
+        TxTable.vacuum(spark, root)
         // stream markers exist to short-circuit replays, and only
         // the in-flight batch can replay — markers below it are
         // dead weight; sweep THIS stream's markers with the same
@@ -319,9 +324,9 @@ object Streams {
    * by the MERGE, re-deletes find nothing).
    *
    * This is the batch/cursor twin of [[annEnrichSink]]/
-   * [[semanticDedupSink]]'s standing feeds, for sources that are TABLES
-   * (CDC-maintained) rather than append streams: those sinks' standing
-   * state only ever GROWS, which is correct for immutable arrivals but
+   * [[semanticDedupSink]]'s state tables, for sources that are TABLES
+   * (CDC-maintained) rather than append streams: those sinks' state
+   * only ever GROWS, which is correct for immutable arrivals but
    * wrong under updates/deletes. Downstream, build the index over
    * `TxTable.read(stateRoot)` ([[graft.operators.Similarity.imiBuildIndex]]
    * / `imiIncrementalTopK`) — Δ-cost per sync, index rebuild on your
@@ -374,151 +379,34 @@ object Streams {
     }
   }
 
-  /**
-   * STREAMING change-feed consumption (round 18) — the foreachBatch
-   * source-adapter shape: every micro-batch of `ticks` (contents
-   * ignored — pass a rate stream in production, a file stream in tests)
-   * polls [[graft.sources.TxTable.changeFeedFrom]] once and lands the
-   * new commits' i/u/d rows under `outDir/batch=c<lo>_<hi>`, so ANY
-   * downstream (a retracting aggregate, a state sync, a replication
-   * consumer) tails the table as a parquet changelog without bespoke
-   * cursor code. The cursor is NOT a mutable file: it is recovered from
-   * the create-once `_done_<hi>` markers, so a crash between the batch
-   * write and its marker re-polls the SAME range into the SAME subdir
-   * (overwrite — idempotent), and a replayed tick after the marker sees
-   * cursor == tip and lands nothing. Emission order is commit order;
-   * `withPreimage` flows through for retracting consumers. Polls are
-   * metadata-cheap when idle (one commits listing → None).
-   */
-  def txFeedSink(ticks: DataFrame, root: String, keys: Seq[String],
-      outDir: String, checkpoint: String,
-      withPreimage: Boolean = false,
-      consumerName: Option[String] = None): StreamingQuery = {
-    ticks.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        txFeedTick(batch.sparkSession, root, keys, outDir, withPreimage,
-          consumerName)
-        ()
-      }
-      .start()
-  }
+  /** A standing sink's state table: one [[graft.sources.TxTable]] with a
+    * row per arrival, keyed (arrival key, `batch`). */
+  private def stateRoot(outDir: String): String = s"$outDir/_stream_state"
 
-  /** One feed-sink poll, exposed for direct (batch/cron) consumption —
-    * [[txFeedSink]] calls exactly this per micro-batch. Each emission
-    * lands under `outDir/batch=c<lo>` — keyed by the LOW cursor ONLY
-    * (round 19, r18 advisory): a crash between the batch write and its
-    * `_done_` marker leaves the cursor unadvanced, so the replay
-    * re-polls the SAME low bound into the SAME subdir even when new
-    * commits extended the range — the overwrite truly replaces the
-    * stale attempt instead of leaving a `c<lo>_<hi1>` dir next to a
-    * replayed `c<lo>_<hi2>` one (a double emission of lo..hi1). A FRESH
-    * consumer (no markers yet) of a FOLDED table bootstraps from the
-    * snapshot — the folded base rows are feed-invisible, so the first
-    * emission is the live snapshot as `i` rows at the listed tip
-    * (commit = tip; `changeFeedFrom` refuses this case loudly rather
-    * than emit a changelog with holes), and later polls consume deltas
-    * from that tip like any other consumer. */
-  def txFeedTick(spark: SparkSession, root: String, keys: Seq[String],
-      outDir: String, withPreimage: Boolean = false,
-      consumerName: Option[String] = None): Unit = {
-    import graft.sources.{Fs, TxTable}
-    val cursor = feedCursor(outDir)
-    val all = TxTable.committedIds(root)
-    if (cursor < 0 && all.nonEmpty && all.min > 0) {
-      // snapshot bootstrap: base rows as inserts at the tip, the same
-      // column shape changeFeed emits (keys, op, payload, commit)
-      val tip = all.max
-      val base = TxTable.readAt(spark, root, tip)
-      val payload = base.columns.filterNot(keys.contains).toSeq
-      base.select(keys.map(col) ++ Seq(lit("i").as("op")) ++
-          payload.map(col) :+ lit(tip).as("commit"): _*)
-        .write.mode("overwrite").parquet(s"$outDir/batch=c0")
-      Fs.createMarker(s"$outDir/_done_$tip", s"c0")
-      consumerName.foreach(TxTable.registerCursor(root, _, tip))
-    } else {
-      TxTable.changeFeedFrom(spark, root, keys, cursor,
-        withPreimage = withPreimage).foreach { case (feed, tip) =>
-        feed.write.mode("overwrite")
-          .parquet(s"$outDir/batch=c${cursor + 1}")
-        Fs.createMarker(s"$outDir/_done_$tip", s"c${cursor + 1}")
-      }
-      // registration covers the no-new-commits poll too: an idle
-      // consumer at the tip is still LIVE, and its floor must hold
-      val tip = feedCursor(outDir)
-      if (tip >= 0) consumerName.foreach(TxTable.registerCursor(root, _, tip))
+  /** Create a sink's state table once, from `seed` (zero rows give the
+    * schema). A crash mid-create leaves no commit marker, so a restart
+    * creates it again; no batch can run before it commits. */
+  private def openState(root: String, seed: => DataFrame): Unit =
+    if (graft.sources.TxTable.committedIds(root).isEmpty) {
+      val rows = seed
+      graft.sources.TxTable.create(rows.sparkSession, root, rows)
     }
-  }
 
-  /** The feed sink's recovered cursor: the highest committed `_done_`
-    * marker (−1 before the first emission). */
-  def feedCursor(outDir: String): Long = {
-    import graft.sources.Fs
-    if (!Fs.isDirectory(outDir)) return -1L
-    Fs.listFiles(outDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("_done_") && n.drop(6).forall(_.isDigit))
-      .map(_.drop(6).toLong)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** Everything the feed sink has emitted, in commit order — the
-    * changelog a downstream replays ([[graft.operators.Materialize.incrementalAggCdc]]
-    * takes it as-is). */
-  def readFeedOutput(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir).drop("batch").orderBy(col("commit"))
-
-  /** Standing stream-state layout (round 16): one `batch=<tag>` subdir
-    * per committed micro-batch, each written with mode OVERWRITE — a
-    * replayed micro-batch (foreachBatch is at-least-once) rewrites ITS
-    * OWN subdir instead of appending duplicate rows, so the standing
-    * state no longer grows under replays. Parquet partition discovery
-    * reads the whole dir; [[standingRead]]'s explicit column selection
-    * drops the inferred `batch` partition column. `_`-prefixed marker
-    * files at the root are invisible to discovery. */
-  private def standingWrite(df: DataFrame, dir: String, tag: String): Unit =
-    df.write.mode("overwrite").parquet(s"$dir/batch=$tag")
-
-  private def standingRead(spark: SparkSession, dir: String,
-      cols: Seq[String]): DataFrame =
-    spark.read.parquet(dir).select(cols.map(col): _*)
-
-  /** Fold a standing stream-state dir's per-batch subdirs into ONE
-    * compacted subdir — the stream-state small-files bound (round 16):
-    * without it the dir grows one subdir per micro-batch forever, and
-    * every later batch's standing join pays the listing + open cost.
-    * Runs INSIDE foreachBatch (single-writer by the checkpoint
-    * contract). Ordering is the crash-safety: the folded subdir lands
-    * FIRST, the source subdirs are deleted after. A replayed compaction
-    * (at-least-once foreachBatch) whose target already COMPLETED
-    * (`_SUCCESS` present) must NOT re-fold — by then some source
-    * subdirs may already be deleted, and an overwrite re-fold from the
-    * survivors would silently drop the deleted sources' rows from the
-    * standing state (round-17 advice); it only finishes the source
-    * sweep. A crash MID-fold (no `_SUCCESS`) re-folds from the sources,
-    * all of which are still present because deletes start only after
-    * the fold completes; a crash mid-sweep leaves duplicate rows, which
-    * every consumer tolerates (candidate sets are distinct()-ed before
-    * scoring) and the finished sweep removes. */
-  private[graft] def compactStanding(spark: SparkSession, dir: String,
-      batchId: Long): Unit = {
-    val target = s"batch=c$batchId"
-    val sources = graft.sources.Fs.listDirs(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch=") && p.getName != target)
-    val done = graft.sources.Fs.exists(s"$dir/$target/_SUCCESS")
-    if (done) {
-      sources.foreach(p => graft.sources.Fs.deleteRecursive(p))
-    } else if (sources.size > 1) {
-      spark.read.parquet(sources.map(_.toString): _*).distinct()
-        .coalesce(4).write.mode("overwrite").parquet(s"$dir/$target")
-      sources.foreach(p => graft.sources.Fs.deleteRecursive(p))
-    }
-  }
+  /** Commit one batch's arrivals through the one sink body,
+    * [[txUpsertBatch]], keyed on (`key`, `batch`) with version = batch:
+    * two batches' rows never replace each other, and a replayed batch
+    * is a snapshot no-op. `checkpointEvery` is the sink's fold cadence. */
+  private def commitState(root: String, rows: DataFrame, key: String,
+      batchId: Long, checkpointEvery: Int, tag: String): Unit =
+    txUpsertBatch(rows.sparkSession, root, rows, batchId, Seq(key, "batch"),
+      "batch", None, checkpointEvery, Nil, Nil, conflictDetect = false,
+      conflictWaitMs = 60L * 1000, tag)
 
   /** Load-or-train a sink's coarse quantizer (round 16 review): the
     * centroid table is persisted under `outDir` at FIRST creation
     * (write, then a create-once `_SAVED` marker — an unmarked dir is a
     * crashed partial write and retrains) and reloaded on resume, so the
-    * standing stream-state cell assignments stay quantized under the
+    * state table's cell assignments stay quantized under the
     * SAME centroids across a restart even when the corpus has since
     * changed. Corpus assignments are re-derived under the frozen
     * quantizer; see [[graft.operators.Similarity.imiBuildIndexFrom]]. */
@@ -538,6 +426,72 @@ object Streams {
   }
 
   /**
+   * The per-batch body the two vector sinks share. At sink start: the
+   * IMI index is loaded or trained ([[loadOrBuildImiIndex]]) and the
+   * state table is created empty. Per micro-batch: the batch vectors are
+   * spilled once as (id, qvec) and assigned to their cells (id, cl, cr);
+   * the standing side is the corpus ∪ every committed arrival, read from
+   * the state table as cells (id, cl, cr) and vectors (nbr, cvec);
+   * `decide` turns these four into the batch's output, which overwrites
+   * `outDir/batch=<id>`; then the batch's arrivals — one row of (id,
+   * batch, cells, vec) each — commit to the state. A crash between the
+   * output and the commit replays the batch, and each `decide`
+   * anti-joins the batch ids off the standing side, so the replay scores
+   * identically to its first attempt.
+   */
+  private def vectorSink(newVecs: DataFrame, corpus: DataFrame,
+      outDir: String, checkpoint: String, idCol: String, vecCol: String,
+      nAssign: Int, compactEvery: Int, site: String)(
+      decide: (DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame)
+      : StreamingQuery = {
+    import org.apache.spark.sql.{Dataset, Row}
+    val Similarity = graft.operators.Similarity
+    // centroids persist under outDir (round 16): a restart re-derives the
+    // corpus assignments under the ORIGINAL quantizer instead of
+    // retraining, so the committed arrivals' cells stay collision-
+    // compatible even when the corpus changed across the restart
+    val index = loadOrBuildImiIndex(corpus, outDir, idCol, vecCol, nAssign)
+    val state = stateRoot(outDir)
+    def arrivals(bvecs: DataFrame, bCells: DataFrame, batchId: Long) =
+      bCells.groupBy(col("id"))
+        .agg(collect_list(struct(col("cl"), col("cr"))).as("cells"))
+        .join(bvecs, "id")
+        .select(col("id"), lit(batchId).as("batch"), col("cells"),
+          col("qvec").as("vec"))
+    openState(state, {
+      val spark = newVecs.sparkSession
+      val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        newVecs.select(col(idCol).as("id"), col(vecCol).as("qvec")).schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], arrivals(none,
+        Similarity.imiAssignWithIndex(index, none, "id", "qvec"), -1L).schema)
+    })
+    val tag = streamTag(checkpoint)
+    newVecs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        // spilled once: feeds assignment, the verify join, the output
+        // and the state commit
+        val bvecs = graft.operators.Materialize.viaParquet(
+          batch.toDF().select(col(idCol).as("id"), col(vecCol).as("qvec")),
+          s"${site}_batch")
+        val bCells = graft.operators.Materialize.viaParquet(
+          Similarity.imiAssignWithIndex(index, bvecs, "id", "qvec"),
+          s"${site}_bcells")
+        val standing = graft.sources.TxTable.read(batch.sparkSession, state)
+        val standCells = index.corpusCells.unionByName(
+          standing.select(col("id"), explode(col("cells")).as("c"))
+            .select(col("id"), col("c.cl"), col("c.cr")))
+        val standVecs = index.corpusVecs.unionByName(
+          standing.select(col("id").as("nbr"), col("vec").as("cvec")))
+        decide(bvecs, bCells, standCells, standVecs)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+        commitState(state, arrivals(bvecs, bCells, batchId), "id", batchId,
+          compactEvery, tag)
+      }
+      .start()
+  }
+
+  /**
    * Streaming ANN enrichment (round 12): every micro-batch of NEW vectors
    * gets its top-`k` corpus neighbors and lands as parquet — the
    * ingest-time similarity join every embedding pipeline runs (tag each
@@ -549,69 +503,34 @@ object Streams {
    * only its own assignment (|Δ|·2·√k dots) and the cell join —
    * never |Δ|·n, and never a retrain. Round 16 (Δ×Δ, same recipe as
    * [[semanticDedupSink]]): each committed batch's cell assignments and
-   * vectors APPEND to a standing feed under `outDir`, so a later
-   * arrival's top-`k` draws from corpus ∪ strictly-earlier stream
+   * vectors append to the sink's state table ([[vectorSink]]), so a
+   * later arrival's top-`k` draws from corpus ∪ strictly-earlier stream
    * arrivals — not just the build-time corpus. Same-batch vectors are
    * NOT neighbors (ids of the current batch are anti-joined off the
    * standing side, which also makes an at-least-once replay score
-   * identically to its first attempt). Standing subdirs fold every
-   * `compactEvery` batches ([[compactStanding]]); rebuild the sink on a
+   * identically to its first attempt). The state table folds every
+   * `compactEvery` batches (checkpoint + expire); rebuild the sink on a
    * corpus compaction epoch to refresh the index itself.
    */
   def annEnrichSink(newVecs: DataFrame, corpus: DataFrame, outDir: String,
       checkpoint: String, idCol: String, vecCol: String, k: Int = 3,
-      nAssign: Int = 2, compactEvery: Int = 16): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, round, row_number}
-    import org.apache.spark.sql.expressions.Window
-    val index = loadOrBuildImiIndex(corpus, outDir, idCol, vecCol, nAssign)
-    val cellsDir = s"$outDir/_stream_cells"
-    val vecsDir = s"$outDir/_stream_vecs"
-    newVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val bvecs = graft.operators.Materialize.viaParquet(
-          batch.toDF().select(col(idCol).as("id"), col(vecCol).as("qvec")),
-          "ann_sink_batch")
-        val bCells = graft.operators.Materialize.viaParquet(
-          graft.operators.Similarity.imiAssignWithIndex(index, bvecs, "id", "qvec"),
-          "ann_sink_bcells")
-        val haveStream = graft.sources.Fs.isDirectory(cellsDir)
-        val standCells =
-          if (haveStream) index.corpusCells.unionByName(
-            standingRead(spark, cellsDir, Seq("id", "cl", "cr")))
-          else index.corpusCells
-        val standVecs =
-          if (haveStream) index.corpusVecs.unionByName(
-            standingRead(spark, vecsDir, Seq("nbr", "cvec")))
-          else index.corpusVecs
-        val cands = bCells.as("q")
-          .join(standCells.withColumnRenamed("id", "nbr").as("c"), Seq("cl", "cr"))
-          .select(col("q.id").as("id"), col("nbr"))
-          .join(bvecs.select(col("id").as("nbr")), Seq("nbr"), "left_anti")
-          .distinct()
-        val scored = cands.join(bvecs, "id").join(standVecs, "nbr")
-          .withColumn("cos_sim", round(graft.plans.GraftExtensions
-            .graftCosine(spark, col("qvec"), col("cvec")), 4))
-        val w = Window.partitionBy(col("id"))
-          .orderBy(col("cos_sim").desc, col("nbr"))
-        scored.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= k)
-          .select(col("id"), col("nbr"), col("cos_sim"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // commit into the standing feeds AFTER the output (crash between
-        // = replay, made idempotent by the anti-join + subdir overwrite)
-        standingWrite(bCells, cellsDir, s"b$batchId")
-        standingWrite(bvecs.select(col("id").as("nbr"), col("qvec").as("cvec")),
-          vecsDir, s"b$batchId")
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          compactStanding(spark, cellsDir, batchId)
-          compactStanding(spark, vecsDir, batchId)
-        }
-        ()
-      }
-      .start()
-  }
+      nAssign: Int = 2, compactEvery: Int = 16): StreamingQuery =
+    vectorSink(newVecs, corpus, outDir, checkpoint, idCol, vecCol, nAssign,
+        compactEvery, "ann_sink") { (bvecs, bCells, standCells, standVecs) =>
+      val cands = bCells.as("q")
+        .join(standCells.withColumnRenamed("id", "nbr").as("c"), Seq("cl", "cr"))
+        .select(col("q.id").as("id"), col("nbr"))
+        .join(bvecs.select(col("id").as("nbr")), Seq("nbr"), "left_anti")
+        .distinct()
+      val scored = cands.join(bvecs, "id").join(standVecs, "nbr")
+        .withColumn("cos_sim", round(graft.plans.GraftExtensions
+          .graftCosine(bvecs.sparkSession, col("qvec"), col("cvec")), 4))
+      val w = Window.partitionBy(col("id"))
+        .orderBy(col("cos_sim").desc, col("nbr"))
+      scored.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= k)
+        .select(col("id"), col("nbr"), col("cos_sim"))
+    }
 
   /**
    * Streaming SEMANTIC dedup (round 12): the SemDeDup decision at the
@@ -619,105 +538,52 @@ object Streams {
    * standing corpus (is_dup = nearest corpus neighbor at cos ≥ `minCos`,
    * dup_of = that neighbor, NULL when nothing clears) and the decisions
    * land as parquet. Same one-index-many-batches contract as
-   * [[annEnrichSink]]; the batch analogue is the oracle-gated
+   * [[annEnrichSink]], and the same Δ×Δ state ([[vectorSink]]): later
+   * arrivals flag against earlier STREAM arrivals, not just the
+   * build-time corpus. The batch analogue is the oracle-gated
    * q_dedup_semantic_incremental, the text analogue
    * [[contentDedupStream]].
    */
   def semanticDedupSink(newVecs: DataFrame, corpus: DataFrame, outDir: String,
       checkpoint: String, idCol: String, vecCol: String, minCos: Double = 0.9,
-      nAssign: Int = 2, compactEvery: Int = 16): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, lit, round, row_number}
-    import org.apache.spark.sql.expressions.Window
-    val Similarity = graft.operators.Similarity
-    // centroids persist under outDir (round 16): a restart re-derives the
-    // corpus assignments under the ORIGINAL quantizer instead of
-    // retraining, so the standing cell history below stays collision-
-    // compatible even when the corpus changed across the restart
-    val index = loadOrBuildImiIndex(corpus, outDir, idCol, vecCol, nAssign)
-    // Δ×Δ state (round 15, judge ask #3): each committed micro-batch's
-    // cell assignments and vectors APPEND to a standing parquet feed —
-    // IMI's incremental shape, no state store, no re-quantizing history —
-    // so later arrivals flag against earlier STREAM arrivals, not just
-    // the build-time corpus. Kept under outDir (not a scratch dir) so a
-    // restarted sink resumes with its stream history intact; one subdir
-    // per committed batch (replay = overwrite), folded every
-    // `compactEvery` batches ([[compactStanding]]).
-    val cellsDir = s"$outDir/_stream_cells"
-    val vecsDir = s"$outDir/_stream_vecs"
-    newVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // spilled once: feeds assignment, the verify join, the output
-        // left-join AND the end-of-batch append
-        val bvecs = graft.operators.Materialize.viaParquet(
-          batch.toDF().select(col(idCol).as("id"), col(vecCol).as("qvec")),
-          "sem_sink_batch")
-        val bCells = graft.operators.Materialize.viaParquet(
-          Similarity.imiAssignWithIndex(index, bvecs, "id", "qvec"),
-          "sem_sink_bcells")
-        val haveStream = graft.sources.Fs.isDirectory(cellsDir)
-        val standCells =
-          if (haveStream) index.corpusCells.unionByName(
-            standingRead(spark, cellsDir, Seq("id", "cl", "cr")))
-          else index.corpusCells
-        val standVecs =
-          if (haveStream) index.corpusVecs.unionByName(
-            standingRead(spark, vecsDir, Seq("nbr", "cvec")))
-          else index.corpusVecs
-        // standing candidates (corpus ∪ earlier arrivals): any direction.
-        // Batch ids are ANTI-JOINED off the standing side so a replayed
-        // micro-batch (foreachBatch is at-least-once; its append may have
-        // committed before the crash) scores identically to its first
-        // attempt — within-batch twins flag ONLY through the directed
-        // self path below.
-        val candsStanding = bCells.as("q")
-          .join(standCells.withColumnRenamed("id", "nbr").as("c"), Seq("cl", "cr"))
-          .select(col("q.id").as("id"), col("nbr"))
-          .join(bvecs.select(col("id").as("nbr")), Seq("nbr"), "left_anti")
-        // within-batch candidates: the LOWER id is canonical (the batch
-        // analogue's least-id convention — arrival order does not exist
-        // inside one micro-batch), so exactly one of a same-batch twin
-        // pair flags
-        val candsSelf = bCells.as("x")
-          .join(bCells.select(col("id").as("nbr"), col("cl"), col("cr")).as("y"),
-            Seq("cl", "cr"))
-          .filter(col("nbr") < col("id"))
-          .select(col("id"), col("nbr"))
-        val nbrVecs = standVecs.unionByName(
-          bvecs.select(col("id").as("nbr"), col("qvec").as("cvec")))
-        val scored = candsStanding.unionByName(candsSelf).distinct()
-          .join(bvecs, "id")
-          .join(nbrVecs, "nbr")
-          .withColumn("cos_sim", round(graft.plans.GraftExtensions
-            .graftCosine(spark, col("qvec"), col("cvec")), 4))
-          .filter(col("cos_sim") >= lit(minCos))
-        val w = Window.partitionBy(col("id"))
-          .orderBy(col("cos_sim").desc, col("nbr"))
-        val best = scored.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("id"), col("nbr"), col("cos_sim"))
-        bvecs.select(col("id"))
-          .join(best, Seq("id"), "left")
-          .select(col("id"),
-            col("nbr").isNotNull.cast("int").as("is_dup"),
-            col("nbr").as("dup_of"), col("cos_sim"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // commit the batch into the standing feed AFTER its output: a
-        // crash in between replays the batch, which the anti-join above
-        // makes idempotent (and the per-batch subdir overwrite keeps the
-        // replayed append from duplicating rows)
-        standingWrite(bCells, cellsDir, s"b$batchId")
-        standingWrite(bvecs.select(col("id").as("nbr"), col("qvec").as("cvec")),
-          vecsDir, s"b$batchId")
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          compactStanding(spark, cellsDir, batchId)
-          compactStanding(spark, vecsDir, batchId)
-        }
-        ()
-      }
-      .start()
-  }
+      nAssign: Int = 2, compactEvery: Int = 16): StreamingQuery =
+    vectorSink(newVecs, corpus, outDir, checkpoint, idCol, vecCol, nAssign,
+        compactEvery, "sem_sink") { (bvecs, bCells, standCells, standVecs) =>
+      // standing candidates (corpus ∪ earlier arrivals): any direction,
+      // batch ids anti-joined off — within-batch twins flag ONLY through
+      // the directed self path below
+      val candsStanding = bCells.as("q")
+        .join(standCells.withColumnRenamed("id", "nbr").as("c"), Seq("cl", "cr"))
+        .select(col("q.id").as("id"), col("nbr"))
+        .join(bvecs.select(col("id").as("nbr")), Seq("nbr"), "left_anti")
+      // within-batch candidates: the LOWER id is canonical (the batch
+      // analogue's least-id convention — arrival order does not exist
+      // inside one micro-batch), so exactly one of a same-batch twin
+      // pair flags
+      val candsSelf = bCells.as("x")
+        .join(bCells.select(col("id").as("nbr"), col("cl"), col("cr")).as("y"),
+          Seq("cl", "cr"))
+        .filter(col("nbr") < col("id"))
+        .select(col("id"), col("nbr"))
+      val nbrVecs = standVecs.unionByName(
+        bvecs.select(col("id").as("nbr"), col("qvec").as("cvec")))
+      val scored = candsStanding.unionByName(candsSelf).distinct()
+        .join(bvecs, "id")
+        .join(nbrVecs, "nbr")
+        .withColumn("cos_sim", round(graft.plans.GraftExtensions
+          .graftCosine(bvecs.sparkSession, col("qvec"), col("cvec")), 4))
+        .filter(col("cos_sim") >= lit(minCos))
+      val w = Window.partitionBy(col("id"))
+        .orderBy(col("cos_sim").desc, col("nbr"))
+      val best = scored.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .select(col("id"), col("nbr"), col("cos_sim"))
+      bvecs.select(col("id"))
+        .join(best, Seq("id"), "left")
+        .select(col("id"),
+          col("nbr").isNotNull.cast("int").as("is_dup"),
+          col("nbr").as("dup_of"), col("cos_sim"))
+    }
 
   /**
    * Streaming PERCEPTUAL dedup over any 64-bit-hash modality (round 14
@@ -725,61 +591,51 @@ object Streams {
    * decoded by `hasher` (any (df, idCol, mediaCol) → (idCol, ahash)
    * producer — [[graft.operators.Multimodal.imageAHash]],
    * `audioEnergyHash`, `videoAHash`) and flagged against the STANDING
-   * corpus's hash table (is_dup = some corpus item within `maxHamming`,
+   * hash table (is_dup = some standing item within `maxHamming`,
    * dup_of = the closest such neighbor — lowest hamming, then lowest
-   * id). The corpus is hashed ONCE at sink creation (a 16-byte/row
-   * parquet artifact — the decode never re-runs); each committed
-   * micro-batch's hashes then APPEND to that standing table (round 15,
-   * the Δ×Δ fix: zero extra decode cost, one parquet append), so later
-   * arrivals flag against earlier STREAM arrivals too, not just the
-   * build-time corpus — cross-batch by arrival order, within one
-   * micro-batch by the least-id-canonical convention (no arrival order
-   * exists inside a batch; the directed self-join flags exactly one of
-   * a same-batch twin pair). Each batch pays its own |Δ| decodes plus
-   * the banded bucket join against the standing hashes — Δ×(corpus+
-   * stream) through Σf² buckets, never |Δ|·n. The standing table lives
-   * under `outDir`, so a restarted sink resumes with its stream history;
-   * batch ids are anti-joined off the standing side, which makes a
-   * replayed micro-batch (at-least-once foreachBatch) score identically
-   * to its first attempt even when its append already committed. The
-   * batch analogues are the oracle-gated q_image_dedup / q_audio_dedup /
-   * q_video_dedup; the vector analogue [[semanticDedupSink]]; the text
-   * analogue [[contentDedupStream]].
+   * id). The standing table is the sink's state table, created at sink
+   * start with the corpus hashes (batch −1; the decode never re-runs);
+   * each committed micro-batch's hashes then append to it as
+   * (nbr, batch, nbr_hash) rows (round 15, the Δ×Δ fix: zero extra
+   * decode cost), so later arrivals flag against earlier STREAM
+   * arrivals too — cross-batch by arrival order, within one micro-batch
+   * by the least-id-canonical convention (no arrival order exists
+   * inside a batch; the directed self-join flags exactly one of a
+   * same-batch twin pair). Each batch pays its own |Δ| decodes plus the
+   * banded bucket join against the standing hashes — Δ×(corpus+stream)
+   * through Σf² buckets, never |Δ|·n. The state lives under `outDir`,
+   * so a restarted sink resumes with its stream history; batch ids are
+   * anti-joined off the standing side, which makes a replayed
+   * micro-batch (at-least-once foreachBatch) score identically to its
+   * first attempt even when its commit already landed. The state table
+   * folds every `compactEvery` batches. The batch analogues are the
+   * oracle-gated q_image_dedup / q_audio_dedup / q_video_dedup; the
+   * vector analogue [[semanticDedupSink]]; the text analogue
+   * [[contentDedupStream]].
    */
   def perceptualDedupSink(newMedia: DataFrame, corpus: DataFrame,
       outDir: String, checkpoint: String,
       hasher: (DataFrame, String, String) => DataFrame,
       idCol: String = "doc_id", mediaCol: String = "media",
       maxHamming: Int = 6, compactEvery: Int = 16): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, explode, row_number}
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.{Dataset, Row}
     val bands = maxHamming + 1
     def banded(hashes: DataFrame): DataFrame =
       hashes.select(col("nbr"), col("nbr_hash"),
           explode(graft.functions.TextFunctions.simHashBands(col("nbr_hash"), bands)).as("bk"))
         .select(col("nbr"), col("nbr_hash"), col("bk.band"), col("bk.bucket"))
-    // the standing hash table: seeded with the corpus hashes at sink
-    // creation, appended per committed batch. The seed is gated on a
-    // create-once `_SEEDED` marker written strictly AFTER the seed data
-    // (round-16 review: gating on directory existence treated a crashed
-    // partial seed as complete on restart, silently never flagging the
-    // missing corpus items) — an unmarked dir re-seeds, and the subdir
-    // overwrite makes the re-seed idempotent. No stream history can
-    // predate the marker: the query below only starts once it exists.
-    val standingDir = s"$outDir/_stream_hashes"
-    if (!graft.sources.Fs.exists(s"$standingDir/_SEEDED")) {
-      standingWrite(
-        hasher(corpus, idCol, mediaCol)
-          .select(col(idCol).as("nbr"), col("ahash").as("nbr_hash")),
-        standingDir, "seed")
-      graft.sources.Fs.createMarker(s"$standingDir/_SEEDED", standingDir)
-    }
+    def hashRows(hashes: DataFrame, batchId: Long): DataFrame =
+      hashes.select(col(idCol).as("nbr"), lit(batchId).as("batch"),
+        col("ahash").as("nbr_hash"))
+    val state = stateRoot(outDir)
+    openState(state, hashRows(hasher(corpus, idCol, mediaCol), -1L))
+    val tag = streamTag(checkpoint)
     newMedia.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         // spill the batch hashes ONCE: bh feeds the banded joins, the
-        // final left-join's left side AND the standing append, and Spark
+        // final left-join's left side AND the state commit, and Spark
         // does not dedupe the common subplan across join inputs —
         // inline, every payload would decode repeatedly per micro-batch
         // (round-13 review)
@@ -792,8 +648,7 @@ object Streams {
         // standing hits (corpus ∪ earlier batches): any direction; batch
         // ids anti-joined off for replay idempotence
         val standingHits = bKeyed
-          .join(banded(standingRead(spark, standingDir, Seq("nbr", "nbr_hash"))),
-            Seq("band", "bucket"))
+          .join(banded(graft.sources.TxTable.read(spark, state)), Seq("band", "bucket"))
           .join(bh.select(col(idCol).as("nbr")), Seq("nbr"), "left_anti")
           .select(col("id"),
             graft.functions.TextFunctions.hamming64(col("ahash"), col("nbr_hash"))
@@ -819,15 +674,11 @@ object Streams {
             col("nbr").isNotNull.cast("int").as("is_dup"),
             col("nbr").as("dup_of"), col("hamming"))
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // commit the batch's hashes into the standing table AFTER its
-        // output — a crash in between replays the batch, which the
-        // anti-join above makes idempotent (and the per-batch subdir
-        // overwrite keeps the replayed append from duplicating rows)
-        standingWrite(bh.select(col(idCol).as("nbr"), col("ahash").as("nbr_hash")),
-          standingDir, s"b$batchId")
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactStanding(spark, standingDir, batchId)
-        ()
+        // the batch's hashes commit AFTER its output — a crash in
+        // between replays the batch, which the anti-join above makes
+        // idempotent
+        commitState(state, hashRows(bh, batchId), "nbr", batchId,
+          compactEvery, tag)
       }
       .start()
   }

@@ -1,8 +1,65 @@
 package graft
 
 import graft.streaming.Streams
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A local store that fails the n-th step of a commit sequence after
+  * [[StepFaultFileSystem.arm]]`(n)`: a step is a commit-marker or
+  * replay-marker create (it throws, as a crash there would) or a
+  * commit data-dir delete (it fails, and `Fs` carries on, as a sweep
+  * that leaves a dir behind would). Fires once per arming. */
+class StepFaultFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "stepfault"
+  override def getUri: java.net.URI = java.net.URI.create("stepfault:///")
+
+  private def guardCreate(f: Path): Unit = {
+    val p = f.toUri.getPath
+    if (p.contains("/_txn/commits/") || p.contains("/_txn/stream/"))
+      StepFaultFileSystem.step(f)
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    guardCreate(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    guardCreate(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    if (f.toUri.getPath.matches(".*/data/c\\d+")) StepFaultFileSystem.step(f)
+    super.delete(f, recursive)
+  }
+}
+
+object StepFaultFileSystem {
+  private val failAt = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  def arm(n: Int): Unit = { seen.set(0); fired.set(false); failAt.set(n) }
+
+  /** Disarm; true when the armed step was reached. */
+  def disarm(): Boolean = { failAt.set(0); fired.get }
+
+  private[graft] def step(f: Path): Unit =
+    if (failAt.get > 0 && seen.incrementAndGet() == failAt.get) {
+      failAt.set(0)
+      fired.set(true)
+      throw new java.io.IOException(s"stepfault: step denied ($f)")
+    }
+}
 
 /** Streaming ingest dedup == batch exact dedup on a doubled corpus: the
   * streamed survivor count equals the number of distinct texts, and no
@@ -213,18 +270,20 @@ class StreamingDedupSpec extends AnyFunSuite {
       "the same-batch twin's higher id must flag against the lower")
   }
 
-  test("a crashed partial seed is re-seeded on restart (round 16: _SEEDED marker)") {
+  test("a crashed partial seed (an uncommitted state create) is re-seeded on restart") {
     import graft.operators.Multimodal
+    import graft.sources.TxTable
     val corpus = Multimodal.attachPngCorpus((0L until 100L).toDF("doc_id"),
       noisyEvery = 0)
     val base = java.nio.file.Files.createTempDirectory("graft-seedcrash").toString
-    // simulate a crash mid-seed: HALF the corpus hashes land, no _SEEDED
-    // marker. Under the old directory-existence gate the restart treated
-    // this as complete and the missing half never flagged anything.
-    graft.operators.Multimodal.imageAHash(
-        corpus.filter(col("doc_id") >= 50L), "doc_id", "media")
-      .select(col("doc_id").as("nbr"), col("ahash").as("nbr_hash"))
-      .write.parquet(s"$base/out/_stream_hashes/batch=seed")
+    val state = s"$base/out/_stream_state"
+    // simulate a crash mid-create: HALF the corpus hashes land in the
+    // state table's first data dir and no commit marker follows. A
+    // restart that trusted the dir would never flag the missing half.
+    Multimodal.imageAHash(corpus.filter(col("doc_id") >= 50L), "doc_id", "media")
+      .select(col("doc_id").as("nbr"), lit(-1L).as("batch"),
+        col("ahash").as("nbr_hash"))
+      .write.parquet(s"$state/data/c0")
     // arriving: a noisy twin of doc 0 — its base hash is in the MISSING
     // half of the partial seed
     val twin = Multimodal.attachPngCorpus(Seq(0L).toDF("doc_id"), noisyEvery = 1)
@@ -235,7 +294,10 @@ class StreamingDedupSpec extends AnyFunSuite {
       spark.readStream.schema(schema).parquet(s"$base/in"),
       corpus, s"$base/out", s"$base/ckpt")
     try q.processAllAvailable() finally q.stop()
-    assert(graft.sources.Fs.exists(s"$base/out/_stream_hashes/_SEEDED"))
+    assert(TxTable.committedIds(state).nonEmpty)
+    val seeded = TxTable.read(spark, state).filter(col("batch") === -1L)
+      .select("nbr").as[Long].collect().sorted.toSeq
+    assert(seeded == (0L until 100L), "the restart seeds every corpus hash once")
     val got = spark.read.parquet(s"$base/out")
       .select("id", "is_dup", "dup_of").collect()
       .map(r => (r.getLong(0), r.getInt(1),
@@ -246,6 +308,7 @@ class StreamingDedupSpec extends AnyFunSuite {
 
   test("standing stream-state compaction bounds subdir growth without changing flags (round 16)") {
     import graft.operators.Multimodal
+    import graft.sources.TxTable
     val corpus = Multimodal.attachPngCorpus((0L until 50L).toDF("doc_id"),
       noisyEvery = 0)
     val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
@@ -254,7 +317,7 @@ class StreamingDedupSpec extends AnyFunSuite {
         noisyEvery = if (noisy) 1 else 0)
       if (noisy) df.filter(col("doc_id") >= 1000000L) else df
     }
-    // four single-file micro-batches; compactEvery=2 folds after ids 1, 3
+    // four single-file micro-batches; compactEvery=2 folds at batch 2
     png(Seq(300L), noisy = false).coalesce(1).write.parquet(s"$base/in/f0")
     png(Seq(300L), noisy = true).coalesce(1).write.parquet(s"$base/in/f1")
     png(Seq(310L), noisy = false).coalesce(1).write.parquet(s"$base/in/f2")
@@ -266,10 +329,19 @@ class StreamingDedupSpec extends AnyFunSuite {
       s"$base/ckpt", (d, i, m) => Multimodal.imageAHash(d, i, m),
       compactEvery = 2)
     try q.processAllAvailable() finally q.stop()
-    // the standing dir is ONE folded subdir, not seed + 4 batch subdirs
-    val subdirs = graft.sources.Fs.listDirs(s"$base/out/_stream_hashes")
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-    assert(subdirs == Seq("batch=c3"), s"standing subdirs not folded: $subdirs")
+    // the state resolves to the checkpoint + batch 3's commit, and the
+    // expired commits' data dirs are gone
+    val state = s"$base/out/_stream_state"
+    val cps = TxTable.checkpointIds(state)
+    val ids = TxTable.committedIds(state)
+    assert(cps.size == 1 && ids.size == 2 && ids.head == cps.head,
+      s"state not folded to checkpoint + tail: commits $ids, checkpoints $cps")
+    val dataDirs = graft.sources.Fs.listDirs(s"$state/data").map(_.getPath.getName)
+    assert(dataDirs.size <= 2, s"expired commit dirs left behind: $dataDirs")
+    val rows = TxTable.read(spark, state).select("nbr", "batch")
+      .as[(Long, Long)].collect().toSeq
+    assert(rows.size == 54 && rows.distinct.size == 54,
+      s"the fold must keep every standing row once: ${rows.sorted}")
     // flags are what the uncompacted run produces: cross-batch twins
     // resolve to their earlier arrival, first copies pass
     val got = spark.read.parquet(s"$base/out")
@@ -282,36 +354,50 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("replayed compaction after a partial source sweep loses no standing rows (round 17)") {
-    import graft.sources.Fs
-    val dir = java.nio.file.Files.createTempDirectory("graft-cst").toString + "/state"
-    def sub(tag: String, ids: Seq[Long]): Unit =
-      ids.toDF("id").write.mode("overwrite").parquet(s"$dir/batch=$tag")
-    sub("0", Seq(1L, 2L)); sub("1", Seq(3L)); sub("2", Seq(4L))
-    Streams.compactStanding(spark, dir, 5L)
-    assert(spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L, 4L))
-    // two more micro-batches land, then compaction at batch 7 runs:
-    // fold completes (c7 has _SUCCESS), c5 is deleted — CRASH before
-    // deleting batch=6 and batch=6b
-    sub("6", Seq(5L)); sub("6b", Seq(6L))
-    spark.read.parquet(s"$dir/batch=c5", s"$dir/batch=6", s"$dir/batch=6b")
-      .distinct().coalesce(4).write.mode("overwrite").parquet(s"$dir/batch=c7")
-    Fs.deleteRecursive(new org.apache.hadoop.fs.Path(s"$dir/batch=c5"))
-    // foreachBatch replays batch 7: the completed fold must NOT re-run
-    // from the two surviving sources (that would drop ids 1..4, which
-    // now exist only in c7) — it only finishes the sweep
-    Streams.compactStanding(spark, dir, 7L)
-    assert(spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L, 4L, 5L, 6L),
-      "rows folded before the crash must survive the replayed compaction")
-    assert(!Fs.isDirectory(s"$dir/batch=6") && !Fs.isDirectory(s"$dir/batch=6b"),
-      "the replay must still finish deleting the swept sources")
-    // a mid-FOLD crash (no _SUCCESS) re-folds from the intact sources
-    sub("8", Seq(7L))
-    Fs.writeUtf8(s"$dir/batch=c9/part-00000.parquet.crc", "torn")
-    Streams.compactStanding(spark, dir, 9L)
-    assert(spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    import graft.sources.TxTable
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.stepfault.impl", classOf[StepFaultFileSystem].getName)
+    def rows(ids: Seq[Long], b: Long) =
+      ids.map(i => (i, b, i * 7)).toDF("nbr", "batch", "nbr_hash")
+    def commit(root: String, b: Long): Unit =
+      Streams.txUpsertBatch(spark, root, rows(Seq(100L + b), b), b,
+        Seq("nbr", "batch"), "batch", None, 2, Nil, Nil,
+        conflictDetect = false, conflictWaitMs = 60000L, "t")
+    def live(root: String) = TxTable.read(spark, root)
+      .select("nbr", "batch").as[(Long, Long)].collect().toSeq
+    val before = (0L until 10L).map(_ -> -1L) ++ Seq(100L -> 0L, 101L -> 1L)
+    val after = before :+ (102L -> 2L)
+    // batch 2 is a fold cadence: its own commit, then checkpoint +
+    // expire + vacuum, then the replay marker. Interrupt it at each of
+    // those steps in turn, on a fresh table each time, until a run
+    // passes every step
+    var step = 1
+    var fired = true
+    while (fired) {
+      val root = "stepfault:" +
+        java.nio.file.Files.createTempDirectory("graft-cst").toString + "/state"
+      TxTable.create(spark, root, rows(0L until 10L, -1L))
+      commit(root, 0L)
+      commit(root, 1L)
+      StepFaultFileSystem.arm(step)
+      try commit(root, 2L)
+      catch { case e: Exception if e.toString.contains("stepfault") => () }
+      finally fired = StepFaultFileSystem.disarm()
+      val mid = live(root)
+      assert(mid.size == mid.distinct.size, s"step $step: duplicate rows $mid")
+      assert(mid.toSet == before.toSet || mid.toSet == after.toSet,
+        s"step $step: the interrupted fold lost or half-applied rows: ${mid.sorted}")
+      // the replay of batch 2 finishes the fold and keeps every row once
+      commit(root, 2L)
+      val end = live(root)
+      assert(end.size == end.distinct.size && end.toSet == after.toSet,
+        s"step $step: the replayed fold must keep every row once: ${end.sorted}")
+      assert(TxTable.checkpointIds(root).nonEmpty, s"step $step: no fold")
+      step += 1
+    }
+    // the batch commit, the checkpoint commit, four expired data dirs
+    // and the replay marker
+    assert(step - 2 == 7, s"the fold had ${step - 2} interruptible steps, not 7")
   }
 
   test("semantic sink restart reloads the persisted quantizer across a corpus change (round 16)") {

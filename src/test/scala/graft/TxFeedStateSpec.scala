@@ -20,6 +20,9 @@ import java.nio.file.Files
  * (deletes), the synced state equals the batch recompute — both as a
  * row set and through an ANN query (a retired vector must stop being
  * anyone's neighbor; a re-embedded one must serve its NEW vector).
+ * The streaming consumer, `readStream.format("txtable")`, must emit each
+ * commit once across a crash before an offset commit, and bootstrap a
+ * folded table from its snapshot.
  */
 class TxFeedStateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -130,65 +133,74 @@ class TxFeedStateSpec extends AnyFunSuite {
     assert(stateRows(st) === stateRows(src))
   }
 
-  test("txFeedSink tails the table as a parquet changelog, exactly-once under replay") {
+  /** Drain every commit of `t`'s change feed available now through
+    * `readStream.format("txtable")`; each micro-batch overwrites
+    * `out/batch=<id>`, so a replayed batch replaces its own attempt. */
+  private def drainFeed(t: String, out: String, ckpt: String,
+      options: Map[String, String]): Unit = {
+    val q = spark.readStream.format("txtable").option("keys", "id")
+      .options(options).load(t).writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        b.write.mode("overwrite").parquet(s"$out/batch=$id")
+      }
+      .start()
+    q.awaitTermination()
+  }
+
+  /** Everything the drained stream emitted. */
+  private def feedOut(out: String) = spark.read.parquet(out).drop("batch")
+
+  /** The crash between a micro-batch's sink write and its offset
+    * commit: remove the checkpoint's last `commits/<n>` entry, so a
+    * restart replays batch n over its logged range. Returns n. */
+  private def dropLastOffsetCommit(ckpt: String): Long = {
+    val dir = new java.io.File(s"$ckpt/commits")
+    val n = dir.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    new java.io.File(dir, s"$n").delete()
+    new java.io.File(dir, s".$n.crc").delete()
+    n
+  }
+
+  private def feedKey(r: org.apache.spark.sql.Row) =
+    (r.getAs[Long]("id"), r.getAs[String]("op"), r.getAs[Long]("commit"))
+
+  test("the txtable stream source is exactly-once when a batch replays after a crash before its offset commit") {
     import spark.implicits._
     val dir = tmp()
     val t = s"$dir/t"
     val out = s"$dir/feed"
-    // tick source: one file per poll, deterministic via maxFilesPerTrigger
-    def tick(n: Int): Unit =
-      Seq(n.toLong).toDF("n").coalesce(1).write.parquet(s"$dir/ticks/f$n")
-    def drain(ckpt: String): Unit = {
-      val ticks = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/ticks/*")
-      val q = Streams.txFeedSink(ticks, t, Seq("id"), out, ckpt,
-        withPreimage = true)
-      try q.processAllAvailable() finally q.stop()
-    }
-    import graft.sources.TxTable
+    val ckpt = s"$dir/ck"
+    val opts = Map("startingCursor" -> "-1", "withPreimage" -> "true")
     TxTable.create(spark, t,
       (0L until 50L).map(i => (i, i % 5, 100.0 + i, 0L))
         .toDF("id", "grp", "price", "version"))
     TxTable.upsert(spark, t,
       Seq((3L, 3L, 999.0, 1L)).toDF("id", "grp", "price", "version"),
       Seq("id"), "version")
-    tick(0)
-    drain(s"$dir/ck1")
-    assert(Streams.feedCursor(out) === 1L)
-    // more commits after the first poll: a tombstone and an EMPTY commit
+    drainFeed(t, out, ckpt, opts)
+    // a tombstone and an EMPTY commit (a stale update loses to version 1)
     TxTable.upsert(spark, t,
       Seq((4L, 4L, 0.0, 2L, "d")).toDF("id", "grp", "price", "version", "op"),
       Seq("id"), "version", opCol = Some("op"))
     TxTable.upsert(spark, t,
       Seq((3L, 3L, 1.0, 0L)).toDF("id", "grp", "price", "version"),
-      Seq("id"), "version") // stale: empty commit
-    tick(1)
-    drain(s"$dir/ck1")
-    assert(Streams.feedCursor(out) === TxTable.committedIds(t).max,
-      "the cursor advances over empty commits to the tip")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("id"), r.getAs[String]("op"), r.getAs[Long]("commit"))
+      Seq("id"), "version")
+    drainFeed(t, out, ckpt, opts)
+    assert(dropLastOffsetCommit(ckpt) === 1L)
+    // a commit lands while the stream is down: the replayed batch must
+    // keep its logged range, and the new commit must land exactly once
+    TxTable.upsert(spark, t,
+      Seq((5L, 0L, 555.0, 3L)).toDF("id", "grp", "price", "version"),
+      Seq("id"), "version")
+    drainFeed(t, out, ckpt, opts)
+    val got = feedOut(out).collect().map(feedKey).toSeq
+    assert(got.length === got.distinct.length,
+      s"no (id, op, commit) may land twice: ${got.sorted}")
     val want = TxTable.changeFeed(spark, t, Seq("id"), withPreimage = true)
-      .collect().map(key).toSet
-    val got = Streams.readFeedOutput(spark, out).collect().map(key).toSet
-    assert(got === want, "the emitted changelog equals the full feed")
-    // replay from a FRESH checkpoint: both ticks re-fire, nothing lands
-    // twice (the markers carry the cursor, not the stream state)
-    drain(s"$dir/ck2")
-    assert(Streams.readFeedOutput(spark, out).collect().map(key).toSet === want)
-    // the changelog drives the retracting aggregate as-is
-    val state = graft.operators.Materialize.incrementalAggCdc(None,
-      Streams.readFeedOutput(spark, out).select("grp", "op", "price"),
-      Seq("grp"), Seq("price"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSet
-    val scratch = graft.operators.Materialize.incrementalAgg(None,
-      TxTable.read(spark, t).select("grp", "price"), Seq("grp"), Seq("price"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSet
-    assert(state === scratch,
-      "a consumer of the emitted changelog converges to the live aggregate")
+      .collect().map(feedKey).toSet
+    assert(got.toSet === want, "the emitted changelog equals the full feed")
   }
 
   test("a stale unmarked feed batch dir is replaced, never double-emitted") {
@@ -196,34 +208,30 @@ class TxFeedStateSpec extends AnyFunSuite {
     val dir = tmp()
     val t = s"$dir/t"
     val out = s"$dir/feed"
+    val ckpt = s"$dir/ck"
+    val opts = Map("startingCursor" -> "-1")
     TxTable.create(spark, t,
       (0L until 20L).map(i => (i, 100.0 + i, 0L)).toDF("id", "price", "version"))
-    // first poll consumes commit 0
-    Streams.txFeedTick(spark, t, Seq("id"), out)
-    assert(Streams.feedCursor(out) === 0L)
-    // commits 1..2 land; a poll CRASHES between the batch write and its
-    // _done_ marker — simulated by planting the unmarked dir the crashed
-    // attempt would have left (covering commit 1 only), with garbage
-    // rows that a replay must replace, not accumulate next to
+    drainFeed(t, out, ckpt, opts)
     TxTable.upsert(spark, t,
       Seq((3L, 999.0, 1L)).toDF("id", "price", "version"), Seq("id"), "version")
-    Seq((3L, "i", 999.0, 1L), (3L, "i", 999.0, 1L))
-      .toDF("id", "op", "price", "commit")
-      .write.mode("overwrite").parquet(s"$out/batch=c1")
+    drainFeed(t, out, ckpt, opts)
+    // batch 1 CRASHED before its offset commit, leaving a torn attempt —
+    // garbage rows a replay must replace, not accumulate next to
+    assert(dropLastOffsetCommit(ckpt) === 1L)
+    Seq((3L, "i", 999.0, 1L, 1L), (3L, "i", 999.0, 1L, 1L))
+      .toDF("id", "op", "price", "version", "commit")
+      .write.mode("overwrite").parquet(s"$out/batch=1")
+    // more commits land before the restart: the replay re-emits the
+    // stale range (commit 1) into the same dir, the new commit lands next
     TxTable.upsert(spark, t,
       Seq((4L, 888.0, 1L)).toDF("id", "price", "version"), Seq("id"), "version")
-    // the replay re-polls the SAME low bound (cursor never advanced) —
-    // the lo-keyed dir is overwritten with the full 1..2 range
-    Streams.txFeedTick(spark, t, Seq("id"), out)
-    assert(Streams.feedCursor(out) === 2L)
-    val got = Streams.readFeedOutput(spark, out)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("op"),
-        r.getAs[Long]("commit")))
+    drainFeed(t, out, ckpt, opts)
+    val got = feedOut(out).collect().map(feedKey).toSeq
     assert(got.length === got.distinct.length,
-      s"no commit may be emitted twice: ${got.toSeq.sorted}")
+      s"no commit may be emitted twice: ${got.sorted}")
     val want = TxTable.changeFeed(spark, t, Seq("id"))
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("op"),
-        r.getAs[Long]("commit"))).toSet
+      .collect().map(feedKey).toSet
     assert(got.toSet === want, "the replayed changelog equals the full feed")
   }
 
@@ -232,10 +240,14 @@ class TxFeedStateSpec extends AnyFunSuite {
     val dir = tmp()
     val t = s"$dir/t"
     val out = s"$dir/feed"
+    val ckpt = s"$dir/ck"
+    val opts = Map("withPreimage" -> "true")
     TxTable.create(spark, t,
-      (0L until 30L).map(i => (i, 100.0 + i, 0L)).toDF("id", "price", "version"))
+      (0L until 30L).map(i => (i, i % 4, 100.0 + i, 0L))
+        .toDF("id", "grp", "price", "version"))
     TxTable.upsert(spark, t,
-      Seq((3L, 999.0, 1L)).toDF("id", "price", "version"), Seq("id"), "version")
+      Seq((3L, 3L, 999.0, 1L)).toDF("id", "grp", "price", "version"),
+      Seq("id"), "version")
     TxTable.checkpoint(spark, t)
     TxTable.expire(spark, t)
     // the primitive refuses — a fresh-cursor feed would miss every
@@ -244,26 +256,31 @@ class TxFeedStateSpec extends AnyFunSuite {
       TxTable.changeFeedFrom(spark, t, Seq("id"), -1L)
     }
     assert(ex.getMessage.contains("folded"))
-    // the sink bootstraps: snapshot-as-inserts at the tip, then deltas
-    Streams.txFeedTick(spark, t, Seq("id"), out)
-    assert(Streams.feedCursor(out) === TxTable.committedIds(t).max)
-    val base = Streams.readFeedOutput(spark, out)
+    // the source's default start bootstraps: snapshot-as-inserts at the tip
+    drainFeed(t, out, ckpt, opts)
+    val base = feedOut(out)
     assert(base.count() === 30L, "the bootstrap emits every folded row")
-    assert(base.select("op").distinct().collect().map(_.getString(0)).toSeq
-      === Seq("i"))
-    // a later poll consumes the delta on top
+    assert(base.select("op", "commit").distinct().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+      === Seq(("i", TxTable.committedIds(t).max)))
+    // deltas on top: an update and a tombstone
     TxTable.upsert(spark, t,
-      Seq((5L, 777.0, 2L)).toDF("id", "price", "version"), Seq("id"), "version")
-    Streams.txFeedTick(spark, t, Seq("id"), out)
-    val replayed = Streams.readFeedOutput(spark, out)
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
-          .orderBy(col("commit").desc)))
-      .filter(col("__rn") === 1 && col("op") =!= "d")
-      .select("id", "price")
-    val live = TxTable.read(spark, t).select("id", "price")
-    assert(replayed.exceptAll(live).isEmpty && live.exceptAll(replayed).isEmpty,
-      "replaying the bootstrapped changelog reconstructs the live table")
+      Seq((5L, 1L, 777.0, 2L)).toDF("id", "grp", "price", "version"),
+      Seq("id"), "version")
+    TxTable.upsert(spark, t,
+      Seq((7L, 3L, 0.0, 2L, "d")).toDF("id", "grp", "price", "version", "op"),
+      Seq("id"), "version", opCol = Some("op"))
+    drainFeed(t, out, ckpt, opts)
+    // the emitted changelog drives the retracting aggregate to the
+    // from-scratch aggregate over the live table
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSet
+    val state = agg(graft.operators.Materialize.incrementalAggCdc(None,
+      feedOut(out).select("grp", "op", "price"), Seq("grp"), Seq("price")))
+    val scratch = agg(graft.operators.Materialize.incrementalAgg(None,
+      TxTable.read(spark, t).select("grp", "price"), Seq("grp"), Seq("price")))
+    assert(state === scratch,
+      "a consumer of the emitted changelog converges to the live aggregate")
   }
 
   test("a REGISTERED consumer's cursor floors expire — lag survives maintenance") {
