@@ -143,7 +143,9 @@ object Bench {
         finally it.close()
         prev + 1
       }
-      java.nio.file.Files.write(repo.resolve(s"BENCH_QUERIES_r$round.json"),
+      // core-count-stamped, so runs of one round at different
+      // SPARK_GRAFT_CPUS never overwrite each other's record
+      java.nio.file.Files.write(repo.resolve(s"BENCH_QUERIES_r${round}_c$cpus.json"),
         (full + "\n").getBytes("UTF-8"))
     } catch { case e: Exception => System.err.println(s"[bench] stamped sidecar write failed: $e") }
     else System.err.println("[bench] query filter active — round-stamped sidecar skipped")

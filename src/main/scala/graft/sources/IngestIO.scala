@@ -66,7 +66,7 @@ object IngestIO {
     * batch reader: a broken line quarantines, the stream never dies.
     * Compose with `Streams.parquetSink` (columnar landing),
     * `Streams.contentDedupStream`/`qualityGateStream` (front-door
-    * filtering), or `Streams.txUpsertSink` (keyed CDC). */
+    * filtering), or `writeStream.format("txtable")` (keyed CDC). */
   def streamJsonl(spark: SparkSession, dir: String, schema: StructType,
       corruptCol: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {

@@ -52,7 +52,9 @@ import org.apache.spark.storage.StorageLevel
  *
  * A commit is convention, not manifest: marker c<k> present ⟺ commit
  * k's data dir and DV dir (whichever exist) are visible — readers need
- * ONE `_txn/commits` listing, never a JSON parse. A writer works
+ * ONE `_txn/commits` listing. The marker's text is `key=value` fields:
+ * `ts=` (wall-clock) always, `txn=<tag>:<batch>` (a stream's replay
+ * record, Delta's `txn` action) on stream commits. A writer works
  * data-first: rows into `data/c<k>`, vectors into `_txn/dv/<k>`, and
  * only then the marker — a crash at any earlier point leaves
  * directories no reader resolves and [[vacuum]] later sweeps. The
@@ -159,10 +161,13 @@ object TxTable {
     * mtimes do not), recorded at every commit so `TIMESTAMP AS OF` and
     * [[history]]'s `commit_ts` column have data even for tables created
     * long before anyone asks; markers written by pre-stamp code fall
-    * back to marker mtime in [[commitTimestamps]]. */
-  private[graft] def commit(root: String, k: Long): Unit =
+    * back to marker mtime in [[commitTimestamps]]. `txns` adds one
+    * `txn=<tag>:<batch>` line per stream record ([[streamBatch]]). */
+  private[graft] def commit(root: String, k: Long,
+      txns: Seq[(String, Long)] = Nil): Unit =
     require(Fs.createMarker(marker(root, k),
-        s"${dataDir(root, k)}\nts=${System.currentTimeMillis()}"),
+        s"${dataDir(root, k)}\nts=${System.currentTimeMillis()}" +
+          txns.map { case (tag, b) => s"\ntxn=$tag:$b" }.mkString),
       s"txtable: commit marker c$k already exists under $root — " +
         "lost a commit race (id written outside the claim protocol?)")
 
@@ -191,6 +196,21 @@ object TxTable {
             .getOrElse("?")}) — earlier history was expired"))
   }
 
+  /** The newest batch stream `tag` committed to `root` — the replay
+    * check behind [[graft.streaming.Streams]]' stream commits — and
+    * whether the newest checkpoint carries it (the batch's fold ran).
+    * Markers are opened from the tip down, stopping at the first that
+    * records `tag` or at the newest checkpoint, whose marker carries the
+    * newest record per tag of every marker it folds ([[checkpoint]]), so
+    * [[expire]] never erases a stream's record. */
+  private[graft] def streamBatch(root: String, tag: String): Option[(Long, Boolean)] = {
+    val s = new Snapshot(root)
+    val cp = s.checkpoints.lastOption
+    s.ids.reverseIterator.takeWhile(k => cp.forall(_ <= k))
+      .flatMap(k => s.txns(k).find(_._1 == tag).map(t => (t._2, cp.contains(k))))
+      .nextOption()
+  }
+
   /** The sidecar rows of commits `ks` with their commit ids, read on the
     * driver — behind every DV fold, kill-file list, feed label, history
     * count and conflict domain: one listing of each commit's DV dir
@@ -213,9 +233,9 @@ object TxTable {
     * miss the checkpoint of a visible commit and double-count its rows),
     * the resolution set for any `asOf`, each commit's data files and DV
     * sidecars (one listing of its own dir, [[list]] — never one listing of
-    * `data/`, whose staleness could tear a read), and the marker
-    * wall-clocks. Two listings of the commits dir can straddle a
-    * concurrent commit; one cannot, which is what makes an operation
+    * `data/`, whose staleness could tear a read), and each marker's
+    * text. Two listings of the commits dir can straddle a concurrent
+    * commit; one cannot, which is what makes an operation
     * atomic. Validation and fences re-list on purpose ([[idsIn]]). `held`
     * keeps the frames a commit persisted; [[commitWith]] unpersists them. */
   private final class Snapshot(val root: String,
@@ -261,14 +281,32 @@ object TxTable {
     def dvIndex(ks: Seq[Long]): DeleteVectors.Index =
       DeleteVectors.fold(vectors(ks).map(_._2))
 
+    private val markerTexts =
+      new java.util.concurrent.ConcurrentHashMap[Long, Option[String]]()
+
+    /** The values of commit `k`'s `<name>=` marker lines; the marker is
+      * opened at most once per snapshot. */
+    private def field(k: Long, name: String): Seq[String] =
+      markerTexts.computeIfAbsent(k, _ => Fs.readUtf8(marker(root, k))).toSeq
+        .flatMap(_.linesIterator).filter(_.startsWith(s"$name="))
+        .map(_.stripPrefix(s"$name=").trim)
+
     /** (id, commit wall-clock): see [[commitTimestamps]]. */
     lazy val timestamps: Seq[(Long, Long)] =
       Tools.onDriverPool(commits) { case (k, mtime) =>
-        k -> Fs.readUtf8(marker(root, k)).flatMap(
-            _.linesIterator.find(_.startsWith("ts="))
-              .flatMap(l => l.stripPrefix("ts=").trim.toLongOption))
-          .getOrElse(mtime)
+        k -> field(k, "ts").flatMap(_.toLongOption).headOption.getOrElse(mtime)
       }
+
+    /** The stream records — (tag, batch) — commit `k`'s marker carries. */
+    def txns(k: Long): Seq[(String, Long)] = field(k, "txn").flatMap { v =>
+      val i = v.lastIndexOf(':')
+      v.drop(i + 1).toLongOption.filter(_ => i > 0).map(v.take(i) -> _)
+    }
+
+    /** The newest batch of every stream tag recorded in commits `ks`. */
+    def newestTxns(ks: Seq[Long]): Seq[(String, Long)] =
+      Tools.onDriverPool(ks)(txns).flatten
+        .groupMapReduce(_._1)(_._2)(math.max).toSeq.sorted
 
     def cache(df: DataFrame): DataFrame = {
       held += df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -389,8 +427,8 @@ object TxTable {
     * layout is independent; readers reconcile by name either way). An
     * EMPTY initial snapshot must be created FLAT (partitionCols off): a
     * partitioned write of zero rows leaves no schema-bearing file, while
-    * the flat empty file records the schema — [[graft.streaming.Streams.txUpsertSink]]'s
-    * first-batch pattern. */
+    * the flat empty file records the schema — the txtable stream sink's
+    * first-batch pattern ([[graft.streaming.Streams.txUpsertBatch]]). */
   def create(spark: SparkSession, root: String, df: DataFrame,
       bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty): Long =
@@ -414,7 +452,13 @@ object TxTable {
   def append(spark: SparkSession, root: String, df: DataFrame,
       bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty,
-      conflictKeys: Seq[String] = Seq.empty): Long = {
+      conflictKeys: Seq[String] = Seq.empty): Long =
+    appendAs(spark, root, df, bloomCols, partitionCols, conflictKeys, Nil)
+
+  /** [[append]] with stream records on its marker ([[streamBatch]]). */
+  private[graft] def appendAs(spark: SparkSession, root: String, df: DataFrame,
+      bloomCols: Seq[String], partitionCols: Seq[String],
+      conflictKeys: Seq[String], txns: Seq[(String, Long)]): Long = {
     require(conflictKeys.forall(df.columns.contains),
       s"txtable.append: conflictKeys ${conflictKeys.mkString(",")} " +
         s"missing from batch (${df.columns.mkString(",")})")
@@ -422,7 +466,7 @@ object TxTable {
       Some(_ => Legs(adds = Some(df), bloomCols = bloomCols,
         partitionCols = partitionCols, prune = false,
         keys = Some(conflictKeys).filter(_.nonEmpty)
-          .map(ks => df.select(ks.map(col): _*).distinct())))
+          .map(ks => df.select(ks.map(col): _*).distinct()), txns = txns))
     }.get
   }
 
@@ -515,6 +559,9 @@ object TxTable {
     !guessy || plan.collectLeaves().forall(_.stats.sizeInBytes <= bar)
   }
 
+  /** The default batch key count up to which a MERGE broadcasts its keys. */
+  private[graft] val broadcastKeys: Long = 4L * 1000 * 1000
+
   /** A conflicting concurrent commit was detected during an optimistic
     * [[upsert]] — the writer retries from a fresh snapshot. */
   final class CommitConflictException(msg: String)
@@ -535,7 +582,8 @@ object TxTable {
     *  - `prune`: remove a leg dir that holds no rows (off where the dir
     *    itself matters: create's schema-bearing empty file, a checkpoint);
     *  - `checkpoint`: place the checkpoint marker before the commit
-    *    marker. */
+    *    marker;
+    *  - `txns`: the stream records the commit marker carries. */
   private final case class Legs(
       kills: Option[DataFrame] = None,
       adds: Option[DataFrame] = None,
@@ -546,7 +594,8 @@ object TxTable {
       keys: Option[DataFrame] = None,
       validate: () => Unit = () => (),
       prune: Boolean = true,
-      checkpoint: Boolean = false)
+      checkpoint: Boolean = false,
+      txns: Seq[(String, Long)] = Nil)
 
   /** Run a commit's independent legs together (round 22, guide §2.6):
     * the protocol orders every leg before the marker but never legs
@@ -637,7 +686,7 @@ object TxTable {
           require(Fs.createMarker(s"${checkpointsDir(root)}/c$k", dataDir(root, k)),
             s"txtable: checkpoint marker c$k already exists under $root — " +
               "lost a commit race")
-        commit(root, k)
+        commit(root, k, legs.txns)
         Some(k)
     } catch {
       case e: Throwable =>
@@ -692,10 +741,19 @@ object TxTable {
       keys: Seq[String], versionCol: String,
       opCol: Option[String] = None,
       bloomCols: Seq[String] = Seq.empty,
-      broadcastKeyLimit: Long = 4L * 1000 * 1000,
+      broadcastKeyLimit: Long = broadcastKeys,
       partitionCols: Seq[String] = Seq.empty,
       conflictDetect: Boolean = false,
-      conflictWaitMs: Long = 60L * 1000): Long = {
+      conflictWaitMs: Long = 60L * 1000): Long =
+    upsertAs(spark, root, batch, keys, versionCol, opCol, bloomCols,
+      broadcastKeyLimit, partitionCols, conflictDetect, conflictWaitMs, Nil)
+
+  /** [[upsert]] with stream records on its marker ([[streamBatch]]). */
+  private[graft] def upsertAs(spark: SparkSession, root: String,
+      batch: DataFrame, keys: Seq[String], versionCol: String,
+      opCol: Option[String], bloomCols: Seq[String], broadcastKeyLimit: Long,
+      partitionCols: Seq[String], conflictDetect: Boolean,
+      conflictWaitMs: Long, txns: Seq[(String, Long)]): Long = {
     require(keys.nonEmpty, "txtable.upsert needs key columns")
     retryOnConflict("upsert", root, conflictDetect) {
       commitWith(spark, root) { s =>
@@ -737,7 +795,8 @@ object TxTable {
             keys = if (conflictDetect) Some(batchKeys) else None,
             validate = () => if (conflictDetect)
               validateNoKeyConflicts(spark, root, k, s.ids.toSet, batchKeys,
-                keys, conflictWaitMs))
+                keys, conflictWaitMs),
+            txns = txns)
         }
       }.get
     }
@@ -789,7 +848,7 @@ object TxTable {
       deleteNotMatchedBySource: Boolean = false,
       bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty,
-      broadcastKeyLimit: Long = 4L * 1000 * 1000,
+      broadcastKeyLimit: Long = broadcastKeys,
       conflictDetect: Boolean = false,
       conflictWaitMs: Long = 60L * 1000): Long = {
     val matched = matchedAction match {
@@ -894,7 +953,7 @@ object TxTable {
       bySource: Seq[MergeBySourceClause] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
       partitionCols: Seq[String] = Seq.empty,
-      broadcastKeyLimit: Long = 4L * 1000 * 1000,
+      broadcastKeyLimit: Long = broadcastKeys,
       conflictDetect: Boolean = false,
       conflictWaitMs: Long = 60L * 1000): Long = {
     require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
@@ -1622,7 +1681,9 @@ object TxTable {
    * crash leaves either invisible dirs or a
    * checkpoint-marker-without-commit, which [[checkpointIds]] ignores
    * and [[vacuum]] sweeps. History BEFORE the checkpoint stays
-   * readable ([[readAt]]) until [[expire]] collapses it.
+   * readable ([[readAt]]) until [[expire]] collapses it. The marker
+   * carries the newest stream record per tag of the markers it folds
+   * (one open each), so [[expire]] keeps every [[streamBatch]].
    *
    * WRITER FENCING (round 18, closing the round-17 advisory): the fold
    * CLAIMS FIRST and works from a snapshot FROZEN at the one listing
@@ -1677,7 +1738,7 @@ object TxTable {
           else live.repartition(parts)
         Legs(adds = Some(sized), bloomCols = bloomCols,
           partitionCols = partitionCols, precluster = false, prune = false,
-          checkpoint = true,
+          checkpoint = true, txns = s.newestTxns(ks),
           validate = { () =>
             val committedNow = fence("checkpoint", root, k, s.ids, idsIn(commitsDir(root)))
             // ZOMBIE-WRITER fence (round 19, closing the r18 advisory's

@@ -6,7 +6,8 @@ import org.apache.spark.sql.graftshims.StreamingShims
 
 /**
  * STREAMING WRITE to the transactional table (round 19) — the sink half
- * of `format("txtable")`, completing the symmetric streaming surface:
+ * of `format("txtable")`, and the engine's one streaming CDC write
+ * surface; every parameter is an option:
  *
  * {{{
  *   df.writeStream.format("txtable")
@@ -22,18 +23,17 @@ import org.apache.spark.sql.graftshims.StreamingShims
  * }}}
  *
  * Every micro-batch is ONE atomic MERGE commit —
- * [[graft.streaming.Streams.txUpsertBatch]], the identical body behind
- * the `foreachBatch` adapter `Streams.txUpsertSink`, so the two
- * surfaces cannot drift: marker-gated exactly-once (a replay that beat
- * the marker is absorbed by the latest-wins MERGE as a snapshot no-op),
- * first batch auto-creates the table, optional checkpoint/expire/vacuum
- * cadence keeps a long-running stream's read plan bounded.
+ * [[graft.streaming.Streams.txUpsertBatch]]: the batch's (stream tag,
+ * batch id) record rides in its commit marker, so a replay of a
+ * committed batch is skipped by a snapshot read (exactly-once); the
+ * first batch auto-creates the table, and an optional checkpoint/expire/
+ * vacuum cadence keeps a long-running stream's read plan bounded.
  *
- * The sink is deliberately MERGE-only (keys + version required): an
- * append-only stream is the degenerate case (unique keys, any version),
- * and making appends the default would silently downgrade replays from
- * exactly-once to at-least-once — duplicates on crash, the failure mode
- * CDC pipelines cannot tolerate. Chained with the read side this gives
+ * The sink is deliberately MERGE-only (keys + version required): it is a
+ * keyed CDC sink — each row inserts, updates or (`opCol`) deletes its
+ * key, latest version winning, so a late batch never regresses newer
+ * data; an append-only stream is the degenerate case (unique keys, any
+ * version). Chained with the read side this gives
  * end-to-end table replication in two lines:
  * `readStream.format("txtable")` (the change feed, op column included)
  * piped into this sink with `opCol=op, versionCol=commit`.
@@ -80,14 +80,14 @@ object TxStreamSink {
       "txtable: name the latest-wins version column — " +
         ".option(\"versionCol\", \"version\") (a change-feed relay uses " +
         "its 'commit' column)")
-    // batch ids are per-checkpoint — the checkpoint path scopes the
-    // replay markers so two streams into one table never skip each
+    // batch ids are per-checkpoint — the checkpoint path tags the
+    // replay records so two streams into one table never skip each
     // other's batches (Streams.streamTag). Resolution mirrors Spark's
     // own: the explicit option, else the session default + the query
     // name (a NAMED stream on the session default resolves exactly
     // there; an unnamed one gets a random UUID dir we cannot predict at
     // createSink time — loud, because a guessed identity would shift on
-    // every restart and break the replay markers' exactly-once gate).
+    // every restart and break the replay records' exactly-once gate).
     val checkpoint = o.get("checkpointLocation")
       .orElse(for {
         base <- sessionDefaultCheckpoint
@@ -99,7 +99,7 @@ object TxStreamSink {
           ".queryName(…) — the checkpoint identifies the stream for " +
           "exactly-once replay (an unnamed stream on the session default " +
           "checkpoints under a fresh random dir each start, which would " +
-          "reset the replay markers)"))
+          "reset the replay records)"))
     val tag = graft.streaming.Streams.streamTag(checkpoint)
     val optParts = o.cols("partitionCols")
     require(optParts.isEmpty || partitionByCols.isEmpty ||

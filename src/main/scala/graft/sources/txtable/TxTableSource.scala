@@ -180,8 +180,8 @@ class TxTableSource extends TableProvider with DataSourceRegister
   }
 
   /** `df.writeStream.format("txtable")` — every micro-batch is one
-    * atomic MERGE commit ([[TxStreamSink]], the same body as
-    * `Streams.txUpsertSink`). Append and Update modes both mean "merge
+    * atomic MERGE commit ([[TxStreamSink]], the stream-commit body of
+    * `Streams.txUpsertBatch`). Append and Update modes both mean "merge
     * this batch" (the version column decides winners); Complete would
     * be an overwrite-per-batch — refused, that is a batch write. */
   override def createSink(ctx: SQLContext, parameters: Map[String, String],

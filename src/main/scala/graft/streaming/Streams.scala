@@ -161,80 +161,65 @@ object Streams {
       .start()
   }
 
-  /**
-   * Streaming CDC into the TRANSACTIONAL merge-on-read table (round 17):
-   * every micro-batch lands as one [[graft.sources.TxTable.upsert]]
-   * commit — atomic delete+append under a single marker, write volume ∝
-   * the batch — instead of a copy-on-write rewrite of the table per
-   * batch. This is the 100 TB CDC shape: a 0.1 % batch costs
-   * batch-sized files + a KB DV sidecar (SCALE.md `txtable`), and the
-   * sink stays correct under foreachBatch's at-least-once delivery two
-   * ways: a per-batch create-once marker (`_txn/stream/b<id>`) skips a
-   * fully-acknowledged replay outright, and a replay that BEAT the
-   * marker (crash between the table commit and the marker) re-applies
-   * the same batch, which the latest-wins MERGE absorbs as a snapshot
-   * no-op (TxTableSpec pins this). The first batch auto-creates the
-   * table (an empty commit 0 in the batch's schema, then the normal
-   * MERGE — so batch 0 and batch N take the identical path).
-   *
-   * `checkpointEvery > 0` folds the log in-stream: every N batches the
-   * sink runs [[graft.sources.TxTable.checkpoint]] + `expire` + `vacuum`
-   * (single maintenance writer — this sink IS the table's writer, the
-   * foreachBatch serialization contract), so a long-running stream's
-   * read plan stays checkpoint + tail instead of one commit per
-   * micro-batch forever. Consumers read with `TxTable.read`/`readAt`
-   * any time — commits are snapshot-isolated, a reader never sees a
-   * half-applied batch.
-   */
-  def txUpsertSink(updates: DataFrame, root: String, checkpoint: String,
-      keyCols: Seq[String], versionCol: String,
-      opCol: Option[String] = None, checkpointEvery: Int = 0,
-      bloomCols: Seq[String] = Seq.empty,
-      partitionCols: Seq[String] = Seq.empty,
-      conflictDetect: Boolean = false,
-      conflictWaitMs: Long = 60L * 1000): StreamingQuery = {
-    // conflictDetect (round 19, closing the r18 verdict's asymmetry):
-    // with it, the sink's per-batch MERGE validates optimistically like
-    // any other OCC writer, so a batch job upserting NEXT TO a live sink
-    // serializes instead of silently losing an update — and the sink's
-    // in-stream maintenance folds abort (and retry next cadence) rather
-    // than committing over a concurrent writer.
-    val tag = streamTag(checkpoint)
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        txUpsertBatch(batch.sparkSession, root, batch.toDF(), batchId,
-          keyCols, versionCol, opCol, checkpointEvery, bloomCols,
-          partitionCols, conflictDetect, conflictWaitMs, tag)
-      }
-      .start()
-  }
-
-  /** Marker namespace for one stream: batch ids are PER-CHECKPOINT, so
-    * two streams feeding the same table would collide on bare `b<id>`
-    * markers — stream A's marker would make stream B silently SKIP its
-    * own batch id (a lost batch, the worst failure mode). The stream's
-    * checkpoint path is its identity; its digest scopes the replay
-    * markers (round 19). The digest is the first 128 bits of SHA-256
-    * (round 20, widening the original 32-bit hash): a tag COLLISION
-    * between two checkpoints feeding one table would recreate exactly
-    * the shared-namespace skip this tag exists to eliminate, so the
-    * collision probability must be cryptographically negligible —
-    * markers are cheap, 32 hex chars cost nothing. Markers written
-    * under the old 32-bit tags (or by pre-tag code) replay as misses,
-    * which the latest-wins MERGE absorbs — no migration step. */
+  /** A stream's identity in the tables it writes: batch ids are
+    * PER-CHECKPOINT, so two streams feeding one table would collide on
+    * bare ids — stream A's record would make stream B silently SKIP its
+    * own batch (a lost batch). The checkpoint path is the identity; its
+    * digest tags every replay record the stream commits
+    * ([[streamCommit]]), 128 bits of SHA-256 so that a collision between
+    * two checkpoints feeding one table is cryptographically negligible. */
   private[graft] def streamTag(checkpoint: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(checkpoint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(16).map(b => f"$b%02x").mkString
 
   /**
-   * ONE sink micro-batch — the shared body behind [[txUpsertSink]]
-   * (foreachBatch), the `df.writeStream.format("txtable")` V1 Sink
-   * ([[graft.sources.txtable.TxTableSource]], round 19) and every
-   * standing sink's state commit ([[commitState]]): marker-gated
-   * exactly-once MERGE of the batch into the table, first-batch
-   * auto-create, optional in-stream maintenance cadence.
+   * ONE stream batch's commit to the table at `root` — behind the
+   * `format("txtable")` sink ([[txUpsertBatch]]) and every standing
+   * sink's state ([[commitState]]). `commit` lands the batch with the
+   * record `(tag, batchId)` in its commit marker (Delta's `txn` action),
+   * so a replay check is a snapshot read
+   * ([[graft.sources.TxTable.streamBatch]]): a batch whose record the
+   * table holds is skipped. Every `checkpointEvery` batches the log then
+   * folds (checkpoint + expire + vacuum; the sink is the table's one
+   * maintenance writer); a replayed cadence batch whose fold did not
+   * land (no checkpoint carries its record yet) runs the fold.
+   */
+  private def streamCommit(spark: SparkSession, root: String, batchId: Long,
+      tag: String, checkpointEvery: Int, partitionCols: Seq[String])(
+      commit: Seq[(String, Long)] => Unit): Unit = {
+    import graft.sources.TxTable
+    val done = TxTable.streamBatch(root, tag).filter(_._1 >= batchId)
+    if (done.isEmpty) commit(Seq(tag -> batchId))
+    if (checkpointEvery > 0 && batchId > 0 && batchId % checkpointEvery == 0 &&
+        !done.exists(_._2)) {
+      // the fold loses its fence to a concurrent writer under
+      // multi-writer OCC, and to the unredeemed claim of a writer
+      // killed mid-commit in any deployment — skip this cadence and
+      // fold at a later one rather than fail the stream. Vacuum runs
+      // either way: it sweeps a dead writer's claim once the claim
+      // outlives the grace window, which unblocks the fold
+      try {
+        TxTable.checkpoint(spark, root, partitionCols = partitionCols)
+        TxTable.expire(spark, root)
+      } catch {
+        case e: TxTable.CommitConflictException =>
+          System.err.println(
+            s"[stream commit] maintenance fold skipped this cadence: ${e.getMessage}")
+      }
+      TxTable.vacuum(spark, root)
+    }
+  }
+
+  /**
+   * One micro-batch of the `df.writeStream.format("txtable")` CDC sink
+   * ([[graft.sources.txtable.TxStreamSink]]): the batch lands through
+   * [[streamCommit]] as one [[graft.sources.TxTable.upsert]] commit —
+   * atomic delete+append, write volume ∝ the batch (SCALE.md `txtable`).
+   * The first batch auto-creates the table (an empty commit 0 in the
+   * batch's schema, then the MERGE every later batch takes).
+   * `conflictDetect` makes the MERGE an OCC writer, so a batch job
+   * upserting next to the sink serializes instead of losing an update.
    */
   private[graft] def txUpsertBatch(spark: SparkSession, root: String,
       batchDf: DataFrame, batchId: Long,
@@ -242,72 +227,24 @@ object Streams {
       opCol: Option[String], checkpointEvery: Int,
       bloomCols: Seq[String], partitionCols: Seq[String],
       conflictDetect: Boolean, conflictWaitMs: Long,
-      tag: String): Unit = {
-    import graft.sources.{Fs, TxTable}
-    val done = s"$root/_txn/stream/s${tag}_b$batchId"
-    if (!Fs.exists(done)) {
+      tag: String): Unit =
+    streamCommit(spark, root, batchId, tag, checkpointEvery, partitionCols) { txns =>
+      import graft.sources.TxTable
       if (TxTable.committedIds(root).isEmpty) {
-        // first batch: an empty create in the table's schema (op is
-        // transport metadata, never table data), then the same MERGE
-        // path every later batch takes. The empty create stays FLAT
-        // even when partitionCols is set: a partitioned write of
-        // zero rows leaves no schema-bearing file at all, while the
-        // flat empty file carries the full schema (partition column
-        // included as a plain column) and reconciles by name with
-        // the partitioned commits that follow
+        // an empty create in the table's schema (op is transport
+        // metadata, never table data), FLAT even when partitionCols is
+        // set: a partitioned write of zero rows leaves no schema-bearing
+        // file, while the flat one reconciles by name with the
+        // partitioned commits that follow
         val shape = opCol.map(batchDf.drop(_)).getOrElse(batchDf)
         TxTable.create(spark, root, spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           shape.schema), bloomCols)
       }
-      TxTable.upsert(spark, root, batchDf, keyCols, versionCol,
-        opCol = opCol, bloomCols = bloomCols,
-        partitionCols = partitionCols,
-        conflictDetect = conflictDetect, conflictWaitMs = conflictWaitMs)
-      if (checkpointEvery > 0 && batchId > 0 &&
-          batchId % checkpointEvery == 0) {
-        // the fold loses its fence to a concurrent writer under
-        // multi-writer OCC, and to the unredeemed claim of a writer
-        // killed mid-commit in any deployment — skip this cadence and
-        // fold at a later one rather than fail the stream. Vacuum runs
-        // either way: it sweeps a dead writer's claim once the claim
-        // outlives the grace window, which unblocks the fold
-        try {
-          TxTable.checkpoint(spark, root, partitionCols = partitionCols)
-          TxTable.expire(spark, root)
-        } catch {
-          case e: TxTable.CommitConflictException =>
-            System.err.println(
-              s"[txUpsertSink] maintenance fold skipped this cadence: ${e.getMessage}")
-        }
-        TxTable.vacuum(spark, root)
-        // stream markers exist to short-circuit replays, and only
-        // the in-flight batch can replay — markers below it are
-        // dead weight; sweep THIS stream's markers with the same
-        // cadence (losing one to a crash is safe: the merge absorbs a
-        // re-application). Another stream's markers are its own replay
-        // state — never touched. Legacy untagged `b<id>` markers from
-        // pre-tag code are dead (nothing checks that name anymore) and
-        // sweep unconditionally.
-        if (Fs.isDirectory(s"$root/_txn/stream")) {
-          val own = s"s${tag}_b"
-          Fs.listFiles(s"$root/_txn/stream")
-            .map(_.getPath.getName)
-            .filter { n =>
-              (n.startsWith(own) && n.drop(own.length).forall(_.isDigit) &&
-                n.drop(own.length).toLong < batchId) ||
-              (n.startsWith("b") && n.drop(1).forall(_.isDigit))
-            }
-            .foreach(n => Fs.deleteIfExists(s"$root/_txn/stream/$n"))
-        }
-      }
-      // the stream marker is an at-least-once SHORTCUT, not the
-      // commit bit: it lands last, and a replay that beats it is
-      // absorbed by the merge's latest-wins no-op
-      Fs.createMarker(done, root)
+      TxTable.upsertAs(spark, root, batchDf, keyCols, versionCol, opCol,
+        bloomCols, TxTable.broadcastKeys, partitionCols, conflictDetect,
+        conflictWaitMs, txns)
     }
-    ()
-  }
 
   /**
    * TxTable-fed standing VECTOR STATE (round 18, the missing consumer of
@@ -380,7 +317,7 @@ object Streams {
   }
 
   /** A standing sink's state table: one [[graft.sources.TxTable]] with a
-    * row per arrival, keyed (arrival key, `batch`). */
+    * row per arrival, tagged with its `batch`. */
   private def stateRoot(outDir: String): String = s"$outDir/_stream_state"
 
   /** Create a sink's state table once, from `seed` (zero rows give the
@@ -392,15 +329,13 @@ object Streams {
       graft.sources.TxTable.create(rows.sparkSession, root, rows)
     }
 
-  /** Commit one batch's arrivals through the one sink body,
-    * [[txUpsertBatch]], keyed on (`key`, `batch`) with version = batch:
-    * two batches' rows never replace each other, and a replayed batch
-    * is a snapshot no-op. `checkpointEvery` is the sink's fold cadence. */
-  private def commitState(root: String, rows: DataFrame, key: String,
-      batchId: Long, checkpointEvery: Int, tag: String): Unit =
-    txUpsertBatch(rows.sparkSession, root, rows, batchId, Seq(key, "batch"),
-      "batch", None, checkpointEvery, Nil, Nil, conflictDetect = false,
-      conflictWaitMs = 60L * 1000, tag)
+  /** Commit one batch's arrivals to the state as one append through
+    * [[streamCommit]]: O(batch), and a replay of a committed batch is
+    * skipped. `checkpointEvery` is the sink's fold cadence. */
+  private def commitState(root: String, rows: DataFrame, batchId: Long,
+      checkpointEvery: Int, tag: String): Unit =
+    streamCommit(rows.sparkSession, root, batchId, tag, checkpointEvery, Nil)(
+      graft.sources.TxTable.appendAs(rows.sparkSession, root, rows, Nil, Nil, Nil, _))
 
   /** Load-or-train a sink's coarse quantizer (round 16 review): the
     * centroid table is persisted under `outDir` at FIRST creation
@@ -485,7 +420,7 @@ object Streams {
           standing.select(col("id").as("nbr"), col("vec").as("cvec")))
         decide(bvecs, bCells, standCells, standVecs)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        commitState(state, arrivals(bvecs, bCells, batchId), "id", batchId,
+        commitState(state, arrivals(bvecs, bCells, batchId), batchId,
           compactEvery, tag)
       }
       .start()
@@ -677,8 +612,7 @@ object Streams {
         // the batch's hashes commit AFTER its output — a crash in
         // between replays the batch, which the anti-join above makes
         // idempotent
-        commitState(state, hashRows(bh, batchId), "nbr", batchId,
-          compactEvery, tag)
+        commitState(state, hashRows(bh, batchId), batchId, compactEvery, tag)
       }
       .start()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Fs
-import graft.streaming.Streams
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -72,7 +71,7 @@ class HostileFsSpec extends AnyFunSuite {
   private def hostileDir(tag: String): String =
     "hostile:" + java.nio.file.Files.createTempDirectory(tag).toString
 
-  test("txUpsertSink commits and resolves on a no-rename store with zero renames") {
+  test("txtable sink commits and resolves on a no-rename store with zero renames") {
     import graft.sources.TxTable
     val table = hostileDir("graft-hostile-sink") + "/table"
     // checkpoint and source stay on file:. — at scale the checkpoint
@@ -84,7 +83,9 @@ class HostileFsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema("id LONG, tag STRING, v LONG")
       .json(s"$local/in")
     val before = HostileFileSystem.deniedRenames.get()
-    val q = Streams.txUpsertSink(stream, table, s"$local/ckpt", Seq("id"), "v")
+    val q = stream.writeStream.format("txtable").option("keys", "id")
+      .option("versionCol", "v").option("checkpointLocation", s"$local/ckpt")
+      .start(table)
     try {
       q.processAllAvailable()
       Seq((2L, "b2", 2L), (3L, "c", 2L)).toDF("id", "tag", "v")
@@ -98,8 +99,8 @@ class HostileFsSpec extends AnyFunSuite {
     assert(cur.count() == 3)
     assert(cur.filter(col("id") === 2L).select("tag").as[String].head() == "b2")
     // the write path staged through _temporary renames (allowed), but the
-    // sink itself never attempted one: claims, commits and batch markers
-    // are create-once PUTs
+    // sink itself never attempted one: claims and commits (the batch's
+    // replay record inside) are create-once PUTs
     assert(HostileFileSystem.deniedRenames.get() == before,
       "the sink attempted a rename — broken on object stores")
   }

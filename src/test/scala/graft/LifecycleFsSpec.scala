@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{Fs, ParquetIO, TxTable}
-import graft.streaming.Streams
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,7 +132,7 @@ class LifecycleFsSpec extends AnyFunSuite {
     assert(TxTable.vacuum(spark, t, graceMs = 0L).isEmpty)
   }
 
-  test("txUpsertSink crash-window replay is a snapshot no-op across path spellings") {
+  test("txtable sink crash-window replay is a snapshot no-op across path spellings") {
     // a restart that spells the SAME table with a scheme ('file:/t' vs
     // '/t') must resolve the same commits, so the replayed batch MERGEs
     // against the snapshot it already changed and is absorbed.
@@ -145,10 +144,12 @@ class LifecycleFsSpec extends AnyFunSuite {
     (21L to 60L).map(k => (k, "b", 2L)).toDF("k", "payload", "v")
       .coalesce(1).write.parquet(s"$base/in/f1")
     val schema = spark.read.parquet(s"$base/in/f0").schema
-    def start(table: String, ckpt: String) = Streams.txUpsertSink(
+    def start(table: String, ckpt: String) =
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*"),
-      table, ckpt, Seq("k"), "v")
+        .parquet(s"$base/in/*")
+        .writeStream.format("txtable").option("keys", "k")
+        .option("versionCol", "v").option("checkpointLocation", ckpt)
+        .start(table)
     val q = start(s"$base/table", s"$base/ckpt")
     try q.processAllAvailable() finally q.stop()
     def snapshot() = TxTable.read(spark, s"$base/table")

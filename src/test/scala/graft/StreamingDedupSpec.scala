@@ -8,18 +8,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A local store that fails the n-th step of a commit sequence after
-  * [[StepFaultFileSystem.arm]]`(n)`: a step is a commit-marker or
-  * replay-marker create (it throws, as a crash there would) or a
-  * commit data-dir delete (it fails, and `Fs` carries on, as a sweep
-  * that leaves a dir behind would). Fires once per arming. */
+  * [[StepFaultFileSystem.arm]]`(n)`: a step is a commit-marker create
+  * (it throws, as a crash there would) or a commit data-dir delete (it
+  * fails, and `Fs` carries on, as a sweep that leaves a dir behind
+  * would). Fires once per arming. */
 class StepFaultFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "stepfault"
   override def getUri: java.net.URI = java.net.URI.create("stepfault:///")
 
   private def guardCreate(f: Path): Unit = {
     val p = f.toUri.getPath
-    if (p.contains("/_txn/commits/") || p.contains("/_txn/stream/"))
-      StepFaultFileSystem.step(f)
+    if (p.contains("/_txn/commits/")) StepFaultFileSystem.step(f)
   }
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
@@ -367,9 +366,9 @@ class StreamingDedupSpec extends AnyFunSuite {
       .select("nbr", "batch").as[(Long, Long)].collect().toSeq
     val before = (0L until 10L).map(_ -> -1L) ++ Seq(100L -> 0L, 101L -> 1L)
     val after = before :+ (102L -> 2L)
-    // batch 2 is a fold cadence: its own commit, then checkpoint +
-    // expire + vacuum, then the replay marker. Interrupt it at each of
-    // those steps in turn, on a fresh table each time, until a run
+    // batch 2 is a fold cadence: its own commit (its replay record
+    // inside), then checkpoint + expire + vacuum. Interrupt it at each
+    // of those steps in turn, on a fresh table each time, until a run
     // passes every step
     var step = 1
     var fired = true
@@ -395,9 +394,8 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(TxTable.checkpointIds(root).nonEmpty, s"step $step: no fold")
       step += 1
     }
-    // the batch commit, the checkpoint commit, four expired data dirs
-    // and the replay marker
-    assert(step - 2 == 7, s"the fold had ${step - 2} interruptible steps, not 7")
+    // the batch commit, the checkpoint commit and four expired data dirs
+    assert(step - 2 == 6, s"the fold had ${step - 2} interruptible steps, not 6")
   }
 
   test("semantic sink restart reloads the persisted quantizer across a corpus change (round 16)") {

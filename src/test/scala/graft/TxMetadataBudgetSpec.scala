@@ -92,7 +92,10 @@ class TxMetadataBudgetSpec extends AnyFunSuite {
     * log reads the same table cost, with an exists counted as a status
     * call: create 2/15/0, read 60/121/20, changeFeed 54/76/10, history
     * 42/125/39, upsert 70/170/41, deleteWhere 70/168/43, mergeInto
-    * 74/181/44, maintain 107/296/45. */
+    * 74/181/44, maintain 107/296/45. maintain's open ceiling rose from
+    * 45 to 68 when `checkpoint` began carrying the stream records of
+    * the markers it folds: one open per folded marker, 23 here (the
+    * 20-commit table plus the upsert, deleteWhere and mergeInto above). */
   private val budget: Seq[(String, Calls)] = Seq(
     "create" -> Calls(8, 9, 0),
     "read" -> Calls(62, 20, 20),
@@ -101,7 +104,7 @@ class TxMetadataBudgetSpec extends AnyFunSuite {
     "upsert" -> Calls(73, 56, 41),
     "deleteWhere" -> Calls(73, 51, 43),
     "mergeInto" -> Calls(78, 58, 44),
-    "maintain" -> Calls(91, 123, 45))
+    "maintain" -> Calls(91, 123, 68))
 
   /** The session settings that decide how many files a commit writes,
     * pinned to the shared session's defaults for the measurement. */

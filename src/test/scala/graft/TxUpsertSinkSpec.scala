@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Streaming CDC into the transactional merge-on-read table (round 17):
- * each micro-batch is one atomic TxTable commit (batch-sized writes,
- * never a generation rewrite), correct under at-least-once replay both
- * through the stream-marker skip and through the merge's latest-wins
- * absorption, with in-stream log folding.
+ * Streaming CDC into the transactional merge-on-read table through
+ * `writeStream.format("txtable")`: each micro-batch is one atomic
+ * TxTable commit (batch-sized writes, never a generation rewrite),
+ * correct under replay both through the (stream tag, batch id) record
+ * its commit marker carries — which the log fold keeps — and through the
+ * merge's latest-wins absorption, with in-stream log folding.
  */
 class TxUpsertSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -27,15 +28,37 @@ class TxUpsertSinkSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$base/in/f2")
   }
 
-  private def drain(base: String, ckpt: String, every: Int = 0): Unit = {
+  /** The batches under `base/in`, one file per trigger, streamed into
+    * the txtable sink at `base/t` with `opts`. */
+  private def sink(base: String, ckpt: String, opts: (String, String)*) = {
     val schema = spark.read.parquet(s"$base/in/f0").schema
-    val q = Streams.txUpsertSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*"),
-      s"$base/t", ckpt, Seq("k"), "v", opCol = Some("op"),
-      checkpointEvery = every)
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(s"$base/in/*")
+      .writeStream.format("txtable").option("checkpointLocation", ckpt)
+      .options(opts.toMap).start(s"$base/t")
+  }
+
+  private def drain(base: String, ckpt: String, every: Int = 0): Unit = {
+    val q = sink(base, ckpt, "keys" -> "k", "versionCol" -> "v",
+      "opCol" -> "op", "checkpointEvery" -> every.toString)
     try q.processAllAvailable() finally q.stop()
   }
+
+  /** Forget the stream's newest offset commit, as a crash after the
+    * sink's commit and before Spark's would: a restart replays it. */
+  private def dropLastCommit(ckpt: String): Long = {
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.list().filter(n => n.nonEmpty && n.forall(_.isDigit))
+      .map(_.toLong).max
+    assert(new java.io.File(commits, s"$last").delete())
+    // the local FS shadows every file with a .crc checksum — one left
+    // behind fails the replayed commit's rename
+    new java.io.File(commits, s".$last.crc").delete()
+    last
+  }
+
+  private def rows(base: String) =
+    TxTable.read(spark, s"$base/t").orderBy("k", "v").collect().toSeq
 
   private def state(base: String): Map[Long, (String, Long)] =
     TxTable.read(spark, s"$base/t")
@@ -68,35 +91,59 @@ class TxUpsertSinkSpec extends AnyFunSuite {
     assert(at1.count() === 50L)
   }
 
-  test("replay via the stream marker AND via merge absorption is a no-op") {
+  test("replay via the commit's stream record AND via merge absorption is a no-op") {
     val base = java.nio.file.Files.createTempDirectory("graft-txsr").toString
     writeBatches(base)
     drain(base, s"$base/ckpt1")
-    val before = TxTable.read(spark, s"$base/t").orderBy("k", "v")
-      .collect().toSeq
+    val before = rows(base)
     val commits1 = TxTable.committedIds(s"$base/t")
-    // SAME-STREAM replay (crash between the sink's table commit and the
-    // stream's own commit log): the checkpoint-scoped marker
-    // short-circuits the re-application — no new commit
+    // SAME-STREAM replay of a committed batch: the (tag, batch) record
+    // in its commit marker skips the re-application — no new commit
     val tag1 = Streams.streamTag(s"$base/ckpt1")
     val lastBatch = spark.read.parquet(s"$base/in/f2")
     Streams.txUpsertBatch(spark, s"$base/t", lastBatch, 2L,
       Seq("k"), "v", Some("op"), 0, Nil, Nil, false, 60000L, tag1)
     assert(TxTable.committedIds(s"$base/t") === commits1,
-      "a marker-acknowledged batch of the SAME stream must not commit again")
-    // a DIFFERENT stream (fresh checkpoint = new marker namespace,
-    // round 19 — bare `b<id>` markers let stream A's ids silently eat
-    // stream B's batches) re-applies every batch; the latest-wins MERGE
-    // absorbs them as snapshot no-ops: same data, empty commits
+      "a recorded batch of the SAME stream must not commit again")
+    // a DIFFERENT stream (fresh checkpoint = new tag — bare batch ids
+    // would let stream A's records silently eat stream B's batches)
+    // re-applies every batch; the latest-wins MERGE absorbs them as
+    // snapshot no-ops: same data, empty commits
     drain(base, s"$base/ckpt2")
-    assert(TxTable.read(spark, s"$base/t").orderBy("k", "v").collect().toSeq
-      === before, "cross-stream replay must be a snapshot no-op")
-    // and the marker LOSING its own race (crash between the table
-    // commit and the marker write) falls back to the same absorption
-    Fs.deleteIfExists(s"$base/t/_txn/stream/s${tag1}_b2")
-    drain(base, s"$base/ckpt3")
-    assert(TxTable.read(spark, s"$base/t").orderBy("k", "v").collect().toSeq
-      === before, "a re-applied batch must be a snapshot no-op")
+    assert(rows(base) === before, "cross-stream replay must be a snapshot no-op")
+    // Spark's own replay: batch 2 committed, its offset commit lost —
+    // the restarted stream finds its record under ckpt2's commits and
+    // lands nothing
+    val commits2 = TxTable.committedIds(s"$base/t")
+    val replayed = dropLastCommit(s"$base/ckpt1")
+    drain(base, s"$base/ckpt1")
+    assert(new java.io.File(s"$base/ckpt1/commits/$replayed").exists,
+      "the restart must have replayed the batch")
+    assert(TxTable.committedIds(s"$base/t") === commits2,
+      "a replay after the commit, before the offset commit, must land no commit")
+    assert(rows(base) === before)
+    assertFinal(state(base))
+  }
+
+  test("a replay of a batch whose commit was folded and expired lands no commit") {
+    val base = java.nio.file.Files.createTempDirectory("graft-txsf").toString
+    writeBatches(base)
+    val ckpt = s"$base/ckpt"
+    drain(base, ckpt, every = 2)
+    val t = s"$base/t"
+    // batch 2, the last, is a fold cadence: its commit is folded into
+    // the checkpoint and expired, so the checkpoint's marker is the only
+    // one left to carry the batch's record
+    val ids = TxTable.committedIds(t)
+    assert(ids.size == 1 && ids == TxTable.checkpointIds(t),
+      s"expected the checkpoint alone, got commits $ids")
+    val before = rows(base)
+    assert(dropLastCommit(ckpt) == 2L)
+    drain(base, ckpt, every = 2)
+    assert(new java.io.File(s"$ckpt/commits/2").exists,
+      "the restart must have replayed batch 2")
+    assert(TxTable.committedIds(t) == ids, "the replay must land no commit")
+    assert(rows(base) == before)
     assertFinal(state(base))
   }
 
@@ -119,23 +166,16 @@ class TxUpsertSinkSpec extends AnyFunSuite {
       TxTable.committedIds(t).filter(_ >= cp)
         .exists(id => f.contains(s"/data/c$id/"))
     }, "reads must resolve checkpoint + tail only")
-    // stream markers below the maintenance batch are swept — the marker
-    // dir is bounded by the fold cadence, not the stream's lifetime
-    val markers = Fs.listFiles(s"$t/_txn/stream").map(_.getPath.getName)
-    assert(markers.size <= 3,
-      s"stream markers must be swept at the fold cadence, got $markers")
+    // the replay records ride in the commit markers: no file beside them
+    assert(!Fs.exists(s"$t/_txn/stream"), "no stream replay dir may exist")
   }
 
   test("partitionCols lays every streamed commit out hive-style") {
     val base = java.nio.file.Files.createTempDirectory("graft-txsp").toString
     // payload doubles as the partition column in this fixture
     writeBatches(base)
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    val q = Streams.txUpsertSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*"),
-      s"$base/t", s"$base/ckpt", Seq("k"), "v", opCol = Some("op"),
-      partitionCols = Seq("payload"))
+    val q = sink(base, s"$base/ckpt", "keys" -> "k", "versionCol" -> "v",
+      "opCol" -> "op", "partitionCols" -> "payload")
     try q.processAllAvailable() finally q.stop()
     assertFinal(state(base))
     // the empty create (c0) is flat — the schema carrier; every
@@ -176,12 +216,8 @@ class TxUpsertSinkSpec extends AnyFunSuite {
       (1L to 10L).map(k => (k, s"sink$b", b * 10L)).toDF("k", "payload", "v")
         .coalesce(1).write.parquet(s"$base/in/f$b")
     }
-    val schema = spark.read.parquet(s"$base/in/f0").schema
-    val q = Streams.txUpsertSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*"),
-      t, s"$base/ckpt", Seq("k"), "v",
-      conflictDetect = true, conflictWaitMs = 180000L)
+    val q = sink(base, s"$base/ckpt", "keys" -> "k", "versionCol" -> "v",
+      "conflictDetect" -> "true", "conflictWaitMs" -> "180000")
     val batcher = Future {
       // wait until the sink created the table, then race it
       val deadline = System.currentTimeMillis() + 60000
