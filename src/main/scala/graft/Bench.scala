@@ -1,7 +1,185 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
+
+/**
+ * The one query runner: times the registered queries over interleaved
+ * passes into the noop sink, and records per query and pass the Spark
+ * work its jobs did — the local-mode substitute for the Spark UI's job
+ * and stage tables (guide §1/§7). What the record separates: scheduling
+ * and driver overhead (many tiny jobs, a wide off-job gap) from compute
+ * (task time ≈ wall × cores) from shuffle volume. A filtered run also
+ * prints each (query, pass)'s per-site and slowest-job tables to stderr:
+ *
+ *   SPARK_GRAFT_BENCH_QUERIES=q_dedup_hybrid,q_ann_state_sync \
+ *     SPARK_GRAFT_BENCH_SIDECAR=/tmp/bq.json sbt "runMain graft.Bench"
+ */
 object Bench {
+
+  /** One Spark job and the tasks it ran, from the listener's events. */
+  private[graft] final class Job(val id: Int, val tag: String, val desc: String,
+      val submitted: Long) {
+    /** written last, after the job's task events: a reader that sees it
+      * set sees every field above */
+    @volatile var completed = 0L
+    var tasks = 0
+    var taskMs = 0L
+    var shuffleReadB = 0L
+    var shuffleWriteB = 0L
+    var inputB = 0L
+    val stages = collection.mutable.Set.empty[Int]
+    def wallMs: Long = math.max(0L, completed - submitted)
+  }
+
+  /** One query's pass: its sample wall and the jobs that carried its tag. */
+  private[graft] final case class Pass(wallS: Double, jobs: Seq[Job]) {
+    /** stages that ran tasks */
+    def stages: Int = jobs.flatMap(_.stages).distinct.size
+    def taskS: Double = jobs.map(_.taskMs).sum / 1e3
+    def jobWallS: Double = jobs.map(_.wallMs).sum / 1e3
+    def offJobGapS: Double = wallS - jobWallS
+    def shuffleReadB: Long = jobs.map(_.shuffleReadB).sum
+    def shuffleWriteB: Long = jobs.map(_.shuffleWriteB).sum
+    def inputB: Long = jobs.map(_.inputB).sum
+    /** (site, jobs, summed job wall s), slowest first: a site is the job
+      * description up to its first '+', else Spark's call site */
+    def sites: Seq[(String, Int, Double)] =
+      jobs.groupBy(_.desc.takeWhile(_ != '+').trim)
+        .map { case (d, js) => (d, js.size, js.map(_.wallMs).sum / 1e3) }
+        .toSeq.sortBy(-_._3)
+    def json: String = s"""{"jobs":${jobs.size},"stages":$stages,""" +
+      s""""task_s":${fmt(taskS)},"job_wall_s":${fmt(jobWallS)},""" +
+      s""""offjob_gap_s":${fmt(offJobGapS)},"shuffle_read_b":$shuffleReadB,""" +
+      s""""shuffle_write_b":$shuffleWriteB,"input_b":$inputB}"""
+  }
+
+  private val QueryTag = "graft.bench:"
+
+  /** Attributes each job to the (query, pass) tag it carries
+    * (`SparkContext.addJobTag`: SQL's broadcast and subquery threads and
+    * a commit's legs run with the caller's tags), so no wall-clock window
+    * and no sleep decides what belongs to which query. */
+  private final class Recorder(sc: org.apache.spark.SparkContext) extends SparkListener {
+    private val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    private var drains = 0
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val props = Option(e.properties)
+      val tags = props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .toSeq.flatMap(_.split(","))
+      tags.find(_.startsWith(QueryTag)).foreach { tag =>
+        val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.nonEmpty)
+          .orElse(e.stageInfos.lastOption.map(_.name))
+          .getOrElse("")
+        jobs.put(e.jobId, new Job(e.jobId, tag, desc, e.time))
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobs.get(e.jobId)).foreach(_.completed = e.time)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stageJob.get(e.stageId)).flatMap(id => Option(jobs.get(id)))
+        .filter(_ => e.taskMetrics != null).foreach { j =>
+          j.stages += e.stageId
+          j.tasks += 1
+          j.taskMs += e.taskInfo.duration
+          j.shuffleReadB += e.taskMetrics.shuffleReadMetrics.totalBytesRead
+          j.shuffleWriteB += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+          j.inputB += e.taskMetrics.inputMetrics.bytesRead
+        }
+
+    /** Returns once this listener has seen every event posted before the
+      * call: a one-task job's end reaches it after every earlier event of
+      * its queue. */
+    def drain(): Unit = {
+      drains += 1
+      val tag = s"${QueryTag}drain:$drains"
+      sc.addJobTag(tag)
+      try sc.parallelize(Seq(0), 1).count() finally sc.removeJobTag(tag)
+      def seen = jobs.values.asScala.exists(j => j.tag == tag && j.completed > 0)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(1)
+      if (!seen)
+        System.err.println("[bench] listener bus not drained after 60 s — job records may be short")
+      take(tag, 0.0)
+    }
+
+    /** The pass of `tag`'s jobs, which leave the record. */
+    def take(tag: String, wallS: Double): Pass = {
+      val js = jobs.values.asScala.filter(_.tag == tag).toSeq.sortBy(_.id)
+      js.foreach(j => jobs.remove(j.id))
+      Pass(wallS, js)
+    }
+  }
+
+  /** Runs `queries` over `runs` interleaved passes into the noop sink:
+    * each query's passes that succeeded, and the queries that failed a
+    * pass (a name per failure). With `tables`, each pass's per-site and
+    * slowest-job tables go to stderr. */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)], runs: Int,
+      tables: Boolean): (collection.Map[String, Vector[Pass]], List[String]) = {
+    val sc = spark.sparkContext
+    val rec = new Recorder(sc)
+    sc.addSparkListener(rec)
+    var failures = List.empty[String]
+    // battery-level passes: pass p runs EVERY query once before any query
+    // runs its (p+1)-th sample
+    val samples = collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    val passes = collection.mutable.LinkedHashMap[String, Vector[Pass]]()
+    queries.foreach { case (n, _) => samples(n) = Vector.empty; passes(n) = Vector.empty }
+    try for (pass <- 1 to runs) {
+      System.err.println(s"[bench] --- pass $pass/$runs ---")
+      queries.foreach { case (name, fn) =>
+        sc.addJobTag(s"$QueryTag$name:$pass")
+        val t0 = System.nanoTime()
+        // noop sink executes the FULL plan (a bare .count() lets Catalyst
+        // drop final sorts, under-measuring order-by cost)
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          samples(name) :+= (System.nanoTime() - t0) / 1e9
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] FAILED $name (pass $pass): $e")
+            e.printStackTrace()
+            failures ::= name
+        } finally sc.removeJobTag(s"$QueryTag$name:$pass")
+      }
+      rec.drain()
+      queries.foreach { case (name, _) =>
+        val p = rec.take(s"$QueryTag$name:$pass", samples(name).lastOption.getOrElse(0.0))
+        if (samples(name).size > passes(name).size) {
+          passes(name) :+= p
+          if (tables) printTables(name, pass, p)
+        }
+      }
+    } finally sc.removeSparkListener(rec)
+    (passes, failures)
+  }
+
+  private def printTables(name: String, pass: Int, p: Pass): Unit = {
+    val err = System.err
+    err.println(f"== $name pass $pass wall=${p.wallS}%.2fs jobs=${p.jobs.size} " +
+      f"stages=${p.stages} taskSum=${p.taskS}%.1fs jobWallSum=${p.jobWallS}%.2fs " +
+      f"offJobGap=${p.offJobGapS}%.2fs shufR=${p.shuffleReadB / 1e6}%.1fMB " +
+      f"shufW=${p.shuffleWriteB / 1e6}%.1fMB input=${p.inputB / 1e6}%.1fMB")
+    p.sites.take(14).foreach { case (d, n, w) =>
+      err.println(f"   site n=$n%3d wall=$w%6.2fs  ${d.take(100)}")
+    }
+    p.jobs.sortBy(-_.wallMs).take(12).foreach { j =>
+      err.println(f"   job ${j.id}%4d ${j.wallMs / 1e3}%6.2fs tasks=${j.tasks}%4d " +
+        f"taskT=${j.taskMs / 1e3}%6.1fs sr=${j.shuffleReadB / 1e6}%8.2fMB " +
+        f"in=${j.inputB / 1e6}%8.2fMB  ${j.desc.take(90)}")
+    }
+  }
+
+  private def fmt(d: Double) = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -15,64 +193,32 @@ object Bench {
     // any single bad window.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // optional comma-separated query filter for targeted re-measurement;
-    // unknown names fail fast — a typo must not print a success-looking
-    // zero-total JSON
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      // an empty/whitespace filter (CI templating slip) would select ZERO
-      // queries and print a success-looking zero-total JSON — fail fast
-      // like an unknown name does (round-12 review)
-      if (names.isEmpty) {
-        System.err.println(
-          "[bench] SPARK_GRAFT_BENCH_QUERIES is set but empty — unset it for the full battery")
-        sys.exit(2)
-      }
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] unknown query names in SPARK_GRAFT_BENCH_QUERIES: ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
+    // an empty filter or an unknown name fails fast — a typo must not
+    // print a success-looking zero-total JSON
+    val only = try SparkEntry.selected("SPARK_GRAFT_BENCH_QUERIES",
+      sys.env.get("SPARK_GRAFT_BENCH_QUERIES"))
+    catch { case e: IllegalArgumentException =>
+      System.err.println(s"[bench] ${e.getMessage}")
+      sys.exit(2)
     }
     // engine-recommended confs (codegen cache sizing, plan-string bound,
-    // ns-parquet legibility) come from the shared SessionDefaults helper
-    // (round 22, r21 verdict #5): they are engine properties, not
-    // harness ones — an embedding application gets them the same way
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // ns-parquet legibility) come with the shared session recipe: they
+    // are engine properties, not harness ones — an embedding application
+    // gets them the same way
+    val spark = SessionDefaults.session(s"local[$cpus]", cpus.toInt)
     // warm the JVM/codegen/file-footer paths so the first timed query
     // doesn't absorb session startup
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    var failures = List.empty[String]
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // battery-level passes: pass p runs EVERY query once before any query
-    // runs its (p+1)-th sample
-    val samples = collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    selected.keys.foreach(samples(_) = Vector.empty)
-    for (pass <- 1 to runs) {
-      System.err.println(s"[bench] --- pass $pass/$runs ---")
-      selected.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop sink executes the FULL plan (a bare .count() lets Catalyst
-        // drop final sorts, under-measuring order-by cost)
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          samples(name) :+= (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] FAILED $name (pass $pass): $e")
-            e.printStackTrace()
-            failures ::= name
-        }
-      }
+    val selected = SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_.contains(n)) }
+    val (passes, failures) = run(spark, sfDir, selected, runs, tables = only.nonEmpty)
+    if (only.nonEmpty) {
+      val cm = org.apache.spark.metrics.source.CodegenMetrics
+      System.err.println(f"== codegen: units=${cm.METRIC_COMPILATION_TIME.getCount} " +
+        f"totalMs=${cm.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum} " +
+        f"meanMs=${cm.METRIC_COMPILATION_TIME.getSnapshot.getMean}%.1f")
     }
-    val results = samples.flatMap { case (name, times) =>
+    val results = passes.flatMap { case (name, ps) =>
+      val times = ps.map(_.wallS)
       // failed iterations are excluded — mixing a time-to-exception into
       // the median would corrupt the number; a query with zero successful
       // runs is omitted from the JSON entirely (exit 1 carries the signal)
@@ -91,7 +237,6 @@ object Bench {
         Some(name -> (median, sorted.head, sorted.last))
       }
     }
-    def fmt(d: Double) = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, (m, _, _)) => s"\"" + k + "\":" + fmt(m) }
       .mkString("{", ",", "}")
     // per-query [min,max] spread: stderr AND the sidecar JSON (round-12
@@ -103,12 +248,17 @@ object Bench {
     }.mkString("{", ",", "}")
     System.err.println(s"""[bench] spread $spread""")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    // stdout carries two lines: the full per-query record (medians and
-    // spread) for readers that parse every line, then the short total
+    // per-query, per-pass Spark work (jobs, stages, task time, off-job
+    // gap, shuffle and input bytes) of every pass that succeeded
+    val profile = passes.collect { case (k, ps) if ps.nonEmpty =>
+      s"\"" + k + "\":" + ps.map(_.json).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    // stdout carries two lines: the full per-query record (medians,
+    // spread and profile) for readers that parse every line, then the short total
     // line LAST — a reader that keeps only a 2000-char tail (with 100
     // queries an inline map once decapitated the JSON: r7/r8
     // parsed:null) still gets a parseable last line
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"queries":$qs,"spread":$spread,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"queries":$qs,"spread":$spread,"profile":$profile,"sf":"$sfDir"}"""
     println(full)
     // a FILTERED run lands in a _partial sidecar: neither the shared nor
     // the round-stamped full-battery record may be replaced by a targeted

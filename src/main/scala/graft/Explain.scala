@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for plan-posture review (no execution). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // the engine confs Bench and Verify run under, so a dump shows the
+    // the session recipe Bench and Verify run under, so a dump shows the
     // plan those sessions execute
-    val spark = SessionDefaults(SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session("local[4]", 4)
     // SPARK_GRAFT_NO_BCAST=1 shows the at-scale shape where no side fits
     // a broadcast (small-SF plans otherwise hide SMJ/bucketing behavior)
     if (sys.env.get("SPARK_GRAFT_NO_BCAST").contains("1"))

@@ -11,7 +11,12 @@ package graft
  * deleted, and a comment that keeps quoting its figures names the last
  * commit that had it. `graft.Explain` stays a separate entry point for
  * plan-posture review, and Smoke/Verify/Bench/ToolsCli are driver
- * contract, not profiling.
+ * contract, not profiling; per-query job profiles come from a filtered
+ * `graft.Bench` run. Every harness, like every one of those mains,
+ * builds its session with [[SessionDefaults.session]] (graft
+ * extensions, no UI, UTC, the engine confs) at its own core count and
+ * shuffle partitions; the driver heap is the forked JVM's `-Xmx`
+ * (`SPARK_DRIVER_MEM` in build.sbt), which no session conf can change.
  */
 object Profile {
   private val registry: Map[String, (Array[String] => Unit, String)] = Map(

@@ -4,8 +4,39 @@ package graft
  * The measurement harnesses behind SCALE.md / PLANS.md claims, in one
  * file. Each object keeps the name the docs cite; `graft.Profile` is the
  * only main and dispatches by name. File-local imports live inside each
- * object.
+ * object. Every harness builds its session with
+ * [[SessionDefaults.session]] and times its legs with [[Harness.time]].
  */
+
+/** The helpers the harnesses share. */
+private[graft] object Harness {
+  /** Runs `f`, printing its wall as `[tag] label: <s> s`. */
+  def time[A](tag: String, label: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"[$tag] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    r
+  }
+
+  /** Runs registered query `name` on the tables in `dir`, timed, into the noop
+    * sink as `graft.Bench` runs it; `at` names the scale in the label. */
+  def runQuery(spark: org.apache.spark.sql.SparkSession, tag: String, name: String,
+      dir: String, at: String): Unit =
+    time(tag, s"$name @$at")(
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save())
+
+  /** Prints the row count and o_totalprice sum of `df` (an orders scan). */
+  def scanSum(tag: String, df: org.apache.spark.sql.DataFrame, label: String = ""): Unit = {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val r = df.agg(count(lit(1)), sum("o_totalprice")).head()
+    println(s"[$tag]   -> ${if (label.isEmpty) "" else s"$label: "}n=${r.get(0)} sum=${r.get(1)}")
+  }
+
+  /** Bytes under `path`, 0 when it is not a directory. */
+  def dirBytes(path: String): Long =
+    if (!graft.sources.Fs.isDirectory(path)) 0L
+    else graft.sources.Fs.listFiles(path).map(_.getLen).sum
+}
 
 /**
  * Round-14 tokenizer-scale BPE rehearsal (SCALE.md): the native
@@ -34,23 +65,13 @@ package graft
  * how it stays checkable).
  */
 object ProfileBpe8k {
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
   import graft.operators.Bpe
-  private def time[T](name: String)(f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    val s = (System.nanoTime() - t0) / 1e9
-    System.err.println(f"[bpe8k] $name%-34s $s%8.2f s")
-    (r, s)
-  }
+  import Harness.time
 
   private[graft] def run(args: Array[String]): Unit = {
     val numMerges = args.headOption.map(_.toInt).getOrElse(8192)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session("local[32]", 32)
 
     val real = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -79,28 +100,25 @@ object ProfileBpe8k {
       // at 8192 rules; the table is bit-identical by the spec-pinned
       // tier-parity contract (batchSize 64 kept for a forced-distributed
       // re-run via maxLocalVocab = 0 if ever needed)
-      val ((merges, tier), learnWall) = time(s"$tag learn (target $numMerges)")(
+      val (merges, tier) = time("bpe8k", s"$tag learn (target $numMerges)")(
         Bpe.learnMergesAutoWithTier(frozen, "text", numMerges, batchSize = 64))
       System.err.println(
         f"[bpe8k] $tag%-16s rules=${merges.size} tier=$tier docs=$n")
       val nat = frozen.select(col("doc_id"),
         Bpe.encodeNative(spark, col("text"), merges).as("toks"))
-      val (total, natWall) = time(s"$tag native encode (full corpus)")(
+      val total = time("bpe8k", s"$tag native encode (full corpus)")(
         nat.agg(sum(size(flatten(col("toks"))))).collect()(0).getLong(0))
       System.err.println(s"[bpe8k] $tag total tokens = $total")
       // parity slice: fold/staged encoder vs native, row-for-row
       val slice = frozen.filter(col("doc_id") % 101 === 0)
-      val (_, foldWall) = time(s"$tag encodeTable (500-doc slice)") {
+      time("bpe8k", s"$tag encodeTable (500-doc slice)") {
         val staged = Bpe.encodeTable(slice, "text", "toks", merges)
         val mismatches = staged.select(col("doc_id"), col("toks").as("fold"))
           .join(nat.withColumnRenamed("toks", "native"), "doc_id")
           .filter(col("fold") =!= col("native")).count()
         require(mismatches == 0, s"$tag: $mismatches parity mismatches")
-        mismatches
       }
-      System.err.println(
-        f"[bpe8k] $tag learn=$learnWall%.1fs native=$natWall%.1fs " +
-          f"foldSlice=$foldWall%.1fs parity=OK")
+      System.err.println(s"[bpe8k] $tag native-vs-fold parity=OK")
     }
     spark.stop()
   }
@@ -116,15 +134,10 @@ object ProfileBpe8k {
  * long the log (args: nCommits, default 40).
  */
 object ProfileFeedWidth {
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
   import graft.sources.TxTable
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
     import spark.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft-fw").toString + "/t"
     TxTable.create(spark, t,
@@ -165,12 +178,8 @@ object ProfileListing {
   def run(args: Array[String]): Unit = {
     val nDirs = args.headOption.map(_.toInt).getOrElse(10000)
     val nFiles = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("profile-listing")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionDefaults.session(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
     val base = java.nio.file.Files.createTempDirectory("graft-listing")
     println(s"[listing] synthesizing $nDirs dirs x $nFiles files under $base")
     val dirs = (0 until nDirs).map { i =>
@@ -180,18 +189,13 @@ object ProfileListing {
         java.nio.file.Files.createFile(d.resolve(s"part-$j.parquet")))
       d.toString
     }
-    def time[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[listing] $tag%-14s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
     // warm both code paths once on a slice so JIT/classloading is out
     graft.sources.Fs.countFilesDistributed(spark, dirs.take(64), ".parquet", driverLoopBelow = 0)
     graft.sources.Fs.countFilesDistributed(spark, dirs.take(64), ".parquet", driverLoopBelow = 1 << 30)
-    val seq = time("driver loop")(
+    val seq = Harness.time("listing", "driver loop")(
       graft.sources.Fs.countFilesDistributed(spark, dirs, ".parquet",
         driverLoopBelow = Int.MaxValue))
-    val dist = time("distributed")(
+    val dist = Harness.time("listing", "distributed")(
       graft.sources.Fs.countFilesDistributed(spark, dirs, ".parquet",
         driverLoopBelow = 0))
     require(seq == dist, "paths disagree")
@@ -213,16 +217,11 @@ object ProfileListing {
   * recall 1.0 on the test corpora, so their outputs become deterministic
   * and DuckDB-oracle-able. */
 object ProfileOracleSix {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.operators.{Dedup, Similarity}
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")  // events.ts is TIMESTAMP(NANOS)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the recipe's legacy nanos conf reads events.ts as TIMESTAMP(NANOS)
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
     import spark.implicits._
 
     for (sf <- Seq("sf0.01", "sf0.1")) {
@@ -321,7 +320,6 @@ object ProfileOracleSix {
   */
 object ProfileR11 {
 
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
   import graft.operators.Similarity
   /** Deterministic planted near-dup corpus: each vector gets a copy under
@@ -338,6 +336,27 @@ object ProfileR11 {
     emb.unionByName(copies)
   }
 
+  /** The sf0.001–sf0.1 fixtures, and the synthesized sf1 when present. */
+  private def corpora: Seq[(String, String)] = Seq(
+    "sf0.001" -> "/root/testdata/sf0.001",
+    "sf0.01" -> "/root/testdata/sf0.01",
+    "sf0.1" -> "/root/testdata/sf0.1") ++
+    (if (new java.io.File(s"${ProfileScale.Sf1Dir}/embeddings.parquet").exists())
+      Seq("sf1" -> ProfileScale.Sf1Dir) else Nil)
+
+  /** The exact top-5 neighbor pairs of every vector, (id_a < id_b), cached. */
+  private def exactTop5(emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val all = Similarity.exactCosinePairs(emb, "vec_id", "embedding", minCos = -1.0)
+    val sym = all.select(col("id_a").as("id"), col("id_b").as("nb"), col("cos_sim"))
+      .unionByName(all.select(col("id_b").as("id"), col("id_a").as("nb"), col("cos_sim")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id")).orderBy(col("cos_sim").desc, col("nb"))
+    val top5 = sym.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+      .select(least(col("id"), col("nb")).as("id_a"),
+        greatest(col("id"), col("nb")).as("id_b")).distinct().cache()
+    top5
+  }
+
   /** The canonical clustered corpus — ONE definition, shared with the
     * registered queries, so this measurement can't drift from what
     * Verify/Bench actually run. */
@@ -347,22 +366,8 @@ object ProfileR11 {
   /** IMI operating point on the clustered corpus: recall of the product-
     * cell feed vs the exact cos≥0.9 pair set, wall vs flat ivfPairs. */
   def imiMain(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dirs = Seq(
-      "sf0.001" -> "/root/testdata/sf0.001",
-      "sf0.01" -> "/root/testdata/sf0.01",
-      "sf0.1" -> "/root/testdata/sf0.1") ++
-      (if (new java.io.File(s"${ProfileScale.Sf1Dir}/embeddings.parquet").exists())
-        Seq("sf1" -> ProfileScale.Sf1Dir) else Nil)
-    for ((tag, dir) <- dirs) {
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
+    for ((tag, dir) <- corpora) {
       val corpus = clustered(spark.read.parquet(s"$dir/embeddings.parquet")).cache()
       val n = corpus.count()
       val nC = ((n + 19) / 20).toInt
@@ -392,14 +397,7 @@ object ProfileR11 {
     if (args.headOption.contains("planted")) { plantedMain(); return }
     if (args.headOption.contains("clustered")) { clusteredMain(); return }
     if (args.headOption.contains("imi")) { imiMain(); return }
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[16]", 16, "ERROR")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val emb = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
       val exact = Similarity.exactCosinePairs(emb, "vec_id", "embedding", minCos = 0.45)
@@ -414,14 +412,7 @@ object ProfileR11 {
           s"recall=${if (nExact == 0) 1.0 else found.toDouble / nExact}")
       }
       // kNN: exact top-5 neighbor pairs per vector must all be IVF candidates
-      val all = Similarity.exactCosinePairs(emb, "vec_id", "embedding", minCos = -1.0)
-      val sym = all.select(col("id_a").as("id"), col("id_b").as("nb"), col("cos_sim"))
-        .unionByName(all.select(col("id_b").as("id"), col("id_a").as("nb"), col("cos_sim")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("cos_sim").desc, col("nb"))
-      val top5 = sym.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .select(least(col("id"), col("nb")).as("id_a"),
-          greatest(col("id"), col("nb")).as("id_b")).distinct().cache()
+      val top5 = exactTop5(emb)
       val nTop = top5.count()
       for (nAssign <- Seq(2, 4, 8)) {
         val ivf = Similarity.ivfPairs(emb, "vec_id", "embedding",
@@ -438,22 +429,8 @@ object ProfileR11 {
   /** Clustered-corpus operating point: exact cos≥0.9 pairs + exact top-5
     * vs ivfPairs(k = nC) recall, plus wall at each SF. */
   def clusteredMain(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dirs = Seq(
-      "sf0.001" -> "/root/testdata/sf0.001",
-      "sf0.01" -> "/root/testdata/sf0.01",
-      "sf0.1" -> "/root/testdata/sf0.1") ++
-      (if (new java.io.File(s"${ProfileScale.Sf1Dir}/embeddings.parquet").exists())
-        Seq("sf1" -> ProfileScale.Sf1Dir) else Nil)
-    for ((tag, dir) <- dirs) {
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
+    for ((tag, dir) <- corpora) {
       val corpus = clustered(spark.read.parquet(s"$dir/embeddings.parquet")).cache()
       val n = corpus.count()
       val nC = ((n + 19) / 20).toInt
@@ -473,14 +450,7 @@ object ProfileR11 {
           f"recall=${if (nExact == 0) 1.0 else found.toDouble / nExact}%.4f wall=$secs%.2f s")
       }
       // kNN top-5 containment
-      val all = Similarity.exactCosinePairs(corpus, "vec_id", "embedding", minCos = -1.0)
-      val sym = all.select(col("id_a").as("id"), col("id_b").as("nb"), col("cos_sim"))
-        .unionByName(all.select(col("id_b").as("id"), col("id_a").as("nb"), col("cos_sim")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("cos_sim").desc, col("nb"))
-      val top5 = sym.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .select(least(col("id"), col("nb")).as("id_a"),
-          greatest(col("id"), col("nb")).as("id_b")).distinct().cache()
+      val top5 = exactTop5(corpus)
       val nTop = top5.count()
       for (nAssign <- Seq(1, 2)) {
         val ivf = Similarity.ivfPairs(corpus, "vec_id", "embedding",
@@ -497,22 +467,8 @@ object ProfileR11 {
   /** Planted-corpus operating point: exact cos≥0.9 pairs vs ivfPairs
     * recall at low nAssign, plus wall at sf0.1 / synthesized sf1. */
   def plantedMain(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dirs = Seq(
-      "sf0.001" -> "/root/testdata/sf0.001",
-      "sf0.01" -> "/root/testdata/sf0.01",
-      "sf0.1" -> "/root/testdata/sf0.1") ++
-      (if (new java.io.File(s"${ProfileScale.Sf1Dir}/embeddings.parquet").exists())
-        Seq("sf1" -> ProfileScale.Sf1Dir) else Nil)
-    for ((tag, dir) <- dirs) {
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
+    for ((tag, dir) <- corpora) {
       val corpus = planted(spark.read.parquet(s"$dir/embeddings.parquet"))
       val nVec = corpus.count() / 2
       val exact = Similarity.exactCosinePairs(corpus, "vec_id", "embedding", minCos = 0.9)
@@ -543,16 +499,11 @@ object ProfileR11 {
  * decorrelated). Not part of the driver contract.
  */
 object ProfileScale {
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions._
   val Sf1Dir = "/tmp/graft_sf1"
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
     val src = "/root/testdata/sf0.1"
 
     if (!new java.io.File(s"$Sf1Dir/embeddings.parquet").exists()) {
@@ -578,8 +529,8 @@ object ProfileScale {
     if (!new java.io.File(s"$Sf1Dir/events.parquet").exists()) {
       // events: 10 replicas with disjoint user/event id spaces — per-user
       // timelines are preserved, the user population grows 10× (how an
-      // event table actually scales). ts round-trips as raw nanos longs.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // event table actually scales). ts round-trips as raw nanos longs
+      // (the recipe's legacy nanos conf).
       val ev = spark.read.parquet(s"$src/events.parquet")
       (0 until 10).map { r =>
         ev.withColumn("event_id", col("event_id") + lit(r * 100000000L))
@@ -657,11 +608,8 @@ object ProfileScale {
         "q_asof_forward", "q_embed_pq", "q_embed_pq_topk",
         "q_token_pmi", "q_pipeline_e2e", "q_embed_outliers")
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      Seq("sf0.1" -> src, "sf1" -> Sf1Dir).foreach { case (tag, dir) =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        println(f"[scale] $name%-22s $tag%-6s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+      Seq("sf0.1" -> src, "sf1" -> Sf1Dir).foreach { case (at, dir) =>
+        Harness.runQuery(spark, "scale", name, dir, at)
       }
     }
     spark.stop()
@@ -696,6 +644,7 @@ object ProfileScale {
  * Not part of the driver contract.
  */
 object ProfileScale100 {
+  import Harness.time
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.operators.{Dedup, Materialize, Similarity}
@@ -751,13 +700,6 @@ object ProfileScale100 {
     }
   }
 
-  private def time[A](tag: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[scale100] $tag%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
-
   /** Occupancy census: per hotBucketCap, the exact popcount-comparison
     * count the bucket join would execute — Σ f·(f−1)/2 over (band,bucket)
     * groups for the un-split part, and for buckets above the cap the
@@ -806,23 +748,18 @@ object ProfileScale100 {
   }
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     val src = "/root/testdata/sf0.1"
     synthesize(spark, src)
     val which = if (args.nonEmpty) args.toSet else Set("census", "simhash", "ann")
 
     if (which("census") || which("simhash")) {
       val docs = spark.read.parquet(s"$Sf10Dir/documents.parquet")
-      val idx = time("shingle index (500k docs)") {
+      val idx = time("scale100", "shingle index (500k docs)") {
         Materialize.viaParquet(Dedup.shingleIndex(docs, "doc_id", "text", 3), "s100_idx")
       }
       if (which("census"))
-        time("simhash occupancy census") {
+        time("scale100", "simhash occupancy census") {
           simhashCensus(spark, idx, Seq(20000, 10000, 5000, 2500, 1000))
         }
       if (which("simhash")) {
@@ -832,7 +769,7 @@ object ProfileScale100 {
         // every cap below ~16k splits everything and predicts the same
         // 43.2e9 popcounts.
         Seq(Int.MaxValue, 20000, 10000).foreach { cap =>
-          val n = time(s"simhash candidates cap=$cap") {
+          val n = time("scale100", s"simhash candidates cap=$cap") {
             Dedup.simHashPairsFromFeats(idx, hotBucketCap = cap)
               .select("id_a", "id_b").count()
           }
@@ -841,7 +778,7 @@ object ProfileScale100 {
         // the registered FLAT-shape alternative at the same scale: minhash
         // banded LSH — the asymptotic escape the docs should point at
         val docs100 = spark.read.parquet(s"$Sf10Dir/documents.parquet")
-        val nMin = time("minhash candidates (same corpus)") {
+        val nMin = time("scale100", "minhash candidates (same corpus)") {
           Dedup.minHashPairs(docs100, "doc_id", "text").count()
         }
         println(s"[scale100] minhash candidate_pairs=$nMin")
@@ -856,9 +793,7 @@ object ProfileScale100 {
       // already carries — this extends the series a decade.
       Seq("q_dedup_semantic", "q_dedup_hybrid", "q_knn_classify_ann",
           "q_ann_incremental", "q_dedup_semantic_incremental").foreach { name =>
-        val fn = SparkEntry.queries(name)
-        time(s"$name @sf10")(
-          fn(spark, Sf10Dir).write.format("noop").mode("overwrite").save())
+        Harness.runQuery(spark, "scale100", name, Sf10Dir, "sf10")
       }
     }
 
@@ -869,13 +804,13 @@ object ProfileScale100 {
       // Lemma 1) and the Δ×corpus incremental flags (5 k new docs vs
       // the 495 k standing corpus — the nightly ingest shape).
       val docs = spark.read.parquet(s"$Sf10Dir/documents.parquet")
-      val nPrefix = time("jaccardPairsThresholded t=0.8 (500k docs)") {
+      val nPrefix = time("scale100", "jaccardPairsThresholded t=0.8 (500k docs)") {
         Dedup.jaccardPairsThresholded(docs, "doc_id", "text", minJaccard = 0.8).count()
       }
       println(s"[scale100] ppjoin pairs(>=0.8)=$nPrefix")
       val newDocs = docs.filter(col("doc_id") < 10000000L)   // replica 0: 5k docs
       val corpus = docs.filter(col("doc_id") >= 10000000L)   // replicas 1..99
-      val nInc = time("incrementalDedupFlags 5k vs 495k") {
+      val nInc = time("scale100", "incrementalDedupFlags 5k vs 495k") {
         Dedup.incrementalDedupFlags(newDocs, corpus, "doc_id", "text").count()
       }
       println(s"[scale100] incremental flags rows=$nInc")
@@ -889,10 +824,10 @@ object ProfileScale100 {
       import graft.operators.Multimodal
       val docs = spark.read.parquet(s"$Sf10Dir/documents.parquet").select("doc_id")
       val corpus = Multimodal.attachPngCorpus(docs)
-      val hashes = time("imageAHash (571k PNGs encode+decode+hash)") {
+      val hashes = time("scale100", "imageAHash (571k PNGs encode+decode+hash)") {
         Materialize.viaParquet(Multimodal.imageAHash(corpus), "s100_ahash")
       }
-      val n = time("imageNearDupPairs hamming<=6") {
+      val n = time("scale100", "imageNearDupPairs hamming<=6") {
         Multimodal.imageNearDupPairs(hashes, maxHamming = 6).count()
       }
       println(s"[scale100] image near-dup pairs=$n")
@@ -905,11 +840,8 @@ object ProfileScale100 {
       // Σf² join), bpe_apply is one codegen'd expression pass + a hash
       // aggregate — ~linear expected
       Seq("q_audio_dedup", "q_bpe_apply").foreach { name =>
-        val fn = SparkEntry.queries(name)
-        time(s"$name @sf0.1")(
-          fn(spark, src).write.format("noop").mode("overwrite").save())
-        time(s"$name @sf10 (100x)")(
-          fn(spark, Sf10Dir).write.format("noop").mode("overwrite").save())
+        Harness.runQuery(spark, "scale100", name, src, "sf0.1")
+        Harness.runQuery(spark, "scale100", name, Sf10Dir, "sf10 (100x)")
       }
     }
 
@@ -928,7 +860,7 @@ object ProfileScale100 {
       val mod = 1009
       val probes = corpus.filter(col("vec_id") % mod === 0)
         .select(col("vec_id").as("pid"), col("embedding").as("pvec"))
-      val exactSlice = time("exact sliced cos>=0.9 reference") {
+      val exactSlice = time("scale100", "exact sliced cos>=0.9 reference") {
         val scored = corpus.join(broadcast(probes), col("vec_id") =!= col("pid"))
           .select(least(col("pid"), col("vec_id")).as("id_a"),
             greatest(col("pid"), col("vec_id")).as("id_b"),
@@ -969,7 +901,7 @@ object ProfileScale100 {
       val tTier = Dedup.chooseNearDupTier(nDocs, 0.9)
       println(s"[scale100] text facade: n=$nDocs tier=$tTier")
       require(tTier == Dedup.NearDupTier.MinHashBanding, s"expected banding, got $tTier")
-      time("text facade (nearDupPairs 0.9, 500k docs)") {
+      time("scale100", "text facade (nearDupPairs 0.9, 500k docs)") {
         println(s"[scale100]   pairs=" +
           Dedup.nearDupPairs(docs, "doc_id", "text", minJaccard = 0.9,
             nDocsHint = Some(nDocs)).count())
@@ -986,12 +918,12 @@ object ProfileScale100 {
       println(s"[scale100] vector facade: n=$nVecs tier=$vTier nAssign=$na")
       require(vTier == graft.operators.Similarity.CosineTier.Imi, s"expected Imi, got $vTier")
       require(na == 3, s"default floor must escalate to nAssign=3 at 100x, got $na")
-      time("vector facade (cosinePairsAuto 0.9, 200k vecs, floor 0.99 -> nAssign 3)") {
+      time("scale100", "vector facade (cosinePairsAuto 0.9, 200k vecs, floor 0.99 -> nAssign 3)") {
         println(s"[scale100]   pairs=" +
           graft.operators.Similarity.cosinePairsAuto(corpus, "vec_id",
             "embedding", minCos = 0.9, nDocsHint = Some(nVecs)).count())
       }
-      time("vector facade (floor 0.98 -> nAssign 2, the r14 operating point)") {
+      time("scale100", "vector facade (floor 0.98 -> nAssign 2, the r14 operating point)") {
         println(s"[scale100]   pairs=" +
           graft.operators.Similarity.cosinePairsAuto(corpus, "vec_id",
             "embedding", minCos = 0.9, nDocsHint = Some(nVecs),
@@ -1011,7 +943,7 @@ object ProfileScale100 {
       val (corpusRaw, _) = PipelineQueries.clusteredEmbeddings(emb)
       val corpus = Materialize.viaParquet(corpusRaw, "s100_imicorpus_d")
       val out = s"/tmp/graft_sf10_imi$na"
-      time(s"imi nAssign=$na sliced pair dump") {
+      time("scale100", s"imi nAssign=$na sliced pair dump") {
         Similarity.imiPairs(corpus, "vec_id", "embedding",
             nAssign = na, minCos = 0.9)
           .filter(col("id_a") % 1009 === 0)
@@ -1024,7 +956,7 @@ object ProfileScale100 {
     if (which("ann")) {
       val emb = spark.read.parquet(s"$Sf10Dir/embeddings.parquet")
       // ONE quadratic pass, every cut's candidate count at once
-      val hist = time("ann est-cos histogram (200k vecs)") {
+      val hist = time("scale100", "ann est-cos histogram (200k vecs)") {
         Similarity.sketchEstHistogram(emb, "vec_id", "embedding", binWidth = 0.05)
           .filter(col("bin") >= 0.0).orderBy(col("bin").desc).collect()
       }
@@ -1035,7 +967,7 @@ object ProfileScale100 {
       }
       // the registered query at raised cuts: top-100 must be identical
       val tops = Seq(0.55, 0.45).map { cut =>
-        val rows = time(f"q_embed_ann top-100 minEstCos=$cut%.2f") {
+        val rows = time("scale100", f"q_embed_ann top-100 minEstCos=$cut%.2f") {
           Similarity.annPairs(emb, "vec_id", "embedding",
               minEstCos = cut, minCos = 0.45)
             .orderBy(col("cos_sim").desc, col("id_a"), col("id_b"))
@@ -1059,11 +991,8 @@ object ProfileScale100 {
           // cursor-driven standing state
           "q_incr_agg_cdc", "q_tx_partition_prune", "q_ann_state_sync")
         .foreach { name =>
-        val fn = SparkEntry.queries(name)
-        time(s"$name @sf0.1")(
-          fn(spark, src).write.format("noop").mode("overwrite").save())
-        time(s"$name @sf10 (100x)")(
-          fn(spark, Sf10Dir).write.format("noop").mode("overwrite").save())
+        Harness.runQuery(spark, "scale100", name, src, "sf0.1")
+        Harness.runQuery(spark, "scale100", name, Sf10Dir, "sf10 (100x)")
       }
     }
     spark.stop()
@@ -1071,14 +1000,9 @@ object ProfileScale100 {
 }
 
 object ProfileSimhashCap {
-  import org.apache.spark.sql.SparkSession
   import graft.operators.Dedup
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 32, "ERROR")
     val sf1 = spark.read.parquet("/tmp/graft_sf1/documents.parquet")
     for (cap <- Seq(500, 1000, 2000, Int.MaxValue)) {
       val t0 = System.nanoTime()
@@ -1118,6 +1042,7 @@ object ProfileSimhashCap {
  */
 object ProfileStatsManifest {
 
+  import Harness.{scanSum, time}
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, ParquetIO, StatsManifest, Tools}
@@ -1126,12 +1051,6 @@ object ProfileStatsManifest {
   private val BloomTable = s"$Root/bloom256"
   private val Replicas = 100
 
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[manifest] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
 
   /** ×100 replica corpus. `shiftCust` decides the bloom story: the range
     * corpus keeps the 15 k-key domain (skipping there is the SORT key's
@@ -1159,7 +1078,7 @@ object ProfileStatsManifest {
     if (Fs.isDirectory(RangeTable) && Tools.dataFiles(RangeTable).size != 2048)
       Fs.deleteRecursive(new org.apache.hadoop.fs.Path(RangeTable))
     if (!Fs.isDirectory(RangeTable)) {
-      time("synthesize range2048 (15 M rows, 2 048 sorted files)") {
+      time("manifest", "synthesize range2048 (15 M rows, 2 048 sorted files)") {
         orders100x(spark, shiftCust = false)
           .repartitionByRange(2048, col("o_orderkey"))
           .sortWithinPartitions("o_orderkey")
@@ -1167,7 +1086,7 @@ object ProfileStatsManifest {
       }
     }
     if (!Fs.isDirectory(BloomTable)) {
-      time("synthesize bloom256 (15 M rows 1.5 M custkeys, 256 scattered files, blooms)") {
+      time("manifest", "synthesize bloom256 (15 M rows 1.5 M custkeys, 256 scattered files, blooms)") {
         ParquetIO.writeWithBloomFilters(
           orders100x(spark, shiftCust = true).repartition(256), BloomTable,
           Seq("o_custkey"), expectedNdv = 60000L)
@@ -1175,46 +1094,36 @@ object ProfileStatsManifest {
     }
   }
 
-  private def agg(df: DataFrame, label: String): Unit = {
-    val r = df.agg(count(lit(1)), sum("o_totalprice")).head()
-    println(s"[manifest]   -> $label: n=${r.get(0)} sum=${r.get(1)}")
-  }
-
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     synthesize(spark)
 
     // ---- range corpus: 2 048 sorted files --------------------------------
     val nFiles = Tools.dataFiles(RangeTable).size
     println(s"[manifest] range table: $nFiles data files")
 
-    time(s"build (distributed footer pass, $nFiles files)") {
+    time("manifest", s"build (distributed footer pass, $nFiles files)") {
       StatsManifest.build(spark, RangeTable, Seq("o_orderkey"))
     }
 
     // a ~0.5% key range (replica 3's orders 1000..75000)
     val (lo, hi) = (30001000L, 30075000L)
-    val survivors = time("prune planning wall (one manifest query)") {
+    val survivors = time("manifest", "prune planning wall (one manifest query)") {
       StatsManifest.prune(spark, RangeTable, "o_orderkey", lo, hi)
     }
     println(s"[manifest]   -> ${survivors.size} of $nFiles files survive")
 
-    time("skipped range scan-aggregate") {
-      agg(StatsManifest.readSkipping(spark, RangeTable, "o_orderkey", lo, hi),
+    time("manifest", "skipped range scan-aggregate") {
+      scanSum("manifest", StatsManifest.readSkipping(spark, RangeTable, "o_orderkey", lo, hi),
         "skipped")
     }
-    time("UNPRUNED range scan-aggregate (opens every footer)") {
-      agg(spark.read.parquet(RangeTable)
+    time("manifest", "UNPRUNED range scan-aggregate (opens every footer)") {
+      scanSum("manifest", spark.read.parquet(RangeTable)
         .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi), "full")
     }
 
     // refresh ∝ files ADDED: an 8-file ingest against the 2 048-file base
-    time("append 8 files + refresh (must be ingest-sized, not table-sized)") {
+    time("manifest", "append 8 files + refresh (must be ingest-sized, not table-sized)") {
       spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .withColumn("o_orderkey", col("o_orderkey") + lit(2000000000L))
@@ -1228,24 +1137,24 @@ object ProfileStatsManifest {
 
     // ---- bloom corpus: 256 scattered files, point lookup -----------------
     println(s"[manifest] bloom table: 256 scattered files")
-    time("build on bloom256") {
+    time("manifest", "build on bloom256") {
       StatsManifest.build(spark, BloomTable, Seq("o_custkey"))
     }
     val key = 3000071L // replica 3's customer 71: ~10 rows in 15 M
-    val rangeStage = time("range stage alone (expected: keeps ~everything)") {
+    val rangeStage = time("manifest", "range stage alone (expected: keeps ~everything)") {
       StatsManifest.prune(spark, BloomTable, "o_custkey", key, key)
     }
     println(s"[manifest]   -> range stage keeps ${rangeStage.size} of 256")
-    val bloomStage = time("pruneEquality (distributed bloom probe)") {
+    val bloomStage = time("manifest", "pruneEquality (distributed bloom probe)") {
       StatsManifest.pruneEquality(spark, BloomTable, "o_custkey", key)
     }
     println(s"[manifest]   -> blooms keep ${bloomStage.size} of ${rangeStage.size}")
-    time("point-lookup scan, bloom-pruned files only") {
-      agg(StatsManifest.readSkippingEquality(spark, BloomTable, "o_custkey", key),
+    time("manifest", "point-lookup scan, bloom-pruned files only") {
+      scanSum("manifest", StatsManifest.readSkippingEquality(spark, BloomTable, "o_custkey", key),
         "pruned")
     }
-    time("point-lookup scan, UNPRUNED") {
-      agg(spark.read.parquet(BloomTable).filter(col("o_custkey") === key),
+    time("manifest", "point-lookup scan, UNPRUNED") {
+      scanSum("manifest", spark.read.parquet(BloomTable).filter(col("o_custkey") === key),
         "full")
     }
     spark.stop()
@@ -1271,6 +1180,7 @@ object ProfileStatsManifest {
  */
 object ProfileTxTable {
 
+  import Harness.{dirBytes, scanSum, time}
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, ParquetIO, TxTable}
@@ -1294,33 +1204,14 @@ object ProfileTxTable {
     spark.read.parquet(Source)
   }
 
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[txtable] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
 
-  private def dirBytes(path: String): Long =
-    if (!Fs.isDirectory(path)) 0L
-    else Fs.listFiles(path).map(_.getLen).sum
-
-  private def agg(df: DataFrame): Unit = {
-    val r = df.agg(count(lit(1)), sum("o_totalprice")).head()
-    println(s"[txtable]   -> n=${r.get(0)} sum=${r.get(1)}")
-  }
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path("/tmp/graft_txtable"))
 
     val src = ProfileTxTable.source(spark)
-    time("create (15 M rows -> c0)") {
+    time("txtable", "create (15 M rows -> c0)") {
       TxTable.create(spark, Root, src.withColumn("version", lit(0L)))
     }
 
@@ -1331,16 +1222,16 @@ object ProfileTxTable {
     val b = spark.read.parquet("/tmp/graft_txtable/batch")
     println(s"[txtable] batch: ${b.count()} rows (0.1%)")
 
-    val k = time("MOR upsert (mark + append, one snapshot scan)") {
+    val k = time("txtable", "MOR upsert (mark + append, one snapshot scan)") {
       TxTable.upsert(spark, Root, b, Seq("o_orderkey"), "version")
     }
     println(f"[txtable]   -> commit $k wrote ${dirBytes(s"$Root/data/c$k") / 1024}%d KB data + ${dirBytes(s"$Root/_txn/dv/$k") / 1024}%d KB vectors")
 
-    time("read scan-aggregate after the MOR commit (standing tax)") {
-      agg(TxTable.read(spark, Root))
+    time("txtable", "read scan-aggregate after the MOR commit (standing tax)") {
+      scanSum("txtable", TxTable.read(spark, Root))
     }
 
-    time("copy-on-write alternative: ParquetIO.upsert (generation rewrite)") {
+    time("txtable", "copy-on-write alternative: ParquetIO.upsert (generation rewrite)") {
       ParquetIO.upsert(spark, Seq(s"$Root/data/c0"),
         Seq("/tmp/graft_txtable/batch"), "/tmp/graft_txtable/cow",
         Seq("o_orderkey"), "version",
@@ -1348,24 +1239,24 @@ object ProfileTxTable {
     }
     println(f"[txtable]   -> CoW wrote ${dirBytes("/tmp/graft_txtable/cow") / 1024}%d KB")
 
-    val cp = time("checkpoint (the fold, paid once by choice)") {
+    val cp = time("txtable", "checkpoint (the fold, paid once by choice)") {
       TxTable.checkpoint(spark, Root, targetFileBytes = 64L * 1024 * 1024)
     }
-    time("expire (history below the checkpoint)") {
+    time("txtable", "expire (history below the checkpoint)") {
       println(s"[txtable]   -> expired ${TxTable.expire(spark, Root)}")
     }
-    time("read scan-aggregate after checkpoint+expire") {
-      agg(TxTable.read(spark, Root))
+    time("txtable", "read scan-aggregate after checkpoint+expire") {
+      scanSum("txtable", TxTable.read(spark, Root))
     }
 
-    time("post-checkpoint upsert (the tail composes)") {
+    time("txtable", "post-checkpoint upsert (the tail composes)") {
       TxTable.upsert(spark, Root,
         b.withColumn("version", lit(2L))
           .withColumn("o_totalprice", col("o_totalprice") + 1.0),
         Seq("o_orderkey"), "version")
     }
-    time("final read scan-aggregate (checkpoint + 1 tail commit)") {
-      agg(TxTable.read(spark, Root))
+    time("txtable", "final read scan-aggregate (checkpoint + 1 tail commit)") {
+      scanSum("txtable", TxTable.read(spark, Root))
     }
     println(s"[txtable] committed=${TxTable.committedIds(Root)} checkpoint=$cp")
     spark.stop()
@@ -1391,39 +1282,21 @@ object ProfileTxTable {
  */
 object ProfileTxTable17 {
 
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import Harness.{dirBytes, scanSum, time}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, TxTable}
   private val Base = "/tmp/graft_txtable17"
   private val Root = s"$Base/t"
 
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[txtable17] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
 
-  private def dirBytes(path: String): Long =
-    if (!Fs.isDirectory(path)) 0L
-    else Fs.listFiles(path).map(_.getLen).sum
-
-  private def agg(df: DataFrame): Unit = {
-    val r = df.agg(count(lit(1)), sum("o_totalprice")).head()
-    println(s"[txtable17]   -> n=${r.get(0)} sum=${r.get(1)}")
-  }
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
 
     val src = ProfileTxTable.source(spark)
-    time("create (15 M rows, RANGE layout on o_orderkey -> 32 files)") {
+    time("txtable17", "create (15 M rows, RANGE layout on o_orderkey -> 32 files)") {
       TxTable.create(spark, Root, src.withColumn("version", lit(0L))
         .repartitionByRange(32, col("o_orderkey")))
     }
@@ -1439,23 +1312,23 @@ object ProfileTxTable17 {
 
     val cdc1 = reprice(col("o_orderkey") % 1000 === 0, 1L, s"$Base/cdc1")
     println(s"[txtable17] CDC batch: ${cdc1.count()} rows (0.1%)")
-    time("upsert 0.1% CDC — broadcast regime (default gate)") {
+    time("txtable17", "upsert 0.1% CDC — broadcast regime (default gate)") {
       TxTable.upsert(spark, Root, cdc1, Seq("o_orderkey"), "version")
     }
     val cdc2 = reprice(col("o_orderkey") % 1000 === 0, 2L, s"$Base/cdc2")
-    time("upsert 0.1% CDC — FORCED shuffled fallback (limit=0)") {
+    time("txtable17", "upsert 0.1% CDC — FORCED shuffled fallback (limit=0)") {
       TxTable.upsert(spark, Root, cdc2, Seq("o_orderkey"), "version",
         broadcastKeyLimit = 0L)
     }
 
     val back3 = reprice(col("o_orderkey") % 5 === 0, 3L, s"$Base/back3")
     println(s"[txtable17] backfill batch: ${back3.count()} rows (20%)")
-    time("upsert 20% backfill — FORCED broadcast (limit=MaxValue)") {
+    time("txtable17", "upsert 20% backfill — FORCED broadcast (limit=MaxValue)") {
       TxTable.upsert(spark, Root, back3, Seq("o_orderkey"), "version",
         broadcastKeyLimit = Long.MaxValue)
     }
     val back4 = reprice(col("o_orderkey") % 5 === 0, 4L, s"$Base/back4")
-    time("upsert 20% backfill — shuffled fallback (limit=0)") {
+    time("txtable17", "upsert 20% backfill — shuffled fallback (limit=0)") {
       TxTable.upsert(spark, Root, back4, Seq("o_orderkey"), "version",
         broadcastKeyLimit = 0L)
     }
@@ -1467,33 +1340,35 @@ object ProfileTxTable17 {
     dels.write.mode("overwrite").parquet(s"$Base/dels")
     val d = spark.read.parquet(s"$Base/dels")
     println(s"[txtable17] tombstones: ${d.count()} rows (one replica, ~1 file)")
-    time("tombstone upsert (DV only, no data dir)") {
+    time("txtable17", "tombstone upsert (DV only, no data dir)") {
       TxTable.upsert(spark, Root, d, Seq("o_orderkey"), "version",
         opCol = Some("op"))
     }
 
-    val folded = time("compactFiles (fold ONLY hot files, >=25% dead)") {
+    val folded = time("txtable17", "compactFiles (fold ONLY hot files, >=25% dead)") {
       TxTable.compactFiles(spark, Root, minDeadFraction = 0.25,
         targetFileBytes = 64L * 1024 * 1024)
     }
     folded.foreach { k =>
       println(f"[txtable17]   -> commit $k wrote ${dirBytes(s"$Root/data/c$k") / 1024}%d KB data + ${dirBytes(s"$Root/_txn/dv/$k") / 1024}%d KB vectors")
     }
-    time("read scan-aggregate after the fold") { agg(TxTable.read(spark, Root)) }
+    time("txtable17", "read scan-aggregate after the fold") {
+      scanSum("txtable17", TxTable.read(spark, Root))
+    }
 
-    time("changeFeed over the full log (6 mutation commits, 15 M i-rows)") {
+    time("txtable17", "changeFeed over the full log (6 mutation commits, 15 M i-rows)") {
       val f = TxTable.changeFeed(spark, Root, Seq("o_orderkey"))
       val r = f.groupBy("op").count().orderBy("op").collect()
       println(s"[txtable17]   -> ${r.map(x => s"${x.get(0)}=${x.get(1)}").mkString(" ")}")
     }
 
-    val cp = time("checkpoint for comparison (whole-table fold)") {
+    val cp = time("txtable17", "checkpoint for comparison (whole-table fold)") {
       TxTable.checkpoint(spark, Root, targetFileBytes = 64L * 1024 * 1024)
     }
     println(f"[txtable17]   -> checkpoint wrote ${dirBytes(s"$Root/data/c$cp") / 1024}%d KB")
-    time("final read scan-aggregate (checkpoint only)") {
+    time("txtable17", "final read scan-aggregate (checkpoint only)") {
       TxTable.expire(spark, Root)
-      agg(TxTable.read(spark, Root))
+      scanSum("txtable17", TxTable.read(spark, Root))
     }
     println(s"[txtable17] committed=${TxTable.committedIds(Root)}")
     spark.stop()
@@ -1513,26 +1388,16 @@ object ProfileTxTable17 {
  */
 object ProfileTxTable18 {
 
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import Harness.{scanSum, time}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
   import graft.sources.{Fs, TxTable}
   import graft.streaming.Streams
   private val Base = "/tmp/graft_txtable18"
 
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[txtable18] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
     val src = ProfileTxTable.source(spark)
 
@@ -1549,17 +1414,17 @@ object ProfileTxTable18 {
     }
     val b1 = batch(1L); val b2 = batch(2L)
     println(s"[txtable18] CDC batch: ${b1.count()} rows (0.1%)")
-    time("upsert 0.1% CDC, default (no conflict detection)") {
+    time("txtable18", "upsert 0.1% CDC, default (no conflict detection)") {
       TxTable.upsert(spark, t1, b1, Seq("o_orderkey"), "version")
     }
-    time("upsert 0.1% CDC, conflictDetect = true (sidecar + validation)") {
+    time("txtable18", "upsert 0.1% CDC, conflictDetect = true (sidecar + validation)") {
       TxTable.upsert(spark, t1, b2, Seq("o_orderkey"), "version",
         conflictDetect = true)
     }
 
     // ---- leg 2: partitioned commits, pruned vs full read --------------
     val t2 = s"$Base/parted"
-    time("create 15 M rows partitioned (25 dirs, pcol = o_custkey % 25)") {
+    time("txtable18", "create 15 M rows partitioned (25 dirs, pcol = o_custkey % 25)") {
       TxTable.create(spark, t2,
         src.withColumn("version", lit(0L))
           .withColumn("p", pmod(col("o_custkey"), lit(25L)))
@@ -1572,17 +1437,12 @@ object ProfileTxTable18 {
         .withColumn("version", lit(1L))
         .withColumn("p", pmod(col("o_custkey"), lit(25L))),
       Seq("o_orderkey"), "version", partitionCols = Seq("p"))
-    def aggCount(df: DataFrame, label: String): Unit = {
-      val q = df.agg(count(lit(1)), sum("o_totalprice"))
-      val r = q.head()
-      println(s"[txtable18]   -> $label n=${r.get(0)} sum=${r.get(1)}")
-    }
-    time("full read scan-aggregate (all 25 partitions)") {
-      aggCount(TxTable.read(spark, t2), "full")
+    time("txtable18", "full read scan-aggregate (all 25 partitions)") {
+      scanSum("txtable18", TxTable.read(spark, t2), "full")
     }
     val pruned = TxTable.read(spark, t2).filter(col("p") === 7L)
-    time("partition-pruned scan-aggregate (p = 7, 1/25 of the dirs)") {
-      aggCount(pruned, "pruned")
+    time("txtable18", "partition-pruned scan-aggregate (p = 7, 1/25 of the dirs)") {
+      scanSum("txtable18", pruned, "pruned")
     }
     println(s"[txtable18]   -> pruned data files: ${
       pruned.inputFiles.count(_.contains("/data/"))} of ${
@@ -1596,7 +1456,7 @@ object ProfileTxTable18 {
       array((0 until dim).map(j =>
         (pmod(col("id") * (j + 3), lit(97L)).cast("float") / 97f)): _*).as("vec"))
     TxTable.create(spark, srcT, vecs.withColumn("version", lit(0L)))
-    var cursor = time("initial state sync (full 200k-vector chunk)") {
+    var cursor = time("txtable18", "initial state sync (full 200k-vector chunk)") {
       Streams.txVectorStateSync(spark, srcT, st, "id", "vec", -1L)
     }
     TxTable.upsert(spark, srcT,
@@ -1608,7 +1468,7 @@ object ProfileTxTable18 {
           allowMissingColumns = true)
         .withColumn("op", coalesce(col("op"), lit("u"))),
       Seq("id"), "version", opCol = Some("op"))
-    cursor = time("delta state sync (0.6% chunk: 1k re-embeds + 200 tombstones)") {
+    cursor = time("txtable18", "delta state sync (0.6% chunk: 1k re-embeds + 200 tombstones)") {
       Streams.txVectorStateSync(spark, srcT, st, "id", "vec", cursor)
     }
     val n = TxTable.read(spark, st).count()
@@ -1628,27 +1488,16 @@ object ProfileTxTable18 {
  */
 object ProfileStreamRep {
 
-  import org.apache.spark.sql.SparkSession
+  import Harness.time
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.streaming.Trigger
   import graft.sources.{Fs, TxTable}
 
   private val Base = "/tmp/graft_streamrep"
 
-  private def time[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[streamrep] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    r
-  }
 
   private[graft] def run(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.session("local[32]", 64, "ERROR")
     Fs.deleteRecursive(new org.apache.hadoop.fs.Path(Base))
     val src = ProfileTxTable.source(spark)
     val t = s"$Base/src"
@@ -1658,7 +1507,7 @@ object ProfileStreamRep {
       .repartitionByRange(32, col("o_orderkey")))
     println(s"[streamrep] source rows: ${src.count()}")
 
-    def drain(label: String): Unit = time(label) {
+    def drain(label: String): Unit = time("streamrep", label) {
       val q = spark.readStream.format("txtable")
         .option("keys", "o_orderkey")
         .option("consumerName", "streamrep")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Engine-recommended session configuration (round 22, hoisted from the
- * Bench/Verify/JobProfile session builders per the r21 verdict: a real
+ * Bench and Verify session builders per the r21 verdict: a real
  * optimization must be an ENGINE property an embedding application
  * inherits, not a harness-resident conf). Every value here is
  * independent of core count and data scale — nothing in this map tunes
@@ -31,6 +31,10 @@ import org.apache.spark.sql.SparkSession
  * these defaults are folded in AFTER them and win for any key both
  * set. To override one of these keys, call `config` for it on the
  * builder `SessionDefaults` returns, not on the one it wraps.
+ *
+ * Every graft main and profiling harness builds its session through
+ * [[session]], the one recipe that adds these confs to the rest of a
+ * graft session.
  */
 object SessionDefaults {
 
@@ -41,4 +45,18 @@ object SessionDefaults {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The session of every graft main and harness: `master`, its shuffle
+    * partitions, the graft extensions, no UI, UTC, the [[confs]] above,
+    * and the driver's log level. */
+  private[graft] def session(master: String, shufflePartitions: Int,
+      logLevel: String = "WARN"): SparkSession = {
+    val spark = apply(SparkSession.builder().master(master)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

@@ -1,14 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** t1-style smoke: run SparkEntry.entry and print its row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session("local[4]", 4)
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(5)

@@ -29,6 +29,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ PipelineQueries.queries
 
+  /** The query names a comma-separated `filter` selects, or `None` when
+    * it is unset (every query). An empty filter or an unknown name
+    * fails: a typo must not select nothing and pass as a clean run.
+    * `knob` names the setting the filter came from in the message. */
+  private[graft] def selected(knob: String, filter: Option[String]): Option[Set[String]] =
+    filter.map { f =>
+      val names = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      if (names.isEmpty) throw new IllegalArgumentException(
+        s"$knob is set but empty — unset it to run every query")
+      val unknown = names.diff(queries.keySet)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query names in $knob: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

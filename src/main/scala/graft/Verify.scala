@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,28 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared engine confs via SessionDefaults (round 22) — see Bench
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for local rehearsal of a query
     // subset (same contract as Bench: unknown names fail fast); the
     // driver sets no filter and dumps everything
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      require(names.nonEmpty,
-        "SPARK_GRAFT_VERIFY_QUERIES is set but empty — unset it to dump the full battery")
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query names in SPARK_GRAFT_VERIFY_QUERIES: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val only = SparkEntry.selected("SPARK_GRAFT_VERIFY_QUERIES",
+      sys.env.get("SPARK_GRAFT_VERIFY_QUERIES"))
     // SPARK_GRAFT_SAMPLED=1 (round 13): the large-SF scale-parity mode —
     // the seven vector-quadratic queries swap to their deterministic
     // id-slice gate (SampledQueries), whose DuckDB side is (n/101)·n

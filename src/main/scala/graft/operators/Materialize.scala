@@ -80,11 +80,8 @@ object Materialize {
     * couple of rounds, so this is per-round driver latency). */
   private def spill(df: DataFrame, tag: String): (DataFrame, String) = {
     val dir = s"${root(df.sparkSession)}/${tag}_${counter.incrementAndGet()}"
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.spill $tag")
-    try df.write.mode("overwrite").parquet(dir)
-    finally sc.setJobDescription(prev)
+    Tools.withJobDescription(df.sparkSession, s"graft.spill $tag")(
+      df.write.mode("overwrite").parquet(dir))
     val nullable = org.apache.spark.sql.types.StructType(
       df.schema.fields.map(_.copy(nullable = true)))
     (df.sparkSession.read.schema(nullable).parquet(dir), dir)

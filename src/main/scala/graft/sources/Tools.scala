@@ -190,6 +190,16 @@ object Tools {
     pool
   }
 
+  /** Runs `f` with the Spark job description `desc`, then restores the
+    * caller's: every job `f` starts is named by the graft site that ran
+    * it (a spill, a commit leg), not by Spark's internal call site. */
+  private[graft] def withJobDescription[A](spark: SparkSession, desc: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(prev)
+  }
+
   /** `f` over `xs` on [[driverPool]]: overlapped driver-side reads, still
     * no Spark job — serially at object-store latency each is a
     * round-trip. Two or fewer run inline. */

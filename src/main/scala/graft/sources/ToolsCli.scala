@@ -43,16 +43,11 @@ object ToolsCli {
       case f if f.startsWith("--columns=") => f.stripPrefix("--columns=").split(",").toSeq
     }.getOrElse(Nil)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // tolerate TIMESTAMP(NANOS) files (e.g. the events table) — Spark 4
-      // rejects them outright without the legacy conf
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the shared recipe's confs include the legacy nanos conf, which
+    // keeps TIMESTAMP(NANOS) files (e.g. the events table) readable —
+    // Spark 4 rejects them outright without it
+    val spark = graft.SessionDefaults.session(
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"), 4, "ERROR")
     try run(spark, cmd, path, flags, columns)
     finally spark.stop()
   }

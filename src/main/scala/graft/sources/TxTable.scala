@@ -196,19 +196,21 @@ object TxTable {
             .getOrElse("?")}) — earlier history was expired"))
   }
 
-  /** The newest batch stream `tag` committed to `root` — the replay
-    * check behind [[graft.streaming.Streams]]' stream commits — and
-    * whether the newest checkpoint carries it (the batch's fold ran).
-    * Markers are opened from the tip down, stopping at the first that
-    * records `tag` or at the newest checkpoint, whose marker carries the
-    * newest record per tag of every marker it folds ([[checkpoint]]), so
-    * [[expire]] never erases a stream's record. */
-  private[graft] def streamBatch(root: String, tag: String): Option[(Long, Boolean)] = {
+  /** Whether `root` has a commit, and the newest batch stream `tag`
+    * committed to it — the replay check behind
+    * [[graft.streaming.Streams]]' stream commits — with whether the
+    * newest checkpoint carries it (the batch's fold ran); both from one
+    * listing of the log. Markers are opened from the tip down, stopping
+    * at the first that records `tag` or at the newest checkpoint, whose
+    * marker carries the newest record per tag of every marker it folds
+    * ([[checkpoint]]), so [[expire]] never erases a stream's record. */
+  private[graft] def streamBatch(root: String,
+      tag: String): (Boolean, Option[(Long, Boolean)]) = {
     val s = new Snapshot(root)
     val cp = s.checkpoints.lastOption
-    s.ids.reverseIterator.takeWhile(k => cp.forall(_ <= k))
+    (s.ids.nonEmpty, s.ids.reverseIterator.takeWhile(k => cp.forall(_ <= k))
       .flatMap(k => s.txns(k).find(_._1 == tag).map(t => (t._2, cp.contains(k))))
-      .nextOption()
+      .nextOption())
   }
 
   /** The sidecar rows of commits `ks` with their commit ids, read on the
@@ -604,10 +606,14 @@ object TxTable {
     * share are safe under concurrent first materialization: the block
     * manager serializes per-partition cache writes. Each leg runs with
     * the caller's Spark thread-locals (job group, description, active
-    * session), on [[Tools.driverPool]]. EVERY leg completes before the
-    * first failure propagates — the abandon path must never race a leg
-    * still writing. */
-  private def runLegs(spark: SparkSession, legs: Seq[() => Unit]): Unit =
+    * session), on [[Tools.driverPool]], under the job description
+    * `txtable c<k> <leg>`, inline when it is the only one. EVERY leg
+    * completes before the first failure propagates — the abandon path
+    * must never race a leg still writing. */
+  private def runLegs(spark: SparkSession, k: Long,
+      named: Seq[(String, () => Unit)]): Unit = {
+    val legs = named.map { case (name, leg) =>
+      () => Tools.withJobDescription(spark, s"txtable c$k $name")(leg()) }
     if (legs.size <= 1) legs.foreach(_())
     else {
       val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -622,6 +628,7 @@ object TxTable {
       }
       errs.headOption.foreach(e => throw e)
     }
+  }
 
   /**
    * The ONE commit sequence every writer runs — data first, marker last,
@@ -668,15 +675,15 @@ object TxTable {
         val k = claimed.getOrElse(claimId(root))
         claimed = Some(k)
         val legs = legsFor(k)
-        runLegs(spark, Seq(
-          legs.kills.map(kdf => () => DeleteVectors.buildVectors(
+        runLegs(spark, k, Seq(
+          legs.kills.map(kdf => "kills" -> (() => DeleteVectors.buildVectors(
               kdf.select(col("__dv_file").as("file_path"), col("__dv_row").as("ri")))
-            .write.mode("overwrite").parquet(dvDir(root, k))),
-          legs.adds.map(adf => () => writeData(adf, dataDir(root, k),
-            legs.bloomCols, legs.partitionCols, legs.precluster)),
-          legs.check,
-          legs.keys.map(kdf => () =>
-            kdf.write.mode("overwrite").parquet(keysDir(root, k)))).flatten)
+            .write.mode("overwrite").parquet(dvDir(root, k)))),
+          legs.adds.map(adf => "adds" -> (() => writeData(adf, dataDir(root, k),
+            legs.bloomCols, legs.partitionCols, legs.precluster))),
+          legs.check.map("check" -> _),
+          legs.keys.map(kdf => "keys" -> (() =>
+            kdf.write.mode("overwrite").parquet(keysDir(root, k))))).flatten)
         if (legs.prune) {
           if (legs.kills.nonEmpty) pruneIfEmpty(dvDir(root, k))
           if (legs.adds.nonEmpty) pruneIfEmpty(dataDir(root, k))

@@ -180,17 +180,19 @@ object Streams {
    * record `(tag, batchId)` in its commit marker (Delta's `txn` action),
    * so a replay check is a snapshot read
    * ([[graft.sources.TxTable.streamBatch]]): a batch whose record the
-   * table holds is skipped. Every `checkpointEvery` batches the log then
-   * folds (checkpoint + expire + vacuum; the sink is the table's one
-   * maintenance writer); a replayed cadence batch whose fold did not
-   * land (no checkpoint carries its record yet) runs the fold.
+   * table holds is skipped. `commit` also learns whether the table has
+   * a commit yet, from that same read. Every `checkpointEvery` batches
+   * the log then folds (checkpoint + expire + vacuum; the sink is the
+   * table's one maintenance writer); a replayed cadence batch whose fold
+   * did not land (no checkpoint carries its record yet) runs the fold.
    */
   private def streamCommit(spark: SparkSession, root: String, batchId: Long,
       tag: String, checkpointEvery: Int, partitionCols: Seq[String])(
-      commit: Seq[(String, Long)] => Unit): Unit = {
+      commit: (Boolean, Seq[(String, Long)]) => Unit): Unit = {
     import graft.sources.TxTable
-    val done = TxTable.streamBatch(root, tag).filter(_._1 >= batchId)
-    if (done.isEmpty) commit(Seq(tag -> batchId))
+    val (created, last) = TxTable.streamBatch(root, tag)
+    val done = last.filter(_._1 >= batchId)
+    if (done.isEmpty) commit(created, Seq(tag -> batchId))
     if (checkpointEvery > 0 && batchId > 0 && batchId % checkpointEvery == 0 &&
         !done.exists(_._2)) {
       // the fold loses its fence to a concurrent writer under
@@ -228,9 +230,9 @@ object Streams {
       bloomCols: Seq[String], partitionCols: Seq[String],
       conflictDetect: Boolean, conflictWaitMs: Long,
       tag: String): Unit =
-    streamCommit(spark, root, batchId, tag, checkpointEvery, partitionCols) { txns =>
+    streamCommit(spark, root, batchId, tag, checkpointEvery, partitionCols) { (created, txns) =>
       import graft.sources.TxTable
-      if (TxTable.committedIds(root).isEmpty) {
+      if (!created) {
         // an empty create in the table's schema (op is transport
         // metadata, never table data), FLAT even when partitionCols is
         // set: a partitioned write of zero rows leaves no schema-bearing
@@ -334,8 +336,8 @@ object Streams {
     * skipped. `checkpointEvery` is the sink's fold cadence. */
   private def commitState(root: String, rows: DataFrame, batchId: Long,
       checkpointEvery: Int, tag: String): Unit =
-    streamCommit(rows.sparkSession, root, batchId, tag, checkpointEvery, Nil)(
-      graft.sources.TxTable.appendAs(rows.sparkSession, root, rows, Nil, Nil, Nil, _))
+    streamCommit(rows.sparkSession, root, batchId, tag, checkpointEvery, Nil)((_, txns) =>
+      graft.sources.TxTable.appendAs(rows.sparkSession, root, rows, Nil, Nil, Nil, txns))
 
   /** Load-or-train a sink's coarse quantizer (round 16 review): the
     * centroid table is persisted under `outDir` at FIRST creation

@@ -104,7 +104,8 @@ class TxMetadataBudgetSpec extends AnyFunSuite {
     "upsert" -> Calls(73, 56, 41),
     "deleteWhere" -> Calls(73, 51, 43),
     "mergeInto" -> Calls(78, 58, 44),
-    "maintain" -> Calls(91, 123, 68))
+    "maintain" -> Calls(91, 123, 68),
+    "txUpsertBatch" -> Calls(18, 20, 5))
 
   /** The session settings that decide how many files a commit writes,
     * pinned to the shared session's defaults for the measurement. */
@@ -162,6 +163,11 @@ class TxMetadataBudgetSpec extends AnyFunSuite {
     got("mergeInto") = counted(TxTable.mergeInto(ss, root,
       rows((20L until 35L) ++ (3000L until 3005L), 21L), Seq("id")))._2
     got("maintain") = counted(TxTable.maintain(ss, root, maxTail = 3))._2
+    // one `format("txtable")` sink batch (no fold cadence): the replay
+    // check, the create check and the MERGE
+    got("txUpsertBatch") = counted(graft.streaming.Streams.txUpsertBatch(ss, root,
+      rows((40L until 55L) ++ (4000L until 4005L), 22L), 0L, Seq("id"), "v", None, 0,
+      Nil, Nil, conflictDetect = false, 60000L, "budget"))._2
 
     // the operations still did their work
     val live = TxTable.read(ss, root)

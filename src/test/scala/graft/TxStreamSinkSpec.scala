@@ -11,8 +11,8 @@ import graft.sources.TxTable
 /**
  * Round-19 streaming WRITE surface + SQL metadata tables:
  *
- *  - `df.writeStream.format("txtable")` is the V1 Sink wrapper over the
- *    same per-batch MERGE body as `Streams.txUpsertSink` — options
+ *  - `df.writeStream.format("txtable")` is the V1 Sink over the
+ *    per-batch MERGE body `Streams.txUpsertBatch` — options
  *    (keys/versionCol/opCol/partitionCols) route through, each batch is
  *    one atomic commit, tombstones kill;
  *  - chained with `readStream.format("txtable")` it replicates a
