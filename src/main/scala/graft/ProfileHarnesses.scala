@@ -127,11 +127,13 @@ object ProfileBpe8k {
 /**
  * changeFeed cost vs commit-log length (round 17, SCALE.md): builds an
  * n-commit log (one tiny upsert per commit — the worst per-commit
- * fixed-cost ratio) and measures feed CONSTRUCTION (planning) separately
- * from execution. A flat per-commit union was superlinear in Catalyst
+ * fixed-cost ratio) twice, flat and hive-partitioned on `part`, and
+ * measures each feed's CONSTRUCTION (planning) separately from its
+ * execution. A flat per-commit union was superlinear in Catalyst
  * (14.9 s planning + 9.2 s execution at just 40 commits); the one-pass
  * feed is one adds scan, one kills scan and one full-outer join however
- * long the log (args: nCommits, default 40).
+ * long the log, and a hive log adds one scan branch per commit
+ * (args: nCommits, default 40).
  */
 object ProfileFeedWidth {
   import org.apache.spark.sql.functions._
@@ -139,24 +141,27 @@ object ProfileFeedWidth {
   private[graft] def run(args: Array[String]): Unit = {
     val spark = SessionDefaults.session("local[32]", 32, "ERROR")
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft-fw").toString + "/t"
-    TxTable.create(spark, t,
-      (0 until 20000).map(i => (i.toLong, 100.0 + i, 0L)).toDF("id", "price", "version"))
     val n = args.headOption.map(_.toInt).getOrElse(40)
-    (1 to n).foreach { v =>
-      TxTable.upsert(spark, t,
-        Seq(((v % 100).toLong, 1000.0 + v, v.toLong)).toDF("id", "price", "version"),
-        Seq("id"), "version")
+    Seq("flat" -> Nil, "hive" -> Seq("part")).foreach { case (layout, parts) =>
+      val t = java.nio.file.Files.createTempDirectory("graft-fw").toString + "/t"
+      TxTable.create(spark, t, (0 until 20000).map(i => (i.toLong, 100.0 + i, 0L, i % 4))
+        .toDF("id", "price", "version", "part"), partitionCols = parts)
+      (1 to n).foreach { v =>
+        TxTable.upsert(spark, t,
+          Seq(((v % 100).toLong, 1000.0 + v, v.toLong, v % 100 % 4))
+            .toDF("id", "price", "version", "part"),
+          Seq("id"), "version", partitionCols = parts)
+      }
+      println(s"[feedwidth] $layout: $n commits done")
+      val t0 = System.nanoTime()
+      val feed = TxTable.changeFeed(spark, t, Seq("id"))
+      feed.queryExecution.executedPlan // force planning
+      println(f"[feedwidth] $layout: feed constructed in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val t1 = System.nanoTime()
+      val counts = feed.groupBy("op").count().orderBy("op").collect()
+      println(f"[feedwidth] $layout: executed in ${(System.nanoTime() - t1) / 1e9}%.1f s: " +
+        counts.map(r => s"${r.get(0)}=${r.get(1)}").mkString(" "))
     }
-    println(s"[feedwidth] $n commits done")
-    val t0 = System.nanoTime()
-    val feed = TxTable.changeFeed(spark, t, Seq("id"))
-    feed.queryExecution.executedPlan // force planning
-    println(f"[feedwidth] feed constructed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    val t1 = System.nanoTime()
-    val counts = feed.groupBy("op").count().orderBy("op").collect()
-    println(f"[feedwidth] executed in ${(System.nanoTime() - t1) / 1e9}%.1f s: " +
-      counts.map(r => s"${r.get(0)}=${r.get(1)}").mkString(" "))
     spark.stop()
   }
 }

@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -47,10 +50,10 @@ object ParquetIO {
     * flags), without the job inference runs. Every level is nullable,
     * as Spark's file scan reads it whatever the footer says, so two
     * files that differ only in `required` vs `optional` compare equal. */
-  private def footerSchema(file: org.apache.hadoop.fs.FileStatus): StructType =
+  private def footerSchema(file: FileStatus): StructType =
     Tools.withFooter(file, Fs.conf()) { r =>
-      nullable(org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-        .readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(file.getPath, r.getFooter),
+      nullable(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(file.getPath, r.getFooter),
           new org.apache.spark.sql.execution.datasources.parquet
             .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
         .asInstanceOf[StructType]
@@ -69,82 +72,91 @@ object ParquetIO {
     }
   }
 
-  /** The first data file of a FLAT parquet input — a file, or a
-    * directory holding its data files directly — by path order, from one
-    * listing (`list`), under [[Tools.isData]]. None for a glob, a
-    * directory with a data subdirectory (hive partitions: their columns
-    * come from Spark's partition inference), a missing path or one with
-    * no data file; Spark's inference decides those. */
-  private def firstDataFile(path: String,
-      list: String => Seq[org.apache.hadoop.fs.FileStatus]): Option[org.apache.hadoop.fs.FileStatus] = {
-    if (path.exists("*?[{".contains(_))) return None
-    val (fs, p) = Fs.fileSystem(path)
-    val children = list(path).filter(Tools.isData)
-    // listing a FILE returns the file itself
-    if (children.size == 1 && children.head.getPath == fs.makeQualified(p))
-      children.headOption
-    else if (children.exists(_.isDirectory)) None
-    else children.sortBy(_.getPath.toString).headOption
-  }
-
-  /** [[footerSchema]] of an input's [[firstDataFile]], cached by that
-    * file's (path, length, modification time): an input overwritten in
-    * place under the same name is a new key. Dumb full-clear cap. */
+  /** [[footerSchema]] of `file`, cached by its (path, length,
+    * modification time): a file overwritten in place under the same name
+    * is a new key. Dumb full-clear cap. */
   private val footerSchemas =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
-  private def schemaOf(root: String,
-      list: String => Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
-    firstDataFile(root, list).map { st =>
-      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
-      Option(footerSchemas.get(key)).getOrElse {
-        val schema = footerSchema(st)
-        if (footerSchemas.size > 4096) footerSchemas.clear()
-        footerSchemas.put(key, schema)
-        schema
-      }
+  private def schemaOf(file: FileStatus): StructType = {
+    val key = (file.getPath.toString, file.getLen, file.getModificationTime)
+    Option(footerSchemas.get(key)).getOrElse {
+      val schema = footerSchema(file)
+      if (footerSchemas.size > 4096) footerSchemas.clear()
+      footerSchemas.put(key, schema)
+      schema
     }
-
-  /** [[readByName]] with each path its own root. */
-  private[sources] def readByName(spark: SparkSession, paths: Seq[String]): DataFrame =
-    readByName(spark, paths.map(p => (p, Seq(p))), identity)
+  }
 
   /**
    * S13's read: N parquet inputs as one dataset, schema drift reconciled
-   * by NAME (missing columns null, int ∪ long widened). `groups` pairs
-   * each input root with the paths to read under it — the root itself,
-   * or a file subset of it.
-   *
-   * A root's schema is its first footer's ([[schemaOf]]), so no scan
-   * runs Spark's inference job, and the roots that share one share ONE
-   * scan over all their paths: one scan per distinct footer schema, in
+   * by NAME (missing columns null, int ∪ long widened). `inputs` pairs
+   * each root with the data files the caller listed under it (all, or a
+   * subset); every scan reads exactly those ([[ListedIndex]]), so Spark
+   * lists nothing and runs no inference job. A root's schema is its
+   * first file's footer. Flat roots that share one share ONE scan, in
    * order of first appearance, so a uniform input set is a single
-   * multi-path scan with pushdown intact. A root with no footer schema
-   * — a hive-partitioned dir, a dir without data files, a glob — scans
-   * alone with its inferred schema, with `basePath` = the root when it
-   * reads a subset (partition columns come back from the directory
-   * names). `perScan` runs on each scan before the union (a `_metadata`
-   * column must be taken per scan). Each group being a distinct schema,
-   * every column first appears in its group's first input, so columns
-   * come in the per-input fold's order, first input's first. A path
-   * listed twice is read twice. `list` lists a root (empty when it is
-   * missing); a caller that already listed its roots passes its
-   * listings, so no root is listed twice.
+   * multi-root scan with pushdown intact. A hive-partitioned root scans
+   * alone (Spark refuses several partitioned roots in one index, and an
+   * index keys its files by path, so a root listed twice would read
+   * once), its partition columns typed as `spark.read` infers them. A
+   * glob goes to `spark.read`: its semantics are Spark's. `perScan` runs
+   * on each scan before the by-name union (a `_metadata` column is taken
+   * per scan); columns come data first, then partition, first input's
+   * first. An input listed twice is read twice; a root with no data
+   * file throws.
    */
   private[sources] def readByName(spark: SparkSession,
-      groups: Seq[(String, Seq[String])], perScan: DataFrame => DataFrame,
-      list: String => Seq[org.apache.hadoop.fs.FileStatus] = Fs.listOrEmpty(_)): DataFrame = {
-    val keyed = groups.toVector.zipWithIndex.map { case ((root, paths), i) =>
-      (schemaOf(root, list).toLeft(i), root, paths)
+      inputs: Seq[(String, Seq[FileStatus])], perScan: DataFrame => DataFrame): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: Path) = p.getFileSystem(conf).makeQualified(p)
+    val keyed = inputs.toVector.zipWithIndex.map { case ((root, files), i) =>
+      if (Tools.isGlob(root)) (Right(i), new Path(root) -> Array.empty[FileStatus]) else {
+        require(files.nonEmpty, s"parquet: no data file under $root")
+        // the index matches leaves to roots by qualified path
+        val leaves = files.map { f =>
+          val q = qualified(f.getPath)
+          if (q == f.getPath) f
+          else new FileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
+            f.getModificationTime, q)
+        }.toArray
+        val (r, first) = (qualified(new Path(root)), leaves.minBy(_.getPath.toString))
+        val hive = first.getPath != r && first.getPath.getParent != r
+        (Left((schemaOf(first), if (hive) i else -1)), r -> leaves)
+      }
     }
     val scans = keyed.map(_._1).distinct.map {
-      case key @ Left(schema) =>
-        spark.read.schema(schema).parquet(keyed.filter(_._1 == key).flatMap(_._3): _*)
-      case Right(i) =>
-        val (_, root, paths) = keyed(i)
-        (if (paths == Seq(root)) spark.read else spark.read.option("basePath", root))
-          .parquet(paths: _*)
+      case Right(i) => spark.read.parquet(inputs(i)._1)
+      case key @ Left((schema, _)) =>
+        val index = new ListedIndex(spark, keyed.filter(_._1 == key).map(_._2))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+          None, new ParquetFileFormat, Map.empty)(spark))
     }
     scans.map(perScan).reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** Spark's file index over the files a caller listed, `(root, leaves)`
+    * each: its leaves come from a private [[FileStatusCache]] that holds
+    * exactly those, so it lists nothing, and it infers partition columns
+    * from the leaf paths below each root as over its own listing. The
+    * cache is private because the session's would serve a dropped and
+    * recreated table's stale `c<k>` files. Equal only to an index over
+    * the same roots and files: two scans of one root that read different
+    * subsets must never share an exchange. */
+  private final class ListedIndex(spark: SparkSession, listed: Seq[(Path, Array[FileStatus])])
+      extends InMemoryFileIndex(spark, listed.map(_._1), Map.empty, None,
+        new FileStatusCache {
+          private val leaves = listed.toMap
+          override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leaves.get(path)
+          override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }) {
+    private lazy val key = (rootPaths,
+      leafFiles.values.map(f => (f.getPath, f.getLen, f.getModificationTime)).toSet)
+    override def equals(o: Any): Boolean = o match {
+      case i: ListedIndex => key == i.key
+      case _ => false
+    }
+    override def hashCode: Int = key.hashCode
   }
 
   /** `w` with `opts` applied and parquet bloom filters on `bloomCols`,
@@ -173,14 +185,14 @@ object ParquetIO {
   /**
    * S13 — the repo's namesake capability: N parquet files → one dataset →
    * rewritten with controlled row groups. Composition of S7 + S4/S12, with
-   * schema drift handled by name ([[readByName]]: one scan per distinct
-   * footer schema, the scans unioned by name), the DataFrame analogue of
-   * footer-schema reconciliation.
-   *
-   * Output file count is derived from total input bytes / `targetFileBytes`
-   * so the plan holds at 100 TB: a fixed small `repartition(k)` would
-   * funnel everything through k tasks; sizing from the input keeps task
-   * and file sizes constant as data grows.
+   * schema drift handled by name ([[readByName]]: the scans built from
+   * each input's footer schema, unioned by name), the DataFrame analogue
+   * of footer-schema reconciliation. Each input is listed once
+   * ([[sizedReads]]): the scans read exactly the listed files, and the
+   * output file count is their total bytes / `targetFileBytes`, so the
+   * plan holds at 100 TB: a fixed small `repartition(k)` would funnel
+   * everything through k tasks; sizing from the input keeps task and
+   * file sizes constant as data grows.
    */
   def merge(
       spark: SparkSession,
@@ -188,9 +200,7 @@ object ParquetIO {
       outPath: String,
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
-    val merged = readByName(spark, inputPaths)
-    val totalBytes = inputBytes(spark, inputPaths)
-    val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
+    val (Seq(merged), totalBytes, parts) = sizedReads(spark, targetFileBytes, inputPaths)
     // coalesce (narrow) when reducing partition count; repartition only to
     // widen. The scan's parallelism is estimated from the same listing
     // bytes (totalBytes / maxPartitionBytes) instead of touching
@@ -491,9 +501,7 @@ object ParquetIO {
       opts: WriteOptions = WriteOptions()): Unit = {
     require(sortCols.nonEmpty, "compactSorted needs at least one cluster column")
     import org.apache.spark.sql.functions.col
-    val merged = readByName(spark, inputPaths)
-    val totalBytes = inputBytes(spark, inputPaths)
-    val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
+    val (Seq(merged), _, parts) = sizedReads(spark, targetFileBytes, inputPaths)
     val cols = sortCols.map(col)
     write(merged.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*),
       outPath, opts)
@@ -525,10 +533,8 @@ object ParquetIO {
     require(basePaths.nonEmpty, "upsert: basePaths is empty — nothing to merge into")
     require(updatePaths.nonEmpty,
       "upsert: updatePaths is empty — for a pure compaction use compactSorted")
-    val base = readByName(spark, basePaths)
-    val upd = readByName(spark, updatePaths)
-    val totalBytes = inputBytes(spark, basePaths ++ updatePaths)
-    val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
+    val (Seq(base, upd), _, parts) =
+      sizedReads(spark, targetFileBytes, basePaths, updatePaths)
     upsertWrite(base, upd, outPath, keyCols, versionCol, parts, opts, opCol)
   }
 
@@ -699,21 +705,28 @@ object ParquetIO {
       targetFileBytes: Long = 512L * 1024 * 1024,
       opts: WriteOptions = WriteOptions()): Unit = {
     import org.apache.spark.sql.functions.col
-    val merged = readByName(spark, inputPaths)
-    val totalBytes = inputBytes(spark, inputPaths)
-    val parts = math.max(1L, totalBytes / math.max(1L, targetFileBytes)).toInt
+    val (Seq(merged), _, parts) = sizedReads(spark, targetFileBytes, inputPaths)
     write(withZValue(merged, zCols)
       .repartitionByRange(parts, col("__z")).sortWithinPartitions(col("__z"))
       .drop("__z"), outPath, opts)
   }
 
-  /** Total on-disk bytes of the given files/directories (driver-side listing only). */
-  def inputBytes(spark: SparkSession, paths: Seq[String]): Long = {
+  /** Total bytes of the data files under the given files, directories
+    * or globs ([[Tools.dataFiles]], driver-side listing only) — the
+    * bytes a scan of them reads. */
+  def inputBytes(spark: SparkSession, paths: Seq[String]): Long =
+    paths.flatMap(Tools.dataFiles(_, spark.sparkContext.hadoopConfiguration)).map(_.getLen).sum
+
+  /** [[readByName]] of each path set, with their data bytes and the
+    * output file count those size at `targetFileBytes` (at least one):
+    * each input is listed once ([[Tools.dataFiles]]), and the scans and
+    * the bytes come from that one listing. */
+  private def sizedReads(spark: SparkSession, targetFileBytes: Long,
+      pathSets: Seq[String]*): (Seq[DataFrame], Long, Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(conf)
-      fs.getContentSummary(hp).getLength
-    }.sum
+    val listed = pathSets.map(_.map(p => p -> Tools.dataFiles(p, conf)))
+    val bytes = listed.flatten.flatMap(_._2).map(_.getLen).sum
+    (listed.map(readByName(spark, _, identity)), bytes,
+      math.max(1L, bytes / math.max(1L, targetFileBytes)).toInt)
   }
 }

@@ -89,16 +89,21 @@ object Tools {
     !n.startsWith("_") && !n.startsWith(".") && (st.isDirectory || st.getLen > 0)
   }
 
+  /** Whether `path` is a glob pattern rather than a path. */
+  private[graft] def isGlob(path: String): Boolean = path.exists("*?[{".contains(_))
+
   /** The data files under `path` by [[isData]], at any depth — a
     * hive-partitioned dir's leaf files sit below `<col>=<val>/` — in
     * listing order. A file lists as itself, under the caller's spelling
-    * of its path. A `listStatus` walk, NOT `FileSystem.listFiles
+    * of its path; a glob lists the data files under each match. A
+    * `listStatus` walk, NOT `FileSystem.listFiles
     * (recursive)`: the latter materializes LocatedFileStatus through
     * RawLocal permission probes that throw on local-backed wrapper
     * schemes (HostileFsSpec). Throws on a missing path. */
   private[graft] def dataFiles(path: String, conf: Configuration = Fs.conf()): Seq[FileStatus] = {
     val (fs, p) = Fs.fileSystem(path, conf)
-    dataFilesOf(path, fs.listStatus(p).toSeq, conf)
+    dataFilesOf(path,
+      if (isGlob(path)) Option(fs.globStatus(p)).toSeq.flatten else fs.listStatus(p).toSeq, conf)
   }
 
   /** [[dataFiles]] from `top`, the listing of `path` the caller already

@@ -62,15 +62,13 @@ import org.apache.spark.storage.StorageLevel
  * ATOMICALLY: both ride the same k, both appear at marker creation or
  * not at all.
  *
- * Reads: the snapshot is (∪ committed data dirs) scanned with row
+ * Reads: the snapshot is (∪ committed data files) scanned with row
  * identity, minus the OR-fold of ALL committed DV sidecars — read on
  * the driver and applied inside the scan as one codegen'd filter
- * ([[DeleteVectors.applyVectors]]). Planning a read runs no Spark job:
- * flat commit dirs scan with the schema of their first footer. The
- * scan is [[ParquetIO.merge]]'s S13 read ([[ParquetIO.readByName]]):
- * one scan per distinct footer schema, unioned by name (missing
- * columns null, oldest commit's columns first), so a uniform-schema
- * log is one multi-dir scan with pushdown intact. [[readAt]] is time travel
+ * ([[DeleteVectors.applyVectors]]). The scan is built from the files
+ * the snapshot listed ([[scanResolved]], [[ParquetIO.merge]]'s S13
+ * read), so planning a read lists nothing more and runs no Spark job.
+ * [[readAt]] is time travel
  * for free: resolve markers ≤ k only, and a later commit's deletes
  * vanish WITH its adds, keeping historical snapshots exact.
  *
@@ -268,13 +266,12 @@ object TxTable {
         .map(b => all.filter(_ >= b)).getOrElse(all)
     }
 
-    /** Commit `k`'s data files, hive leaves included. */
-    def dataFiles(k: Long): Seq[FileStatus] =
-      Tools.dataFilesOf(dataDir(root, k), list(dataDir(root, k)), Fs.conf())
+    private val files = new java.util.concurrent.ConcurrentHashMap[Long, Seq[FileStatus]]()
 
-    /** The data dirs of the commits `ks` that added rows. */
-    def dataDirs(ks: Seq[Long]): Seq[String] =
-      ks.map(dataDir(root, _)).filter(list(_).exists(Tools.isData))
+    /** Commit `k`'s data files, hive leaves included, listed once per
+      * snapshot. */
+    def dataFiles(k: Long): Seq[FileStatus] = files.computeIfAbsent(k, _ =>
+      Tools.dataFilesOf(dataDir(root, k), list(dataDir(root, k)), Fs.conf()))
 
     def vectors(ks: Seq[Long]): Seq[(Long, DeleteVectors.FileVector)] =
       dvVectors(root, ks, list)
@@ -379,49 +376,28 @@ object TxTable {
     ParquetIO.configured(w.mode("overwrite"), ParquetIO.WriteOptions(), bloomCols).parquet(path)
   }
 
-  /** One row-identified scan over data dirs, schema evolution
-    * reconciled by NAME ([[ParquetIO.readByName]], the S13 contract of
-    * [[ParquetIO.merge]]): one scan per distinct footer schema, so
-    * same-schema commits — the common case — are a single multi-dir
-    * scan (pushdown and pruning intact), and drifted ones union by name
-    * with missing columns null, oldest commit's columns leading.
-    * PARTITIONED commit dirs scan one by one (Spark refuses partition
-    * discovery across multiple roots — CONFLICTING_DIRECTORY_STRUCTURES);
-    * partition pruning still reaches each scan through the union, and
-    * [[checkpoint]] bounds how many branches a long log contributes. */
-  private def scanResolved(spark: SparkSession, s: Snapshot,
-      dirs: Seq[String]): DataFrame =
-    ParquetIO.readByName(spark, dirs.map(d => (d, Seq(d))), DeleteVectors.withRowId, s.list)
+  /** The one row-identified scan of a snapshot: the listed data files
+    * of the commits `ks` that `keep` admits — all, or the subset a
+    * skipping read, the feed's kill scan or a file fold keeps — as
+    * [[ParquetIO.readByName]] roots in commit order, commits with no
+    * file left out; Spark reads exactly these files and lists nothing. Same-schema flat commits are one
+    * multi-dir scan, drifted ones union by name (missing columns null,
+    * oldest commit's columns leading). A hive-partitioned commit scans
+    * alone, its partition columns from its directory names; pruning
+    * reaches each scan through the union, and [[checkpoint]] bounds how
+    * many branches a long log contributes. */
+  private def scanResolved(spark: SparkSession, s: Snapshot, ks: Seq[Long],
+      keep: FileStatus => Boolean = _ => true): DataFrame =
+    ParquetIO.readByName(spark, ks.map(k => dataDir(s.root, k) -> s.dataFiles(k).filter(keep))
+      .filter(_._2.nonEmpty), DeleteVectors.withRowId)
 
-  /** The commit data dir a file belongs to: the nearest ancestor named
-    * `c<k>` under `…/data` — the direct parent for a flat commit, a
-    * higher ancestor when the commit is hive-partitioned
-    * (`c<k>/<col>=<val>/part-….parquet`). */
-  private def commitDirOf(file: String): String = {
-    var p = new org.apache.hadoop.fs.Path(file).getParent
-    while (p != null) {
-      val parent = p.getParent
-      if (p.getName.matches("c\\d+") && parent != null &&
-          parent.getName == "data") return p.toString
-      p = parent
-    }
-    new org.apache.hadoop.fs.Path(file).getParent.toString
-  }
+  /** The one file → commit rule: a data file of commit k sits under
+    * `…/data/c<k>/`, flat or below its hive partition dirs. */
+  private val commitOfFile = "^.*/data/c(\\d+)/"
 
-  /** [[scanResolved]] over an explicit FILE subset (the skipping
-    * paths): files group back to their commit dirs, whose footers give
-    * the schemas, commit order preserved. A partitioned commit's files
-    * scan with `basePath` = the commit dir, so the partition columns a
-    * [[writeData]] `partitionBy` moved into directory names come back
-    * as columns. */
-  private def scanResolvedFiles(spark: SparkSession, s: Snapshot,
-      files: Seq[String]): DataFrame =
-    ParquetIO.readByName(spark, files
-      .groupBy(commitDirOf)
-      .toSeq
-      .sortBy { case (d, _) =>
-        new org.apache.hadoop.fs.Path(d).getName.stripPrefix("c").toLong
-      }, DeleteVectors.withRowId, s.list)
+  /** The commit a data file path belongs to, on the driver. */
+  private def commitOf(file: String): Option[Long] =
+    commitOfFile.r.findFirstMatchIn(file).map(_.group(1).toLong)
 
   /** Create the table: the initial snapshot becomes commit 0.
     * `partitionCols` (round 18) lays the commit out hive-partitioned —
@@ -485,22 +461,21 @@ object TxTable {
   def readAt(spark: SparkSession, root: String, asOf: Long): DataFrame =
     liveAt(spark, new Snapshot(root), asOf)
 
-  /** The live rows of `s` as of `asOf`: its resolved data dirs scanned,
-    * minus its resolved deletion vectors. */
+  /** The live rows of `s` as of `asOf`: its resolved data files
+    * scanned, minus its resolved deletion vectors. */
   private def liveAt(spark: SparkSession, s: Snapshot,
       asOf: Long = Long.MaxValue): DataFrame = {
     val ks = s.resolved(asOf)
     require(ks.nonEmpty, s"txtable: no commits ≤ $asOf under ${s.root}")
-    val data = s.dataDirs(ks)
-    require(data.nonEmpty, s"txtable: no data dirs among commits ≤ $asOf")
-    DeleteVectors.applyVectors(scanResolved(spark, s, data), s.dvIndex(ks))
+    require(ks.exists(s.dataFiles(_).nonEmpty), s"txtable: no data files among commits ≤ $asOf")
+    DeleteVectors.applyVectors(scanResolved(spark, s, ks), s.dvIndex(ks))
   }
 
   /** The live rows of the snapshot `s` WITH row identity
     * (`__dv_file`, `__dv_row`) — what every kill leg marks dead. */
   private def liveWithId(spark: SparkSession, s: Snapshot): DataFrame = {
     val rks = s.resolved()
-    DeleteVectors.applyVectorsKeepId(scanResolved(spark, s, s.dataDirs(rks)), s.dvIndex(rks))
+    DeleteVectors.applyVectorsKeepId(scanResolved(spark, s, rks), s.dvIndex(rks))
   }
 
   private def keysDir(root: String, k: Long) = s"$root/_txn/keys/$k"
@@ -1349,7 +1324,7 @@ object TxTable {
     require(files.nonEmpty, s"txtable: nothing committed under $root")
     StatsManifest.statsFor(spark, files, cols)
       .write.mode("overwrite").parquet(statsPath(root))
-    ParquetIO.readByName(spark, Seq(statsPath(root)))
+    ParquetIO.readByName(spark, Seq(statsPath(root) -> Tools.dataFiles(statsPath(root))), identity)
   }
 
   /**
@@ -1399,10 +1374,12 @@ object TxTable {
     val excluded: Set[String] =
       if (s.list(manifest).isEmpty) Set.empty
       else StatsManifest.excludedFiles(ParquetIO.readByName(spark,
-        Seq((manifest, Seq(manifest))), identity, s.list), column, lo, hi)
-    val survivors = cut(files.filterNot(excluded))
+        Seq(manifest -> Tools.dataFilesOf(manifest, s.list(manifest), Fs.conf())), identity),
+        column, lo, hi)
+    val survivors = cut(files.filterNot(excluded)).toSet
     if (survivors.isEmpty) liveAt(spark, s).filter(lit(false))
-    else DeleteVectors.applyVectors(scanResolvedFiles(spark, s, survivors), s.dvIndex(rks))
+    else DeleteVectors.applyVectors(
+        scanResolved(spark, s, rks, f => survivors(f.getPath.toString)), s.dvIndex(rks))
       .filter(pred)
   }
 
@@ -1424,8 +1401,8 @@ object TxTable {
    * cadence, before [[checkpoint]]+[[expire]] collapse the history.
    *
    * The whole range is ONE diff: one scan of every feed commit's data
-   * dir, each row's commit read from its file's `c<k>` dir
-   * ([[commitDirOf]]'s rule, so flat and hive-partitioned files both
+   * files, each row's commit read from its file's `c<k>` dir
+   * ([[commitOfFile]], so flat and hive-partitioned files both
    * resolve); one scan of the union kill-file set, each killed row
    * labelled by the commit whose vector kills it; one full-outer join
    * keyed (keys, commit). The join key carries the commit, so adds and
@@ -1468,10 +1445,15 @@ object TxTable {
     // the feed commits' sidecars, read once on the driver: every
     // commit's touched files and its kills, with no Spark job
     val vectors = s.vectors(feedIds)
-    val addDirs = s.dataDirs(feedIds)
-    val killFiles = vectors.map(_._2.file).distinct.sorted
-    val adds = Some(addDirs).filter(_.nonEmpty).map(scanResolved(spark, s, _))
-    val killScan = Some(killFiles).filter(_.nonEmpty).map(scanResolvedFiles(spark, s, _))
+    val adds = Some(feedIds).filter(_.exists(s.dataFiles(_).nonEmpty))
+      .map(scanResolved(spark, s, _))
+    // the killed files, kept out of their own commits' listings
+    val killed = vectors.map(v => pathKey(v._2.file)).toSet
+    val isKilled = (f: FileStatus) => killed(pathKey(f.getPath.toString))
+    val killCommits = vectors.flatMap(v => commitOf(v._2.file)).distinct.sorted
+    require(killCommits.flatMap(s.dataFiles).count(isKilled) == killed.size,
+      s"txtable.changeFeed: a file killed in commits $fromCommit..$toCommit is gone")
+    val killScan = Some(killCommits).filter(_.nonEmpty).map(scanResolved(spark, s, _, isKilled))
     val fields = (adds.toSeq ++ killScan).flatMap(_.schema.fields)
       .filterNot(f => f.name == "__dv_file" || f.name == "__dv_row")
       .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
@@ -1489,7 +1471,7 @@ object TxTable {
     // the working commit column, under a name no table column uses
     val commitCol = Iterator.iterate("__commit")(_ + "_")
       .find(n => !columns.exists(_.equalsIgnoreCase(n))).get
-    val ofFile = regexp_extract(col("__dv_file"), "^.*/data/c(\\d+)/", 1).cast("long")
+    val ofFile = regexp_extract(col("__dv_file"), commitOfFile, 1).cast("long")
     def widen(side: Option[DataFrame]): DataFrame = side match {
       case Some(df) => df.select(fields.map { f =>
         if (df.columns.contains(f.name)) col(f.name)
@@ -1603,8 +1585,10 @@ object TxTable {
         case (f, total) if deadPerFile(f).toDouble / math.max(1L, total) >= minDeadFraction => f
       }
       // fully dead files: nothing to move
-      val liveHot = Some(hot).filter(_.nonEmpty).map(h => s.cache(
-          DeleteVectors.applyVectorsKeepId(scanResolvedFiles(spark, s, h), dv)))
+      val hotKeys = hot.map(pathKey).toSet
+      val liveHot = Some(hot).filter(_.nonEmpty).map(_ => s.cache(
+          DeleteVectors.applyVectorsKeepId(
+            scanResolved(spark, s, rks, f => hotKeys(pathKey(f.getPath.toString))), dv)))
         .filterNot(_.isEmpty)
       liveHot.map(moving => { k =>
         fence("compactFiles", root, k, s.ids, s.ids)
@@ -1721,8 +1705,7 @@ object TxTable {
         // the FROZEN fold: exactly the commits ≤ k seen at the one
         // snapshot listing — never a re-list mid-operation
         val ks = s.resolved(k)
-        val live = DeleteVectors.applyVectors(
-          scanResolved(spark, s, s.dataDirs(ks)), s.dvIndex(ks))
+        val live = DeleteVectors.applyVectors(scanResolved(spark, s, ks), s.dvIndex(ks))
         val parts = math.max(1L, ks.flatMap(s.dataFiles).map(_.getLen).sum /
           math.max(1L, targetFileBytes)).toInt
         val sized =
@@ -1854,9 +1837,7 @@ object TxTable {
         // page is read.
         val referenced: Set[Long] =
           s.vectors(all.filter(id => id >= cutoff && id < cp))
-            .map(v => new org.apache.hadoop.fs.Path(commitDirOf(v._2.file))
-              .getName.stripPrefix("c"))
-            .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).toSet
+            .flatMap(v => commitOf(v._2.file)).toSet
         all.filter(id => id < cutoff && !referenced.contains(id)).map { id =>
           Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dataDir(root, id)))
           Fs.deleteRecursive(new org.apache.hadoop.fs.Path(dvDir(root, id)))

@@ -281,6 +281,65 @@ class ParquetIOSpec extends AnyFunSuite {
     assert(got.filter("extra IS NOT NULL").count() === 5L)
   }
 
+  /** `ParquetIO.merge` of `ins` into a fresh dir, read back. */
+  private def merged(base: String, ins: String*): org.apache.spark.sql.DataFrame = {
+    val out = s"$base/out-${java.util.UUID.randomUUID()}"
+    ParquetIO.merge(spark, ins, out)
+    spark.read.parquet(out)
+  }
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema === want.schema)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("merge of a hive-partitioned dir keeps the partition column, typed as spark.read types it") {
+    val base = tmp()
+    val in = s"$base/in"
+    // p is written LONG; partition inference reads small values back INT
+    spark.range(300).selectExpr("id", "cast(id as string) as s", "id % 3 as p")
+      .write.partitionBy("p").parquet(in)
+    val want = spark.read.parquet(in)
+    assert(want.schema("p").dataType === IntegerType)
+    sameRows(merged(base, in), want)
+  }
+
+  test("merge of a glob input reads what spark.read.parquet reads for the glob") {
+    val base = tmp()
+    val in = s"$base/in"
+    spark.range(200).selectExpr("id", "id * 2 as x").repartition(4).write.parquet(in)
+    val glob = s"$in/part-*.parquet"
+    sameRows(merged(base, glob), spark.read.parquet(glob))
+  }
+
+  test("merge of a single-file input reads that file") {
+    val base = tmp()
+    spark.range(50).selectExpr("id", "cast(id as string) as s").coalesce(1)
+      .write.parquet(s"$base/in")
+    val file = new java.io.File(s"$base/in").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.getPath
+    sameRows(merged(base, file), spark.read.parquet(file))
+  }
+
+  test("merge: a hive-partitioned input listed twice contributes its rows twice") {
+    val base = tmp()
+    val in = s"$base/in"
+    spark.range(30).selectExpr("id", "id % 2 as p").write.partitionBy("p").parquet(in)
+    val once = spark.read.parquet(in)
+    sameRows(merged(base, in, in), once.unionByName(once))
+  }
+
+  test("merge of a missing input or of an input with no data file throws") {
+    val base = tmp()
+    intercept[Exception](ParquetIO.merge(spark, Seq(s"$base/missing"), s"$base/out1"))
+    val empty = s"$base/empty"
+    Files.createDirectories(java.nio.file.Paths.get(empty))
+    Files.write(java.nio.file.Paths.get(empty, "_SUCCESS"), Array.emptyByteArray)
+    intercept[Exception](ParquetIO.merge(spark, Seq(empty), s"$base/out2"))
+  }
+
   test("compactSorted: disjoint per-file key ranges, content preserved") {
     val base = tmp()
     val a = s"$base/a"; val b = s"$base/b"; val out = s"$base/out"

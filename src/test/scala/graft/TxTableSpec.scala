@@ -917,6 +917,42 @@ class TxTableSpec extends AnyFunSuite {
     assert(got.filter(col("cat") === "cat0").count() === 60L)
   }
 
+  test("a log of flat and hive commits: read, readSkipping and changeFeed equal their plain forms") {
+    import spark.implicits._
+    val t = tmp() + "/t"
+    TxTable.create(spark, t, partedBase())                                // c0, flat
+    TxTable.upsert(spark, t,
+      Seq((8L, "cat0", 8888.0, 1L), (401L, "cat1", 4.0, 1L))
+        .toDF("id", "cat", "price", "version"),
+      Seq("id"), "version", partitionCols = Seq("cat"))                   // c1, hive
+    TxTable.upsert(spark, t,
+      Seq((12L, "cat0", 0.0, 2L, "d"), (9L, "cat1", 9.0, 2L, "u"))
+        .toDF("id", "cat", "price", "version", "op"),
+      Seq("id"), "version", opCol = Some("op"), partitionCols = Seq("cat")) // c2, hive
+    val cols = Seq("id", "cat", "price", "version")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).orderBy("id").collect().toSeq
+    val live = TxTable.read(spark, t)
+    assert(live.columns.toSeq === cols)
+    val want = partedBase().filter(col("id") =!= 12L && col("id") =!= 8L && col("id") =!= 9L)
+      .unionByName(Seq((8L, "cat0", 8888.0, 1L), (401L, "cat1", 4.0, 1L), (9L, "cat1", 9.0, 2L))
+        .toDF("id", "cat", "price", "version"))
+    assert(rows(live) === rows(want))
+    // the pruned reads equal the unpruned read filtered
+    TxTable.buildManifest(spark, t, Seq("id"))
+    assert(rows(TxTable.readSkipping(spark, t, "id", 0L, 20L)) ===
+      rows(live.filter(col("id") >= 0L && col("id") <= 20L)))
+    assert(rows(TxTable.readSkippingEquality(spark, t, "id", 8L)) ===
+      rows(live.filter(col("id") === 8L)))
+    // replaying the feed in commit order reconstructs the snapshot
+    import org.apache.spark.sql.expressions.Window
+    val feed = TxTable.changeFeed(spark, t, Seq("id"))
+    val replayed = feed
+      .withColumn("__rn", row_number().over(Window.partitionBy("id").orderBy(col("commit").desc)))
+      .filter(col("__rn") === 1 && col("op") =!= "d")
+    assert(rows(replayed) === rows(live))
+  }
+
   test("expire retires committed OCC key sidecars; OCC straddling an expire still validates") {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
