@@ -38,6 +38,20 @@ object Fs {
     (p.getFileSystem(c), p)
   }
 
+  /** `p`'s children as Spark's own file index lists a scanned dir: on
+    * HDFS with each file's block locations (`listLocatedStatus`), so a
+    * scan built from the listing keeps split locality; elsewhere a plain
+    * `listStatus` (a location there is "localhost", which the scheduler
+    * ignores). */
+  private[graft] def listLocated(fs: FileSystem, p: Path): Seq[FileStatus] = fs match {
+    case dfs: org.apache.hadoop.hdfs.DistributedFileSystem =>
+      val it = dfs.listLocatedStatus(p)
+      val out = Vector.newBuilder[FileStatus]
+      while (it.hasNext) out += it.next()
+      out.result()
+    case _ => fs.listStatus(p).toSeq
+  }
+
   /** Immediate child DIRECTORIES of `path`, as (name, status); empty when
     * `path` is missing or not a directory is the caller's decision —
     * this throws on a missing path like the java.io `require` did. */

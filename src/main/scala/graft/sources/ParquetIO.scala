@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileIndexOptions, HadoopFsRelation, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -93,12 +93,13 @@ object ParquetIO {
    * each root with the data files the caller listed under it (all, or a
    * subset); every scan reads exactly those ([[ListedIndex]]), so Spark
    * lists nothing and runs no inference job. A root's schema is its
-   * first file's footer. Flat roots that share one share ONE scan, in
-   * order of first appearance, so a uniform input set is a single
-   * multi-root scan with pushdown intact. A hive-partitioned root scans
-   * alone (Spark refuses several partitioned roots in one index, and an
-   * index keys its files by path, so a root listed twice would read
-   * once), its partition columns typed as `spark.read` infers them. A
+   * first file's footer. Roots that share one, and the same partition
+   * column names (the `k=v` dirs of their leaf paths; none for a flat
+   * root), share ONE scan, in order of first appearance, so a uniform
+   * input set is a single multi-root scan with pushdown intact. The
+   * index types a scan's partition columns as `spark.read` infers them
+   * over all its roots' values. A partitioned index keys its files by
+   * path, so a hive root listed again takes a scan of its own. A
    * glob goes to `spark.read`: its semantics are Spark's. `perScan` runs
    * on each scan before the by-name union (a `_metadata` column is taken
    * per scan); columns come data first, then partition, first input's
@@ -109,24 +110,32 @@ object ParquetIO {
       inputs: Seq[(String, Seq[FileStatus])], perScan: DataFrame => DataFrame): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     def qualified(p: Path) = p.getFileSystem(conf).makeQualified(p)
+    val listings = scala.collection.mutable.Map.empty[Path, Int]
     val keyed = inputs.toVector.zipWithIndex.map { case ((root, files), i) =>
       if (Tools.isGlob(root)) (Right(i), new Path(root) -> Array.empty[FileStatus]) else {
         require(files.nonEmpty, s"parquet: no data file under $root")
-        // the index matches leaves to roots by qualified path
+        // the index matches leaves to roots by qualified path; a copy
+        // keeps the listing's block locations (and probes no permissions)
         val leaves = files.map { f =>
           val q = qualified(f.getPath)
-          if (q == f.getPath) f
-          else new FileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
-            f.getModificationTime, q)
+          if (q == f.getPath) f else new LocatedFileStatus(f.getLen, false, f.getReplication,
+            f.getBlockSize, f.getModificationTime, 0L, null, null, null, null, q,
+            f match { case l: LocatedFileStatus => l.getBlockLocations case _ => Array.empty })
         }.toArray
         val (r, first) = (qualified(new Path(root)), leaves.minBy(_.getPath.toString))
-        val hive = first.getPath != r && first.getPath.getParent != r
-        (Left((schemaOf(first), if (hive) i else -1)), r -> leaves)
+        // the partition columns: the `k=v` dirs between the root and a leaf
+        val partCols = Iterator.iterate(first.getPath.getParent)(_.getParent)
+          .takeWhile(d => first.getPath != r && d != null && d != r)
+          .map(_.getName.takeWhile(_ != '=')).toList
+        // a partitioned index keys its files by path, so a hive root
+        // listed again scans apart
+        val nth = listings.updateWith(r)(n => Some(n.fold(0)(_ + 1))).get
+        (Left((schemaOf(first), partCols, if (partCols.isEmpty) 0 else nth)), r -> leaves)
       }
     }
     val scans = keyed.map(_._1).distinct.map {
       case Right(i) => spark.read.parquet(inputs(i)._1)
-      case key @ Left((schema, _)) =>
+      case key @ Left((schema, _, _)) =>
         val index = new ListedIndex(spark, keyed.filter(_._1 == key).map(_._2))
         spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
           None, new ParquetFileFormat, Map.empty)(spark))
@@ -135,21 +144,25 @@ object ParquetIO {
   }
 
   /** Spark's file index over the files a caller listed, `(root, leaves)`
-    * each: its leaves come from a private [[FileStatusCache]] that holds
-    * exactly those, so it lists nothing, and it infers partition columns
-    * from the leaf paths below each root as over its own listing. The
-    * cache is private because the session's would serve a dropped and
-    * recreated table's stale `c<k>` files. Equal only to an index over
-    * the same roots and files: two scans of one root that read different
-    * subsets must never share an exchange. */
+    * each: it holds exactly those, so it lists nothing, and it infers
+    * partition columns from the leaf paths below each root as Spark's
+    * own index does over its listing, each root a base path (Spark's
+    * index takes only one, hence the option). Not an `InMemoryFileIndex`, whose
+    * equality holds for any index over the same roots: equal only to an
+    * index over the same roots and files, so two scans of one root that
+    * read different subsets never share an exchange or a cached plan. */
   private final class ListedIndex(spark: SparkSession, listed: Seq[(Path, Array[FileStatus])])
-      extends InMemoryFileIndex(spark, listed.map(_._1), Map.empty, None,
-        new FileStatusCache {
-          private val leaves = listed.toMap
-          override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leaves.get(path)
-          override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-          override def invalidateAll(): Unit = ()
-        }) {
+      extends PartitioningAwareFileIndex(spark,
+        // each root is a base path: partition values are parsed below it
+        Map(FileIndexOptions.IGNORE_INVALID_PARTITION_PATHS -> "true"), None) {
+    override val rootPaths: Seq[Path] = listed.map(_._1)
+    override val leafFiles = scala.collection.mutable.LinkedHashMap.from(
+      listed.flatMap(_._2).map(f => f.getPath -> f))
+    override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      leafFiles.values.toArray.groupBy(_.getPath.getParent)
+    private lazy val spec = inferPartitioning()
+    override def partitionSpec(): PartitionSpec = spec
+    override def refresh(): Unit = ()
     private lazy val key = (rootPaths,
       leafFiles.values.map(f => (f.getPath, f.getLen, f.getModificationTime)).toSet)
     override def equals(o: Any): Boolean = o match {

@@ -96,14 +96,15 @@ object Tools {
     * hive-partitioned dir's leaf files sit below `<col>=<val>/` — in
     * listing order. A file lists as itself, under the caller's spelling
     * of its path; a glob lists the data files under each match. A
-    * `listStatus` walk, NOT `FileSystem.listFiles
-    * (recursive)`: the latter materializes LocatedFileStatus through
-    * RawLocal permission probes that throw on local-backed wrapper
-    * schemes (HostileFsSpec). Throws on a missing path. */
+    * [[Fs.listLocated]] walk (block locations on HDFS only), NOT
+    * `FileSystem.listFiles(recursive)`: the latter materializes
+    * LocatedFileStatus through RawLocal permission probes that throw on
+    * local-backed wrapper schemes (HostileFsSpec). Throws on a missing
+    * path. */
   private[graft] def dataFiles(path: String, conf: Configuration = Fs.conf()): Seq[FileStatus] = {
     val (fs, p) = Fs.fileSystem(path, conf)
     dataFilesOf(path,
-      if (isGlob(path)) Option(fs.globStatus(p)).toSeq.flatten else fs.listStatus(p).toSeq, conf)
+      if (isGlob(path)) Option(fs.globStatus(p)).toSeq.flatten else Fs.listLocated(fs, p), conf)
   }
 
   /** [[dataFiles]] from `top`, the listing of `path` the caller already
@@ -119,7 +120,7 @@ object Tools {
       def walk(st: FileStatus): Seq[FileStatus] =
         if (!isData(st)) Nil
         else if (st.isFile) Seq(st)
-        else fs.listStatus(st.getPath).toSeq.flatMap(walk)
+        else Fs.listLocated(fs, st.getPath).flatMap(walk)
       top.flatMap(walk)
     }
   }

@@ -269,9 +269,14 @@ object TxTable {
     private val files = new java.util.concurrent.ConcurrentHashMap[Long, Seq[FileStatus]]()
 
     /** Commit `k`'s data files, hive leaves included, listed once per
-      * snapshot. */
-    def dataFiles(k: Long): Seq[FileStatus] = files.computeIfAbsent(k, _ =>
-      Tools.dataFilesOf(dataDir(root, k), list(dataDir(root, k)), Fs.conf()))
+      * snapshot (none when it wrote no data dir). */
+    def dataFiles(k: Long): Seq[FileStatus] = files.computeIfAbsent(k, _ => {
+      val conf = Fs.conf()
+      val (fs, dir) = Fs.fileSystem(dataDir(root, k), conf)
+      Tools.dataFilesOf(dataDir(root, k),
+        try Fs.listLocated(fs, dir) catch { case _: java.io.FileNotFoundException => Nil },
+        conf)
+    })
 
     def vectors(ks: Seq[Long]): Seq[(Long, DeleteVectors.FileVector)] =
       dvVectors(root, ks, list)
@@ -380,12 +385,12 @@ object TxTable {
     * of the commits `ks` that `keep` admits — all, or the subset a
     * skipping read, the feed's kill scan or a file fold keeps — as
     * [[ParquetIO.readByName]] roots in commit order, commits with no
-    * file left out; Spark reads exactly these files and lists nothing. Same-schema flat commits are one
-    * multi-dir scan, drifted ones union by name (missing columns null,
-    * oldest commit's columns leading). A hive-partitioned commit scans
-    * alone, its partition columns from its directory names; pruning
-    * reaches each scan through the union, and [[checkpoint]] bounds how
-    * many branches a long log contributes. */
+    * file left out; Spark reads exactly these files and lists nothing.
+    * Commits with one schema and one partition layout are one multi-dir
+    * scan, drifted ones union by name (missing columns null, oldest
+    * commit's columns leading); a hive commit's partition columns come
+    * from its directory names, and pruning reaches each scan through
+    * the union. */
   private def scanResolved(spark: SparkSession, s: Snapshot, ks: Seq[Long],
       keep: FileStatus => Boolean = _ => true): DataFrame =
     ParquetIO.readByName(spark, ks.map(k => dataDir(s.root, k) -> s.dataFiles(k).filter(keep))

@@ -6,6 +6,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
+/** Local store whose listings carry one made-up block location per
+  * file, host `dn1`, as an HDFS listing with locations does. */
+class LocatedListingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{BlockLocation, FileStatus, LocatedFileStatus, Path}
+  override def getScheme: String = "locatedls"
+  override def getUri: java.net.URI = java.net.URI.create("locatedls:///")
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map { st =>
+    if (st.isDirectory) st
+    else new LocatedFileStatus(st.getLen, false, 1, st.getBlockSize, st.getModificationTime,
+      0L, null, null, null, null, st.getPath,
+      Array(new BlockLocation(Array("dn1:9866"), Array("dn1"), 0L, st.getLen)))
+  }
+}
+
 /**
  * Transactional merge-on-read table (round 16): create-once commit
  * markers gate adds AND deletes atomically; upsert == copy-on-write
@@ -951,6 +965,18 @@ class TxTableSpec extends AnyFunSuite {
       .withColumn("__rn", row_number().over(Window.partitionBy("id").orderBy(col("commit").desc)))
       .filter(col("__rn") === 1 && col("op") =!= "d")
     assert(rows(replayed) === rows(live))
+  }
+
+  test("a read's scan keeps the block locations its listing carries") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.locatedls.impl", classOf[LocatedListingFileSystem].getName)
+    val t = s"locatedls://${tmp()}/t"
+    TxTable.create(spark, t, base(100))
+    def leaves(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      if (r.dependencies.isEmpty) Seq(r) else r.dependencies.flatMap(d => leaves(d.rdd))
+    val scans = leaves(TxTable.read(spark, t).rdd)
+    assert(scans.nonEmpty)
+    scans.foreach(r => r.partitions.foreach(p => assert(r.preferredLocations(p) === Seq("dn1"))))
   }
 
   test("expire retires committed OCC key sidecars; OCC straddling an expire still validates") {
